@@ -73,6 +73,9 @@ def connected_components(
     # llm_dedup_cc, median-of-3: 9.34 → 3.20 s, value-identical.
     # Above the cap the distributed fixpoint below is unchanged — the
     # correct shape when the edge list genuinely exceeds one task.
+    # An edge with a NULL endpoint connects nothing; both paths drop it
+    # (the union-find could not hash-compare None against ints).
+    edges = edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
     head = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .limit(_CC_COLLECT_CAP + 1)

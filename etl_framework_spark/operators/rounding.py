@@ -70,8 +70,10 @@ def hybrid_round_select(
                 x = pdf[f"__r_{n}"].to_numpy()
                 m = float(10**s)
                 y = np.abs(x) * m
-                out[f"__g_{n}"] = np.abs(y - np.floor(y) - 0.5) <= (
-                    1e-9 + y * 1e-15
+                # |x|*10^s overflows to inf for finite |x| near the
+                # double max; those go to F.round too (which returns x)
+                out[f"__g_{n}"] = np.isinf(y) | (
+                    np.abs(y - np.floor(y) - 0.5) <= (1e-9 + y * 1e-15)
                 )
                 out[n] = np.sign(x) * np.floor(y + 0.5) / m
                 out[f"__r_{n}"] = x

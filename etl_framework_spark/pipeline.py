@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_framework_spark.sources import read_source, write_sink
+from etl_framework_spark.sources.readers import FILE_FORMATS, Gate
 
 OpFn = Callable[..., DataFrame]
 OPS: dict[str, OpFn] = {}
@@ -299,14 +300,42 @@ def _check_failures(row: dict[str, Any], checks: list[dict[str, Any]]) -> list[s
     return failures
 
 
+def _gate(checks: list[dict[str, Any]], prefix: str = "") -> Gate:
+    """The checks as a sink-write gate: observe()-able aggregates and a
+    verdict raising the same ValidationError text as an eager pass."""
+
+    def verdict(row: dict[str, Any]) -> None:
+        failures = _check_failures(row, checks)
+        if failures:
+            raise ValidationError(prefix + "; ".join(failures))
+
+    return _check_aggs(checks, allow_distinct=False), verdict
+
+
 @op("validate")
 def _validate_step(df: DataFrame, checks: list[dict[str, Any]]) -> DataFrame:
     """Config-declared validation step (the reference family runs row
     counts / null checks between transform and load). All checks are
-    folded into ONE aggregate pass over the relation — a 100 TB
-    validation costs one scan, not one per check. Passing returns the
-    input unchanged (pass-through step); any failure raises
-    ValidationError naming every failed check.
+    folded into ONE aggregate, and passing returns the input unchanged
+    (pass-through step); any failure raises ValidationError naming
+    every failed check.
+
+    Run eagerly, the aggregate is its own action: it recomputes the
+    whole upstream plan, and the sink write then computes it again.
+    So ``Pipeline.run`` fuses the step into its sink instead — the
+    checks ride the sink write as an observe() gate, one pass in all,
+    and the write is published only if they pass — when all of these
+    hold (otherwise the step runs eagerly, here):
+      - no 'unique' check (distinct aggregates can't ride observe);
+      - the step has no ``materialize``;
+      - exactly one sink reads it, that sink is a file sink
+        (parquet/csv/json/orc), and it is the job's first sink;
+      - no later step names it as ``input`` or ``right``, mentions it
+        in SQL (a whole-word match), or has a ``materialize``.
+    Only a direct sink consumer qualifies: a limit-style step in
+    between could stop observe() from seeing every row. The last two
+    rules keep a failing fused gate from firing after something else
+    was written.
 
     Check shapes:
       {"type": "row_count", "min": 1, "max": null}
@@ -315,9 +344,8 @@ def _validate_step(df: DataFrame, checks: list[dict[str, Any]]) -> DataFrame:
       {"type": "accepted_values", "column": c, "values": [...]}
       {"type": "expression", "expr": "<boolean sql>"}  # must hold per row
 
-    For zero-extra-scan validation piggybacked on the sink write, put
-    the same checks on the *sink* spec as ``"validate": [...]``
-    (observe()-based; no 'unique' — distinct aggs can't ride observe).
+    The same checks (except 'unique') can also sit on the *sink* spec
+    as ``"validate": [...]``; they ride that sink's write the same way.
     """
     # bounded: global agg, exactly one row crosses to the driver
     row = df.agg(*_check_aggs(checks)).collect()[0].asDict()
@@ -428,16 +456,54 @@ class Pipeline:
                     "validation never fires — use a 'validate' step instead"
                 )
 
+    def _fused_validations(self) -> dict[str, list[dict[str, Any]]]:
+        """``{step name: checks}`` for the validate steps that ride
+        their sink's write (rules in ``_validate_step``)."""
+        import re
+
+        steps = self.spec.get("steps", [])
+        sinks = self.spec.get("sinks", [])
+        fused: dict[str, list[dict[str, Any]]] = {}
+        for i, step in enumerate(steps):
+            name = step["name"]
+            checks = step.get("args", {}).get("checks", [])
+            if (
+                step.get("op") != "validate"
+                or step.get("materialize")
+                or any(c.get("type") == "unique" for c in checks)
+            ):
+                continue
+            readers = [s for s in sinks if s.get("input") == name]
+            if (
+                len(readers) != 1
+                or readers[0] is not sinks[0]
+                or readers[0].get("format", "parquet") not in FILE_FORMATS
+            ):
+                continue
+            word = re.compile(rf"\b{re.escape(name)}\b", re.IGNORECASE)
+            if any(
+                later.get("materialize")
+                or name in (later.get("input"), later.get("args", {}).get("right"))
+                or word.search(later.get("sql", ""))
+                for later in steps[i + 1 :]
+            ):
+                continue
+            fused[name] = checks
+        return fused
+
     def run(self, spark: SparkSession) -> dict[str, DataFrame]:
         """Materialize sources, apply steps in order, run sinks.
         Returns every named relation (lazy DataFrames)."""
+        fused = self._fused_validations()
         rel: dict[str, DataFrame] = {}
         for name, src in self.spec.get("sources", {}).items():
             df = read_source(spark, src)
             df.createOrReplaceTempView(name)
             rel[name] = df
         for step in self.spec.get("steps", []):
-            if "sql" in step:
+            if step["name"] in fused:
+                out = rel[step["input"]]  # checked by its sink's write
+            elif "sql" in step:
                 out = spark.sql(step["sql"])
             else:
                 args = dict(step.get("args", {}))
@@ -454,27 +520,18 @@ class Pipeline:
             out.createOrReplaceTempView(step["name"])
             rel[step["name"]] = out
         for sink in self.spec.get("sinks", []):
-            df = rel[sink["input"]]
-            checks = sink.get("validate")
-            obs = None
-            if checks:
-                # zero-extra-scan validation: metrics are computed BY
-                # the sink write itself (df.observe), so a 100 TB load
-                # is validated without a second pass over the data.
-                from pyspark.sql import Observation
-
-                obs = Observation(f"validate_{sink['input']}")
-                df = df.observe(obs, *_check_aggs(checks, allow_distinct=False))
+            # Checks ride the write itself (df.observe), so a 100 TB
+            # load is validated without a second pass over the data.
+            gates = []
+            if sink["input"] in fused:
+                gates.append(_gate(fused[sink["input"]]))
+            if sink.get("validate"):
+                gates.append(_gate(sink["validate"], f"sink {sink['input']!r}: "))
             write_sink(
-                df,
+                rel[sink["input"]],
                 {k: v for k, v in sink.items() if k not in ("input", "validate")},
+                gates,
             )
-            if obs is not None:
-                failures = _check_failures(obs.get, checks)
-                if failures:
-                    raise ValidationError(
-                        f"sink {sink['input']!r}: " + "; ".join(failures)
-                    )
         return rel
 
 

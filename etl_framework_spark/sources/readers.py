@@ -18,12 +18,13 @@ JDBC servers remain untested in this environment (SURVEY.md §7).
 
 from __future__ import annotations
 
-from typing import Any
+import uuid
+from typing import Any, Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_FILE_FORMATS = {"parquet", "csv", "json", "orc"}
+FILE_FORMATS = {"parquet", "csv", "json", "orc"}
 
 # ---------------------------------------------------------------------------
 # Kafka (Structured Streaming's canonical message-bus source/sink).
@@ -229,7 +230,7 @@ def read_source(spark: SparkSession, spec: dict[str, Any]) -> DataFrame:
             .option("path", spec["path"])
             .load()
         )
-    if fmt not in _FILE_FORMATS:
+    if fmt not in FILE_FORMATS:
         raise ValueError(f"unsupported source format {fmt!r}")
     if "path" not in spec:
         raise ValueError(f"{fmt} source needs 'path'")
@@ -245,12 +246,27 @@ def read_source(spark: SparkSession, spec: dict[str, Any]) -> DataFrame:
     return getattr(reader, fmt)(spec["path"])
 
 
-def write_sink(df: DataFrame, spec: dict[str, Any]) -> None:
+# A data-quality gate on a sink write: aggregate Columns that ride the
+# write as an Observation, and a verdict that reads the observed metrics
+# (one dict) after the data is written and raises to reject it.
+Gate = tuple[list[Column], Callable[[dict[str, Any]], None]]
+
+
+def write_sink(
+    df: DataFrame, spec: dict[str, Any], gates: Sequence[Gate] = ()
+) -> None:
+    """Write ``df`` to the sink ``spec`` describes. Each gate's metrics
+    are computed by the write itself (no second pass); its verdict runs
+    once the write has finished. A gated file sink is written through
+    :func:`_staged_write`, so a rejected write publishes nothing."""
     fmt = spec.get("format", "parquet")
+    if fmt in FILE_FORMATS:
+        _write_files(df, spec, fmt, gates)
+        return
+    df, audit = _observed(df, gates)
     if fmt == "view":  # in-memory sink: register for downstream consumers
         df.createOrReplaceTempView(spec["name"])
-        return
-    if fmt == "table":  # catalog-managed (saveAsTable) sink — the
+    elif fmt == "table":  # catalog-managed (saveAsTable) sink — the
         # write half of the {"format": "table"} source above
         writer = df.write.mode(spec.get("mode", "overwrite"))
         if spec.get("partition_by"):
@@ -258,8 +274,7 @@ def write_sink(df: DataFrame, spec: dict[str, Any]) -> None:
         for k, v in dict(spec.get("options", {})).items():
             writer = writer.option(k, v)
         writer.saveAsTable(spec["name"])
-        return
-    if fmt == "jdbc":
+    elif fmt == "jdbc":
         required = {"url", "dbtable"}
         missing = required - set(spec)
         if missing:
@@ -273,8 +288,7 @@ def write_sink(df: DataFrame, spec: dict[str, Any]) -> None:
         for k, v in dict(spec.get("options", {})).items():
             writer = writer.option(k, v)
         writer.save()
-        return
-    if fmt == "kafka":
+    elif fmt == "kafka":
         opts = kafka_sink_options(spec)
         out = encode_kafka_value(df, key=spec.get("key"))
         try:
@@ -285,8 +299,7 @@ def write_sink(df: DataFrame, spec: dict[str, Any]) -> None:
                 "connector is not on the classpath; underlying error: "
                 f"{e}"
             ) from e
-        return
-    if fmt == "docstore":
+    elif fmt == "docstore":
         from etl_framework_spark.sources.docstore import register
 
         register(df.sparkSession)
@@ -297,9 +310,34 @@ def write_sink(df: DataFrame, spec: dict[str, Any]) -> None:
             .option("path", spec["path"])
             .save()
         )
-        return
-    if fmt not in _FILE_FORMATS:
+    else:
         raise ValueError(f"unsupported sink format {fmt!r}")
+    audit()
+
+
+def _observed(
+    df: DataFrame, gates: Sequence[Gate]
+) -> tuple[DataFrame, Callable[[], None]]:
+    """Attach one Observation per gate; return the observed frame and
+    a callable that runs every verdict, in order, after the action."""
+    from pyspark.sql import Observation
+
+    observations = []
+    for aggs, _ in gates:
+        obs = Observation()
+        df = df.observe(obs, *aggs)
+        observations.append(obs)
+
+    def audit() -> None:
+        for obs, (_, verdict) in zip(observations, gates):
+            verdict(obs.get)
+
+    return df, audit
+
+
+def _write_files(
+    df: DataFrame, spec: dict[str, Any], fmt: str, gates: Sequence[Gate]
+) -> None:
     if spec.get("cluster_by"):
         # Global clustering on write: range-repartition so each output
         # task owns a disjoint key range, then sort locally — file and
@@ -318,7 +356,20 @@ def write_sink(df: DataFrame, spec: dict[str, Any]) -> None:
         # row-group min/max stats are tight (no extra shuffle). Use
         # when the upstream partitioning already groups the key.
         df = df.sortWithinPartitions(*spec["sort_by"])
-    writer = df.write.mode(spec.get("mode", "overwrite"))
+    mode = spec.get("mode", "overwrite")
+    if gates:
+        # Observed after the clustering transform: repartitionByRange's
+        # sampling job runs the plan below it, and would otherwise be
+        # counted as a second pass.
+        _staged_write(df, spec, fmt, mode, gates)
+    else:
+        _file_writer(df, spec, fmt, mode)(spec["path"])
+
+
+def _file_writer(
+    df: DataFrame, spec: dict[str, Any], fmt: str, mode: str
+) -> Callable[[str], None]:
+    writer = df.write.mode(mode)
     if spec.get("partition_by"):
         writer = writer.partitionBy(*spec["partition_by"])
     options = dict(spec.get("options", {}))
@@ -326,4 +377,91 @@ def write_sink(df: DataFrame, spec: dict[str, Any]) -> None:
         options.setdefault("header", True)  # symmetric with the reader default
     for k, v in options.items():
         writer = writer.option(k, v)
-    getattr(writer, fmt)(spec["path"])
+    return getattr(writer, fmt)
+
+
+def _staged_write(
+    df: DataFrame, spec: dict[str, Any], fmt: str, mode: str, gates: Sequence[Gate]
+) -> None:
+    """Write–audit–publish. The gated write lands in a hidden sibling
+    ``<parent>/.<name>.staging-<uuid>``; only if every verdict passes
+    is it published into the target under ``mode``. A rejected write
+    leaves the target exactly as it was, and the staging directory is
+    always removed. The target is examined before anything runs:
+    ``ignore`` skips the write (and its checks) when it exists, and
+    ``errorifexists`` fails before writing."""
+    spark = df.sparkSession
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    raw = Path(spec["path"])
+    fs = raw.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    target = fs.makeQualified(raw)
+    mode = mode.lower()
+    if mode not in ("overwrite", "append", "ignore", "error", "errorifexists", "default"):
+        raise ValueError(f"unknown save mode {mode!r}")
+    into_existing = mode in ("overwrite", "append")
+    if not into_existing and fs.exists(target):
+        if mode == "ignore":
+            return
+        raise FileExistsError(f"path {target.toString()} already exists (mode {mode})")
+    options = {str(k).lower(): str(v) for k, v in dict(spec.get("options", {})).items()}
+    dynamic = (
+        mode == "overwrite"
+        and bool(spec.get("partition_by"))
+        and options.get(
+            "partitionoverwritemode",
+            spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static"),
+        ).lower()
+        == "dynamic"
+    )
+    parent = target.getParent()
+    staging = Path(parent, f".{target.getName()}.staging-{uuid.uuid4().hex}")
+    observed, audit = _observed(df, gates)
+    try:
+        _file_writer(observed, spec, fmt, "errorifexists")(staging.toString())
+        audit()
+        if not fs.exists(target):
+            _rename(fs, staging, target)
+        elif not into_existing:  # the target appeared while we were writing
+            raise FileExistsError(f"path {target.toString()} already exists (mode {mode})")
+        elif mode == "overwrite" and not dynamic:
+            # swap through a second sibling so a failed rename restores
+            old = Path(parent, f".{target.getName()}.replaced-{uuid.uuid4().hex}")
+            _rename(fs, target, old)
+            try:
+                _rename(fs, staging, target)
+            except Exception:
+                _rename(fs, old, target)
+                raise
+            fs.delete(old, True)
+        else:  # append, or overwrite of only the partitions written
+            _merge_into(fs, Path, staging, target, replace_partitions=dynamic)
+    finally:
+        fs.delete(staging, True)
+
+
+def _rename(fs: Any, src: Any, dst: Any) -> None:
+    if not fs.rename(src, dst):
+        raise OSError(f"could not move {src.toString()} to {dst.toString()}")
+
+
+def _merge_into(
+    fs: Any, Path: Any, src: Any, dst: Any, replace_partitions: bool
+) -> None:
+    """Move every file under ``src`` to the same relative path under
+    ``dst``. Marker files (``_SUCCESS``) replace their namesakes. With
+    ``replace_partitions``, a partition directory that received data
+    files is emptied first (dynamic partition overwrite)."""
+    entries = list(fs.listStatus(src))
+    if replace_partitions and any(
+        e.isFile() and not e.getPath().getName().startswith("_") for e in entries
+    ):
+        fs.delete(dst, True)
+    fs.mkdirs(dst)
+    for e in entries:
+        out = Path(dst, e.getPath().getName())
+        if e.isDirectory():
+            _merge_into(fs, Path, e.getPath(), out, replace_partitions)
+            continue
+        if e.getPath().getName().startswith("_"):
+            fs.delete(out, False)
+        _rename(fs, e.getPath(), out)

@@ -1,10 +1,12 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest sits in, so pytest tests its own package
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 SF_SMALL = "/root/testdata/sf0.001"
 

@@ -50,3 +50,13 @@ def test_driver_and_distributed_paths_agree(spark, monkeypatch):
 def test_empty_edge_list_yields_empty_frame(spark):
     df = spark.createDataFrame([], "src long, dst long")
     assert G.connected_components(df).collect() == []
+
+
+def test_null_endpoints_are_dropped_on_both_paths(spark, monkeypatch):
+    edges = [(2, 1), (3, None), (None, 4), (None, None), (5, 3), (6, 5)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    fast = {r.node: r.component for r in G.connected_components(df).collect()}
+    monkeypatch.setattr(G, "_CC_COLLECT_CAP", 0)
+    slow = {r.node: r.component for r in G.connected_components(df).collect()}
+    want = _brute([e for e in edges if None not in e])
+    assert fast == slow == want

@@ -77,3 +77,8 @@ def test_inf_fast_path_and_nan_contract(spark):
     # inputs are required to be non-null/non-NaN, +-Inf passes through
     assert rows[1] is None
     assert rows[2] == float("inf") and rows[3] == float("-inf")
+
+
+def test_finite_values_whose_scaled_magnitude_overflows(spark):
+    # |x| * 10^6 is inf for these finite x; F.round returns x itself
+    _cmp(spark, [1e303, -1e303, 1.7976931348623157e308, -1.8e302, 2e302], 6)

@@ -4,6 +4,8 @@ option pass-through proven end-to-end through sources.readers."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from etl_framework_spark.sources.readers import read_source
@@ -118,3 +120,10 @@ def test_every_pipeline_op_handles_empty_input(spark):
         out = OPS[name](empty, **kwargs)
         assert out.count() == 0, name
         assert out.schema is not None, name
+
+
+def test_package_imports_from_this_checkout():
+    import etl_framework_spark
+
+    root = Path(__file__).resolve().parents[1]
+    assert Path(etl_framework_spark.__file__).resolve().is_relative_to(root)
