@@ -55,6 +55,27 @@ HEADLINE = [
 ]
 
 
+def cal_run(spark) -> float:
+    """One run of the calibration micro-workload, in seconds: the fixed
+    machine-state denominator. Registry- and data-independent, it
+    exercises codegen, a hash agg and a real shuffle."""
+    t0 = time.time()
+    (
+        spark.range(0, 10_000_000, 1, 32)
+        .selectExpr(
+            "id % 1024 AS g",
+            "id * 2654435761 % 97 AS h",
+            "sin(cast(id AS DOUBLE) / 1e6) AS s",
+        )
+        .groupBy("g")
+        .agg({"h": "sum", "s": "avg"})
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
+    return time.time() - t0
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from etl_framework_spark.session import get_spark
@@ -68,29 +89,10 @@ def main() -> None:
         qs[key](spark, sf_dir).write.format("noop").mode("overwrite").save()
         return time.time() - t0
 
-    def cal_run() -> float:
-        # fixed machine-state denominator: registry/data-independent,
-        # exercises codegen + hash-agg + a real shuffle
-        t0 = time.time()
-        (
-            spark.range(0, 10_000_000, 1, 32)
-            .selectExpr(
-                "id % 1024 AS g",
-                "id * 2654435761 % 97 AS h",
-                "sin(cast(id AS DOUBLE) / 1e6) AS s",
-            )
-            .groupBy("g")
-            .agg({"h": "sum", "s": "avg"})
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-        return time.time() - t0
-
     run("agg_groupby")  # session warmup, untimed
-    cal_run()
-    cal_run()
-    calibration = round(sorted(cal_run() for _ in range(5))[2], 3)
+    cal_run(spark)
+    cal_run(spark)
+    calibration = round(sorted(cal_run(spark) for _ in range(5))[2], 3)
     times: dict[str, float] = {}
     for key in HEADLINE:
         # two untimed warmups: the first compiles the plan + codegen,

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_framework_spark.session import prep
+
 TABLES = [
     "region",
     "nation",
@@ -54,3 +56,10 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register all testdata tables as temp views (idempotent)."""
     for name in TABLES:
         table(spark, sf_dir, name).createOrReplaceTempView(name)
+
+
+def sql_over_views(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
+    """``sql`` run against the testdata tables registered as views."""
+    prep(spark)
+    register_views(spark, sf_dir)
+    return spark.sql(sql)

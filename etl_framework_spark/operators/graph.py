@@ -19,11 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from etl_framework_spark.operators import guarded
+
 
 _CC_COLLECT_CAP = 2_000_000  # distinct directed edge rows; ~32 MB of
-# two int64 columns via Arrow plus the union-find maps — the driver
-# bound for the in-process path. Larger edge lists take the
-# distributed label-propagation fixpoint below.
+# two int64 columns via Arrow plus the union-find maps
 
 
 def _uf_components(s, d) -> list[tuple]:
@@ -68,20 +68,17 @@ def connected_components(
     # round per label-propagation step (O(diameter) serialized Spark
     # jobs) even when the DISTINCT edge list is tiny next to its
     # upstream (llm_dedup_cc: 7.5k star edges at sf0.1 under a MinHash
-    # pipeline). Collect the edge list through Arrow under a capped
-    # guard and union-find in-process — isolated A/B at sf0.1 inside
-    # llm_dedup_cc, median-of-3: 9.34 → 3.20 s, value-identical.
-    # Above the cap the distributed fixpoint below is unchanged — the
-    # correct shape when the edge list genuinely exceeds one task.
-    # An edge with a NULL endpoint connects nothing; both paths drop it
-    # (the union-find could not hash-compare None against ints).
+    # pipeline). Union-find the capped edge list in-process instead —
+    # isolated A/B at sf0.1 inside llm_dedup_cc, median-of-3:
+    # 9.34 → 3.20 s, value-identical. An edge with a NULL endpoint
+    # connects nothing; both paths drop it (the union-find could not
+    # hash-compare None against ints).
     edges = edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
-    head = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .limit(_CC_COLLECT_CAP + 1)
-        .toArrow()
+    head = guarded.collect_capped(
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")),
+        _CC_COLLECT_CAP,
     )
-    if head.num_rows <= _CC_COLLECT_CAP:
+    if head is not None:
         rows = _uf_components(
             head.column("a").to_pylist(), head.column("b").to_pylist()
         )

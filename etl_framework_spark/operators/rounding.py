@@ -39,8 +39,15 @@ this (non-null TPC-H numerics through total libm functions).
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def q6(c: Column) -> Column:
+    """Sign-agnostic emit-boundary quantization to 6 dp, floor(x·1e6 +
+    0.5) / 1e6 — for values that are non-negative or far from .5 ulp
+    ties."""
+    return F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
 
 
 def hybrid_round_select(

@@ -20,6 +20,8 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from etl_framework_spark.operators import guarded
+
 
 def dot_fold(a: Column, b: Column) -> Column:
     """Strict sequential dot product of two float arrays, in float64."""
@@ -230,22 +232,24 @@ def anchor_knn(cand_df, anchor_df, k: int, quant: float,
     """
     import pandas as pd
 
-    rows = anchor_df.select(id_col, vec_col).limit(_MAX_ANCHOR_COLLECT + 1).collect()
-    if len(rows) > _MAX_ANCHOR_COLLECT:
+    anchors = guarded.collect_capped(
+        anchor_df.select(id_col, vec_col), _MAX_ANCHOR_COLLECT
+    )
+    if anchors is None:
         raise ValueError(
             f"anchor_knn: anchor set exceeds {_MAX_ANCHOR_COLLECT}; "
             "grow the sampling modulus so the anchor count stays fixed "
             "(callers pin the modulus statically so their SQL oracle "
             "matches — see the SF-ceiling note at each call site)"
         )
-    if not rows:
+    if not anchors.num_rows:
         raise ValueError(
             "anchor_knn: anchor set is empty — the sampling predicate "
             "matched no rows (ADVICE r6: an empty anchor matrix would "
             "otherwise die in an opaque numpy unpack)"
         )
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    A = np.array([r[1] for r in rows], dtype=np.float64)  # (M, D)
+    ids = anchors.column(id_col).to_numpy().astype(np.int64)
+    A = guarded.as_matrix(anchors.column(vec_col))  # (M, D)
     m, dims = A.shape
     sentinel = np.iinfo(np.int64).max
 

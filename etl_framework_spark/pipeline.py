@@ -70,8 +70,12 @@ def _select(df: DataFrame, exprs: list[str]) -> DataFrame:
     return df.selectExpr(*exprs)
 
 
+@op("window")
 @op("with_columns")
 def _with_columns(df: DataFrame, columns: dict[str, str]) -> DataFrame:
+    """New columns from SQL expression strings. The ``window`` op is
+    the same step with window exprs, e.g.
+    ``row_number() OVER (PARTITION BY k ORDER BY v DESC)``."""
     return df.withColumns({k: F.expr(v) for k, v in columns.items()})
 
 
@@ -98,13 +102,6 @@ def _aggregate(df: DataFrame, group_by: list[str], aggs: dict[str, str]) -> Data
     if group_by:
         return df.groupBy(*[F.expr(g) for g in group_by]).agg(*exprs)
     return df.agg(*exprs)
-
-
-@op("window")
-def _window(df: DataFrame, columns: dict[str, str]) -> DataFrame:
-    """Window exprs as full SQL strings, e.g.
-    ``row_number() OVER (PARTITION BY k ORDER BY v DESC)``."""
-    return df.withColumns({k: F.expr(v) for k, v in columns.items()})
 
 
 @op("distinct")

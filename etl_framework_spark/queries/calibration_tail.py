@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
+from etl_framework_spark.operators import guarded
 from etl_framework_spark.operators.graph import co_occurrence_pairs
 from etl_framework_spark.registry import query
 from etl_framework_spark.session import prep
@@ -224,9 +225,7 @@ def _peel_sql() -> str:
     return sql + " " + " UNION ALL ".join(parts)
 
 
-_PEEL_COLLECT_CAP = 2_000_000  # ~32 MB of (u, v) longs — the driver
-# bound for the in-process peel; larger edge sets take the
-# distributed fallback
+_PEEL_COLLECT_CAP = 2_000_000  # ~32 MB of (u, v) longs via Arrow
 
 
 def _peel_in_process(edges: list) -> list[tuple]:
@@ -278,23 +277,21 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edge set (~40k rows at sf0.1) was already serialized onto ONE
     # partition (coalesce(1)) and repeatedly pushed through the driver
     # as per-round degree broadcasts — ~12 tiny jobs of pure
-    # scheduling overhead. Collect it ONCE under the repo's
-    # guarded-collect pattern (same memory class as the old
-    # single-partition + broadcast shape) and peel in-process; above
-    # the cap, fall back to the distributed per-round loop, which is
-    # the correct shape when the edge set genuinely exceeds one task.
+    # scheduling overhead. Collect it ONCE (same memory class as the
+    # old single-partition + broadcast shape) and peel in-process.
     # In-process alternating A/B at sf0.1: 4.68 → 3.96 s median,
     # byte-identical output.
-    edge_rows = (
+    edge_tbl = guarded.collect_capped(
         w0.crossJoin(F.broadcast(thr))
         .filter(F.col("c") > F.col("t"))
-        .select("u", "v")
-        .limit(_PEEL_COLLECT_CAP + 1)
-        .collect()
+        .select("u", "v"),
+        _PEEL_COLLECT_CAP,
     )
-    if len(edge_rows) <= _PEEL_COLLECT_CAP:
+    if edge_tbl is not None:
         w0.unpersist()
-        edge_list = [(r["u"], r["v"]) for r in edge_rows]
+        edge_list = list(
+            zip(edge_tbl.column("u").to_pylist(), edge_tbl.column("v").to_pylist())
+        )
         out_rows = _peel_in_process(edge_list)
         return spark.createDataFrame(
             out_rows,

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
+from etl_framework_spark.operators import guarded
 from etl_framework_spark.registry import query
 from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
@@ -46,8 +47,7 @@ _H1, _H24, _H168 = 3600, 86400, 604800  # velocity horizons (seconds)
 # k-hop reachability over the supplier-part bipartite graph
 # --------------------------------------------------------------------------
 _KHOP_COLLECT_CAP = 8_000_000  # distinct (supplier, part) edge rows; two
-# int64 columns ≈ 128 MB via Arrow — the driver bound for the in-process
-# BFS; larger graphs take the distributed frontier-join fallback
+# int64 columns ≈ 128 MB via Arrow, folded as numpy arrays
 
 
 def _khop_bfs_in_process(s, d, seed: int) -> list[tuple]:
@@ -129,14 +129,11 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12 (guide §1.2; VERDICT r11 item 4): the k unrolled frontier
     # rounds each cost a distinct shuffle + anti-join + checkpoint job
     # on a graph whose DISTINCT edge list is tiny next to lineitem
-    # (~0.6M rows at sf0.1). Pull the deduped edge list through Arrow
-    # ONCE under a capped guard and BFS in-process — isolated
-    # alternating A/B at sf0.1, median-of-3: 5.14 → 1.41 s,
-    # value-identical. Above the cap (8M distinct edges ≈ 128 MB) the
-    # distributed frontier-join loop below is the correct shape and
-    # unchanged.
-    head = fwd.limit(_KHOP_COLLECT_CAP + 1).toArrow()
-    if head.num_rows <= _KHOP_COLLECT_CAP:
+    # (~0.6M rows at sf0.1). Pull the deduped edge list ONCE and BFS
+    # in-process — isolated alternating A/B at sf0.1, median-of-3:
+    # 5.14 → 1.41 s, value-identical.
+    head = guarded.collect_capped(fwd, _KHOP_COLLECT_CAP)
+    if head is not None:
         out_rows = _khop_bfs_in_process(
             head.column("src").to_numpy(zero_copy_only=False),
             head.column("dst").to_numpy(zero_copy_only=False),

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
+from etl_framework_spark.operators import guarded
 from etl_framework_spark.registry import query
 from etl_framework_spark.session import prep
 
@@ -256,21 +257,21 @@ def vec_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    rows = carr.limit(_NC_MAX_CENTROIDS + 1).collect()
-    if len(rows) > _NC_MAX_CENTROIDS:
+    cents = guarded.collect_capped(carr, _NC_MAX_CENTROIDS)
+    if cents is None:
         raise ValueError(
             "vec_nearest_centroid: centroid count exceeds "
             f"{_NC_MAX_CENTROIDS} — the key%100 label encoding (shared "
             "with the oracle) only supports 2-digit labels; widen both "
             "together"
         )
-    if not rows:
+    if not cents.num_rows:
         raise ValueError(
             "vec_nearest_centroid: no centroids — embeddings table is "
             "empty"
         )
-    labels_arr = np.array([r["clabel"] for r in rows], dtype=np.int64)
-    C = np.array([r["cv"] for r in rows], dtype=np.float64)  # (L, D)
+    labels_arr = cents.column("clabel").to_numpy().astype(np.int64)
+    C = guarded.as_matrix(cents.column("cv"))  # (L, D)
 
     def gen(it):
         for pdf in it:

@@ -26,16 +26,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
+from etl_framework_spark.operators.rounding import q6
 from etl_framework_spark.registry import query
 from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 _DIM = 64
 _SCALE = 1_000_000_000_000  # 1e12 quantization for integer-exact sums
-
-
-def _q6(c):
-    return F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
 
 
 # Shared DuckDB CTE: means -> integer-exact covariance -> two power
@@ -242,8 +239,8 @@ def vec_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(nrow))
         .select(
             "dim",
-            _q6(F.col("v")).alias("loading"),
-            _q6(F.col("lam")).alias("eigenvalue"),
+            q6(F.col("v")).alias("loading"),
+            q6(F.col("lam")).alias("eigenvalue"),
             F.col("n").cast("bigint").alias("n_vecs"),
         )
     )

@@ -28,6 +28,7 @@ from pyspark.sql.window import Window as W
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.queries.pca_q import _PCA_CTE
+from etl_framework_spark.operators.rounding import q6
 from etl_framework_spark.registry import query
 from etl_framework_spark.session import prep
 
@@ -38,10 +39,6 @@ _PAA_SEGMENTS = 6
 # Standard SAX breakpoints for a 4-symbol alphabet (N(0,1) quantiles
 # at 25/50/75%): symbols a < b < c < d.
 _SAX_BREAKS = (-0.6744897501960817, 0.0, 0.6744897501960817)
-
-
-def _q6(c):
-    return F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
 
 
 # --------------------------------------------------------------------------
@@ -89,9 +86,9 @@ def vec_pca_variance_explained(spark: SparkSession, sf_dir: str) -> DataFrame:
         ray.crossJoin(F.broadcast(trace))
         .crossJoin(F.broadcast(nrow))
         .select(
-            _q6(F.col("lam")).alias("eigenvalue"),
-            _q6(F.col("trace")).alias("total_variance"),
-            _q6(F.col("lam") / F.col("trace")).alias("explained_ratio"),
+            q6(F.col("lam")).alias("eigenvalue"),
+            q6(F.col("trace")).alias("total_variance"),
+            q6(F.col("lam") / F.col("trace")).alias("explained_ratio"),
             F.col("n").cast("bigint").alias("n_vecs"),
         )
     )
@@ -296,7 +293,7 @@ def ts_paa_sax(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "seg",
         "seg_days",
-        _q6(F.col("m")).alias("paa_mean"),
+        q6(F.col("m")).alias("paa_mean"),
         F.when(z < _SAX_BREAKS[0], "a")
         .when(z < _SAX_BREAKS[1], "b")
         .when(z < _SAX_BREAKS[2], "c")

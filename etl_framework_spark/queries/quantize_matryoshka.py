@@ -41,6 +41,7 @@ from pyspark.sql.window import Window as W
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.similarity import duck_cosine
 from etl_framework_spark.operators.textops import tokens
+from etl_framework_spark.operators.rounding import q6
 from etl_framework_spark.registry import query
 from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
@@ -56,10 +57,6 @@ _SWEEP_STEPS = 19
 _MATRYOSHKA_DIMS = 16
 _MK = 10  # top-k compared between truncated and full rankings
 _QUERY_MOD = 10  # vec_id % _QUERY_MOD == 0 rows act as queries
-
-
-def _q6(c):
-    return F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
 
 
 # --------------------------------------------------------------------------
@@ -272,8 +269,8 @@ def vec_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = errs.select(
         "vec_id",
         "label",
-        _q6(rmse).alias("rmse"),
-        _q6(F.array_max(F.transform(F.col("err"), F.abs))).alias("max_err"),
+        q6(rmse).alias("rmse"),
+        q6(F.array_max(F.transform(F.col("err"), F.abs))).alias("max_err"),
     )
     folded = per.groupBy("label").agg(
         F.count("*").cast("bigint").alias("n_vecs"),
@@ -285,7 +282,7 @@ def vec_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.col("n_vecs")
     )
     return folded.select(
-        "label", "n_vecs", _q6(mean_rmse).alias("mean_rmse"), "worst_abs_err"
+        "label", "n_vecs", q6(mean_rmse).alias("mean_rmse"), "worst_abs_err"
     )
 
 
@@ -358,21 +355,9 @@ def vec_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     from etl_framework_spark.queries import vector_q
 
-    q_rows = (
-        emb.filter(F.col("vec_id") % _QUERY_MOD == 0)
-        .select("vec_id", "embedding")
-        .limit(vector_q._MAX_Q_COLLECT + 1)
-        .collect()
+    qids, Q = vector_q._collect_queries(
+        emb, F.col("vec_id") % _QUERY_MOD == 0, "vec_matryoshka"
     )
-    if len(q_rows) > vector_q._MAX_Q_COLLECT:
-        raise ValueError(
-            f"vec_matryoshka: query set exceeds _MAX_Q_COLLECT="
-            f"{vector_q._MAX_Q_COLLECT} rows; shard the query set "
-            "(one corpus pass per shard) instead of widening the "
-            "driver collect"
-        )
-    qids = np.array([r.vec_id for r in q_rows], dtype=np.int64)
-    Q = np.array([r.embedding for r in q_rows], dtype=np.float64)
     td = _MATRYOSHKA_DIMS
 
     def norms_strict(M):

@@ -33,14 +33,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from etl_framework_spark.catalog import table
+from etl_framework_spark.operators.rounding import q6
 from etl_framework_spark.registry import query
 from etl_framework_spark.session import prep
 
 _MK_Z = 1.959963984540054  # two-sided 5% normal critical value
-
-
-def _q6(c):
-    return F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
 
 
 # --------------------------------------------------------------------------
@@ -338,9 +335,9 @@ def ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = de.join(F.broadcast(se), ["event_type", "dow"]).select(
         "event_type",
         "day",
-        _q6(F.col("trend")).alias("t"),
-        _q6(F.col("seasonal")).alias("s"),
-        _q6(F.col("detr") - F.col("seasonal")).alias("r"),
+        q6(F.col("trend")).alias("t"),
+        q6(F.col("seasonal")).alias("s"),
+        q6(F.col("detr") - F.col("seasonal")).alias("r"),
     )
     arrs = comp.groupBy("event_type").agg(
         F.array_sort(
@@ -439,7 +436,7 @@ def llm_semantic_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     folded = joined.groupBy("vec_id", "label").agg(
         F.array_sort(F.collect_list(F.struct("dim", "sq"))).alias("sv")
     )
-    dist = _q6(
+    dist = q6(
         F.sqrt(F.aggregate(F.col("sv.sq"), F.lit(0.0), lambda a, x: a + x))
     )
     dists = folded.select("vec_id", "label", dist.alias("d"))

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
+from etl_framework_spark.operators import guarded
 from etl_framework_spark.operators.graph import co_occurrence_pairs
 from etl_framework_spark.registry import query
 from etl_framework_spark.session import prep
@@ -201,8 +202,7 @@ def stats_hill_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Degree assortativity of the co-supplier graph
 # --------------------------------------------------------------------------
 _ASSORT_COLLECT_CAP = 2_000_000  # sparsified (u, v) edge rows; ~32 MB
-# of two int64 columns via Arrow — the driver bound for the in-process
-# moment fold; larger edge sets take the distributed shape
+# of two int64 columns via Arrow
 
 
 @query(
@@ -285,16 +285,14 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # semantics are unchanged. Both orientations of each edge are
     # folded symmetrically (mx==my, mxx==myy by construction).
     # Alternating A/B at sf0.1: wins every pair, 13.19 → 9.64 s
-    # medians on a loaded box (~0.9 s on quiet runs). Above the cap,
-    # the distributed shape below is unchanged.
-    edge_rows = (
+    # medians on a loaded box (~0.9 s on quiet runs).
+    edge_rows = guarded.collect_capped(
         w0.crossJoin(F.broadcast(thr))
         .filter(F.col("c") > F.col("t"))
-        .select("u", "v")
-        .limit(_ASSORT_COLLECT_CAP + 1)
-        .toArrow()
+        .select("u", "v"),
+        _ASSORT_COLLECT_CAP,
     )
-    if edge_rows.num_rows <= _ASSORT_COLLECT_CAP:
+    if edge_rows is not None:
         w0.unpersist()
         us = edge_rows.column("u").to_pylist()
         vs = edge_rows.column("v").to_pylist()

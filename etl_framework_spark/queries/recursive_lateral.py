@@ -8,15 +8,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_framework_spark.catalog import register_views, table
+from etl_framework_spark.catalog import sql_over_views, table
 from etl_framework_spark.registry import query
 from etl_framework_spark.session import prep
-
-
-def _sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    prep(spark)
-    register_views(spark, sf_dir)
-    return spark.sql(sql)
 
 
 # A recursive month spine left-joined to orders = gap-filled monthly
@@ -47,7 +41,7 @@ def cte_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar spine by recursion, then gap-fill per-month order counts
     via an equi-join on the truncated month — months with no orders
     report 0; the fact table is reduced before it meets the spine."""
-    return _sql(spark, sf_dir, _RECURSIVE_SQL)
+    return sql_over_views(spark, sf_dir, _RECURSIVE_SQL)
 
 
 _LATERAL_SQL = """
@@ -68,7 +62,7 @@ def join_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LATERAL correlated subquery: top-2 orders per customer with
     the per-group LIMIT inside the lateral relation (the SQL twin of
     the W6 window top-k, planned as a rank-limited join)."""
-    return _sql(spark, sf_dir, _LATERAL_SQL)
+    return sql_over_views(spark, sf_dir, _LATERAL_SQL)
 
 
 @query(

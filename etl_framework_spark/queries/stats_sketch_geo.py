@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from etl_framework_spark.catalog import table
+from etl_framework_spark.operators.rounding import q6
 from etl_framework_spark.registry import query
 from etl_framework_spark.session import prep
 
@@ -71,12 +72,6 @@ _KN_TOP = 20
 _TRAIN_LT = 3865470566  # floor(0.9 * 2^32)
 
 _SHARDS = 16
-
-
-def _q6(c):
-    """Sign-agnostic emit-boundary quantization to 6 dp (floor(x·1e6 +
-    0.5) — all values here are non-negative or far from .5 ulp ties)."""
-    return F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
 
 
 # --------------------------------------------------------------------------
@@ -631,9 +626,9 @@ def ts_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.select(
         "event_type",
         "n_days",
-        _q6(F.col("mu_raw")).alias("mu"),
-        _q6(F.col("sigma_raw")).alias("sigma"),
-        _q6(F.col("m_raw")).alias("cusum_max"),
+        q6(F.col("mu_raw")).alias("mu"),
+        q6(F.col("sigma_raw")).alias("sigma"),
+        q6(F.col("m_raw")).alias("cusum_max"),
         "changepoint_epoch",
         (F.col("m_raw") > F.lit(_CUSUM_H) * F.col("sigma_raw")).alias(
             "flagged"
@@ -702,7 +697,7 @@ def fn_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = pts.select(
         F.floor(F.col("lat") / 15).alias("cell_lat"),
         F.floor(F.col("lon") / 15).alias("cell_lon"),
-        _q6(hav).alias("dist_km"),
+        q6(hav).alias("dist_km"),
     )
     return d.groupBy("cell_lat", "cell_lon").agg(
         F.count("*").cast("bigint").alias("n_points"),
@@ -878,7 +873,7 @@ def llm_eval_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = tetok.groupBy("lang", "tok").agg(
         F.count("*").cast("double").alias("f")
     )
-    term = _q6(
+    term = q6(
         F.col("f")
         * -F.log2(
             (F.coalesce(F.col("c"), F.lit(0.0)) + 1.0)
@@ -909,7 +904,7 @@ def llm_eval_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.col("ftot").cast("bigint").alias("n_test_tokens"),
         F.round(F.col("foov") / F.col("ftot"), 6).alias("oov_rate"),
-        _q6(xent).alias("xent_bits"),
+        q6(xent).alias("xent_bits"),
     )
 
 

@@ -25,15 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_framework_spark.catalog import register_views, table
+from etl_framework_spark.catalog import sql_over_views, table
 from etl_framework_spark.registry import query
 from etl_framework_spark.session import prep
-
-
-def _sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    prep(spark)
-    register_views(spark, sf_dir)
-    return spark.sql(sql)
 
 
 # --------------------------------------------------------------------------
@@ -56,7 +50,7 @@ def q4_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: order-priority counts over a quarter, EXISTS a
     late lineitem (>30d after orderdate) — semi join after Catalyst's
     RewritePredicateSubquery."""
-    return _sql(spark, sf_dir, _Q4_SQL)
+    return sql_over_views(spark, sf_dir, _Q4_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -229,7 +223,7 @@ _Q8_SQL = """
 def q8_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: one nation's share of a region's PROMO-part
     market per year — 8-table join, conditional-ratio aggregate."""
-    return _sql(spark, sf_dir, _Q8_SQL)
+    return sql_over_views(spark, sf_dir, _Q8_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -258,7 +252,7 @@ def q9_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape: profit per supplier nation per year. No
     partsupp table in this schema, so supply cost is proxied as
     0.6 × p_retailprice × quantity — same join/agg shape."""
-    return _sql(spark, sf_dir, _Q9_SQL)
+    return sql_over_views(spark, sf_dir, _Q9_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -319,7 +313,7 @@ def q13_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: orders-per-customer histogram through an outer
     join with a join-side filter (customers with zero matches count 0)
     and a second aggregation over the first."""
-    return _sql(spark, sf_dir, _Q13_SQL)
+    return sql_over_views(spark, sf_dir, _Q13_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -344,7 +338,7 @@ _Q15_SQL = """
 def q15_topsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: CTE reused twice (group revenue + its scalar
     max); revenue is rounded before the max so ties are engine-stable."""
-    return _sql(spark, sf_dir, _Q15_SQL)
+    return sql_over_views(spark, sf_dir, _Q15_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -365,7 +359,7 @@ def q17_smallqty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape: correlated per-part average-quantity subquery
     — decorrelated by Catalyst into an aggregate joined back on
     partkey (one pass over lineitem, not one rescan per part)."""
-    return _sql(spark, sf_dir, _Q17_SQL)
+    return sql_over_views(spark, sf_dir, _Q17_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -391,7 +385,7 @@ def q20_excess(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape (no partsupp): suppliers who shipped >50 units
     of any bolt part in 1997 — IN over a grouped+HAVING subquery,
     planned as agg → semi join."""
-    return _sql(spark, sf_dir, _Q20_SQL)
+    return sql_over_views(spark, sf_dir, _Q20_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -433,4 +427,4 @@ def q21_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape: count, per supplier, the finished
     multi-supplier orders where that supplier was the only late one
     (late = shipped >60d after orderdate)."""
-    return _sql(spark, sf_dir, _Q21_SQL)
+    return sql_over_views(spark, sf_dir, _Q21_SQL)

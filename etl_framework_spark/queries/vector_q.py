@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
+from etl_framework_spark.operators import guarded
 from etl_framework_spark.operators.similarity import (
     cosine,
     dot_fold,
@@ -41,6 +42,26 @@ _MAX_Q_COLLECT = 1_000_000
 
 _COS_QE = duck_cosine("q.qe", "e.embedding")
 _COS_AB = duck_cosine("a.embedding", "b.embedding")
+
+
+def _collect_queries(emb: DataFrame, query_pred, key: str) -> tuple:
+    """(qids, Q) for the rows of ``emb`` matching ``query_pred``: int64
+    vec_ids and the float64 (n, dim) embedding matrix, collected under
+    _MAX_Q_COLLECT. Past the cap it raises: the exact paths broadcast
+    the whole query set, so a larger one must be sharded."""
+    import numpy as np
+
+    q = guarded.collect_capped(
+        emb.filter(query_pred).select("vec_id", "embedding"), _MAX_Q_COLLECT
+    )
+    if q is None:
+        raise ValueError(
+            f"{key}: query set exceeds _MAX_Q_COLLECT={_MAX_Q_COLLECT} "
+            "rows; shard the query set (one corpus pass per shard) or use "
+            "llm_sim_ann/llm_sim_ivf."
+        )
+    qids = q.column("vec_id").to_numpy().astype(np.int64)
+    return qids, guarded.as_matrix(q.column("embedding"))
 
 
 # --------------------------------------------------------------------------
@@ -128,19 +149,7 @@ def exact_topk(
     emb = table(spark, sf_dir, "embeddings")
     if query_pred is None:
         query_pred = F.col("vec_id") % QUERY_MOD == 0
-    q_rows = (
-        emb.filter(query_pred)
-        .limit(_MAX_Q_COLLECT + 1)
-        .collect()
-    )
-    if len(q_rows) > _MAX_Q_COLLECT:
-        raise ValueError(
-            f"llm_sim_topk exact path: query set exceeds _MAX_Q_COLLECT="
-            f"{_MAX_Q_COLLECT} rows; shard the query set (one corpus pass "
-            "per shard) or use llm_sim_ann/llm_sim_ivf."
-        )
-    qids = np.array([r.vec_id for r in q_rows], dtype=np.int64)
-    Q = np.array([r.embedding for r in q_rows], dtype=np.float64)
+    qids, Q = _collect_queries(emb, query_pred, "llm_sim_topk exact path")
     nq, dim = Q.shape
     qn_acc = np.zeros(nq)
     for d in range(dim):  # strict fold: ((0 + p1) + p2) + ... per query
@@ -271,21 +280,7 @@ def gemm_topk(
     emb = table(spark, sf_dir, "embeddings")
     if query_pred is None:
         query_pred = F.col("vec_id") % QUERY_MOD == 0
-    # same driver-memory guard as the exact twin (VERDICT r7 item 3:
-    # this collect was the one unguarded data-dependent collect).
-    q_rows = (
-        emb.filter(query_pred)
-        .limit(_MAX_Q_COLLECT + 1)
-        .collect()
-    )
-    if len(q_rows) > _MAX_Q_COLLECT:
-        raise ValueError(
-            f"llm_sim_topk_gemm: query set exceeds _MAX_Q_COLLECT="
-            f"{_MAX_Q_COLLECT} rows; shard the query set (one corpus pass "
-            "per shard) or use llm_sim_ann/llm_sim_ivf."
-        )
-    qids = np.array([r.vec_id for r in q_rows], dtype=np.int64)
-    Q = np.array([r.embedding for r in q_rows], dtype=np.float64)
+    qids, Q = _collect_queries(emb, query_pred, "llm_sim_topk_gemm")
     Q /= np.linalg.norm(Q, axis=1, keepdims=True)
     b = spark.sparkContext.broadcast((qids, Q))
     k = TOPK
@@ -471,17 +466,8 @@ def sq8_topk(
             127,
         )
 
-    q_rows = (
-        emb.filter(query_pred).limit(_MAX_Q_COLLECT + 1).collect()
-    )
-    if len(q_rows) > _MAX_Q_COLLECT:
-        raise ValueError(
-            f"llm_sim_sq8: query set exceeds _MAX_Q_COLLECT="
-            f"{_MAX_Q_COLLECT} rows; shard the query set or use "
-            "llm_sim_ann/llm_sim_ivf."
-        )
-    qids = np.array([r.vec_id for r in q_rows], dtype=np.int64)
-    Qc = _codes(np.array([r.embedding for r in q_rows], dtype=np.float64))
+    qids, Q = _collect_queries(emb, query_pred, "llm_sim_sq8")
+    Qc = _codes(Q)
     b = spark.sparkContext.broadcast((qids, Qc, lo, scale))
     cand_k = 3 * TOPK
 

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import sys
 from pathlib import Path
 
@@ -24,3 +25,19 @@ def duck():
     import tools.check as check
 
     return check.duck_connect(SF_SMALL)
+
+
+@pytest.fixture
+def force_fallback(monkeypatch):
+    """A context manager: inside it every capped collect reports its
+    cap exceeded, so each guarded fold takes its distributed fallback
+    and each raise site raises."""
+    from etl_framework_spark.operators import guarded
+
+    @contextlib.contextmanager
+    def forced():
+        with monkeypatch.context() as m:
+            m.setattr(guarded, "collect_capped", lambda df, cap: None)
+            yield
+
+    return forced

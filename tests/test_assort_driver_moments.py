@@ -1,16 +1,13 @@
 """r12: graph_assortativity folds the post-threshold edge moments
 in-process under a capped guard. Pin the driver path against the
-distributed fallback (cap forced to 0) — byte-identical rows."""
-import pytest
-
+distributed fallback (forced) — byte-identical rows."""
 from etl_framework_spark.queries import rater_tailindex as RT
+from tests.conftest import SF_SMALL
 
-SF_SMALL = "/root/testdata/sf0.001"
 
-
-def test_driver_and_distributed_assortativity_agree(spark, monkeypatch):
+def test_driver_and_distributed_assortativity_agree(spark, force_fallback):
     fast = [tuple(r) for r in RT.graph_assortativity(spark, SF_SMALL).collect()]
-    monkeypatch.setattr(RT, "_ASSORT_COLLECT_CAP", 0)
-    slow = [tuple(r) for r in RT.graph_assortativity(spark, SF_SMALL).collect()]
+    with force_fallback():
+        slow = [tuple(r) for r in RT.graph_assortativity(spark, SF_SMALL).collect()]
     assert fast == slow
     assert len(fast) == 1 and fast[0][0] > 0

@@ -4,7 +4,8 @@ data-dependent query set must raise a clear error past _MAX_Q_COLLECT
 instead of silently truncating or OOMing the driver — and the guard
 must bound the transfer itself (limit pushed into the collected plan),
 not collect-then-count. A static lint walks the whole package so a new
-unguarded ``.collect()`` can never land silently.
+unguarded ``.collect()``, ``.toArrow()`` or ``.toPandas()`` can never
+land silently.
 """
 
 from __future__ import annotations
@@ -39,23 +40,24 @@ def test_query_collect_guard_raises_loudly(spark, impl, name, monkeypatch):
 def test_guard_limit_bounds_the_transfer(spark, monkeypatch):
     """The guard must bound the COLLECT itself — otherwise the guard
     is the OOM it guards against (ADVICE r8). Spy on
-    DataFrame.collect at a tiny cap and assert no collect in the
-    guarded path ever transfers more than _MAX_Q_COLLECT + 1 rows;
-    a collect-then-count regression would transfer the full query
-    set (hundreds of rows at sf0.001) and fail here."""
+    DataFrame.toArrow, the capped-collect transport, at a tiny cap and
+    assert no transfer in the guarded path ever carries more than
+    _MAX_Q_COLLECT + 1 rows; a collect-then-count regression would
+    transfer the full query set (hundreds of rows at sf0.001) and fail
+    here."""
     # patch the concrete class — pyspark.sql.DataFrame is the abstract
     # facade in Spark 4 and local sessions run the classic subclass
     from pyspark.sql.classic.dataframe import DataFrame
 
     collected: list[int] = []
-    real_collect = DataFrame.collect
+    real_to_arrow = DataFrame.toArrow
 
     def spy(self):
-        rows = real_collect(self)
-        collected.append(len(rows))
-        return rows
+        table = real_to_arrow(self)
+        collected.append(table.num_rows)
+        return table
 
-    monkeypatch.setattr(DataFrame, "collect", spy)
+    monkeypatch.setattr(DataFrame, "toArrow", spy)
     monkeypatch.setattr(vector_q, "_MAX_Q_COLLECT", 3)
     for impl in (vector_q.exact_topk, quantize_matryoshka.vec_matryoshka):
         collected.clear()
@@ -68,27 +70,42 @@ def test_guard_limit_bounds_the_transfer(spark, monkeypatch):
         )
 
 
+_DRIVER_TRANSFERS = (".collect()", ".toArrow()", ".toPandas()")
+
+
 def test_no_unguarded_collect_in_package() -> None:
     """Registry-wide collect LINT (VERDICT r8 item 1): every
-    ``.collect()`` in etl_framework_spark must, within the 10 lines
-    above or 2 below, either push a ``limit(`` into the collected
-    plan or carry a ``bounded`` comment stating why the row count
-    can't grow with the data. Adding an unguarded collect anywhere in
-    the package fails this test — guards are a lint, not a hand-list."""
+    ``.collect()``, ``.toArrow()`` or ``.toPandas()`` in
+    etl_framework_spark must, within the 10 lines above or 2 below,
+    either push a ``limit(`` into the collected plan or carry a
+    ``bounded`` comment stating why the row count can't grow with the
+    data. Adding an unguarded collect anywhere in the package fails
+    this test — guards are a lint, not a hand-list."""
     offenders: list[str] = []
     for py in sorted(_PKG.rglob("*.py")):
         lines = py.read_text().splitlines()
         for i, line in enumerate(lines):
-            if ".collect()" not in line:
+            if not any(t in line for t in _DRIVER_TRANSFERS):
                 continue
             window = "\n".join(lines[max(0, i - 10) : i + 3])
             if "limit(" in window or "bounded" in window:
                 continue
             offenders.append(f"{py.relative_to(_PKG.parent)}:{i + 1}")
     assert not offenders, (
-        "unguarded .collect() — add a limit(cap+1) guard or a "
-        f"'# bounded: <why>' comment: {offenders}"
+        "unguarded driver transfer — use guarded.collect_capped or add "
+        f"a '# bounded: <why>' comment: {offenders}"
     )
+
+
+def test_arrow_transport_lives_only_in_guarded() -> None:
+    """Capped collects go through operators/guarded.collect_capped:
+    no other module calls ``.toArrow()`` itself."""
+    users = sorted(
+        str(py.relative_to(_PKG))
+        for py in _PKG.rglob("*.py")
+        if ".toArrow()" in py.read_text()
+    )
+    assert users == ["operators/guarded.py"], users
 
 
 def test_lint_catches_a_planted_offender(tmp_path, monkeypatch) -> None:

@@ -1,7 +1,7 @@
 """r12: graph_kcore_peel's guarded in-process peel
 (queries/calibration_tail.py). The oracle sweep pins the key's
 values; these tests pin that the collected peel and the distributed
-fallback agree — on real data (by forcing the cap to 0) and on a
+fallback agree — on real data (by forcing the fallback) and on a
 crafted graph where peeling actually removes nodes round by round
 (the TPC-H co-supplier graph survives peeling intact, so it never
 exercises the shrink path)."""
@@ -12,10 +12,10 @@ import etl_framework_spark.queries.calibration_tail as ct
 from tests.conftest import SF_SMALL
 
 
-def test_fallback_equals_in_process(spark, monkeypatch):
+def test_fallback_equals_in_process(spark, force_fallback):
     fast_rows = ct.graph_kcore_peel(spark, SF_SMALL).collect()
-    monkeypatch.setattr(ct, "_PEEL_COLLECT_CAP", 0)
-    slow_rows = ct.graph_kcore_peel(spark, SF_SMALL).collect()
+    with force_fallback():
+        slow_rows = ct.graph_kcore_peel(spark, SF_SMALL).collect()
     assert [tuple(r) for r in fast_rows] == [tuple(r) for r in slow_rows]
     assert len(fast_rows) == ct._PEELS + 1
 

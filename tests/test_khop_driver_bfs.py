@@ -3,14 +3,16 @@ under a capped guard and runs BFS in-process. These tests pin the
 driver BFS against a brute-force min-level computation on adversarial
 graphs: disconnected components, early frontier exhaustion (levels
 with zero new nodes must terminate the walk, not emit zero rows), and
-the supplier/part side alternation."""
+the supplier/part side alternation — and the whole key against its
+distributed frontier-join fallback."""
 import numpy as np
-import pytest
 
 from etl_framework_spark.queries.khop_sessions import (
     _khop_bfs_in_process,
     _K_HOPS,
+    graph_khop_reach,
 )
+from tests.conftest import SF_SMALL
 
 
 def _brute_levels(edges: list, seed: int) -> list[tuple]:
@@ -80,3 +82,13 @@ def test_min_level_semantics_on_diamond():
     got = _run(edges, 0)
     assert got == _brute_levels(edges, 0)
     assert got == [(0, 1, 0), (1, 0, 2), (2, 1, 0), (3, 0, 1)]
+
+
+def test_fallback_equals_in_process(spark, force_fallback):
+    fast = sorted(tuple(r) for r in graph_khop_reach(spark, SF_SMALL).collect())
+    with force_fallback():
+        slow = sorted(
+            tuple(r) for r in graph_khop_reach(spark, SF_SMALL).collect()
+        )
+    assert fast == slow
+    assert len(fast) > 1 and fast[0] == (0, 1, 0)

@@ -75,16 +75,3 @@ def test_coverage_md_cites_no_extras_modules() -> None:
     stale = sorted(set(re.findall(r"extras\d+", text)))
     assert not stale, f"COVERAGE.md cites retired modules: {stale}"
 
-
-def test_legacy_mapping_targets_exist() -> None:
-    from etl_framework_spark.queries.extras_legacy import EXTRAS_TO_THEMATIC
-
-    missing = [
-        (old, new)
-        for old, new in EXTRAS_TO_THEMATIC.items()
-        if not os.path.exists(os.path.join(QDIR, f"{new}.py"))
-    ]
-    assert not missing, f"legacy map points at absent modules: {missing}"
-    assert len(EXTRAS_TO_THEMATIC) == 137, (
-        "the historical extrasN population was 137 modules"
-    )

@@ -237,29 +237,37 @@ def test_untracked_record_keys_equal_current_head() -> None:
         )
 
 
-def test_recorded_keys_read_committed_content_not_working_tree() -> None:
+def test_recorded_keys_read_committed_content_not_working_tree(
+    tmp_path,
+) -> None:
     """ADVICE r10 item 1: _record_files pins the record NAME set to
     HEAD, but key content must also come from HEAD — an (uncommitted)
     edit to an already-committed CORRECTNESS_r*.json must not shift
-    the rotation head."""
+    the rotation head. Runs against a throwaway repo so no tracked file
+    of the checkout is touched."""
     import json
-    import shutil
+    import subprocess
 
     from etl_framework_spark.registry import driver_recorded_keys
 
-    target = "/root/repo/CORRECTNESS_r01.json"
-    backup = target + ".bak_test"
-    before = driver_recorded_keys()
-    assert before, "expected committed driver records"
-    shutil.copy(target, backup)
-    try:
-        with open(target) as fh:
-            doc = json.load(fh)
-        doc["__tampered_key__"] = {"rows_match": True}
-        with open(target, "w") as fh:
-            json.dump(doc, fh)
-        after = driver_recorded_keys()
-    finally:
-        shutil.move(backup, target)
+    def git(*args: str) -> None:
+        subprocess.run(
+            ["git", "-C", str(tmp_path), "-c", "user.name=t",
+             "-c", "user.email=t@t", *args],
+            check=True, capture_output=True,
+        )
+
+    record = tmp_path / "CORRECTNESS_r01.json"
+    record.write_text(json.dumps({"agg_groupby": {"rows_match": True}}))
+    git("init", "-q")
+    git("add", record.name)
+    git("commit", "-q", "-m", "record")
+    before = driver_recorded_keys(str(tmp_path))
+    assert before == {"agg_groupby"}
+
+    doc = json.loads(record.read_text())
+    doc["__tampered_key__"] = {"rows_match": True}
+    record.write_text(json.dumps(doc))
+    after = driver_recorded_keys(str(tmp_path))
     assert "__tampered_key__" not in after
     assert after == before

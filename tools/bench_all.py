@@ -34,9 +34,12 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
+from bench import cal_run  # noqa: E402 — bench.py's calibration workload
 from etl_framework_spark import cacheutil  # noqa: E402
 
 RETIME_FACTOR = 3.0   # fresh > 3× prior ⇒ suspect burst
@@ -56,7 +59,7 @@ def median(xs: list[float]) -> float:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--out", default="/root/repo/artifacts/bench_all.json")
+    ap.add_argument("--out", default=str(ROOT / "artifacts" / "bench_all.json"))
     ap.add_argument("--keys", default=None, help="comma-separated subset")
     args = ap.parse_args()
 
@@ -69,25 +72,6 @@ def main() -> None:
     def run(key: str) -> float:
         t0 = time.time()
         qs[key](spark, args.sf).write.format("noop").mode("overwrite").save()
-        return time.time() - t0
-
-    def cal_run() -> float:
-        # identical micro-workload to bench.py's calibration so the
-        # two artifacts share a denominator
-        t0 = time.time()
-        (
-            spark.range(0, 10_000_000, 1, 32)
-            .selectExpr(
-                "id % 1024 AS g",
-                "id * 2654435761 % 97 AS h",
-                "sin(cast(id AS DOUBLE) / 1e6) AS s",
-            )
-            .groupBy("g")
-            .agg({"h": "sum", "s": "avg"})
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
         return time.time() - t0
 
     def release_blocks() -> None:
@@ -121,9 +105,9 @@ def main() -> None:
             prior = {}
 
     run("agg_groupby")  # session warmup, untimed
-    cal_run()
-    cal_run()
-    calibration = round(sorted(cal_run() for _ in range(5))[2], 3)
+    cal_run(spark)
+    cal_run(spark)
+    calibration = round(sorted(cal_run(spark) for _ in range(5))[2], 3)
 
     times: dict[str, float] = {}
     failures: dict[str, str] = {}

@@ -251,29 +251,12 @@ def _write(
 
 
 def _calibrate(spark) -> float:
-    """bench.py's fixed machine-state micro-workload (registry- and
-    data-independent: range → codegen expressions → 1024-group shuffle
-    agg), median of 3 after a warmup."""
+    """bench.py's fixed machine-state micro-workload, median of 3
+    after a warmup."""
+    from bench import cal_run
 
-    def one() -> float:
-        t0 = time.time()
-        (
-            spark.range(0, 10_000_000, 1, 32)
-            .selectExpr(
-                "id % 1024 AS g",
-                "id * 2654435761 % 97 AS h",
-                "sin(cast(id AS DOUBLE) / 1e6) AS s",
-            )
-            .groupBy("g")
-            .agg({"h": "sum", "s": "avg"})
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-        return time.time() - t0
-
-    one()
-    return round(sorted(one() for _ in range(3))[1], 3)
+    cal_run(spark)
+    return round(sorted(cal_run(spark) for _ in range(3))[1], 3)
 
 
 def _release_persistent_rdds(spark) -> None:
