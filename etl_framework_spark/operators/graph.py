@@ -82,8 +82,8 @@ def connected_components(
         rows = _uf_components(
             head.column("a").to_pylist(), head.column("b").to_pylist()
         )
-        return edges.sparkSession.createDataFrame(
-            rows, "node bigint, component bigint"
+        return guarded.local_frame(
+            edges.sparkSession, rows, "node bigint, component bigint"
         )
     # checkpointed ONCE: the edge list is consumed every iteration and
     # its lineage (e.g. md5 MinHash signatures upstream) would be

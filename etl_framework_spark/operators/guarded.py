@@ -1,11 +1,24 @@
-"""Capped driver collects: the one transport that brings a
-data-dependent frame to the driver (SCALE.md lists every site). Call it
-as ``guarded.collect_capped`` so one patch reaches every site."""
+"""The driver's two transports, both Arrow-only.
+
+Spark → driver: ``collect_capped`` is the one capped collect that
+brings a data-dependent frame to the driver (SCALE.md lists every
+site). Call it as ``guarded.collect_capped`` so one patch reaches every
+site.
+
+Driver → Spark: ``local_frame`` turns driver-built rows into a frame
+the JVM decodes itself — a ``LocalRelation`` up to
+``spark.sql.execution.arrow.localRelationThreshold`` (48 MB), a
+JVM-decoded Arrow-batch RDD above it — so no path starts a Python
+worker."""
 from __future__ import annotations
+
+from collections.abc import Iterable
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def collect_capped(df: DataFrame, cap: int) -> pa.Table | None:
@@ -19,6 +32,24 @@ def collect_capped(df: DataFrame, cap: int) -> pa.Table | None:
     probe = cap + 1  # one row past the cap tells "over" from "exactly cap"
     head = df.limit(probe).toArrow()
     return head if head.num_rows <= cap else None
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: str
+) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` for driver-built rows,
+    with the same rows and schema (DDL nullability included), but sent
+    as one Arrow column per field instead of a pickled Python RDD.
+    Zero rows give empty columns."""
+    struct = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows, strict=True)) or [()] * len(arrow_schema)
+    arrays = [
+        pa.array(c, type=f.type)
+        for c, f in zip(cols, arrow_schema, strict=True)
+    ]
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, struct)
 
 
 def as_matrix(col: pa.ChunkedArray) -> np.ndarray:

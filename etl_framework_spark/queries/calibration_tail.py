@@ -293,7 +293,8 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             zip(edge_tbl.column("u").to_pylist(), edge_tbl.column("v").to_pylist())
         )
         out_rows = _peel_in_process(edge_list)
-        return spark.createDataFrame(
+        return guarded.local_frame(
+            spark,
             out_rows,
             "round int, nodes_remaining bigint, edges_remaining bigint",
         )

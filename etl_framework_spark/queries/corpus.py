@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
+from etl_framework_spark.operators import guarded
 from etl_framework_spark.operators.heavyhitters import heavy_hitters
 from etl_framework_spark.operators.textops import shingles, tokens
 from etl_framework_spark.registry import query
@@ -223,7 +224,8 @@ def ivf_topk(
         .select("cell", F.col("sc.c").alias("centroid"))
         .collect()
     )  # bounded: ~sqrt(N) cells x dim floats -- the trained quantizer
-    cents = spark.createDataFrame(
+    cents = guarded.local_frame(
+        spark,
         [
             (int(r.cell), [float(x) for x in r.centroid])
             for r in cent_rows

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
+from etl_framework_spark.operators import guarded
 from etl_framework_spark.registry import query
 from etl_framework_spark.session import prep
 
@@ -147,7 +148,8 @@ def dq_table_ratio_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         (name, num, den, round(num / den, 4), lo_ok <= num / den <= hi_ok)
         for name, num, den, lo_ok, hi_ok in rows
     ]
-    df = spark.createDataFrame(
+    df = guarded.local_frame(
+        spark,
         data,
         "ratio_name string, numerator_rows bigint, denominator_rows bigint,"
         " ratio double, within_policy boolean",

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
+from etl_framework_spark.operators import guarded
 from etl_framework_spark.registry import query
 from etl_framework_spark.session import prep
 
@@ -73,7 +74,8 @@ def dq_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     observed.write.format("noop").mode("overwrite").save()
     m = obs.get
-    return spark.createDataFrame(
+    return guarded.local_frame(
+        spark,
         [
             (
                 int(m["n_rows"]),

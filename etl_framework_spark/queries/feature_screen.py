@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
+from etl_framework_spark.operators import guarded
 from etl_framework_spark.registry import query
 from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
@@ -420,8 +421,10 @@ def llm_greedy_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         totals = per_doc.select("doc_id", "total")
         out_rows = _gc_spark_loop(spark, dt, totals)
     per_doc.unpersist()
-    res = spark.createDataFrame(
-        out_rows, "step int, doc_id bigint, marginal bigint, covered_tokens bigint"
+    res = guarded.local_frame(
+        spark,
+        out_rows,
+        "step int, doc_id bigint, marginal bigint, covered_tokens bigint",
     )
     return res.select(
         "step",

@@ -139,8 +139,8 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
             head.column("dst").to_numpy(zero_copy_only=False),
             2 * _SEED_SUPP,
         )
-        return spark.createDataFrame(
-            out_rows, "lvl int, n_suppliers bigint, n_parts bigint"
+        return guarded.local_frame(
+            spark, out_rows, "lvl int, n_suppliers bigint, n_parts bigint"
         )
     # Fallback: materialize the edge list ONCE (persist): it feeds
     # every one of the k frontier joins, and unpersisted it re-ran the

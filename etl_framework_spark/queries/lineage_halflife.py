@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
+from etl_framework_spark.operators import guarded
 from etl_framework_spark.registry import query
 from etl_framework_spark.session import prep
 
@@ -73,7 +74,8 @@ def pipeline_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_framework_spark.queries.skyline_winnow import curation_spec
 
     rows = Pipeline(curation_spec(sf_dir)).lineage()
-    return spark.createDataFrame(
+    return guarded.local_frame(
+        spark,
         [
             (
                 r["step_idx"],

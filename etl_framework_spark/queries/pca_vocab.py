@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from etl_framework_spark.catalog import table
+from etl_framework_spark.operators import guarded
 from etl_framework_spark.queries.pca_q import _PCA_CTE
 from etl_framework_spark.operators.rounding import q6
 from etl_framework_spark.registry import query
@@ -152,7 +153,8 @@ def llm_vocab_oov_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("f").cast("double").alias("n"),
         F.count("*").cast("bigint").alias("vtypes"),
     )
-    grid = spark.createDataFrame(
+    grid = guarded.local_frame(
+        spark,
         [(v,) for v in _VOCAB_GRID], "vocab_size int"
     )
     at = grid.join(

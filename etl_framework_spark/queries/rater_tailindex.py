@@ -307,7 +307,8 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
             sx += du + dv
             sxy += 2 * du * dv
             sxx += du * du + dv * dv
-        row = spark.createDataFrame(
+        row = guarded.local_frame(
+            spark,
             [
                 (
                     float(n2),

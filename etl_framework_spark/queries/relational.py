@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
+from etl_framework_spark.operators import guarded
 from etl_framework_spark.registry import query
 from etl_framework_spark.session import prep
 
@@ -298,7 +299,9 @@ def join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     prep(spark)
     o = table(spark, sf_dir, "orders")
-    bands = spark.createDataFrame(_BANDS, "band string, lo double, hi double")
+    bands = guarded.local_frame(
+        spark, _BANDS, "band string, lo double, hi double"
+    )
     return (
         o.join(
             F.broadcast(bands),

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from etl_framework_spark.catalog import table
+from etl_framework_spark.operators import guarded
 from etl_framework_spark.registry import query
 from etl_framework_spark.session import prep
 
@@ -138,7 +139,8 @@ def train_mix_temp_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep(spark)
     d = table(spark, sf_dir, "documents")
     cnt = d.groupBy("lang").agg(F.count("*").cast("bigint").alias("n"))
-    grid = spark.createDataFrame(
+    grid = guarded.local_frame(
+        spark,
         [(float(a),) for a in _ALPHAS], "alpha double"
     )
     tot_nat = cnt.agg(F.sum("n").cast("double").alias("nat_tot"))

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
+from etl_framework_spark.operators import guarded
 from etl_framework_spark.registry import query
 from etl_framework_spark.session import prep
 
@@ -170,7 +171,8 @@ def sketch_cms_width_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tok")
         .agg(F.count("*").alias("freq"))
     )
-    grid = spark.createDataFrame(
+    grid = guarded.local_frame(
+        spark,
         [(w,) for w in _CMS_WIDTHS], "w int"
     )
     hashed = (

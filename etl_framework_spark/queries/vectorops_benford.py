@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
+from etl_framework_spark.operators import guarded
 from etl_framework_spark.registry import query
 from etl_framework_spark.session import prep
 
@@ -251,7 +252,7 @@ def stats_benford_second(spark: SparkSession, sf_dir: str) -> DataFrame:
         (dd, sum(math.log10(1.0 + 1.0 / (f * 10 + dd)) for f in range(1, 10)))
         for dd in range(10)
     ]
-    exp = spark.createDataFrame(exp_rows, "d2 bigint, p_exp double")
+    exp = guarded.local_frame(spark, exp_rows, "d2 bigint, p_exp double")
     out = exp.join(g, "d2", "left").crossJoin(F.broadcast(tot))
     q = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     obs = F.coalesce(F.col("n"), F.lit(0.0)) / F.col("t")

@@ -6,6 +6,7 @@ each other on adversarial graphs and on llm_dedup_cc at sf0.001 and
 import pytest
 
 from etl_framework_spark.operators import graph as G
+from etl_framework_spark.plans import assert_in_plan
 from tests.conftest import SF_SMALL
 
 
@@ -40,7 +41,9 @@ def test_uf_matches_brute_force(edges):
 def test_driver_and_distributed_paths_agree(spark, force_fallback):
     edges = [(2, 1), (3, 2), (9, 8), (4, 3), (7, 9), (11, 11)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    fast = {r.node: r.component for r in G.connected_components(df).collect()}
+    fast_df = G.connected_components(df)
+    assert_in_plan(fast_df, absent=("ExistingRDD",))
+    fast = {r.node: r.component for r in fast_df.collect()}
     with force_fallback():
         slow = {r.node: r.component for r in G.connected_components(df).collect()}
     assert fast == slow

@@ -5,7 +5,8 @@ instead of silently truncating or OOMing the driver — and the guard
 must bound the transfer itself (limit pushed into the collected plan),
 not collect-then-count. A static lint walks the whole package so a new
 unguarded ``.collect()``, ``.toArrow()`` or ``.toPandas()`` can never
-land silently.
+land silently. The return leg is pinned the same way: driver-built rows
+become a frame only through ``guarded.local_frame``.
 """
 
 from __future__ import annotations
@@ -15,6 +16,8 @@ import re
 
 import pytest
 
+from etl_framework_spark.operators import guarded
+from etl_framework_spark.plans import assert_in_plan
 from etl_framework_spark.queries import quantize_matryoshka, vector_q
 
 SF_SMALL = "/root/testdata/sf0.001"
@@ -106,6 +109,66 @@ def test_arrow_transport_lives_only_in_guarded() -> None:
         if ".toArrow()" in py.read_text()
     )
     assert users == ["operators/guarded.py"], users
+
+
+def test_frame_transport_lives_only_in_guarded() -> None:
+    """Driver-built frames go through operators/guarded.local_frame:
+    no other module calls ``createDataFrame(`` itself."""
+    users = sorted(
+        str(py.relative_to(_PKG))
+        for py in _PKG.rglob("*.py")
+        if "createDataFrame(" in py.read_text()
+    )
+    assert users == ["operators/guarded.py"], users
+
+
+# every DDL type the package's local_frame call sites use
+_ALL_TYPES = "i int, b bigint, d double, s string, t boolean, a array<double>"
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        [
+            (1, 2**40, 1.5, "x", True, [1.0, None]),
+            (None, None, None, None, None, None),
+            (-3, 0, -0.25, "", False, []),
+        ],
+        [],
+    ],
+    ids=["rows_with_nulls", "zero_rows"],
+)
+def test_local_frame_equals_create_dataframe(spark, rows) -> None:
+    got = guarded.local_frame(spark, rows, _ALL_TYPES)
+    want = spark.createDataFrame(rows, _ALL_TYPES)
+    assert got.schema == want.schema  # nullability included
+    assert got.collect() == want.collect()
+    assert_in_plan(got, "LocalTableScan", absent=("ExistingRDD",))
+
+
+def test_local_frame_above_local_relation_threshold(spark) -> None:
+    """Past the threshold the JVM decodes the Arrow batches itself: an
+    ``arrow`` RDD scan, still no pickled Python rows."""
+    rows = [(i, [float(i)]) for i in range(10)] + [(None, None)]
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "0")
+    try:
+        got = guarded.local_frame(spark, rows, "i int, a array<double>")
+        assert_in_plan(
+            got, "Scan ExistingRDD arrow", absent=("applySchemaToPythonRDD",)
+        )
+        want = spark.createDataFrame(rows, "i int, a array<double>")
+        assert got.collect() == want.collect()
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_local_frame_rejects_ragged_rows(spark) -> None:
+    with pytest.raises(ValueError):
+        guarded.local_frame(spark, [(1, 2), (3,)], "x int, y int")
+    with pytest.raises(ValueError):
+        guarded.local_frame(spark, [(1, 2, 3)], "x int, y int")
 
 
 def test_lint_catches_a_planted_offender(tmp_path, monkeypatch) -> None:

@@ -9,11 +9,14 @@ exercises the shrink path)."""
 from __future__ import annotations
 
 import etl_framework_spark.queries.calibration_tail as ct
+from etl_framework_spark.plans import assert_in_plan
 from tests.conftest import SF_SMALL
 
 
 def test_fallback_equals_in_process(spark, force_fallback):
-    fast_rows = ct.graph_kcore_peel(spark, SF_SMALL).collect()
+    fast = ct.graph_kcore_peel(spark, SF_SMALL)
+    assert_in_plan(fast, absent=("ExistingRDD",))
+    fast_rows = fast.collect()
     with force_fallback():
         slow_rows = ct.graph_kcore_peel(spark, SF_SMALL).collect()
     assert [tuple(r) for r in fast_rows] == [tuple(r) for r in slow_rows]

@@ -7,6 +7,7 @@ the supplier/part side alternation — and the whole key against its
 distributed frontier-join fallback."""
 import numpy as np
 
+from etl_framework_spark.plans import assert_in_plan
 from etl_framework_spark.queries.khop_sessions import (
     _khop_bfs_in_process,
     _K_HOPS,
@@ -85,7 +86,9 @@ def test_min_level_semantics_on_diamond():
 
 
 def test_fallback_equals_in_process(spark, force_fallback):
-    fast = sorted(tuple(r) for r in graph_khop_reach(spark, SF_SMALL).collect())
+    fast_df = graph_khop_reach(spark, SF_SMALL)
+    assert_in_plan(fast_df, absent=("ExistingRDD",))
+    fast = sorted(tuple(r) for r in fast_df.collect())
     with force_fallback():
         slow = sorted(
             tuple(r) for r in graph_khop_reach(spark, SF_SMALL).collect()

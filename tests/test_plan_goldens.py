@@ -15,13 +15,14 @@ To accept an intentional plan change: `python tools/capture_plans.py
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 import pytest
 
 import __spark_entry__ as ent
 from etl_framework_spark.plans import explain_str, golden_form
 
-PLANS_DIR = "/root/repo/artifacts/plans"
+PLANS_DIR = str(Path(__file__).resolve().parents[1] / "artifacts" / "plans")
 SF_GOLDEN = "/root/testdata/sf0.01"  # goldens are captured at sf0.01
 
 # headline bench keys + the keys whose plans ARE the scale story

@@ -15,14 +15,17 @@ import filecmp
 import os
 import sys
 import tempfile
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout this tool sits in, so it captures its own package
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("--out", default="/root/repo/artifacts/plans")
+    ap.add_argument("--out", default=str(ROOT / "artifacts" / "plans"))
     ap.add_argument("--only", default=None, help="comma-separated keys")
     ap.add_argument("--verify", action="store_true")
     args = ap.parse_args()

@@ -20,12 +20,14 @@ import time
 import traceback
 from datetime import date, datetime
 from decimal import Decimal
+from pathlib import Path
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the checkout this tool sits in, so it checks its own package
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
