@@ -104,7 +104,9 @@ def get_spark(app_name: str = "etl-framework-spark") -> SparkSession:
     return spark
 
 
-def cds_launch(cache_dir: str, driver_mem: str, environ: Mapping[str, str] = os.environ) -> CdsLaunch:
+def cds_launch(
+    cache_dir: str, driver_mem: str, environ: Mapping[str, str] = os.environ
+) -> CdsLaunch:
     """Decide the archive options for a driver JVM about to launch.
 
     Uses ``<cache_dir>/spark-<fingerprint>.jsa`` when it exists. Otherwise
@@ -128,7 +130,10 @@ def cds_launch(cache_dir: str, driver_mem: str, environ: Mapping[str, str] = os.
         os.makedirs(empty, exist_ok=True)
     except OSError:
         return CdsLaunch(off="off:cache-unwritable")
-    archive = os.path.join(cache_dir, f"spark-{fingerprint(spark_home, java, driver_mem)}.jsa")
+    try:
+        archive = os.path.join(cache_dir, f"spark-{fingerprint(spark_home, java, driver_mem)}.jsa")
+    except OSError:  # no jars dir to fingerprint
+        return CdsLaunch(off="off:no-jars")
     env = {"SPARK_CONF_DIR": empty}
     use = CdsLaunch(f"-XX:SharedArchiveFile={archive}", env, archive=archive)
     if os.path.isfile(archive):
@@ -145,8 +150,9 @@ def cds_launch(cache_dir: str, driver_mem: str, environ: Mapping[str, str] = os.
     prefix = os.path.basename(archive) + "."
     for name in os.listdir(cache_dir):  # parts whose writer died
         pid = name[len(prefix) : -len(".part")]
-        if name.startswith(prefix) and name.endswith(".part") and pid.isdigit() and not _alive(int(pid)):
-            _unlink(os.path.join(cache_dir, name))
+        if name.startswith(prefix) and name.endswith(".part") and pid.isdigit():
+            if not _alive(int(pid)):
+                _unlink(os.path.join(cache_dir, name))
     part = f"{archive}.{os.getpid()}.part"
     # -Xlog: the dump lists every class it skips, ~600 lines on stdout
     opts = f"-XX:ArchiveClassesAtExit={part} -Xlog:cds=error"
@@ -193,7 +199,7 @@ class _Recording:
     launch: CdsLaunch
     driver_mem: str
     proc: subprocess.Popen
-    java: str  # the recording JVM's, and its classpath
+    java: str  # the recording JVM's binary and classpath, for the check
     classpath: str
 
     def publish(self) -> None:
@@ -223,9 +229,9 @@ class _Recording:
         if not os.path.isfile(path):
             return False
         check = subprocess.run(
-            [self.java, "-Xshare:on", f"-XX:SharedArchiveFile={path}", f"-Xmx{self.driver_mem}",
-             "-XX:+SuppressFatalErrorMessage", "-XX:-CreateCoredumpOnCrash",
-             "-XX:-UsePerfData", "-cp", self.classpath, "-version"],
+            [self.java, "-Xshare:on", f"-XX:SharedArchiveFile={path}",
+             f"-Xmx{_heap_bytes(self.driver_mem) >> 20}m", "-XX:+SuppressFatalErrorMessage",
+             "-XX:-CreateCoredumpOnCrash", "-XX:-UsePerfData", "-cp", self.classpath, "-version"],
             capture_output=True, timeout=120,
         )
         return check.returncode == 0
@@ -258,8 +264,8 @@ def _alive(pid: int) -> bool:
         os.kill(pid, 0)
     except ProcessLookupError:
         return False
-    except PermissionError:
-        return True
+    except PermissionError:  # alive, and another user's
+        pass
     return True
 
 

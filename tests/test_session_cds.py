@@ -10,6 +10,7 @@ from __future__ import annotations
 import json
 import os
 import pathlib
+import shutil
 import subprocess
 import sys
 
@@ -39,16 +40,15 @@ def install(tmp_path):
     return {"SPARK_HOME": str(home), "JAVA_HOME": str(tmp_path / "jdk")}
 
 
-def test_real_conf_file_gives_no_options(install, tmp_path, monkeypatch):
+def test_real_conf_file_gives_no_options(install, tmp_path):
     conf = tmp_path / "conf"
     conf.mkdir()
     (conf / "spark-defaults.conf").write_text("spark.driver.cores 2\n")
     env = dict(install, SPARK_CONF_DIR=str(conf))
-    monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
     launch = session.cds_launch(str(tmp_path / "cache"), "24g", env)
+    # no options, and an empty env: the launch keeps the user's SPARK_CONF_DIR
     assert (launch.java_opts, launch.env, launch.off) == ("", {}, "off:conf-dir")
-    with session._environ(launch.env):
-        assert os.environ["SPARK_CONF_DIR"] == str(conf)
+    assert not (tmp_path / "cache").exists()
     # SPARK_HOME/conf holding a real file is the same case
     (pathlib.Path(install["SPARK_HOME"]) / "conf" / "spark-env.sh").write_text("\n")
     assert session.cds_launch(str(tmp_path / "cache"), "24g", install).off == "off:conf-dir"
@@ -59,6 +59,12 @@ def test_unwritable_cache_gives_no_options(install, tmp_path):
     blocker.write_text("")  # a cache dir below a regular file cannot be made
     launch = session.cds_launch(str(blocker / ".cache"), "24g", install)
     assert (launch.java_opts, launch.env, launch.off) == ("", {}, "off:cache-unwritable")
+
+
+def test_install_without_jars_dir_gives_no_options(install, tmp_path):
+    shutil.rmtree(pathlib.Path(install["SPARK_HOME"]) / "jars")
+    launch = session.cds_launch(str(tmp_path / "cache"), "24g", install)
+    assert (launch.java_opts, launch.env, launch.off) == ("", {}, "off:no-jars")
 
 
 def test_fingerprint_tracks_jars_jdk_and_compressed_oops(install, tmp_path):

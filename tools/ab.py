@@ -78,7 +78,7 @@ def summarize(runs: list[dict], better: dict[str, str]) -> dict[str, dict]:
         out[name] = {
             "base": bq, "head": hq, "won": won, "pairs": len(base),
             "base_iqr": bq[2] - bq[0],
-            "change": hq[1] / bq[1] - 1 if bq[1] else float("nan"),
+            "change": hq[1] / bq[1] - 1 if bq[1] else None,
             "claim_holds": won >= 0.9 * len(base) and gain > bq[2] - bq[0],
         }
     return out
@@ -127,12 +127,14 @@ def main(argv: list[str] | None = None) -> int:
           f"{'change':>8s} {'won':>6s} {'base IQR':>9s} claim")
     for name, s in summary.items():
         fmt = "/".join(f"{v:.4g}" for v in s["base"]), "/".join(f"{v:.4g}" for v in s["head"])
-        print(f"{name:36s} {fmt[0]:>26s} {fmt[1]:>26s} {s['change']:+8.1%} "
+        change = "n/a" if s["change"] is None else f"{s['change']:+.1%}"
+        print(f"{name:36s} {fmt[0]:>26s} {fmt[1]:>26s} {change:>8s} "
               f"{s['won']:>2d}/{s['pairs']:<3d} {s['base_iqr']:9.4g} "
               f"{'holds' if s['claim_holds'] else '-'}")
     failed = {arm: sum(r.get("failed", 0) for r in runs if r["arm"] == arm) for arm in arms}
     errors = sum("error" in r for r in runs)
-    print(f"failed items: base {failed['base']}, change {failed['head']}; runs without a result: {errors}")
+    print(f"failed items: base {failed['base']}, change {failed['head']}; "
+          f"runs without a result: {errors}")
     print(json.dumps({"base": rev, "workload": args.workload, "seed0": args.seed0,
                       "trace": args.trace, "runs": runs, "summary": summary}))
     return 1 if errors else 0
