@@ -1,7 +1,9 @@
 """CDC / slowly-changing-dimension operators (ETL-framework surface;
 pyspark_guide 'CDC / SCD2': no MERGE INTO without Delta, so emulate
-with anti-join + union + interval bookkeeping — all hash-partitioned
-DataFrame ops, no driver loops).
+with joins + interval bookkeeping — all hash-partitioned DataFrame
+ops, no driver loops). An upsert is an anti-join + union; an SCD2
+batch is one full outer join whose rows explode into the kept, closed
+and opened versions.
 """
 
 from __future__ import annotations
@@ -30,30 +32,42 @@ def scd2_apply(
     """Apply one batch of updates to an SCD2 dimension.
 
     dim: (key, tracked..., eff_from, eff_to) with eff_to NULL marking
-    the current row per key. updates: (key, tracked...). Rows whose
-    tracked attributes changed (or whose key is new) close the current
-    row at `ts` and open a new row [ts, NULL); identical updates are
-    no-ops. History rows pass through untouched.
+    the current row per key. updates: (key, tracked...), at most one
+    row per key (duplicate keys would open one current row each).
+    Rows whose tracked attributes changed (or whose key is new) close
+    the current row at `ts` and open a new row [ts, NULL); identical
+    updates are no-ops. History rows pass through untouched.
+
+    One full outer join of all of `dim` with `updates` on the key and
+    `eff_to IS NULL`, so each joined row holds at most one dim row and
+    one update; `explode` then emits the dim row (closed at `ts` when
+    changed) and the opened row. Each batch reads `dim` once, so a
+    chain of N batches plans N joins. Output columns follow
+    `dim.columns`; the eff_* types are kept.
     """
-    current = dim.filter(F.col(eff_to).isNull())
-    history = dim.filter(F.col(eff_to).isNotNull())
-
-    diff_cond = F.lit(False)
+    extra = set(dim.columns) - {key, *tracked, eff_from, eff_to}
+    if extra:
+        raise ValueError(f"scd2_apply: dim columns {sorted(extra)} are not key, tracked or eff_*")
+    types = dict(dim.dtypes)
+    joined = dim.withColumn("__scd2_dim", F.lit(True)).alias("d").join(
+        updates.withColumn("__scd2_upd", F.lit(True)).alias("u"),
+        (F.col(f"d.{key}") == F.col(f"u.{key}")) & F.col(f"d.{eff_to}").isNull(),
+        "full_outer",
+    )
+    has_dim = F.col("d.__scd2_dim").isNotNull()
+    differs = ~has_dim
     for c in tracked:
-        diff_cond = diff_cond | ~F.col(f"cur.{c}").eqNullSafe(F.col(f"upd.{c}"))
+        differs = differs | ~F.col(f"d.{c}").eqNullSafe(F.col(f"u.{c}"))
+    changed = F.col("u.__scd2_upd").isNotNull() & differs
 
-    joined = updates.alias("upd").join(
-        current.alias("cur"), F.col(f"upd.{key}") == F.col(f"cur.{key}"), "left"
-    )
-    changed = joined.filter(F.col(f"cur.{key}").isNull() | diff_cond).select(
-        *[F.col(f"upd.{c}") for c in [key, *tracked]]
-    )
+    kept = {c: F.col(f"d.{c}") for c in dim.columns}
+    kept[eff_to] = F.when(changed, ts.cast(types[eff_to])).otherwise(kept[eff_to])
+    opened = {c: F.col(f"u.{c}") for c in [key, *tracked]}
+    opened[eff_from] = ts.cast(types[eff_from])
+    opened[eff_to] = F.lit(None).cast(types[eff_to])
 
-    closing = current.join(changed.select(key), on=key, how="left_semi").withColumn(
-        eff_to, ts
-    )
-    unchanged_current = current.join(changed.select(key), on=key, how="left_anti")
-    opened = changed.withColumn(eff_from, ts).withColumn(
-        eff_to, F.lit(None).cast(dict(dim.dtypes)[eff_to])
-    )
-    return history.unionByName(closing).unionByName(unchanged_current).unionByName(opened)
+    def row(cols: dict[str, Column]) -> Column:
+        return F.struct(*[cols[c].alias(c) for c in dim.columns])
+
+    versions = F.array(F.when(has_dim, row(kept)), F.when(changed, row(opened)))
+    return joined.select(F.explode(F.array_compact(versions)).alias("v")).select("v.*")

@@ -20,7 +20,8 @@ def normalize_plan(plan: str) -> str:
     """Strip run-dependent noise from a formatted plan so snapshots
     diff cleanly across sessions: expression IDs (#123 — a global
     counter that depends on what ran before), plan_id tags, codegen
-    ids, and absolute data paths. Structure (operators, join
+    ids, absolute data paths, partition counts and the statistics of
+    query stages that already ran. Structure (operators, join
     strategies, pushed filters, read schemas) is untouched — exactly
     what a golden-plan regression test should pin."""
     plan = re.sub(r"#\d+L?", "#x", plan)
@@ -42,6 +43,19 @@ def normalize_plan(plan: str) -> str:
     plan = re.sub(
         r"at localCheckpoint at [^,\]]+", "at localCheckpoint at <loc>", plan
     )
+    # partition counts come from the session, not the plan:
+    # shuffle.partitions, defaultParallelism (spark.range splits,
+    # repartition(defaultParallelism)), so they follow the core count.
+    # The hash/range count is anchored on the shuffle origin after it
+    # (", ENSURE_REQUIREMENTS") so arguments like substring(h, 1, 4)
+    # inside the partitioning expressions stay as they are
+    plan = re.sub(
+        r"\b((?:hash|range)partitioning\(.*?, )\d+(\), [A-Z][A-Z_]+\b)", r"\1x\2", plan
+    )
+    plan = re.sub(r"\b(RoundRobinPartitioning|splits=Some)\(\d+\)", r"\1(x)", plan)
+    # AQE query stages that already ran carry their measured size and
+    # row count, which follow the partitioning too
+    plan = re.sub(r"\bStatistics\(sizeInBytes=[^)]*\)", "Statistics(x)", plan)
     return plan
 
 

@@ -33,8 +33,8 @@ from etl_framework_spark.session import prep
 def cdc_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 apply (CDC family): close the current row at the update
     timestamp and open a new [ts, NULL) row for every key whose
-    tracked attribute changed; two anti/semi joins + unions, all
-    shuffling on the dimension key."""
+    tracked attribute changed; one full outer join of the dimension
+    with the updates, shuffling on the dimension key."""
     prep(spark)
     c = table(spark, sf_dir, "customer")
     dim = c.select(

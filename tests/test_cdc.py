@@ -52,3 +52,21 @@ def test_scd2_idempotent_and_noop(spark):
     assert (1, "a", False) in rows and (1, "a2", True) in rows
     assert (3, "c", True) in rows and (2, "b", True) in rows
     assert out2.count() == 4
+
+
+def test_scd2_chained_batches_plan_one_join_each(spark):
+    """N chained batches optimize to exactly N joins, one full outer
+    join per batch: each batch reads the dimension once, so the plan
+    grows linearly instead of multiplying per batch."""
+    import datetime as dt
+
+    dim = _mk(spark, [(0, "v0", dt.datetime(2000, 1, 1), None)])
+    for n in range(1, 5):
+        upd = spark.createDataFrame([(0, f"v{n}"), (n, "new")], "k int, v string")
+        dim = scd2_apply(dim, upd, "k", ["v"], F.lit(f"200{n}-01-01").cast("timestamp"))
+        plan = dim._jdf.queryExecution().optimizedPlan().toString()
+        joins = [ln for ln in plan.splitlines() if ln.lstrip(" :+-").startswith("Join ")]
+        assert len(joins) == n, plan
+        assert all("FullOuter" in ln for ln in joins), plan
+    current = {r.k: r.v for r in dim.collect() if r.eff_to is None}
+    assert current == {0: "v4", 1: "new", 2: "new", 3: "new", 4: "new"}

@@ -2,6 +2,8 @@
 
 artifacts/plans/<key>.txt holds the normalized formatted physical plan
 of every registry key, captured at sf0.01 by tools/capture_plans.py.
+Partition counts are normalized away (they follow the session's core
+count), so the goldens hold at any `local[N]`.
 This test re-derives the plan for the headline + scale-critical keys
 and diffs against the committed golden — a silent de-optimization
 (broadcast -> SMJ, lost pushdown, new shuffle) fails here before it
@@ -20,7 +22,7 @@ from pathlib import Path
 import pytest
 
 import __spark_entry__ as ent
-from etl_framework_spark.plans import explain_str, golden_form
+from etl_framework_spark.plans import explain_str, golden_form, normalize_plan
 
 PLANS_DIR = str(Path(__file__).resolve().parents[1] / "artifacts" / "plans")
 SF_GOLDEN = "/root/testdata/sf0.01"  # goldens are captured at sf0.01
@@ -51,3 +53,27 @@ def test_plan_matches_golden(spark, key: str) -> None:
         f"physical plan for {key} changed vs artifacts/plans/{key}.txt — "
         f"if intentional, re-snapshot with tools/capture_plans.py --only {key}"
     )
+
+
+def test_normalize_plan_strips_partition_counts_only() -> None:
+    """Session-derived partition counts and executed stage statistics
+    normalize to x; numbers inside the partitioning expressions and
+    elsewhere in the plan stay, and the rules are idempotent."""
+    plan = (
+        "Arguments: hashpartitioning(substring(h#1, 1, 4), 32), ENSURE_REQUIREMENTS, [plan_id=7]\n"
+        "Arguments: rangepartitioning(k#2 ASC NULLS FIRST, 8), ENSURE_REQUIREMENTS, [plan_id=8]\n"
+        "Arguments: RoundRobinPartitioning(4), REPARTITION_BY_NUM, [plan_id=9]\n"
+        "Arguments: Range (0, 64, step=1, splits=Some(32))\n"
+        "+- ShuffleQueryStage (3), Statistics(sizeInBytes=21.3 KiB, rowCount=681)\n"
+        "Arguments: 100, [k#2 ASC NULLS FIRST]\n"
+    )
+    want = (
+        "Arguments: hashpartitioning(substring(h#x, 1, 4), x), ENSURE_REQUIREMENTS, [plan_id=x]\n"
+        "Arguments: rangepartitioning(k#x ASC NULLS FIRST, x), ENSURE_REQUIREMENTS, [plan_id=x]\n"
+        "Arguments: RoundRobinPartitioning(x), REPARTITION_BY_NUM, [plan_id=x]\n"
+        "Arguments: Range (0, 64, step=1, splits=Some(x))\n"
+        "+- ShuffleQueryStage (3), Statistics(x)\n"
+        "Arguments: 100, [k#x ASC NULLS FIRST]\n"
+    )
+    assert normalize_plan(plan) == want
+    assert normalize_plan(want) == want
