@@ -7,10 +7,15 @@ so steps can use the DataFrame API or SQL interchangeably.
 
 from __future__ import annotations
 
+import atexit
+import functools
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_framework_spark.session import prep
 
 TABLES = [
     "region",
@@ -58,8 +63,27 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
+# mkdtemp prefix of the per-process scratch directory; plans/inspect.py
+# normalizes any location under it, whatever TMPDIR is
+SCRATCH_PREFIX = "etl-scratch-"
+
+
+@functools.cache
+def _scratch_dir() -> str:
+    path = tempfile.mkdtemp(prefix=SCRATCH_PREFIX)
+    atexit.register(shutil.rmtree, path, True)
+    return path
+
+
+def scratch_path(name: str) -> str:
+    """``<scratch dir>/<name>`` for keys that round-trip data through a
+    sink. The scratch dir is one ``tempfile.mkdtemp`` per process,
+    removed at exit, so copies of the checkout and concurrent runs
+    never write to the same place."""
+    return os.path.join(_scratch_dir(), name)
+
+
 def sql_over_views(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
     """``sql`` run against the testdata tables registered as views."""
-    prep(spark)
     register_views(spark, sf_dir)
     return spark.sql(sql)

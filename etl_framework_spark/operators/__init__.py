@@ -15,7 +15,7 @@ from etl_framework_spark.operators.textops import (
     shingles,
 )
 from etl_framework_spark.operators.similarity import dot_fold, l2_norm, cosine
-from etl_framework_spark.operators.dedup import md5_per_token, minhash_signature, simhash16
+from etl_framework_spark.operators.dedup import md5_per_token, minhash_signature
 from etl_framework_spark.operators.asof import asof_join
 
 __all__ = [
@@ -28,6 +28,5 @@ __all__ = [
     "cosine",
     "minhash_signature",
     "md5_per_token",
-    "simhash16",
     "asof_join",
 ]

@@ -179,9 +179,9 @@ def jaccard(set_a: Column, set_b: Column) -> Column:
 
 def md5_per_token(tok_set: Column) -> Column:
     """One md5 per token, staged as an array column. Callers MUST
-    materialize this via withColumn before simhash16: Spark cannot
-    CSE across lambda bodies, so inlining it into the 16 bit-vote
-    filters recomputes every digest 16× (measured at sf0.1 after
+    materialize this via withColumn before simhash_bits: Spark cannot
+    CSE across lambda bodies, so inlining it into the n bit-vote
+    filters recomputes every digest n× (measured at sf0.1 after
     staging: llm_simhash 2.4s → 1.2s, llm_dedup_simhash 4.5s → 2.3s)."""
     return F.transform(tok_set, F.md5)
 
@@ -190,7 +190,7 @@ def attach_simhash(df: DataFrame, tok_col: str, nbits: int = 16, out_col: str = 
     """df + ``out_col`` (bigint): n-bit SimHash of the token-set
     column, as an Arrow ``mapInPandas`` kernel.
 
-    Bit-identical to ``simhash16`` / ``simhash_bits`` over
+    Bit-identical to ``simhash_bits`` over
     ``md5_per_token`` (and to the DuckDB mirrors): bit j is the strict
     majority vote (2·cnt > n) of digest-nibble-j's top bit, and hex
     nibble ``IN ('8'..'f')`` is exactly "nibble value >= 8", so the
@@ -255,37 +255,6 @@ def attach_simhash(df: DataFrame, tok_col: str, nbits: int = 16, out_col: str = 
             yield pdf
 
     return df.mapInPandas(gen, out_schema)
-
-
-def simhash16(hashes: Column) -> Column:
-    """16-bit SimHash over pre-staged per-token md5 digests
-    (md5_per_token): bit j is the majority vote of digest-nibble-j's
-    top bit across the token set (nibble >= 8). Pure column
-    expressions — fuses into codegen, no explode, no shuffle."""
-    n = F.size(hashes)
-    high = list("89abcdef")
-
-    def bit_pred(j: int):
-        # closure factory: see _perm() — keep the lambda single-argument
-        return lambda h: F.substring(h, j + 1, 1).isin(*high)
-
-    out = F.lit(0)
-    for j in range(16):
-        cnt = F.size(F.filter(hashes, bit_pred(j)))
-        out = out + F.when(cnt * 2 > n, F.lit(1 << j)).otherwise(F.lit(0))
-    return out.cast("bigint")
-
-
-def duck_simhash(tok_expr: str) -> str:
-    """DuckDB mirror of `simhash16`."""
-    terms = []
-    for j in range(16):
-        cnt = (
-            f"len(list_filter({tok_expr}, t -> substr(md5(t), {j + 1}, 1) IN "
-            "('8','9','a','b','c','d','e','f')))"
-        )
-        terms.append(f"(CASE WHEN {cnt} * 2 > len({tok_expr}) THEN {1 << j} ELSE 0 END)")
-    return "CAST(" + " + ".join(terms) + " AS BIGINT)"
 
 
 def blocked_jaccard_pairs(toksets: DataFrame) -> DataFrame:
@@ -391,8 +360,11 @@ def shingles3(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 
 def simhash_bits(hashes: Column, nbits: int = 32) -> Column:
     """n-bit SimHash (n <= 32) over pre-staged per-token md5 digests:
-    bit j votes on digest-nibble-j's top bit, exactly like simhash16
-    but wider — md5's 32 hex nibbles give up to 32 independent bits.
+    bit j is the majority vote of digest-nibble-j's top bit (nibble >=
+    8) across the token set; md5's 32 hex nibbles give up to 32
+    independent bits. Pure column expressions — fuses into codegen, no
+    explode, no shuffle.
+
     Wider signatures are what make Hamming BANDING selective: with 4
     bands of n/4 bits, a band key has 2^(n/4) values, so bucket sizes
     shrink exponentially in signature width (16-bit bands have only 16

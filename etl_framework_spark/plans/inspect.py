@@ -15,6 +15,8 @@ import re
 
 from pyspark.sql import DataFrame
 
+from etl_framework_spark.catalog import SCRATCH_PREFIX
+
 
 def normalize_plan(plan: str) -> str:
     """Strip run-dependent noise from a formatted plan so snapshots
@@ -29,6 +31,11 @@ def normalize_plan(plan: str) -> str:
     plan = re.sub(r"plan_id=\d+", "plan_id=x", plan)
     plan = re.sub(r"\[codegen id : \d+\]", "[codegen id : x]", plan)
     plan = re.sub(r"file:[^\],\s]*/testdata/", "file:.../testdata/", plan)
+    # sink round-trip keys write under catalog.scratch_path's per-process
+    # mkdtemp dir, wherever TMPDIR puts it
+    plan = re.sub(
+        rf"file:[^\],\s]*/{re.escape(SCRATCH_PREFIX)}[^/\],\s]+/", "file:.../scratch/", plan
+    )
     plan = re.sub(r"file:[^\],\s]*/(spark-warehouse|tmp)[^\],\s]*", r"file:.../\1", plan)
     # Python-RDD scans embed the session-global RDD id
     plan = re.sub(r"MapPartitionsRDD\[\d+\]", "MapPartitionsRDD[x]", plan)

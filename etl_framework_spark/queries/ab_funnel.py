@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _SHARDS = 8
 
@@ -107,7 +106,6 @@ def events_funnel_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     One per-user rollup, k-row algebra after. Ref: reference
     experiment-funnel tests (cf. funnel for the global version,
     events_ab_test for the value metric)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     e = ev.select(
         "user_id",
@@ -224,7 +222,6 @@ def shard_range_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     second scan per shard. Ref: reference partition-planning tests
     (cf. shard_rendezvous for hash placement, topk_two_phase for
     the sorted-read consumer)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     k = od.select(F.col("o_orderkey").alias("key")).select(
         "key",
@@ -299,7 +296,6 @@ def sales_customer_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     form. One customer rollup + one rank window + one tier rollup.
     Ref: reference tiering tests (cf. sales_pareto for the 80/20
     cut, events_lorenz_deciles for the event analogue)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     c = od.groupBy(F.col("o_custkey").alias("cust")).agg(
         F.sum("o_totalprice").alias("rev")

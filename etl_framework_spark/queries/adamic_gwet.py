@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 _AA_MAX_DEG = 64
@@ -91,7 +90,6 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests (cf. graph_link_predict for the Jaccard scorer on the
     identical graph — the two rankings disagree exactly where hub
     neighbors dominate)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     t = docs.select(F.split(F.col("text"), " ").alias("l")).filter(
         F.size("l") >= 2
@@ -192,7 +190,6 @@ def stats_gwet_ac1(spark: SparkSession, sf_dir: str) -> DataFrame:
     `ac1` IS the prevalence-skew diagnosis. Four conditional counts,
     one scan, integer-exact. Ref: reference inter-rater tests (cf.
     stats_cohens_kappa, stats_mcnemar)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     r = od.select(
         (F.col("o_totalprice") > _BIG_ORDER).alias("a"),
@@ -275,7 +272,6 @@ def sales_adoption_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer is one min-rollup; the curve is a window over |months|.
     Integer counts → bit-exact. Ref: reference lifecycle tests (cf.
     cohort_retention, events_growth_accounting)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     first_buy = od.groupBy(F.col("o_custkey").alias("cust")).agg(
         F.min(F.date_trunc("month", F.col("o_orderdate").cast("date"))).alias("m0")

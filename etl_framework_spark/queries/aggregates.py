@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 # --------------------------------------------------------------------------
@@ -44,7 +43,6 @@ def agg_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape (A1): scan → filter → hash agg with partial
     (map-side) aggregation. The canonical 100 TB-friendly agg: one
     shuffle of pre-aggregated partials, 6 groups out."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
@@ -80,7 +78,6 @@ def agg_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global scalar aggregation (A2)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     return li.agg(
         F.count("*").alias("n_rows"),
@@ -106,7 +103,6 @@ def agg_global(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact COUNT(DISTINCT) (A3) — Spark expands to a two-phase agg."""
-    prep(spark)
     return (
         table(spark, sf_dir, "orders")
         .groupBy("o_orderstatus")
@@ -124,7 +120,6 @@ def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL approx distinct (A4). Sketch values are engine-specific so
     there is no hash oracle; tests assert ±5% of exact instead."""
-    prep(spark)
     return (
         table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
@@ -152,7 +147,6 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP (A5): region → nation → grand-total granularities.
     GROUPING() markers disambiguate NULL-as-subtotal (grouping_id bit
     order differs between engines, so per-column GROUPING is used)."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     n = table(spark, sf_dir, "nation")
     r = table(spark, sf_dir, "region")
@@ -180,7 +174,6 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE (A5): all 4 grouping-set combinations."""
-    prep(spark)
     return (
         table(spark, sf_dir, "lineitem")
         .cube("l_returnflag", "l_linestatus")
@@ -211,7 +204,6 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional aggregation (A6): COUNT/SUM/AVG over CASE exprs."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.sum(F.when(F.col("o_orderstatus") == "F", 1).otherwise(0))
@@ -243,7 +235,6 @@ def agg_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     serialized to a joined string for the comparator: DuckDB's pandas
     bridge yields numpy arrays where Spark yields lists, so a raw
     array column is a value-representation hazard for any hasher."""
-    prep(spark)
     collected = F.sort_array(F.collect_set("c_nationkey"))
     return (
         table(spark, sf_dir, "customer")
@@ -269,7 +260,6 @@ def agg_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact median + continuous percentile (A8)."""
-    prep(spark)
     return (
         table(spark, sf_dir, "events")
         .groupBy("event_type")
@@ -296,7 +286,6 @@ def agg_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """stddev/variance/correlation (A9); rounded — the engines use
     different streaming-moment algorithms (low-bit divergence)."""
-    prep(spark)
     return (
         table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
@@ -328,7 +317,6 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot (A10) on a small, explicitly-listed key domain — listing
     the values avoids the extra distinct-scan job Spark needs to
     discover them (matters at 100 TB)."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
     n = table(spark, sf_dir, "nation")

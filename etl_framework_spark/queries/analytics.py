@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 @query(
@@ -40,7 +39,6 @@ def funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     prior-stage event. Three grouped mins + two equi-joins on
     user_id — every stage is a partial-agg shuffle on the same key,
     so a cluster co-partitions the whole funnel after one exchange."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     v = (
         ev.filter(F.col("event_type") == "view")
@@ -94,7 +92,6 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     exposed as a midnight TIMESTAMP, not DATE — pandas renders DuckDB
     DATEs as datetime64 but Spark DATEs as python dates, so DATE
     columns canonize differently (repo convention, see fn_date)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     first = ev.groupBy("user_id").agg(
         F.date_trunc("week", F.min("ts")).alias("cohort")
@@ -139,7 +136,6 @@ def cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the change feed you synthesize when the source has no log. The
     two versions here are deterministic slices/mutations of orders so
     both engines derive identical inputs."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     v1 = o.filter(F.col("o_orderkey") % 7 != 0).select(
         F.col("o_orderkey").alias("k"), F.col("o_totalprice").alias("v")
@@ -192,7 +188,6 @@ def events_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     days, not events)."""
     from pyspark.sql import Window as W
 
-    prep(spark)
     e = table(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("day")
@@ -234,7 +229,6 @@ def events_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id key and users are uniformly distributed."""
     from pyspark.sql import Window as W
 
-    prep(spark)
     e = table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
@@ -279,7 +273,6 @@ def events_sliding_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
     (window(ts, '7 days', '1 day')) and a plain distinct agg runs per
     (window, type) — the standard scale-out rewrite; the oracle
     expands the slide as 7 shifted tumbles."""
-    prep(spark)
     ev = table(spark, sf_dir, "events").withColumn(
         "tts", F.date_trunc("second", F.col("ts"))
     )

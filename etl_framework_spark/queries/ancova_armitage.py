@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.operators.rounding import q6
 
 
 # --------------------------------------------------------------------------
@@ -67,7 +67,6 @@ def llm_lang_label_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer counts → exact. Ref: reference metadata-audit tests
     (cf. llm_cross_source_dups for the provenance view,
     llm_lang_id for re-derivation)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     h = docs.groupBy(F.md5(F.col("text")).alias("th")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -138,7 +137,6 @@ def stats_ancova_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid-quantized for the double-valued covariate sums. Ref:
     reference adjusted-comparison tests (cf. stats_cuped — same
     algebra, experiment framing; stats_diff_in_diff)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     x, y = F.col("l_discount"), F.col("l_quantity").cast("double")
     g = li.groupBy(F.col("l_returnflag").alias("flag")).agg(
@@ -156,17 +154,16 @@ def stats_ancova_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("sx") / F.sum("n")).alias("gx"),
     )
     j = g.crossJoin(F.broadcast(pooled))
-    q = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return j.select(
         "flag",
         F.col("n").cast("bigint").alias("n"),
-        q(F.col("sy") / F.col("n")).alias("raw_mean"),
-        q(F.col("sx") / F.col("n")).alias("mean_discount"),
-        q(
+        q6(F.col("sy") / F.col("n")).alias("raw_mean"),
+        q6(F.col("sx") / F.col("n")).alias("mean_discount"),
+        q6(
             F.col("sy") / F.col("n")
             - F.col("bw") * (F.col("sx") / F.col("n") - F.col("gx"))
         ).alias("adjusted_mean"),
-        q(F.col("bw")).alias("pooled_slope"),
+        q6(F.col("bw")).alias("pooled_slope"),
     ).orderBy("flag")
 
 
@@ -212,7 +209,6 @@ def stats_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-exact. Ref: reference ordered-categorical tests (cf.
     stats_chisq for the unordered omnibus, stats_mannkendall for
     the time-ordered cousin)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     b = li.select(
         F.floor((F.col("l_quantity") - 1) / 10).cast("bigint").alias("band"),

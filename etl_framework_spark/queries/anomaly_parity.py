@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.operators.rounding import q6
 
 
 # --------------------------------------------------------------------------
@@ -77,7 +77,6 @@ def events_anomaly_deseasonalized(
     incidents at 3 a.m. One 24-row broadcast profile + row-local
     residuals. Ref: reference monitoring tests (cf. events_anomaly
     for raw z, events_hour_dow_profile for the profile itself)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     hourly = ev.groupBy(
         F.date_trunc("hour", F.date_trunc("second", F.col("ts"))).alias("h")
@@ -164,7 +163,6 @@ def vec_cluster_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster-geometry tests (cf. vec_silhouette_centroid for the
     between/within contrast, vec_ood_mahalanobis for the global
     outlier view)."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     e = emb.select(
         "label",
@@ -191,7 +189,6 @@ def vec_cluster_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     d = j.select("label", rdist.alias("r"))
-    q6 = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     q4 = lambda c: F.floor(c * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)
     return (
         d.groupBy("label")
@@ -242,7 +239,6 @@ def sales_price_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup → per-part extremes. Ref: reference price-parity tests
     (cf. sales_price_dispersion for the within-part view,
     q2_mincost for the cheapest-supplier query)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     sup = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     pn = (
@@ -270,7 +266,6 @@ def sales_price_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_nations") >= 3)
     )
     q4 = lambda c: F.floor(c * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)
-    q6 = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return (
         spread.select(
             F.col("part").cast("bigint").alias("p_partkey"),

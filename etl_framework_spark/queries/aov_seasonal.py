@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 # --------------------------------------------------------------------------
@@ -74,7 +73,6 @@ def sales_mix_adjusted_aov(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollups + a row-local weighted sum. Ref: reference standardized-
     rate tests (cf. stats_simpsons for the failure mode this
     prevents, sales_gmv_bridge for the decomposition view)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     base = od.select(
         F.year(F.col("o_orderdate").cast("date")).cast("bigint").alias("yr"),
@@ -155,7 +153,6 @@ def ts_seasonal_profile_stability(
     correlations per year pair. Ref: reference seasonality tests
     (cf. events_seasonality for detection, ts_dow_heteroscedasticity
     for the variance axis)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     daily = li.groupBy(
         F.year(F.col("l_shipdate").cast("date")).cast("bigint").alias("yr"),
@@ -251,7 +248,6 @@ def stats_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ladder: Bartlett (normal), Levene (mean), BF (median). Ref:
     reference variance-test tests (cf. stats_levene,
     stats_bartlett)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     v = li.groupBy(
         F.col("l_returnflag").alias("flag"), F.col("l_quantity").alias("q")

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.asof import asof_join
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 @query(
@@ -40,7 +39,6 @@ def join_asof_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join (J8) via the union-tag + running-last formulation:
     one shuffle on user_id, one sort — the shape that scales; DuckDB
     ASOF JOIN is the oracle."""
-    prep(spark)
     ev = table(spark, sf_dir, "events").withColumn(
         "tts", F.date_trunc("second", F.col("ts"))
     )

@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.asof import asof_join
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _TOL_S = 3600  # as-of match tolerance, seconds
 _LIFT = 1.10  # SPRT H1: +10% conversion lift
@@ -82,7 +81,6 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle on user_id); the tolerance is a post-match predicate in
     integer microseconds, adding zero shuffles. Cites join_asof /
     operators/asof.py for the base machinery."""
-    prep(spark)
     ev = table(spark, sf_dir, "events").withColumn(
         "tts", F.date_trunc("second", F.col("ts"))
     )
@@ -168,7 +166,6 @@ def stats_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
     one ordered window over the |days| rollup. A/A honesty: arms are
     identical by construction, so the walk should drift toward
     accept_h0, not accept_h1."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     arms = e.select(
         F.date_trunc("day", "ts").alias("day"),
@@ -247,7 +244,6 @@ def llm_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     lexical difficulty, which is the quality-mix signal a curation
     pipeline actually uses. One token explode, one regexp per word,
     integer sufficient statistics."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     words = d.select(
         "source", F.explode(F.split("text", " ")).alias("tok")

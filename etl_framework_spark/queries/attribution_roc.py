@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _LOOKBACK_S = 7 * 86400
 _PACK = 10000000  # id < 1e7: pack = t * _PACK + event_id stays < 2^63
@@ -90,7 +89,6 @@ def events_attribution_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     credited ids join back for their types. Ref: reference
     attribution tests (cf. events_attribution — the last-touch
     original)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     seq = ev.filter(
         F.col("event_type").isin("purchase", "view", "click")
@@ -192,7 +190,6 @@ def events_attribution_position(spark: SparkSession, sf_dir: str) -> DataFrame:
     time filter; positions come from one per-purchase window rank.
     Credit totals per type are the budget-allocation row. Ref:
     reference attribution tests (cf. events_attribution_compare)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     t_expr = F.unix_timestamp(F.date_trunc("second", F.col("ts")))
     p = ev.filter(F.col("event_type") == "purchase").select(
@@ -280,7 +277,6 @@ def stats_roc_youden(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-sample KS statistic between the score distributions. One
     broadcast-threshold aggregation; the argmax is a window over 9
     rows. Ref: reference threshold-chooser tests."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     seq = ev.select(
         "user_id",

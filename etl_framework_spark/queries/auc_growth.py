@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 # --------------------------------------------------------------------------
@@ -81,7 +80,6 @@ def stats_auc_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
     companion to stats_brier_calibration. Ref: reference
     classifier-eval tests (cf. stats_mannwhitney — the same statistic
     wearing its testing hat)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     seq = ev.select(
         "user_id",
@@ -174,7 +172,6 @@ def events_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     over their own ≤5 presence rows; the report is |weeks| rows.
     Ref: reference lifecycle tests (cf. events_new_vs_returning,
     cohort_retention)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     wk = ev.select(
         "user_id", F.date_trunc("week", F.col("ts")).alias("week")
@@ -247,7 +244,6 @@ def events_hour_dow_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares. Spark dayofweek is 1=Sunday..7=Saturday vs DuckDB's
     0=Sunday — the Spark side subtracts 1 to align. Ref: reference
     load-profile tests (cf. events_seasonality, ts_periodogram)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     c = ev.groupBy(
         (F.dayofweek("ts") - 1).cast("bigint").alias("dow"),

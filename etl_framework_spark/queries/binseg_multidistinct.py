@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 
@@ -95,7 +94,6 @@ def ts_binary_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     position tiebreak → deterministic). Ref: reference
     changepoint tests (cf. ts_changepoint for the single-split
     form, ts_page_hinkley for the sequential detector)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("day")).agg(
         F.sum("l_quantity").cast("double").alias("x")
@@ -189,7 +187,6 @@ def agg_multi_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-row-per-side — broadcast, free. Ref: reference multi-distinct
     tests (cf. agg_count_distinct for the single-column form,
     agg_bitmap_distinct for the re-aggregatable one)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     n = li.groupBy(F.col("l_returnflag").alias("f")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
@@ -277,7 +274,6 @@ def llm_length_quantiles_by_source(
     not |docs|. Ref: reference grouped-quantile tests (cf.
     agg_quantile_approx for the sketch path, llm_length_hist for
     the full histogram)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     d = docs.select(
         "source",

@@ -33,7 +33,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _BUCKETS = 8
 
@@ -62,7 +61,6 @@ def agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the aggregation at 100 TB (and to HLL when approximation isn't
     acceptable). The oracle's COUNT(DISTINCT) certifies bit-exact
     equality; n_events rides along from the same pass."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     per_bucket = e.groupBy(
         "event_type",
@@ -104,7 +102,6 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     future join on the key — the difference between an hourly
     pipeline re-shuffling 100 TB per run and scanning it. Results
     must equal the plain-join oracle on the original parquet."""
-    prep(spark)
     # one file per bucket (the repartition below guarantees it) lets the
     # scan expose the sortBy order — but only behind this flag since
     # Spark 3.0; without it the plan keeps a (cheap, shuffle-free) Sort
@@ -183,7 +180,6 @@ def llm_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens-absent-from-the-other contribute (1 − Σ_shared p)·ln 2 in
     closed form. Work is |vocab| · avg-pairs-per-token — one shuffle
     on token, never on pairs."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     toks = d.select("source", F.explode(F.split("text", " ")).alias("tok"))
     n = toks.groupBy("source").agg(F.count("*").cast("double").alias("nt"))

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _K1 = 1.2
 _B = 0.75
@@ -82,7 +81,6 @@ def llm_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     double additions happen in the same IEEE sequence on both
     engines; ranking uses the ROUNDED score (tie-broken by doc_id) so
     rank order is engine-stable."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
     dl = tok.groupBy("doc_id").agg(F.count("*").alias("dlen"))
@@ -171,7 +169,6 @@ def rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered BEFORE ranking, so the rank windows see 100 rows, not
     the corpus; fusion is a full outer join of the two bounded lists
     with the standard missing-list contribution of 0."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     a_top = (
         d.select("doc_id", "n_chars")

@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.textops import tokens
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 BPE_TYPES = 150  # word types kept (top by freq, tie → lexicographic)
 BPE_ROUNDS = 3
@@ -162,7 +161,6 @@ def llm_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tie → lexicographic), merge it everywhere, repeat. Returns the
     learned merge table (round, sym_a, sym_b, weight) — what a
     tokenizer trainer persists."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     tops = _train(docs)
     merges = [
@@ -227,7 +225,6 @@ def llm_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     The merge table is three broadcast single-row joins; segmentation
     is pure string ops on the |vocab|-sized word table, never the
     corpus."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     tops = _train(docs)
     toks = docs.select("lang", F.explode(tokens("text")).alias("tok"))

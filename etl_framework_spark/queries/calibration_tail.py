@@ -39,7 +39,6 @@ from etl_framework_spark.catalog import table
 from etl_framework_spark.operators import guarded
 from etl_framework_spark.operators.graph import co_occurrence_pairs
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 _NBINS = 5
@@ -92,7 +91,6 @@ def stats_brier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio of window integer counts → exact, so binning agrees across
     engines with no float ceremony. Ref: reference forecast-eval
     tests (cf. feat_pit_training_set, events_forecast_backtest)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     seq = ev.select(
         "user_id",
@@ -156,7 +154,6 @@ def stats_var_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional tail mean — two small shuffles. Ref: reference
     risk-rollup tests (cf. stats_hill_tail for the tail-shape
     twin)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     q = ev.groupBy("event_type").agg(
         F.percentile("value", 0.05).alias("var05")
@@ -262,7 +259,6 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     input only shrinks — the honest distributed approximation of the
     sequential peel. Ref: reference core-decomposition tests (cf.
     graph_khop_reach, graph_assortativity)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     # ONE shuffle builds the weighted graph — see
     # operators/graph.co_occurrence_pairs (degree cap mirrored in the

@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _TOP_NEG = 10
 
@@ -79,7 +78,6 @@ def sales_cannibalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair's correlation is the usual moment closed form. Ref:
     reference cross-elasticity tests (cf. sales_elasticity,
     basket_lift)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     pt = table(spark, sf_dir, "part")
     daily = (
@@ -172,7 +170,6 @@ def vec_mean_pairwise_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-diversity metrics stay computable at 10⁹ embeddings. Ref:
     reference diversity-metric tests (cf. llm_centroid,
     vec_knn_reciprocity)."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     dims = emb.select(
         "label", F.posexplode("embedding").alias("pos", "xf")
@@ -238,7 +235,6 @@ def dq_enum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     classification is a min and a lead window over each value's ≤5
     presence rows. Ref: reference domain-drift tests (cf.
     dq_drift_psi, events_mix_drift)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     pres = ev.select(
         F.date_trunc("week", F.col("ts")).alias("week"),

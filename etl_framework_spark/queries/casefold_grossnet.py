@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 # --------------------------------------------------------------------------
@@ -64,7 +63,6 @@ def llm_dedup_casefold(spark: SparkSession, sf_dir: str) -> DataFrame:
     problem. One aggregation over row-local transforms of a single
     scan. Ref: reference dedup-policy tests (cf. llm_dedup_exact,
     llm_dedup_keep_best)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     n = docs.select(
         F.col("text").alias("raw"),
@@ -121,7 +119,6 @@ def sales_gross_to_net(spark: SparkSession, sf_dir: str) -> DataFrame:
     discount rate as the negotiation-health number. One conditional
     aggregation. Ref: reference revenue-waterfall tests (cf.
     sales_gmv_bridge, agg_groupby/Q1)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     ep, d, t = F.col("l_extendedprice"), F.col("l_discount"), F.col("l_tax")
     return li.groupBy("l_returnflag").agg(
@@ -178,7 +175,6 @@ def llm_source_exclusive_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     (source, token) distinct rollup; exclusives are the n_sources=1
     slice. Ref: reference source-contribution tests (cf.
     llm_cross_source_dups, train_quality_tradeoff)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     tok = docs.select(
         "source", F.explode(F.split(F.col("text"), " ")).alias("token")

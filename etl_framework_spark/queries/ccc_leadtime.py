@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _LT_MIN_LINES = 20  # supplier scorecard support gate
 _WIN_S = 3600  # semi-join lookback window (seconds)
@@ -78,7 +77,6 @@ def stats_lin_ccc(spark: SparkSession, sf_dir: str) -> DataFrame:
     One key join + five sums, integer-exact. Ref: reference
     agreement tests (cf. stats_cohens_kappa for categorical,
     stats_deming for the errors-in-both-fit)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     a = li.filter(F.col("l_linenumber") == 1).select(
         "l_orderkey", F.col("l_quantity").cast("double").alias("x")
@@ -164,7 +162,6 @@ def supplier_lead_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     moments; ranking over |suppliers|. Ref: reference supplier-
     scorecard tests (cf. orders_ship_lag for the global view,
     dq_single_source_parts for the risk axis)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     od = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     lag = li.join(od, li.l_orderkey == od.o_orderkey).select(
@@ -255,7 +252,6 @@ def join_semi_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     preceded by a deploy'. Integer epoch seconds → exact. Ref:
     reference windowed-join tests (cf. join_interval for ranges,
     events_attribution for multi-touch credit)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     tsec = F.unix_timestamp(F.date_trunc("second", F.col("ts"))).cast("bigint")
     p = ev.filter(F.col("event_type") == "purchase").select(

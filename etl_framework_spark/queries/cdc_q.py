@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.cdc import scd2_apply
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 @query(
@@ -35,7 +34,6 @@ def cdc_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamp and open a new [ts, NULL) row for every key whose
     tracked attribute changed; one full outer join of the dimension
     with the updates, shuffling on the dimension key."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     dim = c.select(
         "c_custkey",

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.operators.rounding import q6
 
 _Z = 1.959963984540054  # 97.5% normal quantile
 
@@ -83,7 +83,6 @@ def stats_ci_method_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     algebra, integer-exact inputs. Ref: reference interval tests
     (cf. stats_rate_ci for one interval, stats_median_ci for the
     order-statistic analogue)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     sup = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     base = li.join(sup, li.l_suppkey == sup.s_suppkey).select(
@@ -107,11 +106,10 @@ def stats_ci_method_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((wald_lo < 0) | (wald_hi > 1)).alias("wald_viol"),
         (((wc - wr) < 0) | ((wc + wr) > 1)).alias("wil_viol"),
     )
-    q = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return ci.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_nations"),
-        q(F.avg("wald_w")).alias("mean_wald_width"),
-        q(F.avg("wil_w")).alias("mean_wilson_width"),
+        q6(F.avg("wald_w")).alias("mean_wald_width"),
+        q6(F.avg("wil_w")).alias("mean_wilson_width"),
         F.sum(F.when(F.col("wald_viol"), 1).otherwise(0))
         .cast("bigint")
         .alias("wald_boundary_violations"),
@@ -171,7 +169,6 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     join. Integer counts → exact. Ref: reference community-quality
     tests (cf. graph_clustering_coeff, llm_cluster_purity for the
     supervised analogue)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     t = docs.select(F.split(F.col("text"), " ").alias("l")).filter(
         F.size("l") >= 2
@@ -215,11 +212,10 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("ai2"),
         )
     )
-    qz = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return q.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_communities"),
-        qz(F.sum("eii")).alias("within_edge_share"),
-        qz(F.sum(F.col("eii") - F.col("ai2"))).alias("modularity_q"),
+        q6(F.sum("eii")).alias("within_edge_share"),
+        q6(F.sum(F.col("eii") - F.col("ai2"))).alias("modularity_q"),
     )
 
 
@@ -269,7 +265,6 @@ def vec_label_text_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     one contingency rollup; integer counts → exact χ². Ref:
     reference cross-modal tests (cf. stats_cramers_v for the
     statistic, llm_cluster_purity for the within-modality twin)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents").select("doc_id", "lang")
     emb = table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("doc_id"), "label"

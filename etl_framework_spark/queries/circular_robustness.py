@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _PI = math.pi
 _DEG_CUTS = [0.5, 0.7, 0.9, 1.0]  # fractions of max degree
@@ -74,7 +73,6 @@ def stats_circular_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     per type. Ref: reference temporal-geometry tests (cf.
     events_hour_dow_profile — histogram view; this is its
     parametric summary)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     theta = (
         (F.unix_timestamp(F.date_trunc("second", F.col("ts"))).cast("bigint") % 86400)
@@ -167,7 +165,6 @@ def graph_attack_robustness(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a recomputed graph. Integer counts → exact. Ref:
     reference robustness tests (cf. graph_rich_club for who the
     hubs wire to, graph_kcore_peel for the nested-shell view)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     t = docs.select(F.split(F.col("text"), " ").alias("l")).filter(
         F.size("l") >= 2
@@ -312,7 +309,6 @@ def llm_source_similarity_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     having tk)² — bounded by the source count, never by vocab. Ref:
     reference provenance-audit tests (cf. llm_js_divergence for one
     pair, llm_source_exclusive_vocab for the complement view)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     tok = docs.select(
         "source", F.explode(F.split(F.col("text"), " ")).alias("tk")

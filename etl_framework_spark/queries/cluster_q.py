@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 K = 8
@@ -159,7 +158,6 @@ def llm_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical arithmetic in DuckDB CTEs; matching requires every
     assignment in BOTH iterations to agree, so this checks the whole
     iterative pipeline, not just the final histogram."""
-    prep(spark)
     # init = k lowest ids via TakeOrderedAndProject (per-partition
     # heaps) then a row_number over just those k rows — never a global
     # window sort (see kmeans_a2).
@@ -247,7 +245,6 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantic dedup tractable at 100 TB (pairs are cluster-local, and
     cluster sizes are balanced by the k-means objective). Survivor
     policy: lowest vec_id per near-dup pair chain."""
-    prep(spark)
     from etl_framework_spark.operators.similarity import blocked_cosine_pairs
 
     # persist: the within-cluster pair pruning and the final keep-join

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.operators.rounding import q6
 
 _RATE = 0.10  # annual discount rate
 _TOP = 10
@@ -75,7 +75,6 @@ def sales_customer_npv(spark: SparkSession, sf_dir: str) -> DataFrame:
     shown next to the raw total and the effective discount factor.
     Row-local pow + one rollup + deterministic top-k. Ref: reference
     customer-value tests (cf. cohort_ltv, orders_rfm)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     wfc = W.partitionBy("o_custkey")
     f = od.select(
@@ -159,7 +158,6 @@ def stats_cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     influence audit that separates 'outlier in y' from 'leverage in
     x'. Ref: reference regression-diagnostics tests (cf.
     stats_breusch_pagan, stats_iqr_outliers)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     x, y = F.col("l_discount"), F.col("l_quantity")
     m = li.agg(
@@ -270,7 +268,6 @@ def events_peak_shaving(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the first DuckDB list element). Ref: reference capacity
     what-if tests (cf. events_capacity_headroom,
     events_token_bucket, ts_clamped_cumsum)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     hourly = ev.groupBy(
         "event_type",
@@ -304,12 +301,11 @@ def events_peak_shaving(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("bh"),
         ),
     )
-    qz = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return arrs.select(
         "event_type",
         "n_hours",
         F.round("cap", 6).alias("cap_p90"),
-        qz(state["mq"]).alias("max_queue_depth"),
+        q6(state["mq"]).alias("max_queue_depth"),
         state["bh"].cast("bigint").alias("hours_with_backlog"),
-        qz(state["q"]).alias("final_backlog"),
+        q6(state["q"]).alias("final_backlog"),
     )

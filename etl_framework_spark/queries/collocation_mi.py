@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.textops import shingles, tokens
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 _MIN_BG = 10  # min bigram count for LLR scoring
@@ -92,7 +91,6 @@ def llm_collocations_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
     marginals are re-aggregations of it, broadcast back); ln-identity
     op order matches DuckDB exactly. Deterministic (llr, w1, w2)
     top-k. Ref: reference collocation tests (cf. llm_pmi)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     bi = docs.select(tokens("text").alias("l")).select(
         F.explode(shingles("l", 2)).alias("bg")
@@ -201,7 +199,6 @@ def feat_infogain(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tiny (feature,val,y) rollup. The noise probe scoring ≈0 is
     the built-in sanity check. Ref: reference feature-selection
     tests."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     lab = od.select(
         (F.col("o_orderstatus") == "F").alias("y"),
@@ -297,7 +294,6 @@ def stats_simpsons(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup aggregation (GROUPING SETS shares the partial aggregates);
     the flip flag is a window lookup on the 4-row result. Ref:
     reference stratified-regression tests (cf. sales_elasticity)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     s = li.rollup("l_returnflag").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),

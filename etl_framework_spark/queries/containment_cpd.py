@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.textops import tokens
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 _CONT_MIN = 0.9
@@ -84,7 +83,6 @@ def llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     with zero overlap never materialize, and set sizes join back from
     the tiny per-doc relation. All counts integer → exact on any
     partitioning."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     t = d.select(
         "doc_id",
@@ -183,7 +181,6 @@ def ts_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bit-exact under any partitioning. Runs entirely on the
     |types|×|hours| spine; raw volume only matters in the first
     rollup."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     hourly = e.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("hr")
@@ -283,7 +280,6 @@ def stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows×B (map-side, no shuffle), one partial-agg on b, an exact
     percentile over B resample means. Cost scales as B scans — B is a
     constant, so the plan is cluster-size independent."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     reps = e.crossJoin(
         F.broadcast(spark.range(_B).select(F.col("id").alias("b")))

@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _HASH_P = 1000000007
 _CONF_Q = 0.9
@@ -81,7 +80,6 @@ def events_type_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a global pair scan); marginals re-aggregate the basket
     rollup. Ref: reference temporal-association tests (cf.
     basket_lift, events_markov)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     basket = ev.select(
         "user_id",
@@ -154,7 +152,6 @@ def dq_partition_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduces it — that's the point of an audit checksum. Ref:
     reference replication-audit tests (cf. sink_roundtrip_parquet,
     dq_freshness)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     hv = (
         (F.col("event_id") % 1000000007) * 2654435761
@@ -224,7 +221,6 @@ def stats_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two passes (calibration rollup + holdout count), no model
     refits. Ref: reference interval-calibration tests (cf.
     stats_bootstrap_ci, events_forecast_backtest)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     e = ev.select(
         "event_type",

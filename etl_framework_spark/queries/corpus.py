@@ -41,7 +41,6 @@ def llm_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus vocabulary (L4): token frequency + document frequency,
     top-{100} under a total order. Count-style aggs partial-aggregate,
     so the 'the'-token hot key reduces map-side."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(tokens("text")).alias("tok"))
     return (
@@ -67,7 +66,6 @@ def llm_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def llm_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram statistics (L4): 2-gram shingles → frequency top-k."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     t = docs.select("doc_id", tokens("text").alias("l"))
     bi = t.select("doc_id", F.explode(shingles("l", 2)).alias("bg"))
@@ -104,7 +102,6 @@ def llm_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     df computed over the FULL corpus; scored for a bounded doc subset.
     At 100 TB: df/N are corpus-wide partial-agg statistics broadcast
     back against the per-doc term table — exactly this plan."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     toks = docs.filter(F.col("doc_id") < TFIDF_DOCS).select(
         "doc_id", F.explode(tokens("text")).alias("tok")
@@ -303,7 +300,6 @@ def llm_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pointwise mutual information of bigrams (L4): collocation
     scoring — ln(P(ab) / (P(a)·P(b))) with unigram/bigram counts as
     broadcast-sized statistics, bounded to bigrams seen ≥ 20 times."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     toks = docs.select(F.explode(tokens("text")).alias("tok"))
     uni = toks.groupBy("tok").agg(F.count("*").alias("c"))
@@ -349,7 +345,6 @@ def llm_length_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document-length histogram (L4/quality): fixed-width 50-char
     buckets — the data-quality profile every corpus pipeline starts
     with; one partial-aggregating hash shuffle."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     bucket = F.floor((F.col("n_chars") - 0) / 50.0).cast("int")
     return docs.groupBy(bucket.alias("bucket")).agg(
@@ -380,7 +375,6 @@ def llm_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the same plan holds with postings chunked per shard:
     groupBy(tok) is one partial-aggregating shuffle, and collect_set
     keeps per-token state bounded by df, not corpus size."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < IDX_DOCS)
     toks = docs.select("doc_id", F.explode(tokens("text")).alias("tok"))
     return toks.groupBy("tok").agg(
@@ -412,7 +406,6 @@ def llm_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas; pass 2 recounts only broadcast-semi-joined
     candidates — so the sketch plan still admits this exact SQL
     oracle."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     toks = docs.select(F.explode(tokens("text")).alias("tok"))
     return heavy_hitters(toks, frac=HH_FRAC)

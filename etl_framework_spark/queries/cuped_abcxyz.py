@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 # --------------------------------------------------------------------------
@@ -70,7 +69,6 @@ def stats_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     Var(Y − θX) = var(Y) − cov²/var(X) is reported as var_adj. One
     conditional-agg rollup per user and one covariance pass; the
     covariance aggregates are single-pass sufficient statistics."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     d0 = e.agg(F.min(F.date_trunc("day", "ts")).alias("d0"))
     tagged = e.crossJoin(F.broadcast(d0)).select(
@@ -135,7 +133,6 @@ def llm_cross_source_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     one rollup row per source, never pairwise rows, so the plan is
     immune to dup-clique blowup (the failure mode SCALE.md documents
     for pair-emitting dedup)."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     hs = d.groupBy(F.md5("text").alias("h"), "source").agg(
         F.count("*").cast("bigint").alias("c")
@@ -213,7 +210,6 @@ def orders_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
     6 dp before ranking (the Lorenz discipline) so class boundaries
     are a stable total order on both engines; CV comes from monthly
     integer-quantity sums."""
-    prep(spark)
     l = table(spark, sf_dir, "lineitem")
     o = table(spark, sf_dir, "orders")
     monthly = (

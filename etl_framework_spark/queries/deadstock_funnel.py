@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _DEAD_DAYS = 180
 _LOOK_S = 7 * 86400
@@ -78,7 +77,6 @@ def orders_dead_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff; the report is the inventory review's opening slide. Ref:
     reference inventory-audit tests (cf. orders_backlog_aging,
     orders_abc_xyz)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     cutoff = li.agg(F.max(F.col("l_shipdate").cast("date")).alias("maxd"))
     per_part = li.groupBy(F.col("l_partkey").alias("pk")).agg(
@@ -163,7 +161,6 @@ def events_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     division recovers the predecessor's timestamp exactly. Ref:
     reference funnel-timing tests (cf. events_time_to_convert,
     events_attribution_compare)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     seq = ev.filter(
         F.col("event_type").isin("view", "click", "purchase")
@@ -249,7 +246,6 @@ def sales_brand_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     by day; betas are moment closed forms. Ref: reference
     factor-exposure tests (cf. sales_cannibalization,
     stats_partial_corr)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     pt = table(spark, sf_dir, "part")
     daily = (

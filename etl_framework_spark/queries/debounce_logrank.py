@@ -33,7 +33,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _RAISE_N = 3  # consecutive breaches to raise
 _CLEAR_N = 6  # consecutive normals to clear
@@ -118,7 +117,6 @@ def events_alarm_hysteresis(spark: SparkSession, sf_dir: str) -> DataFrame:
     element; every condition inlined IDENTICALLY on both engines).
     Ref: reference alerting-operator tests (cf. ts_cusum,
     events_anomaly)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     hourly = ev.groupBy(
         "event_type",
@@ -249,7 +247,6 @@ def stats_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ladders are windows over the ≤31-row lifetime rollup; the null is
     TRUE here by construction, so the statistic should be small.
     Ref: reference survival-comparison tests."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     end = ev.agg(F.date_trunc("day", F.max("ts")).cast("date").alias("end_day"))
     life = (
@@ -361,7 +358,6 @@ def graph_bipartite_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier cross product; one count shuffle then a deterministic
     top-k. Ref: reference graph-projection tests (cf.
     graph_khop_reach, graph_triangles)."""
-    prep(spark)
     # r11 optimization (guide 2.4): the distinct-edge-list self-join
     # (2 lineitem scans + a distinct exchange per side + the p-keyed
     # join exchanges) is replaced with the shared one-shuffle

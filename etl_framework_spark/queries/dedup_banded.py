@@ -32,7 +32,6 @@ from etl_framework_spark.operators.dedup import (
 )
 from etl_framework_spark.operators.textops import tokens
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 _NBITS = 32
@@ -74,7 +73,6 @@ def llm_dedup_simhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ref: reference near-dup banding tests (cf. llm_dedup_minhash's
     band-bucket join — identical pigeonhole argument, Hamming instead
     of Jaccard)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     # persist the signature frame: the band self-join references it on
     # BOTH sides, and without a cache Spark recomputes the md5-per-
@@ -153,7 +151,6 @@ def llm_dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (WWW'07), one-sided prefix variant; llm_dedup_jaccard_ppjoin
     below tightens it with the symmetric prefix plus PPJoin's length
     and positional filters."""
-    prep(spark)
     from etl_framework_spark.operators.dedup import (
         prefix_filtered_jaccard_pairs,
     )
@@ -203,7 +200,6 @@ def llm_dedup_jaccard_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair-set equality with the one-sided path. Ref: reference
     near-dup family tests (cf. llm_dedup_jaccard / _prefix — same
     exact-verify contract, tighter filter)."""
-    prep(spark)
     from etl_framework_spark.operators.dedup import ppjoin_jaccard_pairs
     from etl_framework_spark.operators.textops import tokens as _tokens
 

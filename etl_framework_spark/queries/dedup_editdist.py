@@ -57,7 +57,6 @@ def llm_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped into a (true lang × predicted lang) confusion matrix —
     the report a corpus pipeline publishes to monitor its language
     gates. Reuses the exact lang-ID operator, then one tiny agg."""
-    prep(spark)
     pred = llm_lang_id(spark, sf_dir)
     return pred.groupBy("meta_lang", "pred_lang").agg(F.count("*").alias("n"))
 
@@ -86,7 +85,6 @@ def llm_dedup_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     run publishes ('one 140-doc clique, 400 singletons, 22% dropped').
     Built on the exact MinHash cluster assignment; two vocab-sized
     aggs on top."""
-    prep(spark)
     clusters = llm_dedup_minhash(spark, sf_dir)
     sizes = clusters.groupBy("cluster_id").agg(
         F.count("*").alias("cluster_size")
@@ -154,7 +152,6 @@ def ts_resample_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is tie-safe floor-quantized."""
     from pyspark.sql import Window as W
 
-    prep(spark)
     from etl_framework_spark.catalog import table as _table
 
     ev = (
@@ -269,7 +266,6 @@ def ts_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     needed."""
     from pyspark.sql import Window as W
 
-    prep(spark)
     from etl_framework_spark.catalog import table as _table
 
     ev = (
@@ -346,7 +342,6 @@ def ts_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-partitioned on (user_id, day)."""
     from pyspark.sql import Window as W
 
-    prep(spark)
     from etl_framework_spark.catalog import table as _table
 
     ev = (
@@ -404,7 +399,6 @@ def llm_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup curves. One shingle explode + a vocab-sized first-occurrence
     table joined back on the shingle hash — collision-driven cost,
     never all-pairs."""
-    prep(spark)
     from etl_framework_spark.catalog import table as _table
     from etl_framework_spark.operators.textops import shingles, tokens
 
@@ -448,7 +442,6 @@ def llm_quality_pctile(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines; the window runs per source partition."""
     from pyspark.sql import Window as W
 
-    prep(spark)
     from etl_framework_spark.catalog import table as _table
 
     d = _table(spark, sf_dir, "documents")
@@ -493,7 +486,6 @@ def train_packing_eff(spark: SparkSession, sf_dir: str) -> DataFrame:
     number that tells you whether the 256-token budget wastes compute
     (fill « 1) or the stream needs re-sorting by length. Bins are
     already a bounded aggregate; this is one more tiny agg on top."""
-    prep(spark)
     from etl_framework_spark.catalog import table as _table
     from pyspark.sql import Window as W
 
@@ -861,7 +853,6 @@ def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     |types|×|days| rows."""
     from pyspark.sql import Window as W
 
-    prep(spark)
     from etl_framework_spark.catalog import table as _table
 
     ev = _table(spark, sf_dir, "events").withColumn(
@@ -901,7 +892,6 @@ def ts_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     event type: ≈1 for Poisson-like arrivals, »1 for bursty traffic —
     the one-number arrival-process check next to ts_autocorr. Bounded
     |types|×|days| aggregate."""
-    prep(spark)
     from etl_framework_spark.catalog import table as _table
 
     ev = _table(spark, sf_dir, "events").withColumn(
@@ -948,7 +938,6 @@ def events_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     per shard key (e.g. per tenant) as an ordinary window."""
     from pyspark.sql import Window as W
 
-    prep(spark)
     from etl_framework_spark.catalog import table as _table
 
     ev = _table(spark, sf_dir, "events").withColumn(
@@ -993,7 +982,6 @@ def sales_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     order."""
     from pyspark.sql import Window as W
 
-    prep(spark)
     from etl_framework_spark.catalog import table as _table
 
     o = _table(spark, sf_dir, "orders")
@@ -1051,7 +1039,6 @@ def sales_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines."""
     from pyspark.sql import Window as W
 
-    prep(spark)
     from etl_framework_spark.catalog import table as _table
 
     o = _table(spark, sf_dir, "orders")
@@ -1100,7 +1087,6 @@ def llm_quality_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 'weird length for its source' gate that catches truncated or
     concatenated records before they skew training mixes. Source
     stats are a |sources|-row broadcast back onto the doc stream."""
-    prep(spark)
     from etl_framework_spark.catalog import table as _table
 
     d = _table(spark, sf_dir, "documents")
@@ -1141,7 +1127,6 @@ def llm_token_length_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard tokenizer diagnostic: a hump at high lengths means
     concatenation artifacts, a spike at 1 means over-splitting. One
     explode + one hash agg on a tiny key domain."""
-    prep(spark)
     from etl_framework_spark.catalog import table as _table
     from etl_framework_spark.operators.textops import tokens
 
@@ -1179,7 +1164,6 @@ def ts_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentiles over the bounded per-type gap sets."""
     from pyspark.sql import Window as W
 
-    prep(spark)
     from etl_framework_spark.catalog import table as _table
 
     ev = _table(spark, sf_dir, "events").withColumn(
@@ -1226,7 +1210,6 @@ def sales_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     growth is NULL by construction on both engines."""
     from pyspark.sql import Window as W
 
-    prep(spark)
     from etl_framework_spark.catalog import table as _table
 
     o = _table(spark, sf_dir, "orders")
@@ -1269,7 +1252,6 @@ def events_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     for every type pair — the co-engagement matrix behind funnel
     hypotheses. Distinct (type, user) pairs shuffle once on user_id
     for the self-join; everything after is |types|²-bounded."""
-    prep(spark)
     from etl_framework_spark.catalog import table as _table
 
     ev = _table(spark, sf_dir, "events")
@@ -1329,7 +1311,6 @@ def events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     path agg runs on a |types|³-bounded domain."""
     from pyspark.sql import Window as W
 
-    prep(spark)
     from etl_framework_spark.catalog import table as _table
 
     ev = _table(spark, sf_dir, "events").withColumn(

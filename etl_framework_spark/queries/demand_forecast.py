@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.operators.rounding import q6
 
 _CROSTON_A = 0.2  # smoothing constant for both size and interval
 
@@ -84,7 +84,6 @@ def ts_clamped_cumsum(spark: SparkSession, sf_dir: str) -> DataFrame:
     the init state as a prepended list element). The fold runs on the
     daily ROLLUP, so its length is days-per-supplier, and suppliers
     fold in parallel. Ref: reference stateful-scan operator tests."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     daily = li.groupBy(
         F.col("l_suppkey").alias("sk"),
@@ -115,12 +114,11 @@ def ts_clamped_cumsum(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("stock"),
         ),
     )
-    q = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return arrs.select(
         F.col("sk").alias("suppkey"),
         F.size(xs).cast("bigint").alias("n_days"),
-        q(state.bal).alias("final_balance"),
-        q(state.peak).alias("peak_balance"),
+        q6(state.bal).alias("final_balance"),
+        q6(state.peak).alias("peak_balance"),
         state.stock.cast("bigint").alias("stockout_days"),
     )
 
@@ -183,7 +181,6 @@ def ts_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
     days, intervals come from one lag window, and the two scalar
     folds are length |demands|, not |calendar|. Ref: reference
     forecasting-op tests (cf. ts_holt for the dense-series twin)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     pt = table(spark, sf_dir, "part").filter(F.col("p_size") <= 10)
     daily = (
@@ -225,15 +222,14 @@ def ts_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("z", fold(sizes))
         .withColumn("p", fold(gaps))
     )
-    q = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return st.select(
         "brand",
         "psize",
         F.col("n_demands").cast("bigint").alias("n_demands"),
-        q(F.col("z")).alias("smoothed_size"),
-        q(F.col("p")).alias("smoothed_interval"),
-        q(F.col("z") / F.col("p")).alias("croston_rate"),
-        q(F.col("z") / F.col("p") * F.lit(1 - _CROSTON_A / 2)).alias("sba_rate"),
+        q6(F.col("z")).alias("smoothed_size"),
+        q6(F.col("p")).alias("smoothed_interval"),
+        q6(F.col("z") / F.col("p")).alias("croston_rate"),
+        q6(F.col("z") / F.col("p") * F.lit(1 - _CROSTON_A / 2)).alias("sba_rate"),
     )
 
 
@@ -279,7 +275,6 @@ def orders_busday_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     1=Sunday vs DuckDB 0=Sunday trap never enters). Integer-exact;
     one join + one aggregation. Ref: reference calendar-function
     tests."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     od = table(spark, sf_dir, "orders")
     epoch_mon = F.lit("1970-01-05").cast("date")

@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _Z95 = 1.959963984540054  # two-sided 95% normal critical value
 _Z95_1S = 1.6448536269514722  # one-sided 95% normal critical value
@@ -104,7 +103,6 @@ def stats_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     (synthetic values independent of parity) the estimate should
     hover near zero. Ref: reference causal-stats tests (cf.
     stats_cuped, events_ab_test)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     e = ev.select(
         "user_id",
@@ -204,7 +202,6 @@ def vec_product_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     (err, code) tie-break both engines share) is row-local — the
     classic no-shuffle encode scan. Ref: reference vector-codec
     tests (cf. vec_quantize_int8, llm_sim_ivf)."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     from pyspark.sql import Window as W
 
@@ -296,7 +293,6 @@ def stats_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats_ttest_welch (the arms share a single shuffle), different
     inference. Spark dayofweek is 1=Sun..7=Sat vs DuckDB 0-based.
     Ref: reference equivalence-test suite."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     wkend = F.dayofweek("ts").isin(1, 7)
     v1c, v2c = F.when(wkend, F.col("value")), F.when(~wkend, F.col("value"))

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators import guarded
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 # --------------------------------------------------------------------------
@@ -63,7 +62,6 @@ def ts_day_of_month_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     |days| rollup → 31 groups. Ref: reference calendar-effect tests
     (cf. events_hour_dow_profile for the weekly rhythm,
     sales_trading_day_adjusted for the correction)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("day")).agg(
         F.sum("l_quantity").cast("double").alias("x")
@@ -133,7 +131,6 @@ def dq_table_ratio_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference reconciliation tests (cf. dq_order_lineitem_reconcile
     for value-level, dq_partition_volume_anomaly for the time
     axis)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").count()
     od = table(spark, sf_dir, "orders").count()
     cu = table(spark, sf_dir, "customer").count()
@@ -190,7 +187,6 @@ def sales_discount_response(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast baseline. Ref: reference promo-response tests (cf.
     sales_elasticity for the log-log slope,
     sales_volume_discount_curve for the price-structure converse)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     b = li.select(
         F.floor(F.col("l_discount") * 100 / 2).cast("bigint").alias("disc_band"),

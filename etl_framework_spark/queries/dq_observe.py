@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators import guarded
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _STALE_HOURS = 6
 
@@ -57,7 +56,6 @@ def dq_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the identical numbers the direct way, certifying the
     in-flight path. Reference family: the config-driven validation
     steps the original framework runs against its sinks."""
-    prep(spark)
     from pyspark.sql import Observation
 
     li = table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 10)
@@ -125,7 +123,6 @@ def dq_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline from the round-3 gotcha list) and flags types more
     than {_STALE_HOURS}h behind. One rollup per type plus a scalar
     global max; constant output."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     per = e.groupBy("event_type").agg(
         F.max("ts").alias("last_ts"), F.count("*").cast("bigint").alias("n")
@@ -179,7 +176,6 @@ def events_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts split by the new/returning predicate come from the same
     pass via conditional count-distinct. All integers; |days| output
     rows."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     first_seen = e.groupBy("user_id").agg(
         F.min(F.date_trunc("day", "ts")).alias("first_day")

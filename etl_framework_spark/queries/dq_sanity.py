@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 # --------------------------------------------------------------------------
@@ -70,7 +69,6 @@ def dq_single_source_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     second rollup input is |parts|, not |lineitem|. Ref: reference
     sourcing-risk tests (cf. supplier_hhi for the revenue-share
     view)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     ps = li.groupBy(F.col("l_partkey").alias("pk")).agg(
         F.count_distinct(F.col("l_suppkey")).cast("bigint").alias("n_supp")
@@ -151,7 +149,6 @@ def dq_temporal_sanity(spark: SparkSession, sf_dir: str) -> DataFrame:
     One join + one per-order rollup + one global conditional sum;
     the 'assert the arrow of time' DQ gate. Ref: reference DQ-rule
     tests (cf. dq_check, dq_order_lineitem_reconcile)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     od = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     j = li.join(od, li.l_orderkey == od.o_orderkey)
@@ -236,7 +233,6 @@ def orders_perfect_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup, so the second stage is |orders|-sized. Ref: reference
     fulfillment-KPI tests (cf. orders_promise_attainment,
     orders_ship_lag)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     od = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority"

@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.similarity import cosine, duck_cosine
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 # --------------------------------------------------------------------------
@@ -64,7 +63,6 @@ def sales_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     slope near −0.5 — Pearson's spurious-ratio-correlation trap,
     the first thing to rule out before calling a measured elasticity
     real (tested: slope ≈ −0.5, R² ≈ 0.5 on independent data)."""
-    prep(spark)
     l = table(spark, sf_dir, "lineitem")
     p = table(spark, sf_dir, "part")
     li = (
@@ -138,7 +136,6 @@ def ts_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     |types|×|hours| spine rows (two window functions, zero floats),
     so the result is exact on any partitioning; raw event volume only
     touches the first rollup."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     hourly = e.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("hr")
@@ -213,7 +210,6 @@ def vec_cosine_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     llm_sim_topk (bit-identical on both engines); bucketing happens
     AFTER 6-dp sign-aware quantization so bucket edges cannot
     disagree in the last ulp."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     a = emb.filter(F.col("vec_id") % 2 == 0).select(
         F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea")

@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _ED_MOD = 5  # energy-distance sample: vec_id % 5 == 0
 _N_PERM = 20
@@ -92,7 +91,6 @@ def vec_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     distances, identical op order both engines); each expectation is
     one pair-join rollup. Ref: reference distribution-shift tests
     (cf. llm_embedding_drift, vec_mean_pairwise_sim)."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings").filter(
         (F.col("vec_id") % _ED_MOD == 0) & F.col("label").isin(0, 1)
     )
@@ -202,7 +200,6 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     does inject some weekday structure — the test finds it honestly).
     Ref: reference resampling tests (cf. stats_bootstrap_ci — the
     Poisson-bootstrap sibling)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     base = ev.select(
         "event_id", "value", F.dayofweek("ts").isin(1, 7).alias("wkend")
@@ -307,7 +304,6 @@ def orders_subscription_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup for the CV; deterministic (cv, custkey) ranking. Ref:
     reference purchase-pattern tests (cf. ts_burstiness,
     orders_repeat_rate)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     wc = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     seq = od.select(

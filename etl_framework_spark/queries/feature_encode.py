@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 # --------------------------------------------------------------------------
@@ -55,7 +54,6 @@ def feat_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     moments are one partial-agg shuffle; the |brands|-row moment table
     broadcasts back onto the facts. Zero-variance/zero-range groups
     produce NULL (NULLIF), matching the oracle exactly."""
-    prep(spark)
     p = table(spark, sf_dir, "part")
     m = p.groupBy("p_brand").agg(
         F.avg("p_retailprice").alias("mu"),
@@ -101,7 +99,6 @@ def feat_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic across engines/runs. The fact table contributes one
     partial-agg count; the global window orders only the |labels|-row
     aggregate (150 part types), never facts."""
-    prep(spark)
     p = table(spark, sf_dir, "part")
     c = p.groupBy(F.col("p_type").alias("label")).agg(F.count("*").alias("freq"))
     w = W.orderBy(F.col("freq").desc(), "label")
@@ -139,7 +136,6 @@ def feat_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     that sizes a hashed feature space before training. One vocabulary
     shuffle (partial-agg, uniform md5 keys); the bucket rollup is
     256 rows regardless of corpus size."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     vocab = (
         d.select(F.explode(F.split("text", " ")).alias("token"))

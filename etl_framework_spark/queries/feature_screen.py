@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators import guarded
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 _GC_K = 5  # greedy coverage steps
@@ -90,7 +89,6 @@ def stats_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
     ships as one repeated-measures suite. Midranks are count-based
     (c_less + (c_eq+1)/2) inside 3-row blocks → integer-exact. Ref:
     reference repeated-measures tests."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").filter(F.col("l_linenumber") <= 3)
     ok3 = (
         li.groupBy("l_orderkey")
@@ -189,7 +187,6 @@ def feat_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     model-free. One join + one rollup; exact counts → deterministic
     logs. Ref: reference feature-screen tests (cf. feat_infogain —
     IV is its signed, per-category decomposition)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     od = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     base = li.join(od, li.l_orderkey == od.o_orderkey).select(
@@ -375,7 +372,6 @@ def llm_greedy_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     train_budget_select for the budgeted knapsack cousin); the
     certificate is the CELF lazy-evaluation bound applied to a
     collected pool."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id", F.split(F.col("text"), " ").alias("l")

@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _Z95 = 1.959963984540054
 _N_SUB = 64
@@ -78,7 +77,6 @@ def stats_fieller_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     moments pass including the numerator-denominator covariance.
     Ref: reference ratio-inference tests (cf. sales_elasticity's
     ratio-bias note, stats_rate_ci)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     m = li.groupBy(F.col("l_returnflag").alias("f")).agg(
         F.count(F.lit(1)).cast("double").alias("n"),
@@ -154,7 +152,6 @@ def vec_silhouette_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back; distances accumulate per (vector, centroid).
     Ref: reference cluster-quality tests (cf. llm_cluster_purity,
     vec_ood_mahalanobis)."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     dims = emb.select(
         "vec_id", "label", F.posexplode("embedding").alias("pos", "xf")
@@ -238,7 +235,6 @@ def events_error_under_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     debugging. One hourly rollup + moment closed forms. Ref:
     reference reliability-audit tests (cf.
     events_capacity_headroom, events_alarm_hysteresis)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     hourly = ev.groupBy(
         F.unix_timestamp(F.date_trunc("hour", F.col("ts"))).alias("h")

@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 _PFX = [4, 6, 8]  # md5 hex prefix lengths to audit
@@ -71,7 +70,6 @@ def llm_fingerprint_collision(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollups. Ref: reference fingerprint tests (cf. llm_fingerprint
     for the rolling hash, dq_partition_checksum for the integrity
     use)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     h = docs.select(F.md5("text").alias("h"))
     h = h.transform(persist_tracked)
@@ -148,7 +146,6 @@ def ts_naive_pi_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference interval-calibration tests (cf.
     stats_conformal_interval for the distribution-free fix,
     stats_brier_calibration for the probabilistic twin)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("day")).agg(
         F.sum("l_quantity").cast("double").alias("y")
@@ -238,7 +235,6 @@ def vec_dedup_centroid_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     with conditional averages. Ref: reference curation-impact tests
     (cf. llm_dedup_cluster_profile, llm_embedding_drift for the
     source-level analogue)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     keep = docs.select(
         "doc_id",

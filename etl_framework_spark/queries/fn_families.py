@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 # --------------------------------------------------------------------------
@@ -57,7 +56,6 @@ from etl_framework_spark.session import prep
 )
 def fn_string(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String family (F1): 20 functions in one projection."""
-    prep(spark)
     p = table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
@@ -108,7 +106,6 @@ def fn_string(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def fn_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date/time family (F2). dayofweek normalized (+1 in oracle)."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     d = F.col("o_orderdate")
     return o.select(
@@ -158,7 +155,6 @@ def fn_date(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Math family (F3). libm-backed functions rounded to 6 dp."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     p, q, d = F.col("l_extendedprice"), F.col("l_quantity"), F.col("l_discount")
     return li.select(
@@ -206,7 +202,6 @@ def fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array family (F4): size/contains/element_at/sort/distinct/
     slice/transform(λ)/filter(λ)/aggregate(λ)/flatten/array_join."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.split("text", " ").alias("l"))
     return toks.select(
@@ -248,7 +243,6 @@ def fn_array(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map/struct family (F5): create_map, map_keys, element_at,
     map size, named_struct + field access."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     m = F.create_map(F.col("event_type"), F.col("value"))
     s = F.named_struct(F.lit("t"), F.col("event_type"), F.lit("v"), F.col("value"))
@@ -278,7 +272,6 @@ def fn_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def fn_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON family (F6): get_json_object, from_json, to_json."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     k_str = F.get_json_object("props", "$.k")
     k_from = F.from_json("props", "k INT").getField("k")
@@ -303,7 +296,6 @@ def fn_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def fn_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash family, portable subset (F7): md5 + sha256 over UTF-8."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -317,7 +309,6 @@ def fn_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_hash_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark-native hashes (F7 ⛔ subset): xxhash64/crc32/hash have no
     cross-engine oracle; rows-only check + unit-tested determinism."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 @query(
@@ -34,7 +33,6 @@ from etl_framework_spark.session import prep
 def fn_string2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String family, wave 2 (F1): levenshtein, split_part,
     left/right, ascii/chr, contains, locate."""
-    prep(spark)
     p = table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
@@ -65,7 +63,6 @@ def fn_string2(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_date2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date family, wave 2 (F2): time components, dayofyear,
     make_date/make_timestamp constructors."""
-    prep(spark)
     ev = table(spark, sf_dir, "events").withColumn(
         "tts", F.date_trunc("second", F.col("ts"))
     )
@@ -106,7 +103,6 @@ def agg_minmax_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     (price, orderkey) struct so ties resolve deterministically —
     bare max_by under ties is engine-arbitrary; the oracle expresses
     the same policy as a window pick."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     return o.groupBy("o_orderstatus").agg(
         F.expr("max_by(o_orderkey, struct(o_totalprice, o_orderkey))").alias("top_order"),
@@ -132,7 +128,6 @@ def agg_bools(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boolean/distinct aggregates (A-family): bool_and/bool_or,
     SUM(DISTINCT), ordered string_agg (order-normalized on both
     sides so the value is deterministic)."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.bool_and(F.col("o_totalprice") > 1000).alias("all_over_1k"),
@@ -161,7 +156,6 @@ def agg_bools(spark: SparkSession, sf_dir: str) -> DataFrame:
 def win_analytics2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Analytics wave 2 (W1/W2): nth_value over a full frame,
     cume_dist, lag with offset+default."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     w_total = W.partitionBy("o_orderstatus").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")

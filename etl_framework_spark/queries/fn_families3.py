@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.rounding import hybrid_round_select
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 @query(
@@ -35,7 +34,6 @@ from etl_framework_spark.session import prep
 )
 def fn_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bitwise operators + regexp predicates (F3/F1)."""
-    prep(spark)
     p = table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
@@ -71,7 +69,6 @@ def fn_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_array2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array set operations (F4): union/except/overlap/position +
     sequence generation and reversal."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     t = docs.select("doc_id", F.split("text", " ").alias("l"))
     return t.select(
@@ -131,7 +128,6 @@ def fn_math2(spark: SparkSession, sf_dir: str) -> DataFrame:
     output, 3.59 → 1.72 s median at sf0.1 (libm stays in the JVM; only
     finished doubles cross the Arrow boundary, so DuckDB-vs-JVM libm
     parity is untouched)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     d, q, p = F.col("l_discount"), F.col("l_quantity"), F.col("l_extendedprice")
     return hybrid_round_select(
@@ -170,7 +166,6 @@ def fn_math2(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_date3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date family, wave 3 (F2): week/quarter/year truncation (both
     engines start weeks on Monday) and ISO day-of-week."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     d = F.col("o_orderdate")
     return o.select(

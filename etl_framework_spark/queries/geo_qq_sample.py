@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _R_KM = 200.0  # radius for the geo join
 _LAT_CELL = 2.0  # >= R in degrees of latitude (200/111.19 = 1.80)
@@ -89,7 +88,6 @@ def join_geo_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact distance filter. Cell width >= radius-in-degrees proves a
     within-R pair always lands in a neighbor cell, so pruned ==
     naive exactly. Ref: reference spatial-join operator tests."""
-    prep(spark)
     cu = table(spark, sf_dir, "customer")
     pts = cu.select(
         F.col("c_custkey").alias("id"),
@@ -184,7 +182,6 @@ def stats_qq_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution-shift audit that PSI (dq_drift_psi) summarizes,
     shown quantile by quantile. Ref: reference distribution-diff
     tests."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     ps = F.array(*[F.lit(i / 10.0) for i in range(1, 10)])
     is_even = F.substring("source", 4, 10).cast("int") % 2 == 0
@@ -237,7 +234,6 @@ def mix_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     heap, vs a full sort for rank-then-filter. Ref: reference
     weighted-sampler tests (cf. sample_hash_topk for the unweighted
     twin)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     u = (((F.col("doc_id") % 1000000007) * 2654435761) % 1000000007 + 1) / 1000000008.0
     keyed = docs.select(

@@ -33,7 +33,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.textops import shingles, tokens
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _M1 = "1996-01"
 _M2 = "1996-02"
@@ -82,7 +81,6 @@ def sales_gmv_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     check). Both months come from one conditional aggregation; the
     month filter prunes the scan. Ref: reference bridge-report tests
     (cf. sales_mom_growth, events_mix_drift)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     ym = F.date_format("l_shipdate", "yyyy-MM")
     m = (
@@ -156,7 +154,6 @@ def feat_target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     the anti-correlation that PROVES no self-leakage (a leaky
     encoder would have a positive gap). Ref: reference
     categorical-encoder tests (cf. feat_index, feat_hashing)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     r = od.select(
         F.col("o_orderpriority").alias("cat"),
@@ -225,7 +222,6 @@ def llm_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (re-aggregated from the same rollup, broadcast back); entropy
     sums run over bigram TYPES, not tokens. Ref: reference LM-stats
     tests (cf. llm_char_entropy, llm_kn_bigram)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     bic = (
         docs.select(tokens("text").alias("l"))

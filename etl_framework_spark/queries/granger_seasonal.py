@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _F95_1 = 4.0  # ~F(1, large) 95% critical value, honest at n~30: 4.17
 
@@ -95,7 +94,6 @@ def ts_granger_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     screen. Not causality — the cheap necessary condition you run
     before any causal claim. Ref: reference lead-lag tests (cf.
     ts_cross_corr, stats_diff_in_diff)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(F.date_trunc("day", F.col("ts")).alias("day")).agg(
         F.count(F.when(F.col("event_type") == "click", 1))
@@ -191,7 +189,6 @@ def train_quality_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast thresholds). Ref: reference curation-tradeoff tests
     (cf. llm_quality_filter, train_budget_select,
     train_truncation_loss)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     scored = docs.select(
@@ -258,7 +255,6 @@ def sales_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-year revenues first keeps partially-observed years from
     biasing months unequally. Ref: reference seasonal-index tests
     (cf. events_seasonality, ts_decompose)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     monthly = li.groupBy(
         F.month("l_shipdate").cast("bigint").alias("moy"),

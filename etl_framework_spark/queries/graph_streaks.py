@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.textops import shingles, tokens
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 TRI_TOP = 60  # graph restricted to the top-N tokens by frequency
@@ -58,7 +57,6 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     an edge list that is already deduped and bounded; at 100 TB the
     same orientation trick keeps the join sizes |E|·avg-degree, and
     the node filter becomes a degree threshold instead of top-N."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     t = docs.select(tokens("text").alias("l"))
     pr = (
@@ -144,7 +142,6 @@ def events_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     change flag via lag, a running sum to number islands, then two
     bounded aggregations. All windows hash-partition on user_id —
     state bounded by one user's history, never the table."""
-    prep(spark)
     ev = table(spark, sf_dir, "events").withColumn(
         "tts", F.date_trunc("second", F.col("ts"))
     )
@@ -196,7 +193,6 @@ def agg_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     serves all four interpolated percentiles (Spark's percentile
     aggregate == DuckDB's quantile_cont — identical linear
     interpolation on the same doubles)."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     return o.groupBy("o_orderstatus").agg(
         F.round(F.expr("percentile(o_totalprice, 0.25)"), 6).alias("q25"),
@@ -230,7 +226,6 @@ def llm_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     low entropy flags repeated/templated gibberish, high flags
     base64-ish noise — a standard cheap quality gate. One explode +
     two doc-keyed hash aggs; doc_id shuffles are uniform."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     ch = docs.select(
         "doc_id",
@@ -274,7 +269,6 @@ def llm_prefix_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents with identical openings (boilerplate headers, template
     spam) that full-document dedup misses. md5 keeps the oracle exact;
     the keep_doc column is the dedup survivor policy (min doc_id)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     pre = docs.select(
         "doc_id",
@@ -315,7 +309,6 @@ def events_ewma_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_round2.py proves the stream converges to exactly
     this). One ordered collect per user (state bounded by one user's
     history), strict-fold recurrence, tie-safe quantization."""
-    prep(spark)
     ev = table(spark, sf_dir, "events").withColumn(
         "tts", F.date_trunc("second", F.col("ts"))
     )

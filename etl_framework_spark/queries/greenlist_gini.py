@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 # --------------------------------------------------------------------------
@@ -79,7 +78,6 @@ def llm_greenlist_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical partition. One explode + doc rollup. Ref: reference
     watermark-audit tests (cf. llm_charclass_profile,
     llm_fingerprint)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tk")
@@ -168,7 +166,6 @@ def graph_degree_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over |nodes|; integer degrees → exact. Ref: reference
     degree-summary tests (cf. events_gini for the same math on
     revenue, graph_attack_robustness for the consequence)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     t = docs.select(F.split(F.col("text"), " ").alias("l")).filter(
         F.size("l") >= 2
@@ -260,8 +257,6 @@ def dq_string_hygiene(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional scan per column, unioned. Ref: reference
     string-rule tests (cf. dq_check for the rule engine,
     llm_dedup_casefold for what case-mixing costs dedup)."""
-    prep(spark)
-
     def audit(df, col, label):
         c = F.col(col)
         return df.agg(

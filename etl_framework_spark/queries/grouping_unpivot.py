@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import register_views, table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 @query(
@@ -29,7 +28,6 @@ from etl_framework_spark.session import prep
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (A5 beyond rollup/cube): marginals per
     flag, per status, and the grand total in one pass."""
-    prep(spark)
     register_views(spark, sf_dir)
     return spark.sql(
         """
@@ -62,7 +60,6 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot / melt (A10 inverse): wide per-flag sums → long
     (metric, value) rows via DataFrame unpivot."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     wide = li.groupBy("l_returnflag").agg(
         F.round(F.sum("l_quantity"), 2).alias("qty"),
@@ -93,7 +90,6 @@ def agg_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q18_bigorders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: large-volume orders via HAVING on an
     aggregated join."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     o = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
@@ -129,7 +125,6 @@ def q18_bigorders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q16_notin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: NOT IN subquery (null-aware anti join) +
     distinct-supplier counts per brand/type."""
-    prep(spark)
     register_views(spark, sf_dir)
     return spark.sql(
         """
@@ -162,7 +157,6 @@ def q16_notin(spark: SparkSession, sf_dir: str) -> DataFrame:
 def win_null_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null-ordering window (O1/W1): explicit DESC NULLS LAST over a
     null-producing outer join, with a key tiebreak for totality."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     o = table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 300000)
     j = c.join(o, c.c_custkey == o.o_custkey, "left").select("c_custkey", "o_totalprice")
@@ -190,7 +184,6 @@ def win_null_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional/null-handling family (P3/F widening): if, nullif,
     coalesce/ifnull, CASE, greatest, isnan."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
@@ -228,7 +221,6 @@ def agg_stats2(spark: SparkSession, sf_dir: str) -> DataFrame:
     POPULATION skewness/kurtosis while DuckDB reports sample-adjusted
     (Fisher G1/G2) — the oracle converts with the exact n-dependent
     factors (verified to reproduce Spark bit-for-bit pre-rounding)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.covar_samp("l_quantity", "l_extendedprice"), 4).alias("cov_s"),
@@ -265,7 +257,6 @@ def fn_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode()/decode() on the DuckDB side; bit_length is pinned as
     octet_length*8 in the oracle (DuckDB's VARCHAR bit_length counts
     an escaped rendering of the blob, not its bytes)."""
-    prep(spark)
     p = table(spark, sf_dir, "part")
     name_bin = F.col("p_name").cast("binary")
     return p.select(

@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _EULER = 0.5772156649015329
 _PI = 3.141592653589793
@@ -77,7 +76,6 @@ def stats_gumbel_block_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
     and risk limits are set against. Block-maxima EVT complements
     the peaks-over-threshold view of stats_hill_tail. One rollup +
     closed forms. Ref: reference EVT tests."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     blocks = ev.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("day")
@@ -158,7 +156,6 @@ def sales_fiscal_445(spark: SparkSession, sf_dir: str) -> DataFrame:
     /5 column removes the length artifact a calendar month keeps).
     Ref: reference fiscal-calendar tests (cf. sales_seasonal_index,
     orders_busday_lag)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     sd = F.col("l_shipdate").cast("date")
     fyear = F.when(F.month(sd) >= 2, F.year(sd)).otherwise(F.year(sd) - 1)
@@ -215,7 +212,6 @@ def events_capacity_headroom(spark: SparkSession, sf_dir: str) -> DataFrame:
     autoscaling policy inputs. One hourly rollup + one grouped
     aggregation. Ref: reference capacity-rollup tests (cf.
     events_hour_dow_profile, feat_velocity_windows)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     hourly = ev.groupBy(
         "event_type",

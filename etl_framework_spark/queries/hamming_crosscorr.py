@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.textops import tokens
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 TOPK = 10
 QUERY_MOD = 10  # matches llm_sim_topk's query-set convention
@@ -82,7 +81,6 @@ def vec_sim_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     side (vec_id % {QUERY_MOD} = 0) broadcasts its packed codes; the
     corpus streams once; a per-query window keeps the k best
     (ties broken by vid for a total order)."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     lo = F.expr(
         "aggregate(transform(slice(embedding, 1, 32),"
@@ -174,7 +172,6 @@ def ts_cross_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     every value bit-exact under any partitioning. Cost: one daily
     rollup shuffle, then all pair×lag work happens on |types|·|days|
     spine rows — thousands, regardless of raw event volume."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("day")
@@ -271,7 +268,6 @@ def llm_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-agg → per-source rollup; everything is integer counts, so
     the shuffle is the map-side-combined token count and the result is
     exact."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     tok = d.select(
         "source", F.explode(tokens("text")).alias("tok")

@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _CHI2_1_95 = 3.841458820694124
 _MU_DIR = 200.0  # Dirichlet smoothing parameter
@@ -93,7 +92,6 @@ def stats_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
     moment closed forms; the auxiliary pass inlines the fitted
     residual expression identically on both engines. Ref: reference
     regression-diagnostics tests (cf. stats_deming, agg_regression)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     x, y = F.col("l_discount"), F.col("l_quantity")
     m = li.agg(
@@ -177,7 +175,6 @@ def llm_query_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sparse tf table alone). Same tokenize/tf/df rollups as
     llm_bm25; top-10 by (score, doc_id). Ref: reference
     LM-retrieval tests (cf. llm_bm25, llm_kn_bigram)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("token")
@@ -280,7 +277,6 @@ def sales_price_index_fisher(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps brands present in BOTH months. One conditional rollup +
     three ratios. Ref: reference index-number tests (cf.
     sales_gmv_bridge — the additive decomposition twin)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     pt = table(spark, sf_dir, "part")
     ym = F.date_format("l_shipdate", "yyyy-MM")

@@ -31,7 +31,6 @@ from etl_framework_spark.cacheutil import persist_tracked
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.similarity import cosine, duck_cosine
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _BIG = 150000.0
 _CHI2_1_95 = 3.841458820694124
@@ -72,7 +71,6 @@ def stats_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads directly. The O(k²) Walsh set lives on the 25-row rollup.
     Ref: reference robust-location tests (cf. stats_trimmed_mean,
     stats_median_ci)."""
-    prep(spark)
     cu = table(spark, sf_dir, "customer")
     g = cu.groupBy(F.col("c_nationkey").alias("nk")).agg(
         F.avg("c_acctbal").alias("x")
@@ -128,7 +126,6 @@ def stats_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     RATE', and a rule pair can ace one while failing the other. Same
     one-pass confusion matrix; two cells of arithmetic. Ref:
     reference paired-test suite (cf. stats_cohens_kappa)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     a = F.col("o_totalprice") > _BIG
     b = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
@@ -205,7 +202,6 @@ def vec_rocchio_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
     ships, as two linear scans with broadcast query vectors (the
     centroid is 64 numbers). Ref: reference feedback-ranking tests
     (cf. llm_query_likelihood, vec_maxsim_lite)."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == _Q_VEC).select(
         F.col("embedding").alias("qe")

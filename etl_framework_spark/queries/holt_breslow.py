@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.operators.rounding import q6
 
 _HD_A = 0.3  # level smoothing
 _HD_B = 0.1  # trend smoothing
@@ -84,7 +84,6 @@ def ts_holt_damped(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine. Ref: reference forecasting tests (cf. ts_holt for
     the undamped form, ts_theta_method — damped Holt ≈ Theta on
     many series)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     monthly = li.groupBy(
         F.date_trunc("month", F.col("l_shipdate").cast("date")).alias("m")
@@ -112,15 +111,14 @@ def ts_holt_damped(spark: SparkSession, sf_dir: str) -> DataFrame:
         return F.array(new_l, new_b)
 
     st = arr.select("n", F.aggregate(elems, init, step).alias("s"))
-    q = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     lv = F.element_at(F.col("s"), 1)
     tr = F.element_at(F.col("s"), 2)
     return st.select(
         F.col("n").alias("n_months"),
-        q(lv).alias("level"),
-        q(tr).alias("trend"),
-        q(lv + _HD_PHI * tr).alias("forecast_h1"),
-        q(lv + (_HD_PHI + _HD_PHI * _HD_PHI) * tr).alias("forecast_h2"),
+        q6(lv).alias("level"),
+        q6(tr).alias("trend"),
+        q6(lv + _HD_PHI * tr).alias("forecast_h1"),
+        q6(lv + (_HD_PHI + _HD_PHI * _HD_PHI) * tr).alias("forecast_h2"),
     )
 
 
@@ -165,7 +163,6 @@ def sales_brand_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
     + conditional sums. Ref: reference momentum reports (cf.
     sales_mom_growth for the series, sales_share_shift for the
     share view)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     pt = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     mx = li.agg(F.max(F.col("l_shipdate").cast("date")).alias("asof"))
@@ -283,7 +280,6 @@ def stats_breslow_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     this test passes. Integer counts → deterministic algebra. Ref:
     reference stratified-inference tests (cf. stats_simpsons for
     what heterogeneity does to naive pooling)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     sup = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     base = li.join(sup, li.l_suppkey == sup.s_suppkey).select(

@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _M = 24  # season length (hours)
 _AL, _BE, _GA = 0.3, 0.05, 0.2  # alpha, beta, gamma
@@ -129,7 +128,6 @@ def ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (see module docstring for the bit-exactness argument). RMSE is
     accumulated inside the same fold, so quality reporting costs no
     second pass."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     hourly = e.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("hr")

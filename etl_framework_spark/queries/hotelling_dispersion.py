@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _TOP_DISP = 10
 _MIN_LINES = 10
@@ -84,7 +83,6 @@ def vec_hotelling_diag(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent of embeddings), mean z² per dim ≈ 1 and ~5% of dims
     flag — both readable directly from the output. Ref: reference
     multivariate-test suite."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings").filter(F.col("label").isin(0, 1))
     dims = emb.select(
         "label", F.posexplode("embedding").alias("pos", "xf")
@@ -159,7 +157,6 @@ def sales_price_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-part moments rollup + a deterministic top-k. Ref: reference
     pricing-audit tests (cf. sales_elasticity,
     dq_duplicate_payments)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 0)
     u = li.select(
         F.col("l_partkey").alias("pk"),
@@ -237,7 +234,6 @@ def dq_constant_column_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     null rates never catch. Each column is one conditional
     count-distinct over a shared scan. Ref: reference column-health
     tests (cf. dq_enum_drift, dq_drift_psi)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     cutoff = ev.agg(
         F.date_sub(F.max(F.col("ts")).cast("date"), _RECENT_D).alias("cd")

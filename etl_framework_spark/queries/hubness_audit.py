@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.similarity import anchor_knn
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _HUB_K = 10
 
@@ -68,7 +67,6 @@ def sales_volume_discount_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-row window. Ref: reference price-structure tests (cf.
     sales_elasticity for the demand response,
     sales_price_dispersion for within-part spread)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     b = li.select(
         F.floor((F.col("l_quantity") - 1) / 10).cast("bigint").alias("qty_band"),
@@ -161,7 +159,6 @@ def vec_hubness(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference kNN-pathology tests (cf. vec_knn_reciprocity — hubs
     are WHY reciprocity fails, vec_two_nn_dim for the
     dimensionality driver)."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     e = emb.select("vec_id", "embedding")
     # anchor matrix collected once (bounded), candidates stream through
@@ -253,7 +250,6 @@ def llm_lang_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-lang aggregation. Integer counts → exact. Ref: reference
     coverage-report tests (cf. llm_lang_id for re-derivation,
     supplier_hhi for the same concentration math on revenue)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     d = docs.groupBy("lang", "source").agg(
         F.count(F.lit(1)).cast("double").alias("docs"),

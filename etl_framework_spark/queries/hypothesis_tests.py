@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _Z95 = 1.959963984540054  # two-sided normal 95% critical value
 
@@ -75,7 +74,6 @@ def stats_ttest_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     0-based — weekend = {{1,7}} there, {{0,6}} here. The df is large
     (thousands), so the normal 95% critical value is the honest
     significance gate."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     wkend = F.dayofweek("ts").isin(1, 7)
     v_we = F.when(wkend, F.col("value"))
@@ -153,7 +151,6 @@ def stats_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     row ever leaves the executors twice). The between/within sums use
     the computational identity SSB = Σ s_g²/n_g − s²/N, SSW = Σx² −
     Σ s_g²/n_g."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     g = d.groupBy("source", "lang").agg(
         F.count("*").alias("n"),
@@ -265,7 +262,6 @@ def stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows. A/A expectation on this synthetic data: both pairs are
     independently generated, so V should sit near 0 — which the
     matching oracle certifies rather than assumes."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     d = table(spark, sf_dir, "documents")
     return _spark_cramers(
@@ -312,7 +308,6 @@ def stats_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
     two scans, one broadcast join, one partial-agg shuffle; nothing
     driver-side. The W statistic is exactly the one-way ANOVA F
     computed on the absolute deviations."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     med = e.groupBy("event_type").agg(F.median("value").alias("med"))
     z = e.join(F.broadcast(med), "event_type").select(
@@ -362,7 +357,6 @@ def set_except_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the distinct right side under the hood — both sides
     shuffle on the full row as key, so it co-partitions like any
     equi-join at scale)."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     f = o.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     op = o.filter(F.col("o_orderstatus") == "O").select("o_custkey")

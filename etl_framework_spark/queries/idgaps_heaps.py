@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 _CKPTS = 10
@@ -60,7 +59,6 @@ def dq_id_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected fingerprint, and a sudden change in it — not the
     absolute value — is the alarm). One window-lag pass over the
     sorted key; all integers."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     r = o.select(
         F.col("o_orderkey").alias("k"),
@@ -152,7 +150,6 @@ def llm_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     first_r ≤ r — no per-checkpoint distinct scans. Zipf
     (llm_zipf_fit), hapax (llm_hapax_ratio) and this key together
     form the corpus-statistics triad."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id", F.explode(F.split("text", " ")).alias("tok")

@@ -30,7 +30,6 @@ from pyspark.sql.window import Window as W
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 # High-watermark cutoff for the incremental-load scenario: orders
 # strictly before the watermark are the standing snapshot, the rest
@@ -65,7 +64,6 @@ def pipeline_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     date-partitioned lake); the merge is one left-anti join + union,
     so only the delta and touched snapshot keys shuffle — never the
     full history. Money in DECIMAL(18,2)."""
-    prep(spark)
     from etl_framework_spark.operators.cdc import merge_upsert
 
     orders = table(spark, sf_dir, "orders")
@@ -136,7 +134,6 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     one lag window in the per-type calendar partition (flat days
     dropped); the run count is a lag-change sum and the z closed form
     uses only exact integer counts."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("day")
@@ -225,7 +222,6 @@ def ts_autocorr_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily table with itself via an equi-join on (type, day+lag) —
     an index-lookup shape, never a range scan; sums are exact
     integer products, so the statistic is order-independent."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("day")

@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 _PATTERNS = [
@@ -71,7 +70,6 @@ def llm_injection_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     One row-local regex battery. Ref: reference content-policy
     tests (cf. llm_scrub for removal, llm_quality_filter for the
     benign-quality axis)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     docs = docs.transform(persist_tracked)
     outs = []
@@ -135,7 +133,6 @@ def sales_return_rate_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     |months| rollup + closed-form fit. Ref: reference exposure-trend
     tests (cf. q10_returns for the who, sales_gross_to_net for the
     waterfall this feeds)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     from pyspark.sql import Window as W
 
@@ -210,7 +207,6 @@ def fn_masking(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines (global-replace semantics pinned). Ref: reference
     masking-function tests (cf. dq_kanon for the formal guarantee,
     llm_scrub for free-text PII)."""
-    prep(spark)
     pt = table(spark, sf_dir, "part")
     masked = F.regexp_replace(
         F.regexp_replace(

@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _JB_CRIT = 5.991464547107979  # chi-square(2) 95% critical value
 
@@ -62,7 +61,6 @@ def stats_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     excluded (sample moments undefined at tiny n). The synthetic balances
     are uniform, so every nation SHOULD flag non-normal — a correct
     'yes' is the A/A here."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     n = table(spark, sf_dir, "nation")
     s = (
@@ -125,7 +123,6 @@ def ts_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw volume); the median/quartiles are exact interpolated order
     statistics (percentile ↔ quantile_cont parity per agg_median).
     Slopes divide exact integer deltas by exact day gaps."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("day")

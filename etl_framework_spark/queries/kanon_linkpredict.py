@@ -23,7 +23,6 @@ from pyspark.sql.window import Window as W
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _KANON_K = 5  # release threshold: groups smaller than k are risky
 # Hub cap: drop nodes with more neighbors before the wedge join (the
@@ -72,7 +71,6 @@ def dq_kanon(spark: SparkSession, sf_dir: str) -> DataFrame:
     table; the report is one row at any scale. This is the gate a
     100 TB dataset passes before leaving the privacy boundary, as an
     oracle-checked operator rather than a notebook ritual."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     n = table(spark, sf_dir, "nation")
     qi = (
@@ -166,7 +164,6 @@ def graph_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cap sits above its max degree here and the candidates are the
     handful of non-adjacent pairs). Scores are exact integer ratios;
     top-k under a total order."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     t = d.select(F.split("text", " ").alias("l")).filter(F.size("l") >= 2)
     prs = (

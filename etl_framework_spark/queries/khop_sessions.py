@@ -33,7 +33,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators import guarded
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 _K_HOPS = 4
@@ -113,7 +112,6 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-level semantics); each round shuffles only the frontier. The
     DuckDB oracle is the equivalent recursive CTE. Ref: reference
     iterative-traversal tests (cf. llm_dedup_cc, cte_recursive)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     # Node ids stay BIGINT end to end (supplier k → 2k, part k →
     # 2k+1): the oracle's 's:'/'p:' strings exist only to disambiguate
@@ -249,7 +247,6 @@ def events_sessionize_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     CASE order both engines). The batch twin of the streaming
     stateful sessionizer (stream_session). Ref: reference
     sessionizer tests."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     seq = ev.select(
         "event_type",
@@ -349,7 +346,6 @@ def feat_velocity_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch seconds (identical tie semantics both engines:
     equal-second peers all join the frame). Integer-exact. Ref:
     reference sliding-feature tests (cf. events_sliding_uniques)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     seq = ev.select(
         "user_id",

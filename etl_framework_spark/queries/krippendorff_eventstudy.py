@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.operators.rounding import q6
 
 _EVENT_DAY = "1995-06-30"
 _WIN_D = 28
@@ -68,7 +68,6 @@ def stats_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     π). Shipping kappa, AC1 AND alpha over identical counts is the
     agreement-methods bake-off the reference runs. One scan.
     Integer counts → exact. Ref: reference inter-rater tests."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     r = od.select(
         F.when(F.col("o_totalprice") > 150000, 1).otherwise(0).alias("a"),
@@ -141,7 +140,6 @@ def join_skew_diagnosis(spark: SparkSession, sf_dir: str) -> DataFrame:
     join it diagnoses. Integer counts → exact. Ref: reference
     skew-handling tests (cf. join_salted for the cure, diag_skew
     for the distribution view)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     od = table(spark, sf_dir, "orders")
     l = li.groupBy(F.col("l_orderkey").alias("k")).agg(
@@ -243,7 +241,6 @@ def ts_event_study(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer sums → exact. Ref: reference event-study tests (cf.
     stats_chow_test for the slope version, ts_binary_segmentation
     for data-driven break dates)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("day")).agg(
         F.sum("l_quantity").cast("double").alias("x")
@@ -276,7 +273,6 @@ def ts_event_study(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.when(F.col("win") == "post", m)).alias("m1"),
         F.max(F.when(F.col("win") == "post", v)).alias("v1"),
     )
-    q6 = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     q4 = lambda c: F.floor(c * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)
     eff = F.col("m1") - F.col("m0")
     z = eff / F.sqrt(F.col("v1") / F.col("n1") + F.col("v0") / F.col("n0"))

@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 # --------------------------------------------------------------------------
@@ -86,7 +85,6 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     1 − Σ(t³−t)/(N³−N). Integer input → bit-exact cross-engine.
     Ref: reference hypothesis-test suite (cf. stats_anova,
     stats_mannwhitney — this is its k-sample generalization)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     gv = li.groupBy(
         F.col("l_returnflag").alias("flag"), F.col("l_quantity").alias("val")
@@ -179,7 +177,6 @@ def stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     builds the pairs, the rank table stays tiny at any scale. Ref:
     reference paired-test coverage (cf. stats_mcnemar for the binary
     twin)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     a = li.filter(F.col("l_linenumber") == 1).select(
         "l_orderkey", F.col("l_quantity").alias("q1")
@@ -265,7 +262,6 @@ def stats_bartlett(spark: SparkSession, sf_dir: str) -> DataFrame:
     the log-space statistic matches the oracle exactly. One
     aggregation pass, k rows. Ref: reference variance-test coverage
     (cf. stats_levene, stats_anova)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     x = F.col("l_quantity")
     g = li.groupBy(F.col("l_returnflag").alias("flag")).agg(

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators import guarded
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _MAX_N = 14
 
@@ -69,7 +68,6 @@ def pipeline_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     extractor fails the contract. Constant-size output by definition;
     nothing is scanned (the one engine feature that costs zero I/O at
     any scale)."""
-    prep(spark)
     from etl_framework_spark.pipeline import Pipeline
     from etl_framework_spark.queries.skyline_winnow import curation_spec
 
@@ -144,7 +142,6 @@ def events_retention_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤{_MAX_N}-row regression via regr_slope sufficient statistics.
     Heavy-user synthetic data keeps rates near 1, so the half-life is
     long — the CONTRACT is the estimator, certified by the oracle."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     fs = e.groupBy("user_id").agg(
         F.min(F.date_trunc("day", "ts")).alias("first_day")

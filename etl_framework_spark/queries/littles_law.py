@@ -28,8 +28,8 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
+from etl_framework_spark.operators.rounding import q6
 
 _Q_THRESH = 25  # quantity threshold for the binary response
 _AJ_TOP = 10
@@ -94,7 +94,6 @@ def orders_little_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative windows over |days| rows. Ref: reference
     queueing-analytics tests (cf. orders_backlog_aging,
     events_concurrency)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     life = (
@@ -140,15 +139,14 @@ def orders_little_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     s = sl.crossJoin(F.broadcast(sw))
-    q = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     lam = F.col("n_orders") / F.col("n_days")
     return s.select(
         F.col("n_orders").cast("bigint").alias("n_orders"),
         F.col("n_days").cast("bigint").alias("n_days"),
-        q(lam).alias("lambda_per_d"),
-        q(F.col("avg_flow_d")).alias("avg_flow_d"),
-        q(F.col("avg_wip")).alias("avg_wip"),
-        q(F.col("avg_wip") / (lam * F.col("avg_flow_d"))).alias("little_ratio"),
+        q6(lam).alias("lambda_per_d"),
+        q6(F.col("avg_flow_d")).alias("avg_flow_d"),
+        q6(F.col("avg_wip")).alias("avg_wip"),
+        q6(F.col("avg_wip") / (lam * F.col("avg_flow_d"))).alias("little_ratio"),
     )
 
 
@@ -190,7 +188,6 @@ def sales_assortment_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     never supplier × supplier; integer counts → exact Jaccard. Ref:
     reference assortment tests (cf. events_audience_overlap for the
     user-set analogue)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     # persist: the size rollup and both wedge-join sides consume this
     # frame — without a cache the lineitem scan + distinct shuffle run
@@ -277,7 +274,6 @@ def stats_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     four scalar sums; integer counts → bit-exact. Ref: reference
     repeated-measures tests (cf. stats_mcnemar for k=2,
     stats_kruskal_wallis for the continuous response)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").filter(F.col("l_linenumber") <= 3)
     flag = lambda pos: F.max(
         F.when(

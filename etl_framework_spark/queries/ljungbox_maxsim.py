@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _LB_LAGS = 7
 _CHI2_7_95 = 14.067140449340169
@@ -87,7 +86,6 @@ def stats_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from one window pass over the 30-row rollup; the first
     three ACFs ride along for inspection. Ref: reference whiteness
     tests (cf. ts_autocorr_k, stats_runs_test)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
     )
@@ -167,7 +165,6 @@ def dq_order_lineitem_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconciliation exists to detect silently violated invariants.
     One line-level rollup + one header join. Ref: reference
     reconciliation tests (cf. dq_fk_orphans, dq_check)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     od = table(spark, sf_dir, "orders")
     lines = li.groupBy(F.col("l_orderkey").alias("k")).agg(
@@ -257,7 +254,6 @@ def vec_maxsim_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-squared join); the only shuffle is the per-(doc, query-
     part) max and the final top-5. The multi-vector upgrade of
     llm_sim_topk. Ref: reference late-interaction tests."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == _Q_VEC).select(
         F.col("embedding").alias("qe")

@@ -23,7 +23,7 @@ from etl_framework_spark.operators.dedup import (
     attach_minhash,
     attach_simhash,
     duck_minhash,
-    duck_simhash,
+    duck_simhash_bits,
 )
 from etl_framework_spark.operators.textops import (
     BPE_PATTERN,
@@ -35,7 +35,6 @@ from etl_framework_spark.operators.textops import (
     tokens,
 )
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 # Band math for this corpus (median pairwise Jaccard ≈ 0.66 — dense!):
 # 2 bands of 8 rows → P(same bucket) = 1-(1-s^8)^2 ≈ 0.07 at s=0.66
@@ -66,7 +65,6 @@ def llm_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup (L1): one hash shuffle on the 256-bit digest; the
     keeper is min(doc_id) so the answer is deterministic. Correctly
     returns all-singleton groups when no duplicates exist."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     return (
         docs.select(F.sha2(normalize_text("text"), 256).alias("norm_hash"), "doc_id")
@@ -122,7 +120,6 @@ def llm_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     signatures stay identical across partitions and engines, so the
     DuckDB oracle reproduces clusters exactly. Exact pairwise-Jaccard
     verification on a bounded pair set lives in llm_dedup_jaccard."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     toksets = docs.select("doc_id", F.array_distinct(tokens("text")).alias("ts"))
     sigs = attach_minhash(toksets, "ts", MINHASH_K).drop("ts")
@@ -162,7 +159,6 @@ def llm_dedup_minhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     is rows-only; tests/test_round2.py asserts keep-decision agreement
     with the oracle-checked md5 variant. At 100 TB this is the
     variant you run; the md5 form exists to PROVE the pipeline."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     toksets = docs.select("doc_id", F.array_distinct(tokens("text")).alias("ts"))
 
@@ -225,7 +221,6 @@ def llm_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact token-set Jaccard over metadata-blocked pairs (L2 verify
     stage): blocking on (lang, source) bounds the pair count the same
     way LSH bands do, with exact SQL-oracle semantics."""
-    prep(spark)
     from etl_framework_spark.operators.dedup import blocked_jaccard_pairs
 
     docs = table(spark, sf_dir, "documents")
@@ -248,14 +243,13 @@ def llm_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "llm_simhash",
     oracle=f"""
-    SELECT doc_id, {duck_simhash(_DUCK_TOKSET)} AS simhash
+    SELECT doc_id, {duck_simhash_bits(_DUCK_TOKSET, 16)} AS simhash
     FROM documents
     """,
 )
 def llm_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc 16-bit SimHash signature (L2): majority vote of token-
     hash bits; entirely codegen'd column math, no shuffle."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     return attach_simhash(
         docs.select("doc_id", F.array_distinct(tokens("text")).alias("__ts")),
@@ -266,7 +260,7 @@ def llm_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "llm_dedup_simhash",
     oracle=f"""
-    WITH sh AS (SELECT doc_id, lang, {duck_simhash(_DUCK_TOKSET)} AS simhash
+    WITH sh AS (SELECT doc_id, lang, {duck_simhash_bits(_DUCK_TOKSET, 16)} AS simhash
                 FROM documents)
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
            CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
@@ -278,7 +272,6 @@ def llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs (L2): Hamming ≤ 3 within language blocks.
     At 100 TB the block key becomes simhash bit-bands (pigeonhole) —
     same join shape, bounded buckets."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     sh = attach_simhash(
         docs.select("doc_id", "lang", F.array_distinct(tokens("text")).alias("__ts")),
@@ -320,7 +313,6 @@ def llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def llm_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document text statistics (L4): token counts, type-token
     ratio, BPE-ish token count, punctuation ratio."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     t = docs.select("doc_id", "text", "n_chars", tokens("text").alias("l"))
     n_tok = F.size("l")
@@ -369,7 +361,6 @@ def llm_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def llm_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality gates (L5): char/token-count bounds, language allowlist,
     stopword-ratio ceiling — all composable P2 predicates."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     t = docs.select("doc_id", "lang", "n_chars", tokens("text").alias("l"))
     n_tok = F.size("l")
@@ -423,7 +414,6 @@ def _duck_lang_score(lang: str) -> str:
 def llm_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic language ID (L4): stopword-hit ratios per language,
     argmax with a fixed tie order (en > es > de > fr > und)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     t = docs.select("doc_id", "lang", tokens("text").alias("l"))
     s = lang_scores(F.col("l"))
@@ -465,7 +455,6 @@ def llm_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 def llm_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 3-gram shingle fingerprint (L4): min over shingle
     hashes — a winnowing-style content signature."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     t = docs.select("doc_id", tokens("text").alias("l"))
     sh = shingles("l", 3)
@@ -493,7 +482,6 @@ def mm_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary payload + typed metadata (L6): opaque bytes with exact
     length/digest semantics (sha256 over the same UTF-8 bytes on both
     engines)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     b = multimodal.attach_binary(docs)
     return b.select(
@@ -509,7 +497,6 @@ def mm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched media decode plumbing (L6 ⛔): mapInPandas over
     binary payloads; the codec itself is stubbed (none installed) but
     schema/batching/partitioning are the real 100 TB shape."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     return multimodal.decode_media(multimodal.attach_binary(docs))
 
@@ -534,7 +521,6 @@ def mm_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame). The frame geometry (index, byte count) is pure arithmetic
     on the payload length, so the oracle reproduces it exactly from
     octet_length; the per-frame digest is unit-tested instead."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     frames = multimodal.sample_frames(multimodal.attach_binary(docs))
     return frames.select("doc_id", "frame_idx", "frame_bytes")
@@ -570,7 +556,6 @@ def llm_dedup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     min reachable id), which is affordable because near-dup components
     have tiny diameter even when they are a large fraction of the
     corpus."""
-    prep(spark)
     from etl_framework_spark.operators.graph import connected_components
 
     docs = table(spark, sf_dir, "documents")
@@ -658,7 +643,6 @@ def mm_byte_histogram_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     would re-open that door, and the construction is recorded in
     SCALE.md. Ref: reference multimodal near-dup tests
     (cf. mm_dedup_exact — the exact-digest cousin)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     hx = F.hex(F.encode(F.col("text"), "utf-8"))
     feats = docs.select(

@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.textops import tokens
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 
@@ -51,7 +50,6 @@ def llm_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     LM — the cheapest perplexity-style quality score (low = off-
     distribution document). The unigram model is |vocab| rows →
     broadcast; per-doc scoring is one partial-aggregating groupBy."""
-    prep(spark)
     toks = _toks(spark, sf_dir)
     vocab = toks.groupBy("tok").agg(F.count("*").alias("c"))
     model = vocab.crossJoin(
@@ -88,7 +86,6 @@ def llm_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic or templated text. The regression runs over |vocab|
     rows, so the rank window (a global sort of the vocab, NOT the
     corpus) is negligible at any corpus scale."""
-    prep(spark)
     toks = _toks(spark, sf_dir)
     f = toks.groupBy("tok").agg(F.count("*").alias("c"))
     r = f.select(
@@ -133,7 +130,6 @@ def llm_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     mixture. Both distributions are |vocab|-sized aggregates of the
     same token scan; the (source × tok) agg shuffles once and every
     join after it is broadcast-sized."""
-    prep(spark)
     toks = _toks(spark, sf_dir)
     q = (
         toks.groupBy("tok")
@@ -189,7 +185,6 @@ def llm_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     one token scan, broadcast back onto the per-doc bigram stream."""
     from etl_framework_spark.operators.textops import shingles
 
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     t = docs.select("doc_id", tokens("text").alias("l"))
     pairs = (
@@ -280,7 +275,6 @@ def llm_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_framework_spark.operators.graph import pagerank
     from etl_framework_spark.operators.textops import shingles
 
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     t = docs.select(tokens("text").alias("l"))
     bg = t.select(F.explode(shingles("l", 2)).alias("bg"))

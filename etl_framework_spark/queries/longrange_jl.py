@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 _WINDOWS = (8, 16, 32)
@@ -111,7 +110,6 @@ def ts_hurst(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ≤|blocks| average of log₂(R/S) is float (rounded at 6). The
     whole computation runs on the |types|·|hours| spine — independent
     of raw event volume."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     hourly = e.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("hr")
@@ -250,7 +248,6 @@ def vec_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     At scale this is the standard cheap pre-quantization step: 16
     doubles per vector, computed in one JVM-side pass, no shuffle at
     all until someone aggregates."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     proj_expr = (
         f"transform(sequence(0, {_PROJ_K - 1}), j -> "
@@ -341,7 +338,6 @@ def events_user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     power-of-two mixes (e.g. a perfect 50/50 user) land exactly on
     bucket boundaries on BOTH engines because log₂ of powers of two
     is exact IEEE."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     per = e.groupBy("user_id", "event_type").agg(
         F.count("*").cast("double").alias("c")

@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.textops import tokens
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 _R = 8  # rows per band (must match llm_dedup_minhash)
@@ -83,7 +82,6 @@ def llm_lsh_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingling is broken). Signatures are the SAME md5-sliced columns
     llm_dedup_minhash clusters with; exact Jaccard rides the blocked
     pair set; the report is ≤10 rows of exact integer counts."""
-    prep(spark)
     from etl_framework_spark.operators.dedup import attach_minhash
 
     docs = table(spark, sf_dir, "documents")

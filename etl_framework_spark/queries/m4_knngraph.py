@@ -34,8 +34,8 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.similarity import cosine, duck_cosine
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
+from etl_framework_spark.operators.rounding import q6
 
 _KNN_K = 5
 _KNN_MOD = 10  # sample: vec_id % 10 == 0
@@ -83,7 +83,6 @@ def ts_m4_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the values at the first/last hours and the EARLIEST hour
     achieving each extreme (deterministic tie-break). Ref: reference
     downsampler tests (cf. ts_paa_sax)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     hourly = ev.groupBy(
         F.date_trunc("day", F.col("ts")).alias("day"),
@@ -168,7 +167,6 @@ def vec_knn_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute force runs on the SAMPLE via a bounded broadcast join; at
     corpus scale the same probe runs over llm_sim_ann's buckets.
     Ref: reference ANN-diagnostics tests."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") % _KNN_MOD == 0
     )
@@ -271,7 +269,6 @@ def events_token_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     full bucket minus its own token; refill expressions are inlined
     identically on both engines). Ref: reference rate-limiter tests
     (cf. events_alarm_hysteresis for the alerting twin)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     seq = ev.select(
         "event_type",
@@ -306,11 +303,10 @@ def events_token_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("drop"),
         ),
     )
-    q = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return arrs.select(
         "event_type",
         "n_events",
         state["drop"].cast("bigint").alias("n_dropped"),
         F.round(state["drop"] / F.col("n_events"), 6).alias("drop_rate"),
-        q(state["tok"]).alias("final_tokens"),
+        q6(state["tok"]).alias("final_tokens"),
     )

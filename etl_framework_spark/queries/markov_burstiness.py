@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 _ITERS = 3
@@ -88,7 +87,6 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mix; divergence flags higher-order structure. After the
     transition rollup everything runs on a |types|² relation, so the
     iteration cost is independent of event volume."""
-    prep(spark)
     ev = table(spark, sf_dir, "events").withColumn(
         "tts", F.date_trunc("second", F.col("ts"))
     )
@@ -197,7 +195,6 @@ def llm_word_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     Everything reduces to Σc and Σc² over the (doc, word) rollup —
     integer sufficient statistics, so the ranking ratio is bit-exact
     and the tie-break (word asc) makes it a total order."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     dc = (
         d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))

@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.skew import salted_join
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 # --------------------------------------------------------------------------
@@ -43,7 +42,6 @@ def win_moving_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions, no extra shuffle beyond the window hash on user_id.
     The even-count midpoint average matches DuckDB's quantile_cont
     interpolation exactly."""
-    prep(spark)
     ev = table(spark, sf_dir, "events").withColumn(
         "tts", F.date_trunc("second", F.col("ts"))
     )
@@ -96,7 +94,6 @@ def win_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     first element; Spark folds the tail from element_at(arr, 1) — the
     identical association). The streaming twin keeps s in
     applyInPandasWithState; this is the batch/backfill form."""
-    prep(spark)
     ev = table(spark, sf_dir, "events").withColumn(
         "tts", F.date_trunc("second", F.col("ts"))
     )
@@ -150,7 +147,6 @@ def events_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     total (window hash on user_id, agg hash on the pair) — both keys
     are high-cardinality or tiny-domain, never skewed. The classic
     session-flow / next-action model input."""
-    prep(spark)
     ev = table(spark, sf_dir, "events").withColumn(
         "tts", F.date_trunc("second", F.col("ts"))
     )
@@ -216,7 +212,6 @@ def fn_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     either predicate — the standard lakehouse multi-dimension layout
     (the same `cluster_by` sink spec in pipeline.py accepts zval).
     Pure bit arithmetic, whole-stage codegen, zero shuffle."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     epoch_day = (F.unix_timestamp("o_orderdate") / F.lit(86400)).cast("long")
     xy = o.select(
@@ -253,7 +248,6 @@ def ivm_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials. At 100 TB this replaces a full recompute with a job over
     |state| + |delta| rows; the oracle IS the full recompute, proving
     merge == recompute. Rounding happens only at the final edge."""
-    prep(spark)
     ev = table(spark, sf_dir, "events").withColumn(
         "tts", F.date_trunc("second", F.col("ts"))
     )
@@ -297,7 +291,6 @@ def llm_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     handles PII classes (emails, phones) by swapping patterns. Spark
     regexp_replace is global by default; DuckDB needs the 'g' flag
     (SURVEY.md §5.3 rule 5)."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     scrubbed = F.regexp_replace(
         F.regexp_replace(F.col("text"), "[0-9]+", "<num>"),
@@ -337,7 +330,6 @@ def stats_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     The global sort here is exactly what Spark's RangePartitioner
     samples to avoid at scale — this op IS the exact-answer baseline
     for that sampling."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     w = W.orderBy("o_totalprice", "o_orderkey")
     b = o.select("o_totalprice", F.ntile(8).over(w).alias("bucket"))
@@ -364,7 +356,6 @@ def join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join key becomes (key, salt) — a hot supplier key spreads over
     16 reducers instead of one straggler. The oracle is the PLAIN
     join: salting must be invisible in the result."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_suppkey"
     )

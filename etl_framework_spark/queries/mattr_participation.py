@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _W = 25  # MATTR window (tokens)
 _HT = 10  # head/tail span (tokens)
@@ -70,7 +69,6 @@ def llm_mattr(spark: SparkSession, sf_dir: str) -> DataFrame:
     array_distinct + slice) — zero shuffle beyond the final top-k;
     integer counts → bit-exact. Ref: reference lexical-diversity
     tests (cf. llm_hapax_ratio, llm_repetition)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id",
@@ -160,7 +158,6 @@ def llm_position_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     explodes + vocabulary-sized full join; integer counts →
     bit-exact. Ref: reference template-detection tests (cf.
     llm_distinctive_ngrams for the source-level analogue)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     t = docs.select(
         F.split(F.col("text"), " ").alias("toks"),
@@ -256,7 +253,6 @@ def vec_participation_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines divide identical doubles. Ref: reference
     embedding-diagnostics tests (cf. vec_pca_variance_explained for
     the eigen view — PR needs no iteration)."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     e = emb.select(
         F.posexplode(F.col("embedding")).alias("dim", "raw")

@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _CAP = 0.15  # max share of the selected mix any source may hold
 
@@ -97,7 +96,6 @@ def train_mix_cap_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     every curated mix applies before sampling. Integer token sums →
     exact. Ref: reference mix-design tests (cf. train_budget_select
     for the quality-knapsack, mix_weights for free-form weights)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     src = docs.groupBy("source").agg(
         F.sum(F.size(F.split(F.col("text"), " "))).cast("double").alias("toks")
@@ -193,7 +191,6 @@ def dq_numeric_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional-count scan. Ref: reference numeric-rule tests (cf.
     dq_check for the generic rule engine, stats_benford for the
     fraud-flavored cousin)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     c = lambda p: F.sum(F.when(p, 1).otherwise(0)).cast("bigint")
     price_cents = F.col("l_extendedprice") * 100
@@ -266,7 +263,6 @@ def llm_blocking_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     single pair. Integer counts → exact. Ref: reference dedup-cost
     tests (cf. llm_lsh_calibration for the probabilistic analogue,
     llm_rouge_l for a consumer of prefix2 blocking)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id",

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 @query(
@@ -37,7 +36,6 @@ def agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the native mode() aggregate, whose tie choice is engine-dependent
     — the composition is portable and plans as two partial-agg
     shuffles plus a WindowGroupLimit."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     c = li.groupBy("l_returnflag", "l_quantity").agg(F.count("*").alias("n"))
     w = W.partitionBy("l_returnflag").orderBy(F.col("n").desc(), "l_quantity")
@@ -67,7 +65,6 @@ def fn_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     it apart with parse_url (HOST / PATH / QUERY-with-key). The oracle
     reconstructs the ground truth directly from the source columns, so
     any parse_url deviation fails the hash."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     url = F.concat(
         F.lit("https://"),
@@ -101,7 +98,6 @@ def cal_densify(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per day of a 4-day horizon via sequence() — the building block
     for as-of backfills and daily snapshots. Generation is per-row
     (no join against a calendar table, no shuffle)."""
-    prep(spark)
     o = table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 97 == 0)
     return o.select(
         "o_orderkey",
@@ -134,7 +130,6 @@ def fn_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
     float drift), cast the widened sum back to the declared scale.
     Half-way rounding never diverges between engines here because no
     binary double lands exactly on a .xx5 boundary."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     price = F.col("l_extendedprice").cast("decimal(18,2)")
     qty = F.col("l_quantity").cast("decimal(12,2)")
@@ -163,7 +158,6 @@ def fn_try(spark: SparkSession, sf_dir: str) -> DataFrame:
     of unparseable strings yield NULL instead of failing the job — the
     behavior a 100 TB pipeline needs (one dirty row must not kill a
     stage). Oracle expresses the same semantics with CASE/TRY_CAST."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 101 == 0)
     return li.select(
         "l_orderkey",
@@ -183,7 +177,6 @@ def agg_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate equals the flat estimate and lands within 5% of exact
     (unit-tested); rows-only here since sketch internals are
     engine-specific."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     per_group = o.groupBy("o_orderpriority").agg(
         F.hll_sketch_agg("o_custkey").alias("sk"),

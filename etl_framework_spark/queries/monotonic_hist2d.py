@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _VR_QS = [2, 4, 8]
 
@@ -67,7 +66,6 @@ def dq_id_time_monotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     time'. One lag window over the id-ordered scan. Ref: reference
     ordering-contract tests (cf. dq_id_gaps for the density axis,
     dq_tz_shift_detect for systematic offsets)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     t = F.unix_timestamp(F.date_trunc("second", F.col("ts"))).cast("bigint")
     s = ev.select("event_id", t.alias("t"))
@@ -128,7 +126,6 @@ def agg_histogram_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact. Ref: reference binned-profile tests (cf. stats_equidepth
     for the 1-D adaptive cousin, feat_mi_matrix for the one-number
     summary of the same dependence)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     b = li.select(
         F.floor((F.col("l_quantity") - 1) / 10).cast("bigint").alias("qb"),
@@ -198,7 +195,6 @@ def ts_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     One |days| rollup + three lag windows; quantized ratios. Ref:
     reference random-walk diagnostics (cf. ts_hurst — VR(q) ≈
     q^{2H−2} links the two)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     daily = li.groupBy(
         F.datediff(

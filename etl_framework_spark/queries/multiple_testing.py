@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _ALPHA = 0.10  # BH false-discovery-rate budget
 _TRIM = 0.1  # two-sided trim fraction
@@ -91,7 +90,6 @@ def stats_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
     single fact-join aggregation runs on the brand rollup (two
     global windows over ~25 rows). Ref: reference stats suite's
     multiple-comparison tests."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     pt = table(spark, sf_dir, "part")
     j = (
@@ -184,7 +182,6 @@ def stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicitly for the tau-b denominator (doubles make them rare but
     the formula stays honest). Ref: reference rank-statistics tests
     (cf. stats_spearman for the rho twin)."""
-    prep(spark)
     cu = table(spark, sf_dir, "customer")
     od = table(spark, sf_dir, "orders")
     cb = cu.groupBy(F.col("c_nationkey").alias("nk")).agg(
@@ -281,7 +278,6 @@ def stats_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact bounds with approx_percentile and keep the clamp+avg
     shape (see agg_quantile_approx). Ref: reference robust-agg
     tests."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     wr = W.partitionBy("l_returnflag").orderBy(
         "l_extendedprice", "l_orderkey", "l_linenumber"

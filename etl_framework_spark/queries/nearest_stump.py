@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _BIG_ORDER = 150000.0  # rater A threshold for kappa
 
@@ -69,7 +68,6 @@ def join_nearest_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exactly the oracle's comparator). Two window passes over
     (n+m) rows per nation — no cross join. Ref: reference
     nearest-match join tests (cf. join_asof)."""
-    prep(spark)
     cu = table(spark, sf_dir, "customer")
     su = table(spark, sf_dir, "supplier")
     # one stream: suppliers sort BEFORE an equal-balance customer
@@ -180,7 +178,6 @@ def feat_best_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     on both engines. The CART inner loop as a query. Ref: reference
     split-scorer tests (cf. feat_infogain for the categorical
     twin)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     ps = F.array(*[F.lit(i / 10.0) for i in range(1, 10)])
     qs = od.agg(F.percentile("o_totalprice", ps).alias("q"))
@@ -276,7 +273,6 @@ def stats_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar closed form repeated identically on both engines (no
     intermediate aliasing, so the op order matches). Ref: reference
     agreement-statistics tests (cf. stats_cramers_v)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     a = F.col("o_totalprice") > _BIG_ORDER
     b = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")

@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _EPOCH_MON = "1970-01-05"
 
@@ -68,7 +67,6 @@ def stats_negbin_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     formally). Underdispersed types get NULL parameters rather than
     a nonsensical negative r. One rollup, closed forms, no
     likelihood iteration. Ref: reference count-model tests."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("day")
@@ -146,7 +144,6 @@ def orders_promise_attainment(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic is the epoch-Monday closed form (orders_busday_lag);
     the promise is one grouped quantile broadcast back. Ref:
     reference SLA-calibration tests (cf. events_error_budget)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     od = table(spark, sf_dir, "orders")
     epoch_mon = F.lit(_EPOCH_MON).cast("date")
@@ -235,7 +232,6 @@ def train_ess_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     three report rows are projections of it. Ref: reference
     weighting-diagnostic tests (cf. mix_weights,
     mix_weighted_sample)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     w = docs.select(

@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _SAMPLE_N = 1000.0  # total sample budget for the allocation
 
@@ -74,7 +73,6 @@ def mix_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     forms after. Ref: reference sampling-design tests (cf.
     train_stratified for executing a design, train_ess_weights for
     diagnosing one)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     cu = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     base = od.join(cu, od.o_custkey == cu.c_custkey).select(
@@ -153,7 +151,6 @@ def ts_dow_heteroscedasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup → 7-group moments, integer sums → exact. Ref: reference
     variance-profile tests (cf. events_hour_dow_profile for the
     mean view, stats_levene for the formal test)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("day")).agg(
         F.sum("l_quantity").cast("double").alias("x")
@@ -242,7 +239,6 @@ def events_user_discovery_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows over |days|; closed-form fit. Ref: reference
     audience-growth tests (cf. llm_heaps_law — the identical law on
     vocabulary, events_new_vs_returning for the daily split)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     day = F.date_trunc("day", F.date_trunc("second", F.col("ts"))).cast("date")
     firsts = ev.groupBy("user_id").agg(F.min(day).alias("d0"))

@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _MIN_SUP = 5
 _TOPG = 5
@@ -79,7 +78,6 @@ def llm_distinctive_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     total order with no rounding needed before the window. Min
     support {_MIN_SUP} keeps the ranked set small; everything is two
     partial-agg shuffles over one bigram explode."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     t = d.select("source", F.split("text", " ").alias("l")).filter(
         F.size("l") >= 2
@@ -172,7 +170,6 @@ def events_error_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts integer, running sums over the |days| rollup via one
     ordered window; the output is |days| rows at any scale and every
     value is integer-ratio arithmetic (bit-exact)."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     daily = e.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
         F.count("*").cast("bigint").alias("n_events"),
@@ -245,7 +242,6 @@ def stats_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimator's relative error next to it — an honest calibration,
     not an article of faith. Three distinct-count aggregates and one
     broadcast-sized semi-join; constant output."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     d0 = e.agg(F.min(F.date_trunc("day", "ts")).alias("d0"))
     tagged = e.crossJoin(F.broadcast(d0)).select(

@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _NTILES = 10
 _SHARDS = 8
@@ -71,7 +70,6 @@ def win_ntile_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
     price alone to exercise its peer-group semantics. One per-group
     sort; the decile profile is |status|x10 rows. Ref: reference
     ranking-window tests (cf. win_rank)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     w_nt = W.partitionBy("o_orderstatus").orderBy("o_totalprice", "o_orderkey")
     w_cd = W.partitionBy("o_orderstatus").orderBy("o_totalprice")
@@ -130,7 +128,6 @@ def agg_median_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     (agg_quantile_approx) or a full sort (agg_median); the counterpart
     contract for stats that DO merge exactly is agg_partial_merge.
     Ref: reference sharded-aggregate caveat tests."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     shard = li.groupBy(
         F.col("l_returnflag").alias("f"),
@@ -189,7 +186,6 @@ def train_truncation_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     token-count rollup crossed with the broadcast window list;
     integer arithmetic end-to-end. Ref: reference sequence-budget
     tests."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     toks = docs.select(
         F.size(F.split(F.col("text"), " ")).cast("bigint").alias("n_tok")

@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 # --------------------------------------------------------------------------
@@ -79,7 +78,6 @@ def llm_bigram_oov_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollups + one anti-join. Integer counts → exact. Ref: reference
     held-out-eval tests (cf. llm_vocab_oov_curve for the unigram
     frequency axis, llm_eval_xent for the likelihood version)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     t = docs.filter(F.size(toks) >= 2).select(
@@ -181,7 +179,6 @@ def stats_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT from the integer value rollup. Ref: reference k-sample
     tests (cf. stats_kruskal_wallis, stats_brown_forsythe for the
     scale analogue)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     v = li.groupBy(F.col("l_quantity").alias("q")).agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
@@ -274,7 +271,6 @@ def ts_growth_persistence(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparisons → exact. Ref: reference momentum tests (cf.
     events_markov for the full chain, ts_variance_ratio for the
     magnitude version of the same question)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     monthly = li.groupBy(
         F.date_trunc("month", F.col("l_shipdate").cast("date")).alias("m")

@@ -27,10 +27,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from etl_framework_spark.catalog import table
+from etl_framework_spark.catalog import scratch_path, table
 from etl_framework_spark.operators import guarded
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 # --------------------------------------------------------------------------
@@ -55,8 +54,7 @@ def sink_roundtrip_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     format might sneak in). Completes the columnar-sink matrix
     (parquet/CSV/JSON/ORC). Ref: reference format-connector tests
     (cf. sink_roundtrip_parquet for the layout twin)."""
-    prep(spark)
-    out = f"/root/repo/.scratch/sink_orc_{os.path.basename(sf_dir.rstrip('/'))}"
+    out = scratch_path(f"sink_orc_{os.path.basename(sf_dir.rstrip('/'))}")
     li = table(spark, sf_dir, "lineitem").filter(F.col("l_discount") >= 0.05)
     li.write.mode("overwrite").partitionBy("l_linestatus").orc(out)
     back = spark.read.orc(out)
@@ -118,7 +116,6 @@ def stats_bowker(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell rollup; integer counts → exact. Ref: reference
     paired-categorical tests (cf. stats_mcnemar for 2×2,
     events_rfm_migration for the unordered view)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     seq = od.select(
         F.col("o_custkey").alias("cust"),
@@ -221,7 +218,6 @@ def vec_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan is linear, no pair join. Ref: reference prototype-
     classifier tests (cf. vec_silhouette_centroid for the geometry,
     llm_cluster_purity for the unsupervised twin)."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     e = emb.select(
         "vec_id",

@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _DUP_WINDOW_D = 7  # duplicate-payment lookback window
 _DUP_TOL = 0.10  # amounts within 10% count as suspicious
@@ -77,7 +76,6 @@ def join_or_decomposed(spark: SparkSession, sf_dir: str) -> DataFrame:
     branches are disjoint by construction and a plain unionAll is
     exact. The old plan's only Exchange (hash dedup of ~1.2M pairs at
     sf0.1) disappears; both branches stay broadcast joins."""
-    prep(spark)
     cu = table(spark, sf_dir, "customer").select(
         "c_custkey",
         F.col("c_nationkey").cast("int").alias("c_nationkey"),
@@ -161,7 +159,6 @@ def stats_deming(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure expression arithmetic on 1 row. Ref: reference
     errors-in-variables tests (cf. agg_regression,
     stats_kendall_tau)."""
-    prep(spark)
     cu = table(spark, sf_dir, "customer")
     od = table(spark, sf_dir, "orders")
     cb = cu.groupBy(F.col("c_nationkey").alias("nk")).agg(
@@ -234,7 +231,6 @@ def dq_duplicate_payments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio — block-then-refine, same shape as the dedup family. Ref:
     reference payments-audit tests (cf. llm_dedup_exact,
     llm_cross_source_dups)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     a = od.select(
         F.col("o_custkey").alias("cust"),

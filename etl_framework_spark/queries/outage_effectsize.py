@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.operators.rounding import q6
 
 _GAP_S = 300  # outage threshold (seconds)
 
@@ -66,7 +66,6 @@ def events_outage_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale, then merge candidate boundaries). Integer epoch seconds
     → exact. Ref: reference liveness tests (cf. dq_freshness for
     the tail-lateness axis, ts_interarrival for the distribution)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     t = F.unix_timestamp(F.date_trunc("second", F.col("ts"))).cast("bigint")
     s = ev.select(t.alias("t"))
@@ -141,7 +140,6 @@ def stats_effect_size_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     care. Same group moments as the omnibus test. Integer sums →
     exact. Ref: reference effect-size reporting (cf. stats_anova,
     stats_power_analysis for the design-time twin)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     x = F.col("l_quantity").cast("double")
     g = li.groupBy(F.col("l_returnflag").alias("flag")).agg(
@@ -210,7 +208,6 @@ def sales_concentration_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer) rollup then a per-year HHI; quantized shares. Ref:
     reference concentration tests (cf. supplier_hhi for the static
     number, agg_theil_index for the decomposable alternative)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     cy = od.groupBy(
         F.year(F.col("o_orderdate").cast("date")).cast("bigint").alias("yr"),
@@ -226,7 +223,6 @@ def sales_concentration_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     q9 = lambda c: F.floor(c * F.lit(1000000000.0) + F.lit(0.5)) / F.lit(
         1000000000.0
     )
-    q6 = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return y.select(
         "yr",
         "n_customers",

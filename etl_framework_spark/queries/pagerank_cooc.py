@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 _DAMP = 0.85
@@ -95,7 +94,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_pca_power). The symmetrized graph has no dangling nodes, so
     no teleport-mass correction is needed; rank mass stays ≈1 (tested
     in tests/test_extras34.py)."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     t = d.select(F.split("text", " ").alias("l")).filter(F.size("l") >= 2)
     prs = (
@@ -198,7 +196,6 @@ def llm_bigram_overlap_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc bigram-set sizes join back (small relation) to close the
     F1 = 2|A∩B|/(|A|+|B|) formula. All counts are integers — exact on
     any partitioning."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     t = d.select(
         "doc_id", "lang", "source", F.split("text", " ").alias("l")
@@ -288,8 +285,6 @@ def dq_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two fact-fact checks shuffle on the FK like the joins they
     protect) reduced to a single (total, orphans) row — constant
     output at any scale."""
-    prep(spark)
-
     def audit(fact: DataFrame, fk: str, dim: DataFrame, pk: str, label: str):
         probe = dim.select(F.col(pk).alias("__pk")).distinct()
         return (

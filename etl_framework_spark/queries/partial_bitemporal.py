@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.operators.rounding import q6
 
 _N_BUCKETS = 8  # simulated shards for the partial-merge contract
 _TAU_S = 3600.0  # EWMA decay time constant (1 hour)
@@ -77,7 +77,6 @@ def agg_partial_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     state component is exact in a double and the merge is bit-exact
     in any order (the unit test asserts merge == direct). Ref:
     reference shard-merge aggregation tests."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     p = li.groupBy(
         F.col("l_returnflag").alias("f"),
@@ -155,7 +154,6 @@ def cdc_bitemporal(spark: SparkSession, sf_dir: str) -> DataFrame:
     bitemporal models buy. One shared scan; each snapshot is a
     filter + per-key window rank, no interval self-join. Ref:
     reference bitemporal/CDC tests (cf. cdc_scd2, scd2_asof_lookup)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     versions = od.select(
         F.col("o_custkey").alias("cust"),
@@ -240,7 +238,6 @@ def ts_ewma_irregular(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines; first element doubles as the init state). Fold length =
     per-user event count; users fold in parallel. Ref: reference
     decay-smoother tests."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     seq = ev.select(
         "user_id",
@@ -273,7 +270,6 @@ def ts_ewma_irregular(spark: SparkSession, sf_dir: str) -> DataFrame:
             el["t"].cast("double").alias("tt"),
         ),
     )
-    q = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return arrs.select(
-        "user_id", "n_events", "span_s", q(state["l"]).alias("ewma_value")
+        "user_id", "n_events", "span_s", q6(state["l"]).alias("ewma_value")
     )

@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.textops import tokens
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _GAP_S = 1800
 _MIN_PAIR = 15
@@ -90,7 +89,6 @@ def events_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelizes perfectly and new patterns are one regex, not a new
     stateful operator. Ref: reference sequence-matcher tests (cf.
     events_top_paths, funnel)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     seq = ev.select(
         "user_id",
@@ -172,7 +170,6 @@ def stats_median_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics where rank bounds don't exist). Deterministic
     (value, event_id) tie-break. Ref: reference nonparametric-CI
     tests."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     wr = W.partitionBy("event_type").orderBy("value", "event_id")
     wp = W.partitionBy("event_type")
@@ -249,7 +246,6 @@ def llm_cooc_ppmi_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back; PPMI clamps at zero. Deterministic top-20. Ref:
     reference co-occurrence tests (cf. llm_pmi,
     llm_collocations_llr)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     t = docs.select(tokens("text").alias("l"))
     pairs = None

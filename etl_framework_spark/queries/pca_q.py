@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.rounding import q6
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 _DIM = 64
@@ -105,7 +104,6 @@ def _pca_core(spark: SparkSession, sf_dir: str):
     """Shared raw pipeline: returns (v2, ray, nrow, cov) DataFrames with
     UNQUANTIZED values — consumers quantize only at their own emit
     boundary (vec_pca_power, vec_pca_variance_explained)."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     ex = emb.select(
         "vec_id", F.posexplode("embedding").alias("dim", "val")

@@ -31,7 +31,6 @@ from etl_framework_spark.operators import guarded
 from etl_framework_spark.queries.pca_q import _PCA_CTE
 from etl_framework_spark.operators.rounding import q6
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 # Candidate vocabulary sizes for the OOV curve (powers of two).
 _VOCAB_GRID = [16, 32, 64, 128, 256, 512, 1024]
@@ -70,7 +69,6 @@ def vec_pca_variance_explained(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rayleigh value — quantization only at this key's emit boundary,
     matching the oracle exactly); the trace folds the 64 diagonal
     entries in dim order."""
-    prep(spark)
     from etl_framework_spark.queries.pca_q import _pca_core
 
     v2, ray, nrow, cov = _pca_core(spark, sf_dir)
@@ -135,7 +133,6 @@ def llm_vocab_oov_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     value (the same rank-once-read-many shape as the dedup threshold
     sweep — never a vocab × grid multiplication). All exact integer
     token counts."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     freq = (
         d.select(F.explode(F.split("text", " ")).alias("tok"))
@@ -242,7 +239,6 @@ def ts_paa_sax(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization folds segment-ordered; symbols are therefore
     engine-exact. Output is |types|×{_PAA_SEGMENTS} rows at any
     scale."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("day")

@@ -25,9 +25,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from etl_framework_spark.catalog import table
+from etl_framework_spark.catalog import scratch_path, table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _PS = (0.25, 0.5, 0.75, 0.9)
 
@@ -65,7 +64,6 @@ def agg_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the IDENTICAL explicit selection, making the definition itself
     part of the contract (builtin quantile_disc definitions differ
     across engines; an explicit window cannot)."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     r = e.select(
         "event_type",
@@ -123,9 +121,8 @@ def join_partition_pruned_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes star-schema date filtering free at 100 TB: the fact never
     needs the date list spelled out. Results equal the plain
     join-then-filter oracle on the unpartitioned original."""
-    prep(spark)
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    out = f"/root/repo/.scratch/part_events_{tag}"
+    out = scratch_path(f"part_events_{tag}")
     e = table(spark, sf_dir, "events")
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         (

@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _PI = 3.141592653589793
 _PERIODS_H = [12, 24, 84, 168, 360]  # candidate periods (hours)
@@ -80,7 +79,6 @@ def ts_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression order on both engines. The variance-ratio twin is
     ts_seasonal_strength; this one localizes WHICH period. Ref:
     reference spectral-probe tests."""
-    prep(spark)
     from pyspark.sql import Window as W
 
     ev = table(spark, sf_dir, "events")
@@ -169,7 +167,6 @@ def dq_candidate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the same scan lineage. o_orderkey must profile as the only
     single-column key. Ref: reference schema-profiler tests (cf.
     profile_lineitem, dq_kanon)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     parts = []
     for label, cols in _KEY_COMBOS:
@@ -240,7 +237,6 @@ def stats_cluster_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     every clustered A/B analysis needs. Costs one per-user rollup +
     one small join beyond the naive estimate. Ref: reference
     clustered-variance tests (cf. stats_cuped, events_ab_test)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     g = ev.groupBy("event_type", "user_id").agg(
         F.sum("value").alias("s_g"),

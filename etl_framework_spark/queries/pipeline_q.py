@@ -14,10 +14,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_framework_spark.catalog import table
+from etl_framework_spark.catalog import scratch_path, table
 from etl_framework_spark.pipeline import run_pipeline
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _Q1_ORACLE = """
     SELECT l_returnflag, l_linestatus,
@@ -36,7 +35,6 @@ def pipeline_spec_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference-equivalent entry point (E1): the flagship Q1 shape
     declared entirely as a config dict — sources + expression-string
     steps — compiled and run by the pipeline engine."""
-    prep(spark)
     spec = {
         "sources": {
             "lineitem": {"format": "parquet", "path": f"{sf_dir}/lineitem.parquet"}
@@ -83,8 +81,7 @@ def sink_roundtrip_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partitioned parquet sink round-trip (S5): write the filtered
     fact partitioned by l_returnflag, re-read, aggregate — must match
     the oracle computed on the ORIGINAL table exactly."""
-    prep(spark)
-    out = f"/root/repo/.scratch/sink_roundtrip_{os.path.basename(sf_dir.rstrip('/'))}"
+    out = scratch_path(f"sink_roundtrip_{os.path.basename(sf_dir.rstrip('/'))}")
     li = table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 25)
     li.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
     back = spark.read.parquet(out)
@@ -114,8 +111,7 @@ def sink_roundtrip_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     silent corruption), and aggregate per language including a text
     integrity digest count — must match the oracle on the ORIGINAL
     parquet exactly, proving quoting/escaping round-trips free text."""
-    prep(spark)
-    out = f"/root/repo/.scratch/sink_csv_{os.path.basename(sf_dir.rstrip('/'))}"
+    out = scratch_path(f"sink_csv_{os.path.basename(sf_dir.rstrip('/'))}")
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
@@ -139,8 +135,7 @@ def sink_roundtrip_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract as the CSV round-trip through the JSON writer/reader
     (explicit DDL schema on read; JSON escaping must round-trip free
     text exactly)."""
-    prep(spark)
-    out = f"/root/repo/.scratch/sink_json_{os.path.basename(sf_dir.rstrip('/'))}"
+    out = scratch_path(f"sink_json_{os.path.basename(sf_dir.rstrip('/'))}")
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.operators.rounding import q6
 
 
 # --------------------------------------------------------------------------
@@ -76,7 +76,6 @@ def feat_pit_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature store's as-of join exists to guarantee, here as a single
     window pass. Ref: reference feature-store tests (cf. join_asof,
     events_ewma_state)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     seq = ev.select(
         "event_id",
@@ -103,15 +102,14 @@ def feat_pit_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("f_prior_sum_q"),
         F.min("t").over(w).alias("first_t"),
     )
-    q = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return feat.filter(F.col("event_type") == "purchase").select(
         "event_id",
         "user_id",
-        q(F.col("value")).alias("label_value"),
+        q6(F.col("value")).alias("label_value"),
         F.coalesce(F.col("f_prior_events"), F.lit(0))
         .cast("bigint")
         .alias("f_prior_events"),
-        q(
+        q6(
             F.when(
                 F.col("f_prior_events") > 0,
                 F.col("f_prior_sum_q") / F.col("f_prior_events"),
@@ -170,7 +168,6 @@ def stats_partial_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     partialling is scalar arithmetic on the 1-row rollup. Ref:
     reference partialled-correlation tests (cf. stats_corr_matrix,
     stats_simpsons)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     x, y, z = F.col("l_quantity"), F.col("l_extendedprice"), F.col("l_discount")
     m = li.agg(
@@ -262,7 +259,6 @@ def stats_eb_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     the posterior mean). Prior fit = two passes over the |suppliers|
     rollup; shrinkage is expression work. Ref: reference shrinkage
     tests (cf. llm_quality_by_source)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     s = li.groupBy(F.col("l_suppkey").alias("sk")).agg(
         F.count(F.lit(1)).cast("double").alias("n"),

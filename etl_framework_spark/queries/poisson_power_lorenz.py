@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _Z_A = 1.959963984540054  # two-sided alpha = .05
 _Z_B = 0.8416212335729143  # power = .80
@@ -78,7 +77,6 @@ def stats_poisson_gof(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics are BIGINT (n·Σx² − (Σx)² exact), so the statistic is
     bit-exact under any partitioning; the spine keeps silent hours as
     real zeros."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     hourly = e.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("hr")
@@ -153,7 +151,6 @@ def stats_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-agg pass for (n, mean, var); the rest is scalar closed
     form. The integer ceiling is taken after 6-dp rounding so a
     last-ulp variance difference can't move the reported n by one."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     s = (
         e.groupBy("event_type")
@@ -213,7 +210,6 @@ def events_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id tie-break) so decile membership is a total order immune
     to float-ulp differences; after the per-user rollup everything
     runs on |users| rows, and the output is 10 rows at any scale."""
-    prep(spark)
     e = table(spark, sf_dir, "events")
     per_user = e.groupBy("user_id").agg(
         F.round(F.sum("value"), 6).alias("total")

@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 # --------------------------------------------------------------------------
@@ -72,7 +71,6 @@ def stats_positivity_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     binned rollup; integer counts → exact shares. Ref: reference
     causal-hygiene tests (cf. stats_ancova_lite — this is its
     precondition; dq_drift_psi uses the same binned machinery)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     b = li.select(
         F.floor(F.col("l_discount") * 100).cast("bigint").alias("score_bin"),
@@ -152,7 +150,6 @@ def ts_xmr_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     behind every ±σ band the engine draws. One lag window + two
     scalar limits. Ref: reference SPC tests (cf. ts_cusum for
     drift accumulation, ts_bollinger for the adaptive-band cousin)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("day")).agg(
         F.sum("l_quantity").cast("double").alias("x")
@@ -230,7 +227,6 @@ def llm_novelty_saturation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer counts → exact. Ref: reference saturation tests (cf.
     llm_novelty for the doc-level score, llm_heaps_law for the
     vocabulary version of the same question)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     t = docs.filter(F.size(toks) >= 3).select("doc_id", toks.alias("l"))

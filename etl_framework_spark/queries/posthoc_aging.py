@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.operators.rounding import q6
 
 
 # --------------------------------------------------------------------------
@@ -71,7 +71,6 @@ def stats_posthoc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic. Integer sums → exact. Ref: reference post-hoc tests
     (cf. stats_anova for the omnibus, stats_fdr_bh for the
     multiplicity correction)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     x = F.col("l_quantity").cast("double")
     g = li.groupBy(F.col("l_returnflag").alias("flag")).agg(
@@ -153,7 +152,6 @@ def orders_status_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional rollup + per-band shares; integer counts → exact.
     Ref: reference lifecycle-aging tests (cf. orders_backlog_aging
     for the money view, cdc_scd2 for state history)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     mx = od.agg(F.max(F.col("o_orderdate").cast("date")).alias("asof"))
     b = od.crossJoin(F.broadcast(mx)).select(
@@ -243,7 +241,6 @@ def llm_entropy_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     logs. Ref: reference information-ladder tests (cf.
     llm_entropy_rate for the bigram-only rate, llm_char_entropy for
     the character floor)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     t = docs.select("doc_id", toks.alias("l"), F.size(toks).alias("n"))
@@ -271,12 +268,11 @@ def llm_entropy_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     h2 = ent(grams(2)).select(F.col("h").alias("h2j"))
     h3 = ent(grams(3)).select(F.col("h").alias("h3j"))
     j = h1.crossJoin(F.broadcast(h2)).crossJoin(F.broadcast(h3))
-    q = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return j.select(
-        q(F.col("h1")).alias("h1"),
-        q(F.col("h2j") - F.col("h1")).alias("h2_given_1"),
-        q(F.col("h3j") - F.col("h2j")).alias("h3_given_2"),
-        q(1.0 - (F.col("h3j") - F.col("h2j")) / F.col("h1")).alias(
+        q6(F.col("h1")).alias("h1"),
+        q6(F.col("h2j") - F.col("h1")).alias("h2_given_1"),
+        q6(F.col("h3j") - F.col("h2j")).alias("h3_given_2"),
+        q6(1.0 - (F.col("h3j") - F.col("h2j")) / F.col("h1")).alias(
             "redundancy_at_2"
         ),
     )

@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _EPS = 1.0        # release epsilon
 _CAP_K = 3        # max orders counted per customer (sensitivity bound)
@@ -96,7 +95,6 @@ def dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     noisy ones because this key is a verification report, not the
     public artifact. Ref: Dwork et al., 'Calibrating Noise to
     Sensitivity in Private Data Analysis' (TCC'06)."""
-    prep(spark)
     cust = table(spark, sf_dir, "customer")
     g = cust.groupBy(F.col("c_mktsegment").alias("segment")).agg(
         F.count("*").alias("n_true")
@@ -156,7 +154,6 @@ def dp_contribution_bounded_hist(
     the natural key, never sorts globally. Ref: user-level DP
     contribution bounding (Dwork & Roth, 'Algorithmic Foundations of
     DP', §.3; Wilson et al., 'Differentially Private SQL' VLDB'20)."""
-    prep(spark)
     orders = table(spark, sf_dir, "orders")
     rk = F.row_number().over(
         W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
@@ -242,7 +239,6 @@ def dp_quantile_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-candidate scan — so the mechanism costs one partial-agg
     shuffle at any corpus size. Reports the released edge, its rank
     error, and the true median for the utility readout."""
-    prep(spark)
     orders = table(spark, sf_dir, "orders")
     binned = orders.groupBy(
         F.least(
@@ -360,7 +356,6 @@ def dp_private_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded histograms → quantiles → top-k selection. Ref: reference
     private-release tests (cf. dp_quantile_release — same Gumbel-max
     machinery, one pick vs k composed picks)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     part = table(spark, sf_dir, "part")
     cand = (

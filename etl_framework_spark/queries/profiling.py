@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _PROF_COLS = [
     "l_orderkey",
@@ -53,7 +52,6 @@ def profile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_distinct = count of non-null groups; n_nulls = the null group's
     count; n_rows = Σ group counts — same integers as the one-pass
     form (A/B: sorted collects equal)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     parts = []
     for c in _PROF_COLS:
@@ -102,7 +100,6 @@ def dq_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself oracle-checked. Each rule is an independent filter/anti-join
     the optimizer can schedule; nothing materializes more than a
     count."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
     cust = table(spark, sf_dir, "customer")
@@ -162,7 +159,6 @@ def events_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     only fact-sized shuffle; the quartile windows run over |users|
     rows. ntile with a unique tiebreak is deterministic across
     engines (SURVEY.md §5.3 rule 2)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events").withColumn(
         "tts", F.date_trunc("second", F.col("ts"))
     )

@@ -23,9 +23,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from etl_framework_spark.catalog import table
+from etl_framework_spark.catalog import scratch_path, table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _D0, _D1 = "2024-01-08", "2024-01-14"  # the 7-day query window
 
@@ -56,9 +55,8 @@ def scan_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     dashboard-range queries O(window), not O(history), at 100 TB.
     Results must equal the oracle computed on the unpartitioned
     original."""
-    prep(spark)
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    out = f"/root/repo/.scratch/part_events_{tag}"
+    out = scratch_path(f"part_events_{tag}")
     e = table(spark, sf_dir, "events")
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         (
@@ -139,7 +137,6 @@ def llm_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     elsewhere; here they join on source into a constant-size report —
     one doc scan + one token explode, five partial-agg shuffles, all
     integer or exact-quantile arithmetic."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     docs = d.select(
         "source",

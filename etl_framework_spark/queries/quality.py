@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.textops import shingles, tokens
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 # Keep-gates for the per-source rollup (Gopher-ish bounds).
 MAX_DUP_FRAC = 0.8
@@ -139,7 +138,6 @@ def llm_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc repetition signals (L4): duplicate-token fraction,
     top-token and top-bigram mass, and the longest identical-token run
     (gaps-and-islands over a per-doc window)."""
-    prep(spark)
     return _doc_repetition(spark, sf_dir)
 
 
@@ -163,7 +161,6 @@ def llm_quality_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source quality rollup (L5): average repetition metrics and
     the fraction of each source's docs surviving the keep-gates — the
     table a curation pipeline ranks crawl sources by."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents").select("doc_id", "source")
     rep = _doc_repetition(spark, sf_dir)
     keep = (

@@ -43,7 +43,6 @@ from etl_framework_spark.operators.similarity import duck_cosine
 from etl_framework_spark.operators.textops import tokens
 from etl_framework_spark.operators.rounding import q6
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 # Knuth multiplicative-hash split constants (as training.train_split).
@@ -123,7 +122,6 @@ def llm_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     set intersections themselves, shared with llm_dedup_jaccard). Bucket
     arithmetic is identical IEEE ops on both engines, so boundary
     pairs (jaccard is a small-integer ratio) bucket identically."""
-    prep(spark)
     from etl_framework_spark.operators.dedup import blocked_jaccard_pairs
 
     docs = table(spark, sf_dir, "documents")
@@ -237,7 +235,6 @@ def vec_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass a 100 TB vector store runs mapper-side before writing); the
     per-label mean folds rmse values in vec_id order, so every float
     sum is a strict fold with a DuckDB list_reduce twin."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     xd = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     scaled = emb.select(
@@ -348,7 +345,6 @@ def vec_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan blocks by LSH/IVF exactly like llm_sim_topk's scale path —
     the truncated ranking costs 16/64 of the flops, which is the
     point of the technique."""
-    prep(spark)
     import numpy as np
     import pandas as pd
 
@@ -473,7 +469,6 @@ def fn_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     against DuckDB printf (fmtlib), which agree on this conversion
     subset. Float operands are exact halves (p_size/2.0), so no
     rounding-tie divergence. Pure per-row JVM kernels; no shuffle."""
-    prep(spark)
     p = table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
@@ -545,7 +540,6 @@ def llm_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduction on both sides plus one equi-join of type tables; the
     shuffles move fixed-width shingle hashes of bounded type counts,
     never documents."""
-    prep(spark)
     from etl_framework_spark.operators.textops import shingles
 
     d = table(spark, sf_dir, "documents")

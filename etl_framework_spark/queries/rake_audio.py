@@ -26,7 +26,6 @@ from pyspark.sql.window import Window as W
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.textops import STOPWORDS
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _RAKE_STOPS = STOPWORDS["en"] + ["a", "an", "or", "at", "by", "it"]
 _RAKE_MAX_LEN = 3
@@ -99,7 +98,6 @@ def llm_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-exact. Phrases capped at {_RAKE_MAX_LEN} words; top-{_RAKE_TOP}
     under a (score, phrase) total order. The keyword extractor that
     needs no model, at any corpus size."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     pos = d.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("i0", "tok")
@@ -182,7 +180,6 @@ def mm_audio_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays behind the multimodal stub boundary, like mm_decode), so
     the oracle reproduces the plan exactly; at scale this is a
     mapper-side projection with no shuffle."""
-    prep(spark)
     from etl_framework_spark.operators import multimodal
 
     assets = multimodal.attach_binary(table(spark, sf_dir, "documents"))

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _N_BANDS = 40
 _BAND_STEP = 4000  # band b covers [b*step, b*step + width)
@@ -58,7 +57,6 @@ def join_range_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of all 40 — at a million bands the naive form is a
     nested-loop disaster and this form stays an ordinary shuffle
     join on a uniform integer key. Revenue in exact DECIMAL."""
-    prep(spark)
     orders = table(spark, sf_dir, "orders")
     bands = spark.range(_N_BANDS).select(
         F.col("id").cast("int").alias("band_id"),

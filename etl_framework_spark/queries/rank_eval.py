@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.cacheutil import persist_tracked
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _N_QUERIES = 5  # top-N corpus tokens act as single-term queries
 _REL_CAP = 3    # graded relevance = min(tf, cap)
@@ -157,7 +156,6 @@ def rank_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both folds run in rank order over ≤10 terms. Ref: reference
     retrieval-evaluation tests (cf. llm_bm25, rank_fusion — the
     rankers these metrics grade)."""
-    prep(spark)
     ranked = _ranked(spark, sf_dir).transform(persist_tracked)  # feeds both the DCG and the ideal-DCG branches
     dcg = (
         ranked.filter(F.col("r") <= _K_NDCG)
@@ -248,7 +246,6 @@ def rank_map_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     to one line, so a line comment would swallow the query. Ref:
     reference retrieval-evaluation tests (cf. stats_auc_pit for the
     threshold-free cousin)."""
-    prep(spark)
     ranked = _ranked(spark, sf_dir)
     flags = ranked.select(
         "qtoken",
@@ -356,7 +353,6 @@ def rank_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     depth table — constant work at any corpus size. The 50-term sum
     folds in depth order. Ref: reference ranker-comparison tests
     (cf. rank_fusion — RBO grades what RRF merges)."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     a = (
         d.select("doc_id", "n_chars")

@@ -35,7 +35,6 @@ from pyspark.sql.window import Window as W
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.rounding import q6
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _MK_Z = 1.959963984540054  # two-sided 5% normal critical value
 
@@ -87,7 +86,6 @@ def stats_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form Pearson-on-ranks uses only sums of exact half-integer
     products (< 2^53), so the result is bit-identical at any
     parallelism or row order."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("day")
@@ -187,7 +185,6 @@ def stats_mannkendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     enumeration is a self-join of the CALENDAR-bounded daily table
     within one type (|days|² pairs per type, independent of raw
     volume); S and the tie term are exact integers."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("day")
@@ -318,7 +315,6 @@ def ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     Components quantize to 6 dp first, then every variance is a
     strict day-ordered fold (DuckDB list_reduce twin) over one type's
     bounded daily series — deterministic at any parallelism."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("day")
@@ -417,7 +413,6 @@ def llm_semantic_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors, the embedding-quality gate before training retrieval
     models. Centroid state is |labels|×|dims| at any corpus size; the
     per-vector distance folds its 64 dims in dim order."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     ex = emb.select(
         "vec_id", "label", F.posexplode("embedding").alias("dim", "val")
@@ -497,7 +492,6 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a first-class operator with deterministic md5 bit positions.
     Revenue sums in DECIMAL(18,2): exact, order-independent money
     math."""
-    prep(spark)
     orders = table(spark, sf_dir, "orders")
     cust = table(spark, sf_dir, "customer").filter(F.col("c_acctbal") >= 9000)
 

@@ -32,7 +32,6 @@ from etl_framework_spark.catalog import table
 from etl_framework_spark.operators import guarded
 from etl_framework_spark.operators.graph import co_occurrence_pairs
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 _HILL_K = 100
@@ -89,7 +88,6 @@ def llm_quality_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one row-local pass + one rollup. Majority-pass and unanimous
     counts ride along for the gate decision. Ref: reference
     ensemble-gate tests (cf. llm_quality_filter, stats_cohens_kappa)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     n_tok = F.size(toks)
@@ -175,7 +173,6 @@ def stats_hill_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     values. Deterministic (value DESC, event_id) ranking. Ref:
     reference tail-risk tests (cf. llm_zipf_fit for the rank-
     frequency twin)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events").filter(F.col("value") > 0)
     wk = W.partitionBy("event_type").orderBy(F.desc("value"), "event_id")
     ranked = ev.select(
@@ -262,7 +259,6 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     coefficient is the same moment closed form as stats_simpsons.
     Ref: reference graph-mixing tests (cf. graph_degree_hist,
     graph_bipartite_weights)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     # One-shuffle pair build shared with graph_kcore_peel (r7): the
     # degree cap is mirrored in the oracle's pdeg CTE. w0 persists

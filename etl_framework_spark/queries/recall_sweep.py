@@ -27,8 +27,8 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
+from etl_framework_spark.operators.rounding import q6
 
 _IVF_K = 10  # top-k recall target
 _IVF_NQ = 20  # query vectors (lowest vec_ids)
@@ -129,7 +129,6 @@ def vec_ivf_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     id-tiebroken → exact. Ref: reference ANN-tuning tests (cf.
     llm_sim_ivf for the operator, llm_lsh_calibration for the
     hash-family analogue)."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     e = emb.select(
         "vec_id",
@@ -279,7 +278,6 @@ def sales_share_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     share quantization on both engines. Ref: reference share
     reports (cf. q8_share for the single-market view,
     events_mix_drift for the distributional test)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     cu = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     yr = F.year(F.col("o_orderdate").cast("date"))
@@ -298,7 +296,6 @@ def sales_share_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t = g.agg(F.sum("r95").alias("t95"), F.sum("r96").alias("t96"))
     j = g.crossJoin(F.broadcast(t))
-    q6 = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     s95 = F.col("r95") / F.col("t95")
     s96 = F.col("r96") / F.col("t96")
     return (
@@ -367,7 +364,6 @@ def train_length_bucketing(spark: SparkSession, sf_dir: str) -> DataFrame:
     token counts → exact. Ref: reference batching-optimizer tests
     (cf. train_packing_eff for the concat-packing alternative,
     pack_sequences for the packer itself)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id",

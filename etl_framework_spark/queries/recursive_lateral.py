@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import sql_over_views, table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 # A recursive month spine left-joined to orders = gap-filled monthly
@@ -87,7 +86,6 @@ def join_nullsafe(spark: SparkSession, sf_dir: str) -> DataFrame:
     group key (status 'P' nulled out) must match the NULL key on the
     other side instead of null-extending — the semantics CDC merge
     keys rely on when business keys are nullable."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     k = F.nullif(F.col("o_orderstatus"), F.lit("P")).alias("k")
     a = o.groupBy(k).agg(F.count("*").alias("n_all"))

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.operators.rounding import q6
 
 _SPLIT = "1995-06-30"  # Chow break candidate
 
@@ -95,7 +95,6 @@ def stats_chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     moment sums are exact, the F ratio bit-identical. Ref:
     reference break-detection tests (cf. ts_changepoint for the
     nonparametric cousin, stats_diff_in_diff for the causal one)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     b = li.select(
         F.col("l_quantity").cast("double").alias("y"),
@@ -204,7 +203,6 @@ def stats_icc(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchangeable (ICC≈0) or does the order 'own' its lines? Two
     rollups over exact integer sums — bit-exact. Ref: reference
     variance-decomposition tests (cf. stats_anova, stats_cluster_se)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     y = F.col("l_quantity").cast("double")
     g = (
@@ -297,7 +295,6 @@ def stats_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     window on the bounded series. Ref: reference residual-
     diagnostics tests (cf. ts_autocorr — this is its
     regression-residual form)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     daily = li.groupBy(
         F.datediff(F.col("l_shipdate").cast("date"), F.lit("1970-01-01").cast("date"))
@@ -327,7 +324,6 @@ def stats_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
         "t", (F.col("y") - (F.col("b0") + F.col("b1") * F.col("t"))).alias("e")
     )
     e = e.withColumn("e_1", F.lag("e").over(W.orderBy("t")))
-    q = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     num = F.sum(
         F.when(
             F.col("e_1").isNotNull(),
@@ -337,6 +333,6 @@ def stats_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     den = F.sum(F.col("e") * F.col("e"))
     return e.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        q(num / den).alias("dw"),
-        q(1.0 - (num / den) / 2.0).alias("rho_approx"),
+        q6(num / den).alias("dw"),
+        q6(1.0 - (num / den) / 2.0).alias("rho_approx"),
     )

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators import guarded
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 # --------------------------------------------------------------------------
@@ -36,7 +35,6 @@ from etl_framework_spark.session import prep
 )
 def scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-table parquet scan (S1). Columnar, vectorized reader."""
-    prep(spark)
     return table(spark, sf_dir, "lineitem")
 
 
@@ -58,7 +56,6 @@ def project_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Row-level IEEE arithmetic with identical association order is
     bit-deterministic across engines — no rounding needed.
     """
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return li.select(
@@ -86,7 +83,6 @@ def project_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def filter_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conjunctive predicates (P2); all pushed to the parquet scan."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     return o.filter(
         F.col("o_totalprice").between(50000, 200000)
@@ -113,7 +109,6 @@ def filter_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional expressions (P3)."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
@@ -136,7 +131,6 @@ def case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def distinct_proj(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct projection (P4) — partial-aggregate dedup, one shuffle."""
-    prep(spark)
     return table(spark, sf_dir, "orders").select("o_orderstatus", "o_orderpriority").distinct()
 
 
@@ -152,7 +146,6 @@ def distinct_proj(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inner equi-join (J1); Catalyst picks broadcast/SMJ by size."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
     return o.join(c, o.o_custkey == c.c_custkey, "inner").select(
@@ -174,7 +167,6 @@ def join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer join (J2) with a filtered right side so nulls appear."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     o = table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 300000)
     return c.join(o, c.c_custkey == o.o_custkey, "left").select(
@@ -195,7 +187,6 @@ def join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left semi join (J3) == EXISTS."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     o = table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 300000)
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
@@ -216,7 +207,6 @@ def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left anti join (J4) == NOT EXISTS."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     o = table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 300000)
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
@@ -242,7 +232,6 @@ def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Broadcast-hint join (J5): same semantics as J1; the hint keeps the
     dim tables replicated instead of shuffling the 100 TB fact side."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     n = table(spark, sf_dir, "nation")
     r = table(spark, sf_dir, "region")
@@ -266,7 +255,6 @@ def join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cartesian product (J6); only ever between bounded dims."""
-    prep(spark)
     r = table(spark, sf_dir, "region")
     n = table(spark, sf_dir, "nation")
     return r.crossJoin(n).select("r_name", "n_name")
@@ -297,7 +285,6 @@ def join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     Planned as broadcast-nested-loop over the tiny band side — the
     right shape at 100 TB too (bands are O(1), fact streams through).
     """
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     bands = guarded.local_frame(
         spark, _BANDS, "band string, lo double, hi double"
@@ -337,7 +324,6 @@ def join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     a hash join with a residual range filter — scales as a normal
     shuffle join, no BNLJ.
     """
-    prep(spark)
     ev = table(spark, sf_dir, "events").select(
         "event_id", "user_id", F.date_trunc("second", F.col("ts")).alias("tts")
     )
@@ -373,7 +359,6 @@ def join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Star join (J10): fact × 4 dims, Q5 shape. Dims broadcast; the only
     big shuffle is lineitem⋈orders — exactly what we want at 100 TB."""
-    prep(spark)
     r = table(spark, sf_dir, "region")
     n = table(spark, sf_dir, "nation")
     c = table(spark, sf_dir, "customer")
@@ -410,7 +395,6 @@ def join_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 def topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k (O2): Spark plans TakeOrderedAndProject — per-partition
     heap + driver merge, no global sort. Tiebreak key makes it total."""
-    prep(spark)
     return (
         table(spark, sf_dir, "orders")
         .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
@@ -432,7 +416,6 @@ def topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bag union (U1)."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     f = o.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     op = o.filter(F.col("o_orderstatus") == "O").select("o_custkey")
@@ -449,7 +432,6 @@ def set_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set union (U2)."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     f = o.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     op = o.filter(F.col("o_orderstatus") == "O").select("o_custkey")
@@ -466,7 +448,6 @@ def set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set intersection (U3)."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     f = o.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     op = o.filter(F.col("o_orderstatus") == "O").select("o_custkey")
@@ -483,7 +464,6 @@ def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bag difference (U4, EXCEPT ALL semantics)."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     f = o.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     op = o.filter(F.col("o_orderstatus") == "O").select("o_custkey")

@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _THRESHOLDS = (0.1, 0.3, 0.5, 0.7, 0.9)
 _OOD_TOP = 10
@@ -88,7 +87,6 @@ def stats_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation over the scored rows crossed with the broadcast
     threshold list; counts are integers so every ratio is exact.
     Ref: reference classifier-eval tests."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     seq = ev.select(
         "user_id",
@@ -185,7 +183,6 @@ def vec_ood_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup broadcast back; per-vector distances are a second linear
     pass; deterministic (score DESC, id) top-10. Ref: reference OOD
     tests (cf. llm_semantic_outliers — the unlabeled twin)."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     dims = emb.select(
         "vec_id",
@@ -278,7 +275,6 @@ def llm_bm25_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-row broadcast through ONE tokenize/tf/df pipeline (zero extra
     scans per setting). Ref: reference ranking-sweep tests (cf.
     llm_bm25, llm_lsh_calibration)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("token")

@@ -23,7 +23,6 @@ from pyspark.sql.window import Window as W
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators import guarded
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _MID = "2024-01-16"  # split point between the two activity halves
 _ALPHAS = ["0.2", "0.4", "0.6", "0.8", "1.0"]
@@ -72,7 +71,6 @@ def events_rfm_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two per-user rollups are the only fact-sized shuffles; quartile
     windows run over |users| rows; the matrix is ≤ 5×5 at any
     scale."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     mid = F.lit(_MID).cast("timestamp")
     h1 = (
@@ -136,7 +134,6 @@ def train_mix_temp_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     numbers instead of vibes (α=1 is natural, α→0 is uniform). One
     |langs|-row aggregate crossed with a constant grid; the window
     denominator partitions by α over |langs| rows."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     cnt = d.groupBy("lang").agg(F.count("*").cast("bigint").alias("n"))
     grid = guarded.local_frame(

@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _WINDOWS_S = [900, 3600, 21600, 86400]
 
@@ -83,7 +82,6 @@ def stats_ridit(spark: SparkSession, sf_dir: str) -> DataFrame:
     one conditional rollup; integer counts → exact. Ref: reference
     ordinal-outcome tests (cf. stats_cochran_armitage for the
     trend-in-proportions twin, stats_mannwhitney for continuous)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     base = od.select(
         F.col("o_orderpriority").alias("cat"),
@@ -173,7 +171,6 @@ def events_conversion_window_sweep(
     per-window joins. Integer epoch seconds → exact. Ref: reference
     attribution-sensitivity tests (cf. join_semi_window for one
     fixed window, events_attribution_compare for model choice)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     tsec = F.unix_timestamp(F.date_trunc("second", F.col("ts"))).cast("bigint")
     p = ev.filter(F.col("event_type") == "purchase").select(
@@ -275,7 +272,6 @@ def stats_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups over the |months| rollup — bounded at any scale. Integer
     sums → exact. Ref: reference trend tests (cf. stats_mannkendall
     for the unseasonal form, ts_sen_slope for the magnitude)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     monthly = li.groupBy(
         F.year(F.col("l_shipdate").cast("date")).alias("yr"),

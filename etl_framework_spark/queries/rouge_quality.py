@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.operators.rounding import q6
 
 _RL_TOP = 10
 _VOL_W = 28  # trailing window (days) for volume baseline
@@ -93,7 +93,6 @@ def llm_rouge_l(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference sequence-similarity tests (cf. llm_dedup_editdist for
     the character-level cousin, llm_dedup_jaccard for the bag
     view)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id",
@@ -228,7 +227,6 @@ def llm_quality_dedup_interaction(
     pipeline should print before ordering its stages. Two rollups,
     integer counts → exact. Ref: reference curation-interaction
     tests (cf. llm_quality_filter, llm_dedup_keep_best)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     q = docs.select(
@@ -320,7 +318,6 @@ def dq_partition_volume_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     |days| rollup + one trailing window, integer sums → exact band
     edges. Ref: reference ingest-monitoring tests (cf. dq_freshness
     for the lateness axis, events_anomaly for value-level)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("day")).agg(
         F.count(F.lit(1)).cast("double").alias("n")
@@ -346,7 +343,6 @@ def dq_partition_volume_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("zvol"),
     )
-    q = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return z.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_days_eval"),
         F.sum(F.when(F.abs(F.col("zvol")) > 3, 1).otherwise(0))
@@ -355,6 +351,6 @@ def dq_partition_volume_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("zvol") < -3, 1).otherwise(0))
         .cast("bigint")
         .alias("n_volume_drops"),
-        q(F.min("zvol")).alias("worst_drop_z"),
-        q(F.max("zvol")).alias("worst_spike_z"),
+        q6(F.min("zvol")).alias("worst_drop_z"),
+        q6(F.max("zvol")).alias("worst_spike_z"),
     )

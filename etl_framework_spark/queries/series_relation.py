@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.operators.rounding import q6
 
 _MP_W = 4  # matrix-profile subsequence length (weeks)
 _BRAND_A = "Brand#1"
@@ -103,7 +103,6 @@ def ts_cointegration_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     regression. One broadcast-dim join + conditional daily sums;
     everything after is closed-form. Ref: reference pair-analytics
     tests (cf. ts_granger_lite, ts_cross_corr)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     pt = table(spark, sf_dir, "part").filter(
         F.col("p_brand").isin(_BRAND_A, _BRAND_B)
@@ -162,7 +161,6 @@ def ts_cointegration_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("sde") / F.col("nn") - g * g * F.col("den") / F.col("nn"))
         / F.col("den")
     )
-    q6 = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     q4 = lambda c: F.floor(c * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)
     return fit.crossJoin(F.broadcast(adf)).select(
         F.col("n").cast("bigint").alias("n_days"),
@@ -239,7 +237,6 @@ def ts_matrix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     so ties break identically cross-engine. Ref: reference
     motif/discord tests (cf. ts_paa_sax for the symbolic cousin,
     events_anomaly_mad for the pointwise one)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     weekly = li.groupBy(
         (
@@ -343,7 +340,6 @@ def ts_forecast_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact table collapses to |days| before the two lag windows. Ref:
     reference forecast-eval tests (cf. events_forecast_backtest —
     this adds the scale-free metric family)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("day")).agg(
         F.sum("l_quantity").cast("double").alias("y")
@@ -354,17 +350,16 @@ def ts_forecast_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("y", 7).over(wd).alias("yhat"),
         F.lag("y", 1).over(wd).alias("ynaive"),
     ).filter(F.col("yhat").isNotNull() & F.col("ynaive").isNotNull())
-    q = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     y, yh, yn = F.col("y"), F.col("yhat"), F.col("ynaive")
     return lagd.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        q(F.avg(F.abs(y - yh))).alias("mae_snaive"),
-        q(F.avg(F.abs(y - yn))).alias("mae_naive"),
-        q(F.avg(2.0 * F.abs(y - yh) / (F.abs(y) + F.abs(yh)))).alias(
+        q6(F.avg(F.abs(y - yh))).alias("mae_snaive"),
+        q6(F.avg(F.abs(y - yn))).alias("mae_naive"),
+        q6(F.avg(2.0 * F.abs(y - yh) / (F.abs(y) + F.abs(yh)))).alias(
             "smape_snaive"
         ),
-        q(F.avg(F.abs(y - yh)) / F.avg(F.abs(y - yn))).alias("mase"),
-        q(
+        q6(F.avg(F.abs(y - yh)) / F.avg(F.abs(y - yn))).alias("mase"),
+        q6(
             F.sqrt(
                 F.sum((y - yh) * (y - yh)) / F.sum((y - yn) * (y - yn))
             )

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 @query(
@@ -29,7 +28,6 @@ from etl_framework_spark.session import prep
 )
 def join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer join (J2): null-extends BOTH sides."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     f = (
         o.filter(F.col("o_orderstatus") == "F")
@@ -56,7 +54,6 @@ def join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bag intersection (U3, INTERSECT ALL semantics)."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     f = o.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     op = o.filter(F.col("o_orderstatus") == "O").select("o_custkey")
@@ -67,7 +64,6 @@ def set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 def limit_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIMIT without ORDER BY (O3): row choice is plan-dependent, so
     only the count contract holds."""
-    prep(spark)
     return table(spark, sf_dir, "lineitem").limit(100)
 
 
@@ -75,7 +71,6 @@ def limit_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sample_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded Bernoulli sample (O4): deterministic within Spark for a
     fixed seed+partitioning; no cross-engine oracle by nature."""
-    prep(spark)
     return table(spark, sf_dir, "orders").sample(fraction=0.1, seed=42)
 
 
@@ -83,7 +78,6 @@ def sample_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_quantile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """approx_percentile (A8 approximate half): unit tests bound it
     against the exact quantile; no hash oracle by design."""
-    prep(spark)
     return (
         table(spark, sf_dir, "events")
         .groupBy("event_type")

@@ -28,7 +28,6 @@ from pyspark.sql.window import Window as W
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 # --------------------------------------------------------------------------
@@ -64,7 +63,6 @@ def win_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulates in DECIMAL(18,2) (exact, order-independent), and the
     share divides two exact decimals, so the 6-dp rounding is safe at
     any parallelism."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
     n = table(spark, sf_dir, "nation")
@@ -126,7 +124,6 @@ def fn_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
     key, and the binary-collated variant count shows what the
     case-insensitive group absorbed. Oracle normalizes with lower()
     — the pre-collation idiom — proving the two formulations agree."""
-    prep(spark)
     p = table(spark, sf_dir, "part")
     mixed = (
         p.select(F.col("p_type").alias("t"))
@@ -178,7 +175,6 @@ def graph_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     need special handling). Edges dedup once on (a, b); degrees are
     one count per node over the symmetrized edge list; the histogram
     output is bounded by max degree regardless of corpus size."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     t = d.select(F.split("text", " ").alias("l")).filter(F.size("l") >= 2)
     prs = t.select(

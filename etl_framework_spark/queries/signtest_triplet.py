@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 # --------------------------------------------------------------------------
@@ -60,7 +59,6 @@ def stats_sign_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal. One key join + two counts, integer-exact. Ref:
     reference paired-test ladder (cf. stats_wilcoxon_signed_rank,
     stats_ttest_welch)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     a = li.filter(F.col("l_linenumber") == 1).select(
         "l_orderkey", F.col("l_quantity").alias("q1")
@@ -145,7 +143,6 @@ def vec_triplet_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (windowed positive, min-key negative); quantized distances →
     exact. Ref: reference embedding-eval tests (cf.
     vec_knn_reciprocity, llm_cluster_purity)."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     e = emb.select(
         "vec_id",
@@ -244,7 +241,6 @@ def ts_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     structure here? One lag/lead window on the |days| rollup,
     integer comparisons → exact. Ref: reference randomness probes
     (cf. stats_runs_test — same family, levels instead of signs)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("day")).agg(
         F.sum("l_quantity").alias("x")

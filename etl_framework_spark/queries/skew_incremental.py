@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _K = 2654435761
 _MOD = 4294967296
@@ -61,7 +60,6 @@ def diag_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys and their load relative to the mean key (skew_factor ~ 1 =
     uniform; >> 1 = salt or let AQE split). One partial-agg shuffle;
     the mean is a 1-row broadcast; TakeOrdered handles the top-10."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     c = li.groupBy(F.col("l_suppkey").alias("key")).agg(F.count("*").alias("cnt"))
     m = c.agg(F.avg("cnt").alias("m"))
@@ -110,7 +108,6 @@ def llm_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus one window partitioned by hash WITHIN the delta for
     first-wins among same-batch duplicates. Priority: corpus dup >
     within-batch dup > new."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     h = d.select(
         "doc_id",
@@ -160,7 +157,6 @@ def train_epoch_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-loader shards. Each shard sorts only its own slice (no global
     window, no RNG) and re-running any shard reproduces its order
     byte-for-byte — the portable way to 'shuffle' 100 TB per epoch."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     h = d.select(
         "doc_id",

@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.textops import shingles, tokens
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 
@@ -68,7 +67,6 @@ def orders_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     price over strictly earlier dates, via a range frame ending 1s
     before the current date) and `msame` (max price within the same
     date). One sort per nation; no self-join at any scale."""
-    prep(spark)
     o = (
         table(spark, sf_dir, "orders")
         .join(table(spark, sf_dir, "customer"), F.col("o_custkey") == F.col("c_custkey"))
@@ -133,7 +131,6 @@ def llm_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     guaranteed to share an entry with any other document that shares
     >= w+k-1 consecutive tokens. Pure per-row array algebra: no
     explode, no shuffle, linear in corpus size."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     t = docs.select("doc_id", tokens("text").alias("l"))
     s = t.select("doc_id", F.transform(shingles("l", 3), lambda x: F.md5(x)).alias("h"))
@@ -184,7 +181,6 @@ def llm_dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join — the df-cap is what bounds bucket fan-out at corpus
     scale (a stop-shingle shared by 1M docs would otherwise create a
     10^12-pair bucket)."""
-    prep(spark)
     # persist: the winnowing fingerprint pipeline (rolling-hash Arrow
     # kernel) feeds the explode, the df-cap filter, the self-join's
     # both sides, and the size lookup — unpersisted it replayed ~6×
@@ -241,7 +237,6 @@ def events_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     off-pattern load. 168-row output at any scale; Spark dayofweek is
     1..7 Sunday-first vs DuckDB 0..6, so the oracle adds 1
     (SURVEY.md §5.3 rule 5)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     c = ev.groupBy(
         F.dayofweek("ts").alias("dow"), F.hour("ts").alias("hr")
@@ -331,7 +326,6 @@ def pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     executed by the pipeline engine (filter → with_columns → dedup →
     aggregate). Every step is a Catalyst-planned DataFrame op; the
     dedup shuffles once on the content hash."""
-    prep(spark)
     from etl_framework_spark.pipeline import run_pipeline
 
     return run_pipeline(spark, curation_spec(sf_dir))["report"]
@@ -384,7 +378,6 @@ def events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     same-timestamp touches invisible to the purchase (strict <) and
     breaks touch ties deterministically; the three ignore-nulls lasts
     agree because they are non-null on exactly the same rows."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     sub = ev.filter(F.col("event_type").isin("purchase", "view", "click")).select(
         "event_id",
@@ -447,7 +440,6 @@ def sample_hash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     a training-data pipeline needs for auditable subsets), yet
     hash-ordering makes it uniform-ish. Partial top-k per partition
     via the window; no full sort of the corpus."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     h = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":"), F.col("text")))
     w = W.partitionBy("lang").orderBy("h", "doc_id")
@@ -491,7 +483,6 @@ def basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by items-per-order, so no quadratic blowup); the brand
     marginals and the scalar order count are broadcast back onto the
     bounded pair set."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     part = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     # (a persist here was tried and REVERTED in r10: caching the
@@ -572,7 +563,6 @@ def scd2_asof_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     a key's few versions, so the plan is an ordinary shuffle join, not
     a range join. Orders straddle the synthetic cutover, so both
     versions are exercised."""
-    prep(spark)
     cust = table(spark, sf_dir, "customer")
     cut = F.lit(_SCD2_CUT).cast("timestamp_ntz")
     v1 = cust.select(
@@ -621,7 +611,6 @@ def agg_bitops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bitwise aggregate family (A-family extension): bit_and/or/xor
     fold per group — associative+commutative, so partial aggregation
     map-side is free like any algebraic agg."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.expr("bit_and(l_linenumber)").cast("int").alias("b_and"),
@@ -653,7 +642,6 @@ def agg_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     of price on quantity per group via the one-pass moment
     accumulators (regr_*) — second-moment state merges associatively,
     so the shuffle carries 6 doubles per group regardless of scale."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     y, x = "l_extendedprice", "l_quantity"
     return li.groupBy("l_returnflag").agg(
@@ -707,7 +695,6 @@ def events_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ts, view-first, event_id) makes a same-timestamp purchase
     invisible (strict >), and one FOLLOWING-frame window replaces the
     view x purchase self-join."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     sub = ev.filter(F.col("event_type").isin("purchase", "view")).select(
         "event_id",
@@ -778,7 +765,6 @@ def stats_rate_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     small-sample rate CI a monitoring pipeline publishes (never goes
     outside [0,1], unlike the normal approximation). One star join +
     one group-by; the interval is pure scalar math on (n, n_ret)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     r = (
         li.join(table(spark, sf_dir, "orders"), F.col("l_orderkey") == F.col("o_orderkey"))
@@ -832,7 +818,6 @@ def stats_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs on every column pair. Contingency counts, broadcast
     marginals, one scalar statistic; cells bounded by |lang|*|source|
     regardless of corpus size."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     obs = docs.groupBy("lang", "source").agg(F.count("*").cast("double").alias("o"))
     m = obs.groupBy("lang").agg(F.sum("o").alias("rl"))
@@ -891,7 +876,6 @@ def dq_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     with 0.5-count smoothing so empty bins stay defined; the whole
     computation reduces to a {bins}-row table however large the fact
     input is."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     tagged = o.filter(F.year("o_orderdate").isin(1995, 1996)).select(
         F.least(
@@ -955,7 +939,6 @@ def events_bot_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate or a too-regular type distribution flags automation. Two
     per-user aggregations (partial map-side), no self-joins; the
     rules are plain column predicates a policy config can tune."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     per_type = ev.groupBy("user_id", "event_type").agg(F.count("*").alias("c"))
     tot = W.partitionBy("user_id")
@@ -1000,7 +983,6 @@ def agg_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     array_join(sort_array(collect_list(...))) — the explicit ORDER BY
     inside the aggregate that makes string concatenation
     deterministic across partitionings."""
-    prep(spark)
     n = table(spark, sf_dir, "nation")
     r = table(spark, sf_dir, "region")
     return (
@@ -1034,7 +1016,6 @@ def fn_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     difference that matters when a 100 TB events table carries wide
     JSON payloads). Missing paths yield NULL, matching JSON
     semantics."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     v = ev.select("event_id", F.parse_json("props").alias("v"))
     return v.select(
@@ -1086,7 +1067,6 @@ def llm_minhash_est_err(spark: SparkSession, sf_dir: str) -> DataFrame:
     for YOUR corpus before you trust the bands at scale. Signatures
     come from the same md5-sliced machinery as llm_dedup_minhash, so
     the oracle reproduces them bit-for-bit."""
-    prep(spark)
     from etl_framework_spark.operators.dedup import attach_minhash
 
     docs = table(spark, sf_dir, "documents")
@@ -1194,7 +1174,6 @@ def events_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     type. The baseline every fancier forecaster must beat, and the
     backtest harness shape — per-(type, dow) windows keep state
     bounded by one series' history."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("d")
@@ -1253,7 +1232,6 @@ def cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalized per customer — the curve that says when a cohort pays
     back. First-order table is one agg over the fact; the running sum
     partitions by cohort (|months| rows each)."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     first = o.groupBy("o_custkey").agg(
         F.date_trunc("month", F.min("o_orderdate")).alias("cohort")
@@ -1311,7 +1289,6 @@ def orders_ship_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean/p50/p90/max per priority class — the ops report that shows
     whether urgent orders actually ship faster. Exact interpolated
     percentiles over the per-priority lag sets."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     o = table(spark, sf_dir, "orders")
     lags = li.join(o, F.col("l_orderkey") == F.col("o_orderkey")).select(
@@ -1354,7 +1331,6 @@ def events_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     (0 = uniform, →1 = one user dominates). Rank-weighted exact
     formula: one per-user agg (fact-sized shuffle), then windows over
     the |users|-sized rollup only."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(F.count("*").cast("double").alias("x"))
     w_rank = W.orderBy("x", "user_id")
@@ -1403,7 +1379,6 @@ def events_mix_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     traffic changed shape this week'. Weekly cells are
     |weeks|x|types|-bounded; the global mix broadcasts back onto
     them."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     wk = ev.groupBy(
         F.date_trunc("week", F.col("ts")).alias("week"), "event_type"
@@ -1470,7 +1445,6 @@ def events_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     sanity check every experimentation platform runs before trusting
     its assignment; the same plan with a real treatment flag is the
     A/B readout. One partial-agg shuffle to 2 rows."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     tagged = ev.select(
         F.when(
@@ -1543,7 +1517,6 @@ def llm_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     unsupervised clusters recover known structure. Replays the exact
     kmeans assignment (shared CTE/plan with llm_kmeans), then all
     statistics reduce over the k x |labels| contingency table."""
-    prep(spark)
     from etl_framework_spark.queries.cluster_q import kmeans_a2
 
     a2 = kmeans_a2(spark, sf_dir)
@@ -1623,7 +1596,6 @@ def events_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lifetimes are one per-user agg; the curve is a broadcast of the
     30-day grid against the |users|-sized rollup (grid join, never a
     fact-sized cross product)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     life = ev.groupBy("user_id").agg(
         F.datediff(
@@ -1685,7 +1657,6 @@ def llm_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     real corpus curation wants, since near-dups often differ by
     truncation and min-id keeps the truncated one ~half the time.
     Reuses the exact cluster assignment; one window per cluster."""
-    prep(spark)
     from etl_framework_spark.queries.llm import llm_dedup_minhash
 
     clusters = llm_dedup_minhash(spark, sf_dir).select("doc_id", "cluster_id")
@@ -1741,7 +1712,6 @@ def train_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     greedy knapsack relaxation). The mixture-quota shape of corpus
     assembly: per-language windows partition the work, so each
     language's sort is independent and bounded."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     scored = docs.select(
         "doc_id",
@@ -1792,7 +1762,6 @@ def stats_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     for fabricated or truncated monetary data (synthetic uniform-ish
     data fails it loudly, which is itself the diagnostic). 9-row
     output from one partial-agg pass."""
-    prep(spark)
     o = table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
     d = F.floor(
         F.col("o_totalprice") / F.pow(10.0, F.floor(F.log10("o_totalprice")))
@@ -1838,7 +1807,6 @@ def stats_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived columns before modeling. All six moment sets accumulate
     in ONE scan (single multi-agg pass), then unpivot to rows — not
     a scan per pair like the naive UNION the oracle runs."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     pairs = [
         (a, b) for i, a in enumerate(_CORR_COLS) for b in _CORR_COLS[i + 1 :]
@@ -1884,7 +1852,6 @@ def stats_iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     based) alternative to the z-score gate in llm_quality_outliers.
     Per-nation quantiles reduce to |nations| rows and broadcast back
     onto the fact."""
-    prep(spark)
     s = table(spark, sf_dir, "supplier")
     n = table(spark, sf_dir, "nation")
     j = s.join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
@@ -1939,7 +1906,6 @@ def orders_repeat_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the distribution of days between consecutive orders — the
     loyalty metric behind LTV curves. One per-customer lag window
     (state bounded by one customer's history) plus scalar rollups."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     per_cust = o.groupBy("o_custkey").agg(F.count("*").alias("n_orders"))
     w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
@@ -2002,7 +1968,6 @@ def llm_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     changed. Centroids quantize to 6dp BEFORE the distance (the
     iterative-float portability rule), so the shift is engine-exact;
     state is |labels|x|dims| regardless of corpus size."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     ex = emb.select(
         "label",
@@ -2054,7 +2019,6 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     normality) — unlike the mean/std z-score (events_anomaly), a
     single huge spike can't inflate its own detection threshold.
     Per-type medians reduce to |types| rows and broadcast back."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("d")
@@ -2105,7 +2069,6 @@ def supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the market-concentration screen beside Gini and Pareto. One
     revenue rollup per (nation, supplier), then |markets|-sized
     share math."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     rev = (
         li.join(table(spark, sf_dir, "supplier"), F.col("l_suppkey") == F.col("s_suppkey"))

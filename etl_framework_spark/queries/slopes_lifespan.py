@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.operators.rounding import q6
 
 
 # --------------------------------------------------------------------------
@@ -83,7 +83,6 @@ def stats_slope_homogeneity(spark: SparkSession, sf_dir: str) -> DataFrame:
     moment scan per group, closed forms after. Ref: reference
     interaction tests (cf. stats_ancova_lite, stats_chow_test for
     the time-split analogue)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag").isin("R", "N")
     )
@@ -117,7 +116,6 @@ def stats_slope_homogeneity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("sse").alias("sse"),
         F.sum("n").alias("nn"),
     )
-    q6 = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     q4 = lambda c: F.floor(c * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)
     tstat = (F.col("b_r") - F.col("b_n")) / F.sqrt(
         F.col("sse")
@@ -166,7 +164,6 @@ def sales_customer_lifespan(spark: SparkSession, sf_dir: str) -> DataFrame:
     LTV model may extrapolate to. One per-customer min/max rollup.
     Ref: reference lifetime tests (cf. cohort_ltv for the money
     curve, events_retention_halflife for the decay rate)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     c = od.groupBy(F.col("o_custkey").alias("cust")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
@@ -235,7 +232,6 @@ def llm_bag_dedup_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     anyone pays for minhash. Row-local sort+hash, two distinct
     counts. Ref: reference dedup-ladder tests (cf. llm_dedup_casefold
     for the normalization ladder — this is the ORDER rung)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     h = docs.select(
         "doc_id",

@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators import guarded
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _CHI1_CRIT = 3.841458820694124  # chi-square(1) 95% critical value
 
@@ -75,7 +74,6 @@ def events_ab_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit-of-analysis bug this operator exists to prevent). A
     significant SRM means assignment or logging is broken and the
     readout is void. One distinct-user reduction + 2-row rollup."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     arm = (
         F.when(
@@ -164,7 +162,6 @@ def sketch_cms_width_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     curve you size memory budgets with. One token-frequency
     reduction feeds every width; counter tables stay fixed-size
     mergeable aggregates per width."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     freq = (
         d.select(F.explode(F.split("text", " ")).alias("tok"))

@@ -44,7 +44,6 @@ from pyspark.sql.window import Window as W
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.rounding import q6
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 # Knuth multiplicative-hash constants (same family as train_split).
 _K = 2654435761
@@ -120,7 +119,6 @@ def stats_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     window and the final max run over that bounded aggregate. On this
     synthetic traffic both populations draw from the same generator —
     the two-sample A/A sanity check for distribution-shift monitors."""
-    prep(spark)
     ev = table(spark, sf_dir, "events").filter(
         F.col("event_type").isin(_GA, _GB)
     )
@@ -199,7 +197,6 @@ def stats_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts (midrank = cum - t + (t+1)/2), so ties get the exact
     average rank without ever ranking raw rows; U, the tie-corrected
     σ, and z reduce from the same bounded aggregate."""
-    prep(spark)
     ev = table(spark, sf_dir, "events").filter(
         F.col("event_type").isin(_GA, _GB)
     )
@@ -300,7 +297,6 @@ def sketch_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate: per-executor local counters sum into the global sketch,
     exactly how a 1000-executor build would run. Only the token
     frequency reduction shuffles data."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     freq = (
         d.select(F.explode(F.split(F.col("text"), " ")).alias("tok"))
@@ -400,7 +396,6 @@ def sketch_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter is |set-bits| rows (≤ m) at any scale and broadcast to the
     probe side — the semi-join-pushdown pattern Spark itself uses for
     runtime row-group pruning; only the member distinct shuffles."""
-    prep(spark)
     orders = table(spark, sf_dir, "orders")
     cust = table(spark, sf_dir, "customer")
     members = (
@@ -555,7 +550,6 @@ def ts_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches bit-for-bit before emit-boundary quantization. μ and σ
     reduce from the same collected series (σ via the ordered fold as
     well — no unordered float sum anywhere)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("day")
@@ -676,7 +670,6 @@ def fn_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     max over per-row values pre-quantized to 6 dp), so the result is
     identical at any parallelism — the rule for float math at 1000
     executors. Output is ≤ 288 cells at any scale."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     lat = ((F.col("c_custkey") * 37) % 17000) / 100.0 - 85.0
     lon = ((F.col("c_custkey") * 101) % 36000) / 100.0 - 180.0
@@ -757,7 +750,6 @@ def llm_kn_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     marginals, continuation counts) are vocab-bounded aggregates of
     one corpus scan; every emitted number is a ratio of exact integer
     counts — no float-order sensitivity."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     t = d.select(F.split(F.col("text"), " ").alias("l")).filter(
         F.size("l") >= 2
@@ -856,7 +848,6 @@ def llm_eval_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-term bits are quantized to 6 dp and summed by a strict
     token-ordered fold (DuckDB list_reduce twin) — deterministic
     at any parallelism."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     is_train = ((F.col("doc_id") % 1000000007) * _K) % _MOD < _TRAIN_LT
     split = d.select("doc_id", "text", "lang", is_train.alias("is_train"))
@@ -943,7 +934,6 @@ def shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the uniform share — the skew report that decides whether shard
     writes need salting. One partial-agg shuffle; |shards| output
     rows at any scale."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     assigned = d.select(
         (((F.col("doc_id") % 1000000007) * _K) % _MOD % _SHARDS).cast("bigint").alias("shard"),
@@ -1023,7 +1013,6 @@ def sketch_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     median). The rel_err column measures the estimator against the
     exact Σdf² computed alongside. Ref: reference sketch-estimator
     tests (cf. sketch_cms, agg_approx_distinct)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     df = li.groupBy(F.col("l_partkey").alias("k")).agg(
         F.count("*").alias("c")
@@ -1126,7 +1115,6 @@ def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rows-only production path, KMV is the one whose estimate an
     oracle can pin bit-for-bit. Ref: reference distinct-sketch tests
     (cf. agg_approx_distinct, agg_hll_merge)."""
-    prep(spark)
     orders = table(spark, sf_dir, "orders")
     keys = orders.select(F.col("o_custkey").alias("k")).distinct()
     u = (
@@ -1236,7 +1224,6 @@ def sketch_kmv_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     windowed-distinct tests (cf. events_sliding_uniques — the exact
     cousin whose state grows with |users|, which is why the sketch
     exists)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     du = ev.select(
         F.to_date("ts").alias("day"), "user_id"
@@ -1371,7 +1358,6 @@ def sketch_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile/audience-overlap systems use across datacenters. Ref:
     reference audience-overlap tests (cf. events_audience_overlap —
     the exact cousin)."""
-    prep(spark)
     orders = table(spark, sf_dir, "orders")
 
     def pop(yr: int) -> DataFrame:

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.operators.rounding import q6
 
 
 # --------------------------------------------------------------------------
@@ -70,7 +70,6 @@ def sales_price_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shipdate, orderkey, linenumber). Ref: reference price-dynamics
     tests (cf. sales_price_dispersion for the cross-section,
     sales_price_index_fisher for the aggregate)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     up = F.col("l_extendedprice") / F.col("l_quantity")
     wp = W.partitionBy("l_partkey").orderBy(
@@ -151,7 +150,6 @@ def orders_priority_effectiveness(
     join + level rollup + closed-form trend. Ref: reference SLA
     tests (cf. orders_ship_lag for the distribution,
     stats_cochran_armitage for the same trend logic on rates)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     od = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
@@ -247,7 +245,6 @@ def stats_delta_method_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio-metric tests (cf. stats_cluster_se for the same unit
     issue on means, stats_fieller_ratio_ci for the exact-interval
     alternative)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     per_cust = od.groupBy(F.col("o_custkey").alias("cust")).agg(
         F.count(F.lit(1)).cast("double").alias("y"),
@@ -278,7 +275,6 @@ def stats_delta_method_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     naive_se = F.sqrt(F.col("vx") / F.col("n")) / F.col("my")
     q4 = lambda c: F.floor(c * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)
-    q6 = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return s.select(
         F.col("n").cast("bigint").alias("n_customers"),
         q4(r).alias("revenue_per_order"),

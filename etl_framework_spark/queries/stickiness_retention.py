@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 def _user_days(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -66,7 +65,6 @@ def events_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic habit metric). Raw events reduce to distinct user-days
     once; both rollups then run on that bounded table and the report
     is |weeks| rows at any scale."""
-    prep(spark)
     ud = _user_days(spark, sf_dir)
     week = F.date_trunc("week", F.col("day")).alias("week_start")
     dau = ud.groupBy("day").agg(F.count("*").alias("dau"))
@@ -115,7 +113,6 @@ def events_retention_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     Return flags are equi-joins of the distinct user-day table
     against itself on (user, day+offset) — co-partitioned key
     lookups, never range scans; the report is |days| rows."""
-    prep(spark)
     ud = _user_days(spark, sf_dir)
     d1 = ud.select(F.col("user_id").alias("u1"), F.col("day").alias("d1day"))
     d7 = ud.select(F.col("user_id").alias("u7"), F.col("day").alias("d7day"))

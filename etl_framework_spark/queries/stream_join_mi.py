@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.operators.rounding import q6
 
 _SE_R = 50  # sample-entropy tolerance (quantity units)
 
@@ -89,7 +89,6 @@ def stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds the probe; at scale state is the watermark window, not
     history. Ref: reference stream-join tests (cf. join_interval
     for the static form, join_semi_window for the existence form)."""
-    prep(spark)
     j = stream_join_transform(table(spark, sf_dir, "events"))
     return j.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
@@ -158,7 +157,6 @@ def feat_mi_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     logs over exact counts. Ref: reference feature-screen tests (cf.
     feat_infogain — MI(a,b) is its symmetric generalization,
     stats_cramers_v for the normalized-association view)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     feats = {
         "returnflag": F.col("l_returnflag"),
@@ -271,7 +269,6 @@ def ts_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     input scale the template table stays |calendar|-sized. Ref:
     reference complexity-probe tests (cf. ts_hurst for long-memory,
     ts_spectral_entropy for the frequency view)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("day")).agg(
         F.sum("l_quantity").alias("x")
@@ -304,10 +301,9 @@ def ts_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(m3, 1).otherwise(0)).cast("double").alias("a_m"),
     )
     nt = s.agg(F.count(F.lit(1)).cast("bigint").alias("n_templates"))
-    q = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return nt.crossJoin(F.broadcast(pairs)).select(
         "n_templates",
         F.col("b_m").cast("bigint").alias("matches_m2"),
         F.col("a_m").cast("bigint").alias("matches_m3"),
-        q(-F.log(F.col("a_m") / F.col("b_m"))).alias("sample_entropy"),
+        q6(-F.log(F.col("a_m") / F.col("b_m"))).alias("sample_entropy"),
     )

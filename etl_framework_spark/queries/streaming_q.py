@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -51,7 +50,6 @@ def tumbling_transform(ev: DataFrame) -> DataFrame:
 )
 def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-day window (T1): epoch-aligned windows == date_trunc."""
-    prep(spark)
     return tumbling_transform(table(spark, sf_dir, "events"))
 
 
@@ -73,7 +71,6 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding window (T2): 1-day windows every 6h — each event lands
     in exactly 4 windows; the oracle expands the slide as 4 shifted
     tumbles."""
-    prep(spark)
     ev = _events(spark, sf_dir)
     return (
         ev.groupBy(F.window("tts", "1 day", "6 hours").alias("win"), "event_type")
@@ -126,7 +123,6 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     a pair at diff == gap yields ONE session ending at last+gap), so
     the oracle breaks only on strictly-greater gaps. This only shows
     up at sf0.1 where second-truncated exact-gap pairs exist."""
-    prep(spark)
     return session_transform(table(spark, sf_dir, "events"))
 
 
@@ -147,7 +143,6 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming dedup (T5), batch equivalent: keep the earliest event
     per (user, type) under a total order — what
     withWatermark+dropDuplicates converges to on replay."""
-    prep(spark)
     ev = _events(spark, sf_dir)
     w = W.partitionBy("user_id", "event_type").orderBy("tts", "event_id")
     return (
@@ -185,7 +180,6 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     absorbs that — the DuckDB oracle already sums in ITS own order,
     so order-robustness was a standing requirement, not a new
     assumption (A/B at sf0.1: collected outputs byte-equal)."""
-    prep(spark)
     ev = _events(spark, sf_dir)
     return ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),

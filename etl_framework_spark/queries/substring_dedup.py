@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators import multimodal
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.operators.rounding import q6
 
 # Window width (tokens) for substring-level dedup.
 _SUBSTR_K = 20
@@ -99,7 +99,6 @@ def llm_dedup_substr(spark: SparkSession, sf_dir: str) -> DataFrame:
     there dies outright — guide §3.1's size caveat), while the
     shuffled-hash build stays per-partition-sized and AQE-skew-
     splittable. Measured 2.20 s -> 1.60 s at sf0.1."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     docs = d.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
     grams = docs.filter(F.size("toks") >= _SUBSTR_K).select(
@@ -169,7 +168,6 @@ def mm_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Only digests and ids move in the shuffle — payload bytes stay
     where they were scanned (at 100 TB of media the digest table is
     ~1e-6 of the corpus)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     b = multimodal.attach_binary(docs)
     clusters = (
@@ -237,7 +235,6 @@ def ts_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a (level, trend) struct accumulator — identical IEEE op
     order on both engines (DuckDB folds a 2-element list), so values
     match bit-for-bit before the emit-boundary quantization."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("day")
@@ -258,13 +255,12 @@ def ts_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
              + acc.b * one_m_beta).alias("b"),
         ),
     )
-    q = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return arrs.select(
         "event_type",
         F.size(xs).cast("bigint").alias("n_days"),
-        q(state.l).alias("level"),
-        q(state.b).alias("trend"),
-        q(state.l + state.b).alias("forecast_1"),
+        q6(state.l).alias("level"),
+        q6(state.b).alias("trend"),
+        q6(state.l + state.b).alias("forecast_1"),
     )
 
 
@@ -301,7 +297,6 @@ def pipeline_train_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     report. Complements `pipeline_curation` by exercising the
     quality_gate op and the arithmetic hash split inside the spec
     engine; two shuffles total (dedup hash, final rollup)."""
-    prep(spark)
     from etl_framework_spark.pipeline import run_pipeline
 
     spec = {

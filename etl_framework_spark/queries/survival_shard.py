@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _CENSOR_TAIL_D = 2  # last-activity within this of corpus end = censored
 _N_SHARDS = 8
@@ -91,7 +90,6 @@ def events_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     over ≤31 rows however many users exist; censored users still
     shrink n_risk at their censor time. Ref: reference survival
     tests."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     life = ev.groupBy("user_id").agg(
         F.datediff(
@@ -196,7 +194,6 @@ def shard_rendezvous(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression work (ties → first index, identical both engines);
     the only shuffle is the final count. Ref: reference shard-router
     tests (cf. shard_manifest, train_split)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
 
     def hl(n: int):
@@ -280,7 +277,6 @@ def orders_backlog_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the status filter, which reaches the Parquet scan as a
     pushed predicate. Buckets carry a sort prefix so the report
     orders naturally. Ref: reference aging-report tests."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     asof = od.agg(F.max("o_orderdate").cast("date").alias("d"))
     open_o = (

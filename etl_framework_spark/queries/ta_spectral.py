@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.operators.rounding import q6
 
 _PI = repr(math.pi)
 _RSI_A = 1.0 / 14.0  # Wilder's smoothing constant
@@ -93,7 +93,6 @@ def ts_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integers, so both engines fold identical doubles and the
     result is bit-exact. Ref: reference indicator-op tests (cf.
     ts_ewma_irregular, ts_croston for the fold family)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("day")).agg(
         F.sum("l_quantity").alias("qty")
@@ -126,13 +125,12 @@ def ts_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
         fold(F.col("gv.g")).alias("ag"),
         fold(F.col("lv.l")).alias("al"),
     )
-    q = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return st.select(
         "n_diffs",
         "up_days",
-        q(F.col("ag")).alias("avg_gain"),
-        q(F.col("al")).alias("avg_loss"),
-        q(100.0 - 100.0 / (1.0 + F.col("ag") / F.col("al"))).alias("rsi"),
+        q6(F.col("ag")).alias("avg_gain"),
+        q6(F.col("al")).alias("avg_loss"),
+        q6(100.0 - 100.0 / (1.0 + F.col("ag") / F.col("al"))).alias("rsi"),
     )
 
 
@@ -183,7 +181,6 @@ def ts_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact scan collapses to |calendar| rows before any window. Ref:
     reference band-indicator tests (cf. win_moving_avg,
     events_anomaly for the z-score cousin)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("day")).agg(
         F.sum("l_quantity").cast("double").alias("x")
@@ -203,7 +200,6 @@ def ts_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sd"
         ),
     )
-    q = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     bw = 4 * F.col("sd") / F.col("mu")
     return b.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_days_eval"),
@@ -213,8 +209,8 @@ def ts_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("x") < F.col("mu") - 2 * F.col("sd"), 1).otherwise(0))
         .cast("bigint")
         .alias("n_below"),
-        q(F.avg(bw)).alias("avg_bandwidth"),
-        q(F.max(bw)).alias("max_bandwidth"),
+        q6(F.avg(bw)).alias("avg_bandwidth"),
+        q6(F.max(bw)).alias("max_bandwidth"),
     )
 
 
@@ -273,7 +269,6 @@ def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     before normalizing so both engines hit identical doubles. One
     trig aggregation over the |hours|×16 cross. Ref: reference
     spectral-probe tests."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     hourly = ev.groupBy(
         (F.unix_timestamp(F.date_trunc("hour", F.col("ts"))) / 3600)
@@ -315,12 +310,11 @@ def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             0.0
         )
     )
-    q = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return nrm.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_freqs"),
-        q(ent).alias("spectral_entropy"),
-        q(ent / math.log(float(_SE_K))).alias("spectral_entropy_norm"),
-        q(
+        q6(ent).alias("spectral_entropy"),
+        q6(ent / math.log(float(_SE_K))).alias("spectral_entropy_norm"),
+        q6(
             F.exp(F.avg(F.when(F.col("power") > 0, F.log(F.col("power")))))
             / F.avg("power")
         ).alias("spectral_flatness"),

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 _COS_MIN = 0.8
@@ -80,7 +79,6 @@ def llm_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plan, and norms join back from a per-doc rollup. Weights are
     tf·ln(N/df) from integer counts — the only float aggregation is
     the per-pair term sum (rounded at 6)."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     tf = (
         d.select(
@@ -195,7 +193,6 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical edge list), each triangle counted once per corner; the
     coefficient is an exact integer ratio, so bucket edges are
     deterministic on both engines."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     t = d.select(F.split("text", " ").alias("l")).filter(F.size("l") >= 2)
     prs = (

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.operators.rounding import q6
 
 _EOQ_S = 75.0  # ordering cost per order ($)
 _EOQ_H = 2.0  # holding cost per unit-year ($)
@@ -82,7 +82,6 @@ def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     the float revenue sums. Ref: reference inequality tests (cf.
     events_gini, events_lorenz_deciles — Theil adds the
     decomposition)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     cu = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     cust = (
@@ -111,14 +110,13 @@ def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             * F.log(F.col("tg") / F.col("t") * F.col("n") / F.col("ng"))
         ).alias("theil_between")
     )
-    q = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     j = tot.crossJoin(F.broadcast(th)).crossJoin(F.broadcast(btw))
     return j.select(
         F.col("n").cast("bigint").alias("n_customers"),
-        q(F.col("theil_total")).alias("theil_total"),
-        q(F.col("theil_between")).alias("theil_between"),
-        q(F.col("theil_total") - F.col("theil_between")).alias("theil_within"),
-        q(F.col("theil_between") / F.col("theil_total")).alias("between_share"),
+        q6(F.col("theil_total")).alias("theil_total"),
+        q6(F.col("theil_between")).alias("theil_between"),
+        q6(F.col("theil_total") - F.col("theil_between")).alias("theil_within"),
+        q6(F.col("theil_between") / F.col("theil_total")).alias("between_share"),
     )
 
 
@@ -169,7 +167,6 @@ def orders_eoq_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums → exact; ranking deterministic. Ref: reference inventory-
     op tests (cf. orders_dead_stock, events_peak_shaving for other
     what-ifs)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     d = (
         li.groupBy(F.col("l_partkey").alias("part"))
@@ -189,17 +186,16 @@ def orders_eoq_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cost_eoq = F.col("demand") / F.col("eoq") * _EOQ_S + F.col("eoq") / 2.0 * _EOQ_H
     c = e.withColumn("cost_current", cost_cur).withColumn("cost_eoq", cost_eoq)
-    q = lambda col: F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     sav = (F.col("cost_current") - F.col("cost_eoq")) / F.col("cost_current")
     return (
         c.select(
             F.col("part").cast("bigint").alias("p_partkey"),
             F.col("demand").cast("bigint").alias("annual_demand"),
-            q(F.col("avg_order_qty")).alias("avg_order_qty"),
-            q(F.col("eoq")).alias("eoq"),
-            q(F.col("cost_current")).alias("cost_current"),
-            q(F.col("cost_eoq")).alias("cost_eoq"),
-            q(sav).alias("savings_share"),
+            q6(F.col("avg_order_qty")).alias("avg_order_qty"),
+            q6(F.col("eoq")).alias("eoq"),
+            q6(F.col("cost_current")).alias("cost_current"),
+            q6(F.col("cost_eoq")).alias("cost_eoq"),
+            q6(sav).alias("savings_share"),
             sav.alias("_s"),
         )
         .orderBy(F.desc("_s"), "p_partkey")
@@ -259,7 +255,6 @@ def llm_doc_self_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vocabulary-bounded); integer counts → exact cosine. Ref:
     reference intra-doc probes (cf. llm_repetition for the
     redundancy axis — this is the coherence axis)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id",

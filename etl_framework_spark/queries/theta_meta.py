@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.operators.rounding import q6
 
 _SES_A = 0.3  # Theta-method SES smoothing constant
 
@@ -94,7 +94,6 @@ def ts_theta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
     forecasting op does it. One |months| rollup + one scalar fold →
     bit-exact. Ref: reference forecasting tests (cf. ts_holt — Theta
     beats it on M3-style series with stable trend)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     monthly = li.groupBy(
         F.date_trunc("month", F.col("l_shipdate").cast("date")).alias("m")
@@ -139,16 +138,15 @@ def ts_theta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda acc, x: x * al + acc * one_m_a,
     )
     ses = arr.select("a", "b", "n", ses_val.alias("z_ses"))
-    q = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return ses.select(
         F.col("n").cast("bigint").alias("n_months"),
-        q(F.col("a")).alias("trend_intercept"),
-        q(F.col("b")).alias("trend_slope"),
-        q(F.col("z_ses")).alias("theta_ses"),
-        q(
+        q6(F.col("a")).alias("trend_intercept"),
+        q6(F.col("b")).alias("trend_slope"),
+        q6(F.col("z_ses")).alias("theta_ses"),
+        q6(
             0.5 * F.col("z_ses") + 0.5 * (F.col("a") + F.col("b") * (F.col("n") + 1))
         ).alias("forecast_h1"),
-        q(
+        q6(
             0.5 * F.col("z_ses") + 0.5 * (F.col("a") + F.col("b") * (F.col("n") + 2))
         ).alias("forecast_h2"),
     )
@@ -203,7 +201,6 @@ def stats_welch_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bartlett gate, Welch fallback) triple and so do we. One moment
     rollup + k-row arithmetic, integer-exact. Ref: reference
     multi-group tests (cf. stats_anova, stats_ttest_welch for k=2)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     x = F.col("l_quantity").cast("double")
     g = li.groupBy(F.col("l_returnflag").alias("flag")).agg(
@@ -314,7 +311,6 @@ def stats_meta_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     pooling touches k rows. Integer sums → exact. Ref: reference
     meta-analytic tests (cf. stats_mantel_haenszel for the binary
     twin, stats_simpsons for why pooling blindly is dangerous)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     sup = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     base = li.join(sup, li.l_suppkey == sup.s_suppkey).select(

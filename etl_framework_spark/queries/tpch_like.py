@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import register_views, table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 # --------------------------------------------------------------------------
@@ -45,7 +44,6 @@ def q3_unshipped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: segment filter × date band × revenue agg ×
     top-k. Ranking uses the ROUNDED revenue + orderkey tiebreak so the
     top-10 set is engine-stable."""
-    prep(spark)
     c = table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     o = table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp")
@@ -90,7 +88,6 @@ def q3_unshipped(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q10_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: returned-lineitem revenue per customer,
     top-20 — fact-side filter first, dims broadcast."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     n = table(spark, sf_dir, "nation")
     o = table(spark, sf_dir, "orders").filter(
@@ -137,7 +134,6 @@ def q10_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q14_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: conditional revenue ratio over one quarter."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
@@ -176,7 +172,6 @@ def q14_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q19_brackets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: disjunction of conjunctive brackets across the
     join — Catalyst extracts the common join key and pushes residuals."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     p = table(spark, sf_dir, "part")
     j = li.join(p, li.l_partkey == p.p_partkey)
@@ -206,7 +201,6 @@ def q19_brackets(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def subq_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncorrelated scalar subquery, through spark.sql (E3)."""
-    prep(spark)
     register_views(spark, sf_dir)
     return spark.sql(
         """
@@ -227,7 +221,6 @@ def subq_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def subq_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN-subquery (rewritten to a semi join by Catalyst)."""
-    prep(spark)
     register_views(spark, sf_dir)
     return spark.sql(
         """
@@ -250,7 +243,6 @@ def subq_in(spark: SparkSession, sf_dir: str) -> DataFrame:
 def subq_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subquery: orders 50% above their customer's
     average — decorrelated by Catalyst into an aggregate + join."""
-    prep(spark)
     register_views(spark, sf_dir)
     return spark.sql(
         """
@@ -282,7 +274,6 @@ _Q2_SQL = """
 def q2_mincost(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: per-part minimum-acctbal supplier via a
     correlated MIN subquery (Catalyst decorrelates to agg + join)."""
-    prep(spark)
     register_views(spark, sf_dir)
     return spark.sql(_Q2_SQL)
 
@@ -301,7 +292,6 @@ _Q11_SQL = """
 @query("q11_threshold", oracle=_Q11_SQL)
 def q11_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape: HAVING against a global-scalar subquery."""
-    prep(spark)
     register_views(spark, sf_dir)
     return spark.sql(_Q11_SQL)
 
@@ -327,6 +317,5 @@ def q22_noorders(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT EXISTS (anti join) + group aggregation. (Every customer has
     at least one order in this testdata, so the anti-join predicate
     is on big orders rather than order existence.)"""
-    prep(spark)
     register_views(spark, sf_dir)
     return spark.sql(_Q22_SQL)

@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import sql_over_views, table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 # --------------------------------------------------------------------------
@@ -77,7 +76,6 @@ def q4_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q5_local(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: six-table join where customer and supplier must
     share a nation; region filter prunes through two broadcast dims."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     o = table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -122,7 +120,6 @@ def q5_local(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q6_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: every predicate pushes to the parquet scan; the
     whole query is one scan + one partial/final agg, zero joins."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     return li.filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
@@ -162,7 +159,6 @@ def q6_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q7_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: bidirectional nation-pair trade volume per ship
     year; both nation dims broadcast, disjunctive pair predicate."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
@@ -275,7 +271,6 @@ def q9_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q12_priority_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape (shipmode → linestatus): conditional counts of
     urgent vs non-urgent orders per group over a ship-year band."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))

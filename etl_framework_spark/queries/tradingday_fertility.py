@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.textops import BPE_PATTERN
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.operators.rounding import q6
 
 
 # --------------------------------------------------------------------------
@@ -69,7 +69,6 @@ def sales_trading_day_adjusted(spark: SparkSession, sf_dir: str) -> DataFrame:
     day expansion. Ref: reference calendar-adjustment tests (cf.
     sales_fiscal_445 for the retail-calendar fix, cal_densify for
     the calendar primitive)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     m = (
         li.filter(F.year(F.col("l_shipdate").cast("date")) == 1995)
@@ -129,7 +128,6 @@ def llm_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts per row, one rollup; integer counts → exact. Ref:
     reference tokenizer-cost tests (cf. llm_token_length_hist for
     the distribution, train_mix_cap_waterfill for the consumer)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     d = docs.select(
         "source",
@@ -139,14 +137,13 @@ def llm_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n_bpe"),
         F.length("text").cast("double").alias("n_chars"),
     )
-    q = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return (
         d.groupBy("source")
         .agg(
             F.sum("n_ws").cast("bigint").alias("ws_tokens"),
             F.sum("n_bpe").cast("bigint").alias("bpe_tokens"),
-            q(F.sum("n_bpe") / F.sum("n_ws")).alias("fertility"),
-            q(F.sum("n_chars") / F.sum("n_bpe")).alias("chars_per_bpe_token"),
+            q6(F.sum("n_bpe") / F.sum("n_ws")).alias("fertility"),
+            q6(F.sum("n_chars") / F.sum("n_bpe")).alias("chars_per_bpe_token"),
         )
         .orderBy("source")
     )
@@ -197,7 +194,6 @@ def dq_date_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     per table. Ref: reference date-rule tests (cf.
     dq_temporal_sanity for cross-column order, dq_freshness for
     recency)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
     ev = table(spark, sf_dir, "events")

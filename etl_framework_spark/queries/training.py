@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 # Knuth's multiplicative hash constant; bucket space is 2^32 and the
 # train share is floor(0.9 * 2^32). doc_id * K stays far below int64
@@ -52,7 +51,6 @@ def train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 90/10 train/test split via multiplicative hashing
     of doc_id — reproducible across engines and partitionings, unlike
     seeded sampling. Returns the per-(lang, split) profile."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     bucket = (F.col("doc_id") * F.lit(_K)) % F.lit(_MOD)
     return (
@@ -95,7 +93,6 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     order per source; each lands in bin floor(prefix_tokens / 256).
     One window shuffle per source partition — no per-bin state, no
     driver loop — so packing 100 TB is one sort within partitions."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
@@ -135,7 +132,6 @@ def mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard rebalancing exponent): weight_i = n_i^0.5 / sum_j
     n_j^0.5. The denominator is a one-row aggregate broadcast to the
     (tiny) per-lang table."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     cnt = d.groupBy("lang").agg(F.count("*").alias("n"))
     tot = cnt.agg(F.sum(F.pow(F.col("n"), 0.5)).alias("t"))
@@ -178,7 +174,6 @@ def llm_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the shingle string — pairs materialize only on real n-gram
     collisions, never via all-pairs comparison; the per-doc DISTINCT
     keeps hot shingles from multiplying within a document."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     docs = d.select("doc_id", "source", F.split(F.col("text"), " ").alias("toks"))
     sh = (
@@ -236,7 +231,6 @@ def pack_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequences (doc_id order within each bin), not just bin stats —
     what the tokenizer shards consume. Same single window cumsum as
     pack_sequences plus one ordered string aggregation."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
@@ -295,7 +289,6 @@ def mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash as train_split — reproducible downsampling with no RNG, the
     way a 100 TB mixture is actually drawn (re-runs and retries keep
     the same rows)."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     expr = None
     for lang, r in _MIX_RATES.items():
@@ -338,7 +331,6 @@ def train_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartitionings. Per-group top-N rides WindowGroupLimit — partial
     limits apply map-side before the shuffle, so at 100 TB each
     partition forwards at most N rows per language."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     bucket = (F.col("doc_id") * F.lit(_K)) % F.lit(_MOD)
     w = Window.partitionBy("lang").orderBy(bucket, "doc_id")
@@ -374,7 +366,6 @@ def train_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     order) — the 'short docs first' schedule. ntile is a per-lang
     window (never a global sort); the rollup output is |langs|×4
     rows."""
-    prep(spark)
     d = table(spark, sf_dir, "documents")
     w = Window.partitionBy("lang").orderBy("n_chars", "doc_id")
     staged = d.select(
@@ -409,7 +400,6 @@ def mix_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle — each task expands its own partition; downstream shuffles
     see the already-weighted stream. Deterministic (no RNG), and
     copy_id lets later stages shuffle-salt repeated docs apart."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     n_rep = F.coalesce(
         *[
@@ -454,7 +444,6 @@ def llm_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer sharding). One sequence-explode per doc then pure array
     slicing — no shuffle at all; chunk counts scale with token volume,
     not document count, so a 100 TB corpus chunks in one map stage."""
-    prep(spark)
     from etl_framework_spark.operators.textops import tokens
 
     docs = table(spark, sf_dir, "documents")

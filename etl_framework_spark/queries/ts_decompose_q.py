@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 # --------------------------------------------------------------------------
@@ -59,7 +58,6 @@ def ts_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     = mean day-of-week residual, remainder = what's left. Two window
     passes in the per-type partition + one 7-row-per-type seasonal
     aggregate joined back (broadcast-sized at any corpus scale)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("day")
@@ -126,7 +124,6 @@ def ts_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     user's history. The running sum is a strict in-order prefix fold,
     so both engines accumulate in the same sequence; results rounded
     at the emit boundary."""
-    prep(spark)
     ev = table(spark, sf_dir, "events").withColumn(
         "tts", F.date_trunc("second", F.col("ts"))
     )

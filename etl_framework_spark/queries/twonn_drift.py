@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.similarity import anchor_knn
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.operators.rounding import q6
 
 _PH_DELTA = 0.0  # Page-Hinkley slack
 _PH_LAMBDA = 500.0  # alarm threshold (quantity units)
@@ -93,7 +93,6 @@ def llm_boilerplate_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     after one explode — no pair join anywhere. Ref: reference
     boilerplate-detection tests (cf. llm_winnowing,
     llm_prefix_dups)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id", "source", F.split(F.col("text"), " ").alias("l")
@@ -208,7 +207,6 @@ def vec_two_nn_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     modulus with N to pin M at 2-5k anchors), never O(N^2). Oracle
     samples identically, so parity stays exact. Ref: reference
     embedding-diagnostics tests."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     v = emb.select("vec_id", "embedding")
     # anchor matrix collected once (bounded), candidates stream through
@@ -298,7 +296,6 @@ def ts_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows over the |days| rollup — sequential and identical on
     both engines. Ref: reference drift-detection tests (cf. ts_cusum
     — PH adds the running-min reset that makes it one-sided)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     daily = li.groupBy(F.col("l_shipdate").cast("date").alias("day")).agg(
         F.sum("l_quantity").cast("double").alias("x")
@@ -312,10 +309,9 @@ def ts_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     ph = c.select(
         "day", (F.col("cum") - F.min("cum").over(wd)).alias("ph_t")
     )
-    q = lambda col: F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return ph.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        q(F.max("ph_t")).alias("max_ph"),
+        q6(F.max("ph_t")).alias("max_ph"),
         F.sum(F.when(F.col("ph_t") > _PH_LAMBDA, 1).otherwise(0))
         .cast("bigint")
         .alias("days_in_alarm"),

@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _TOPK = 10
 _SHARDS = 16
@@ -64,7 +63,6 @@ def topk_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     included. This is TakeOrderedAndProject's contract written out —
     at scale you shuffle k·shards rows, never the table. Ref:
     reference distributed-topk tests (cf. topk, win_topk_group)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     # sort key: ascending on (-price, orderkey, linenumber) == the
     # oracle's DESC price with ascending tie-breaks
@@ -154,7 +152,6 @@ def stats_mantel_haenszel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ONE conditional aggregation keyed by stratum; the pooling
     is two weighted sums over 5 rows. Ref: reference stratified-2x2
     tests."""
-    prep(spark)
     od = table(spark, sf_dir, "orders")
     exp_ = F.col("o_totalprice") > _BIG
     out = F.col("o_orderstatus") == "F"
@@ -229,7 +226,6 @@ def llm_charclass_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-language rollup. Integer counts → exact shares. Ref:
     reference charset-filter tests (cf. llm_char_entropy,
     llm_text_stats)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents").filter(F.length("text") > 0)
 
     def stripped(pat: str):

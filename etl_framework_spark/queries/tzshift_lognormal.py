@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _CHI2_23_95 = 35.17246162690805
 
@@ -88,7 +87,6 @@ def dq_tz_shift_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     worst-shifted hour's share delta rides along for triage. One
     rollup, 48 cells of arithmetic. Ref: reference clock-audit tests
     (cf. dq_freshness, events_hour_dow_profile)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     e = ev.select(
         F.hour("ts").alias("hr"),
@@ -174,7 +172,6 @@ def events_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     as llm_entropy_rate on a 5-state chain. Ref: reference
     sequence-predictability tests (cf. events_markov,
     events_markov_stationary)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     wo = W.partitionBy("user_id").orderBy(
         F.date_trunc("second", F.col("ts")), "event_id"
@@ -255,7 +252,6 @@ def llm_length_lognormal_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     assumption will misbudget. One moments+quantile rollup; the
     9-point check is a fold over the decile array. Ref: reference
     distribution-fit tests (cf. llm_length_hist, llm_zipf_fit)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
     lx = docs.select(
         F.col("n_chars").cast("double").alias("x"),

@@ -21,7 +21,6 @@ from pyspark.sql.types import DoubleType
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 # --------------------------------------------------------------------------
@@ -39,8 +38,6 @@ from etl_framework_spark.session import prep
 def udf_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-at-a-time UDF (X1): chars-per-token density. Same formula
     as the oracle; row UDFs serialize per value — parity surface only."""
-    prep(spark)
-
     @F.udf(DoubleType())
     def density(n_chars: int, text: str) -> float:
         return round(n_chars / (1 + len(text.split(" "))), 6)
@@ -62,8 +59,6 @@ def udf_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 def udf_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pandas UDF (X2): Arrow-batched numpy kernel — the default
     Python path at scale (~10-100× over X1)."""
-    prep(spark)
-
     @F.pandas_udf(DoubleType())
     def scaled(v: pd.Series) -> pd.Series:
         return pd.Series(np.round(np.log1p(v.to_numpy()) * 2, 6))
@@ -87,8 +82,6 @@ def udf_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
 def udf_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped-map UDF (X3): per-language pandas rank (method='min'
     == SQL RANK). One shuffle on the group key, Arrow both ways."""
-    prep(spark)
-
     def rank_group(pdf: pd.DataFrame) -> pd.DataFrame:
         out = pdf[["doc_id", "lang"]].copy()
         out["rnk"] = pdf["n_chars"].rank(method="min").astype("int64")
@@ -113,8 +106,6 @@ def udf_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
 def udaf_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom aggregate (X4): geometric mean. The kernel sorts before
     accumulating so the float result is partition-order invariant."""
-    prep(spark)
-
     @F.pandas_udf(DoubleType())
     def geomean(v: pd.Series) -> float:
         logs = np.sort(np.log(v.to_numpy()))
@@ -141,7 +132,6 @@ def udaf_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
 def udtf_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Table function (X5): one doc → one row per token with position
     (posexplode ↔ zipped unnest in the oracle)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     return docs.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "token")
@@ -153,7 +143,6 @@ def udtf_python(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native Python UDTF (X5 ⛔): lateral-join a table function that
     emits (n_tokens, n_chars) per document — API-surface coverage for
     Spark 4's @udtf; deterministic, rows-only checked."""
-    prep(spark)
     from pyspark.sql.functions import udtf
 
     @udtf(returnType="n_tokens int, n_chars int")
@@ -189,7 +178,6 @@ def udf_pandas_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     coefficients applied vectorized."""
     from pyspark.sql.functions import pandas_udf
 
-    prep(spark)
 
     @pandas_udf("double")
     def est_tokens(it: Iterator[Tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
@@ -224,7 +212,6 @@ def udf_arrow_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     pyarrow RecordBatches — no pandas conversion at all, the cheapest
     Python hook Spark offers. Byte/word counts computed with Arrow
     compute kernels (C++, vectorized)."""
-    prep(spark)
     import pyarrow as pa
     import pyarrow.compute as pc
 

@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 # rich set = nodes with degree above the mean (data-adaptive threshold)
 
@@ -94,7 +93,6 @@ def events_qini_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     One user rollup + 10-row windows; integer counts → exact. Ref:
     reference uplift-eval tests (cf. events_ab_test for the global
     z, stats_cuped for variance reduction)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     u = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("activity"),
@@ -226,7 +224,6 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph-topology tests (cf. graph_assortativity — rich-club is its
     tail-focused sibling, positive ratio can coexist with negative
     global assortativity)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     t = docs.select(F.split(F.col("text"), " ").alias("l")).filter(
         F.size("l") >= 2
@@ -321,7 +318,6 @@ def fn_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     here so the parity test enforces it). Pure row-local
     expressions, pushed-down key filter. Ref: reference
     string-function coverage (cf. fn_string, fn_string2, fn_url)."""
-    prep(spark)
     pt = table(spark, sf_dir, "part").filter(F.col("p_partkey") <= 200)
     return pt.select(
         "p_partkey",

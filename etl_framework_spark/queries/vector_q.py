@@ -329,7 +329,6 @@ def llm_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1 vs the per-pair JVM fold self-join, same rows). Labels too
     hot for one task belong in the LSH/IVF paths (llm_sim_ann /
     llm_sim_ivf) — blocking is the distribution unit either way."""
-    prep(spark)
     from etl_framework_spark.operators.similarity import blocked_cosine_pairs
 
     emb = table(spark, sf_dir, "embeddings").select(
@@ -359,7 +358,6 @@ def llm_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 def llm_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid (L7): posexplode to (label, dim, val), then
     an ordinary A1 hash agg — 640 groups regardless of corpus size."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     ex = emb.select("label", F.posexplode("embedding").alias("dim", "val"))
     return (
@@ -388,7 +386,6 @@ def llm_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def llm_embed_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector L2 norm (L7): strict-fold sum of squares, rounded."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     from etl_framework_spark.operators.similarity import l2_norm
 

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators import guarded
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.operators.rounding import q6
 
 
 # --------------------------------------------------------------------------
@@ -80,7 +80,6 @@ def fn_vector_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_* operator builds from, proven once as a function-family
     key. Ref: reference vector-function coverage (cf. fn_array2 for
     generic arrays, llm_sim_topk for the consumer)."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 20)
     e = emb.select(
         "vec_id",
@@ -104,14 +103,13 @@ def fn_vector_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.zip_with(F.col("va"), F.col("vb"), lambda x, y: (x + y) * (x + y))
     )
     axpy = fold(F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y * 2.0))
-    q = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return p.select(
         "vec_id",
-        q(dot).alias("dot"),
-        q(l2a).alias("l2_norm"),
-        q(l1a).alias("l1_norm"),
-        q(sumsq).alias("l2sq_of_sum"),
-        q(sumsq - axpy).alias("parallelogram_residual"),
+        q6(dot).alias("dot"),
+        q6(l2a).alias("l2_norm"),
+        q6(l1a).alias("l1_norm"),
+        q6(sumsq).alias("l2sq_of_sum"),
+        q6(sumsq - axpy).alias("parallelogram_residual"),
     ).orderBy("vec_id")
 
 
@@ -161,7 +159,6 @@ def vec_source_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     across modalities on doc_id = vec_id. Ref: reference
     corpus-diversity tests (cf. llm_semdedup for the removal
     consumer)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents").select("doc_id", "source")
     emb = table(spark, sf_dir, "embeddings")
     j = docs.join(
@@ -178,12 +175,11 @@ def vec_source_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = j.groupBy("source").agg(F.count(F.lit(1)).cast("double").alias("n"))
     out = per_src.join(cnt, "source")
     mpc = (F.col("sum_vec_sq") - F.col("n")) / (F.col("n") * (F.col("n") - 1))
-    q = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     return out.select(
         "source",
         F.col("n").cast("bigint").alias("n_vecs"),
-        q(mpc).alias("mean_pairwise_cosine"),
-        q(1.0 - mpc).alias("diversity"),
+        q6(mpc).alias("mean_pairwise_cosine"),
+        q6(1.0 - mpc).alias("diversity"),
     ).orderBy("source")
 
 
@@ -231,7 +227,6 @@ def stats_benford_second(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself the correct reading: this data is not a natural
     multiplicative process. Ref: reference forensic-digit tests
     (cf. stats_benford for the first digit)."""
-    prep(spark)
     od = table(spark, sf_dir, "orders").filter(F.col("o_totalprice") >= 10)
     d = od.select(
         F.substring(
@@ -254,12 +249,11 @@ def stats_benford_second(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     exp = guarded.local_frame(spark, exp_rows, "d2 bigint, p_exp double")
     out = exp.join(g, "d2", "left").crossJoin(F.broadcast(tot))
-    q = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     obs = F.coalesce(F.col("n"), F.lit(0.0)) / F.col("t")
     return out.select(
         F.col("d2").alias("second_digit"),
         F.coalesce(F.col("n"), F.lit(0.0)).cast("bigint").alias("n_obs"),
-        q(obs).alias("observed_share"),
-        q(F.col("p_exp")).alias("benford_share"),
-        q(obs - F.col("p_exp")).alias("deviation"),
+        q6(obs).alias("observed_share"),
+        q6(F.col("p_exp")).alias("benford_share"),
+        q6(obs - F.col("p_exp")).alias("deviation"),
     ).orderBy("second_digit")

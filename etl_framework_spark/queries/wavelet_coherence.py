@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 _DECAYS = [0.3, 0.5, 0.7]
 _TC_TOP = 5  # tokens per source pseudo-topic
@@ -102,7 +101,6 @@ def events_adstock_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the null check. Ref: reference marketing-response tests (cf.
     events_attribution for credit assignment, ts_ewma_irregular for
     the fold family)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         F.date_trunc("day", F.date_trunc("second", F.col("ts")))
@@ -224,7 +222,6 @@ def llm_topic_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic logs. Ref: reference topic-quality tests (cf.
     llm_pmi for the global pair view, llm_distinctive_ngrams for
     the contrastive one)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     dt = docs.select(
         "source",
@@ -327,7 +324,6 @@ def ts_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollups of the |days| series; integer sums → deterministic
     means. Ref: reference multi-scale tests (cf. ts_m4_downsample
     for the rendering twin)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     daily = li.groupBy(
         F.datediff(

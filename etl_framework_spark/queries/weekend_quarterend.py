@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.operators.rounding import q6
 
 
 # --------------------------------------------------------------------------
@@ -79,7 +79,6 @@ def sales_weekend_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     here because DuckDB and Spark both use numerically-stable
     single-pass variance over identical integer inputs — verified by
     the oracle gate itself."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     wknd = F.when(
         F.dayofweek(F.col("l_shipdate").cast("date")).isin(1, 7), 1
@@ -105,7 +104,6 @@ def sales_weekend_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.when(F.col("wknd") == 0, F.col("vq"))).alias("v0"),
         F.max(F.when(F.col("wknd") == 0, F.col("mup"))).alias("p0"),
     )
-    q6 = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     q4 = lambda c: F.floor(c * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)
     gap = F.col("q1") - F.col("q0")
     z = gap / F.sqrt(F.col("v1") / F.col("n1") + F.col("v0") / F.col("n0"))
@@ -151,7 +149,6 @@ def dq_modality_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     store must run after each ingestion batch. Ref: reference
     referential tests (cf. dq_fk_orphans for the relational
     analogue, vec_label_text_alignment for the semantic layer)."""
-    prep(spark)
     # ONE declarative plan (VERDICT r6 item 3 — this key was four
     # driver-side .count() actions + createDataFrame): pre-aggregate
     # each side by id (dup-safe — reproduces the oracle's EXISTS
@@ -240,7 +237,6 @@ def sales_quarter_end_loading(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan + three sums. Ref: reference fiscal-behavior tests (cf.
     sales_fiscal_445 for the calendar, ts_day_of_month_effect for
     the month-level analogue)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     qtr = F.date_trunc("quarter", F.col("l_shipdate").cast("date"))
     q_end = F.add_months(qtr.cast("date"), 3)
@@ -260,7 +256,6 @@ def sales_quarter_end_loading(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.avg(7.0 / F.col("q_days")).alias("uniform_share"),
     )
-    q6 = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
     q4 = lambda c: F.floor(c * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)
     return g.select(
         F.round("total", 2).alias("total_revenue"),

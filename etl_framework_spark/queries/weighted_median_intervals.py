@@ -23,7 +23,6 @@ from pyspark.sql.window import Window as W
 from etl_framework_spark.cacheutil import persist_tracked
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 # Each event opens a 30-minute activity interval; overlaps merge.
 _IV_MINUTES = 30
@@ -77,7 +76,6 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark has no built-in for them; here it is one cumulative window
     inside each nation's partition — exact decimal weights, no float
     cut-point ambiguity. Mean shown for the skew contrast."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
     n = table(spark, sf_dir, "nation")
@@ -176,7 +174,6 @@ def ts_interval_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     wall-clock seconds (double-counting removed — what naive
     per-event summing gets wrong), and the longest stretch. All
     arithmetic on exact epoch integers."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     iv = ev.select(
         "user_id",

@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 _AUDIT_LO, _AUDIT_HI = 0.02, 0.85  # borderline similarity band
@@ -86,7 +85,6 @@ def stats_weighted_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     group. Ref: reference weighted-inference tests (cf.
     train_ess_weights for the diagnostic, stats_ttest_welch for the
     unweighted form)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag").isin("R", "N")
     )
@@ -196,7 +194,6 @@ def llm_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact. Ref: reference pipeline-retention tests (cf.
     llm_quality_filter for one stage, pipeline_curation for the
     executable pipeline)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     from pyspark.sql import Window as W
 
@@ -294,7 +291,6 @@ def llm_dedup_audit_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit-sampling tests (cf. llm_dedup_threshold_sweep for the
     aggregate view, sample_hash_topk for the hash-sampling
     primitive)."""
-    prep(spark)
     from etl_framework_spark.operators.dedup import shingles3
 
     docs = table(spark, sf_dir, "documents")

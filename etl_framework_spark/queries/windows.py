@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
 
 
 def _events_tts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -50,7 +49,6 @@ def _events_tts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def win_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranking family (W1). row_number/ntile need the total order;
     rank/dense_rank/percent_rank are deterministic under ties."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     w_total = W.partitionBy("o_orderstatus").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")
@@ -84,7 +82,6 @@ def win_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def win_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Analytic offsets (W2) over per-user event time."""
-    prep(spark)
     ev = _events_tts(spark, sf_dir)
     w = W.partitionBy("user_id").orderBy("tts", "event_id")
     return ev.select(
@@ -114,7 +111,6 @@ def win_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
 def win_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative sum/count (W3). Rounded: DuckDB's segment-tree window
     aggregation associates float adds differently than Spark's."""
-    prep(spark)
     ev = _events_tts(spark, sf_dir)
     w = (
         W.partitionBy("user_id")
@@ -145,7 +141,6 @@ def win_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def win_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Moving average over the previous 7 rows (W4)."""
-    prep(spark)
     ev = _events_tts(spark, sf_dir)
     w = W.partitionBy("user_id").orderBy("tts", "event_id").rowsBetween(-6, 0)
     return ev.select(
@@ -175,7 +170,6 @@ def win_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-based range frame (W5): trailing 1-hour sum per user.
     RANGE frames are order-insensitive within equal keys, so no
     tiebreak is needed — the frame is defined by the time value."""
-    prep(spark)
     ev = _events_tts(spark, sf_dir).withColumn("tsec", F.col("tts").cast("long"))
     w = W.partitionBy("user_id").orderBy("tsec").rangeBetween(-3600, 0)
     return ev.select(
@@ -205,7 +199,6 @@ def win_topk_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: one shuffle on the group key; Spark pushes a per-key
     rank limit into the sort (WindowGroupLimit) so partitions never
     materialize more than k rows per key."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     w = W.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
     return (

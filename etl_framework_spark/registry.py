@@ -12,8 +12,11 @@ events.ts (ns in parquet) before exposing/comparing.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from typing import Any
+
+from etl_framework_spark.session import prep
 
 QUERIES: dict[str, Callable[..., Any]] = {}
 ORACLES: dict[str, str] = {}
@@ -21,6 +24,12 @@ ORACLES: dict[str, str] = {}
 
 def query(key: str, oracle: str | None = None) -> Callable:
     """Register ``fn(spark, sf_dir) -> DataFrame`` under ``key``.
+
+    The registered callable runs ``session.prep(spark)`` before ``fn``,
+    so every key normalizes the session it is handed (UTC, AQE, shuffle
+    sizing) and a key body never calls ``prep`` itself. The decorator
+    returns that same wrapper, so a key that calls another key directly
+    gets the same treatment.
 
     ``oracle`` is the equivalent DuckDB SQL (ANSI, over the
     pre-registered views); omit for non-SQL-expressible ops —
@@ -30,10 +39,16 @@ def query(key: str, oracle: str | None = None) -> Callable:
     def deco(fn: Callable) -> Callable:
         if key in QUERIES:
             raise ValueError(f"duplicate query key {key!r}")
-        QUERIES[key] = fn
+
+        @functools.wraps(fn)
+        def prepped(spark, *args, **kwargs):
+            prep(spark)
+            return fn(spark, *args, **kwargs)
+
+        QUERIES[key] = prepped
         if oracle is not None:
             ORACLES[key] = " ".join(oracle.split())
-        return fn
+        return prepped
 
     return deco
 

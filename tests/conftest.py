@@ -7,7 +7,8 @@ from pathlib import Path
 import pytest
 
 # the checkout this conftest sits in, so pytest tests its own package
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 SF_SMALL = "/root/testdata/sf0.001"
 

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.plans import explain_str
-from tests.conftest import SF_SMALL
+from tests.conftest import ROOT, SF_SMALL
 
 
 @pytest.fixture(scope="module")
@@ -21,8 +21,9 @@ def bucketed_tables(spark):
     spark.sql("DROP TABLE IF EXISTS b_lineitem")
     # the in-memory catalog forgets tables between sessions but the
     # managed locations persist — clear them or saveAsTable refuses
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     for t in ("b_orders", "b_lineitem"):
-        shutil.rmtree(f"/root/repo/spark-warehouse/{t}", ignore_errors=True)
+        shutil.rmtree(f"{warehouse}/{t}", ignore_errors=True)
     (
         table(spark, SF_SMALL, "orders")
         .write.mode("overwrite")
@@ -89,7 +90,7 @@ def test_foreach_batch_sink(spark):
 
     # unique checkpoint per run: a reused checkpoint makes AvailableNow
     # see zero new files and deliver zero batches
-    ckpt = f"/root/repo/.scratch/fb_ckpt_{uuid.uuid4().hex[:8]}"
+    ckpt = f"{ROOT}/.scratch/fb_ckpt_{uuid.uuid4().hex[:8]}"
     q = (
         events_stream(spark, SF_SMALL)
         .writeStream.foreachBatch(sink)

@@ -14,8 +14,9 @@ import re
 from pyspark import StorageLevel
 
 from etl_framework_spark import cacheutil
+from tests.conftest import ROOT
 
-PKG = pathlib.Path("/root/repo/etl_framework_spark")
+PKG = ROOT / "etl_framework_spark"
 
 
 def test_persist_tracked_registers_and_releases(spark):

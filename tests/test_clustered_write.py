@@ -10,9 +10,10 @@ import glob
 import pyarrow.parquet as pq
 
 from etl_framework_spark.sources.readers import read_source, write_sink
+from tests.conftest import ROOT
 
 SF = "/root/testdata/sf0.001"
-SCRATCH = "/root/repo/.scratch/test_clustered"
+SCRATCH = f"{ROOT}/.scratch/test_clustered"
 
 
 def _file_ranges(path_glob: str, column: str) -> list[tuple]:

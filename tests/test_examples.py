@@ -6,9 +6,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_framework_spark.pipeline import load_spec, run_pipeline_file
+from etl_framework_spark.pipeline import load_spec, run_pipeline, run_pipeline_file
+from tests.conftest import ROOT
 
-EXAMPLES = "/root/repo/examples"
+EXAMPLES = f"{ROOT}/examples"
 
 
 def test_yaml_star_join_job(spark):
@@ -82,8 +83,9 @@ def test_load_spec_rejects_non_mapping(tmp_path):
         assert "mapping" in str(e)
 
 
-def test_json_docstore_export_job(spark):
-    rel = run_pipeline_file(spark, "/root/repo/examples/docstore_export.json")
+def test_json_docstore_export_job(spark, tmp_path):
+    spec = load_spec(f"{EXAMPLES}/docstore_export.json")
+    rel = run_pipeline(spark, spec, params={"out_dir": str(tmp_path)})
     assert rel["checked"].columns == ["doc_id", "text", "meta"]
 
     # docstore sink is readable back through the connector and kept
@@ -92,7 +94,7 @@ def test_json_docstore_export_job(spark):
 
     back = read_source(
         spark,
-        {"format": "docstore", "path": "/root/repo/.scratch/example_docstore_out"},
+        {"format": "docstore", "path": f"{tmp_path}/example_docstore_out"},
     )
     assert back.count() == rel["gated"].count()
     assert back.filter(F.col("meta").contains('"lang"')).count() == back.count()
@@ -100,7 +102,7 @@ def test_json_docstore_export_job(spark):
     # clustered parquet sink round-trips
     clustered = read_source(
         spark,
-        {"format": "parquet", "path": "/root/repo/.scratch/example_docs_clustered"},
+        {"format": "parquet", "path": f"{tmp_path}/example_docs_clustered"},
     )
     assert clustered.count() == rel["gated"].count()
 

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import __spark_entry__ as ent
+from etl_framework_spark.catalog import table
 from tests.conftest import SF_SMALL
 
 
@@ -33,9 +34,7 @@ def test_hamming_agrees_with_cosine_direction(spark):
     top1 = {r.qid: r.vid for r in rows if r.rnk == 1}
     emb = {
         r.vec_id: r.embedding
-        for r in ent.queries()["scan_parquet"].__globals__["table"](
-            spark, SF_SMALL, "embeddings"
-        ).collect()
+        for r in table(spark, SF_SMALL, "embeddings").collect()
     }
 
     def cos(a, b):

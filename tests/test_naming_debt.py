@@ -12,7 +12,9 @@ import ast
 import os
 import re
 
-QDIR = "/root/repo/etl_framework_spark/queries"
+from tests.conftest import ROOT
+
+QDIR = str(ROOT / "etl_framework_spark" / "queries")
 
 
 def _modules() -> list[str]:
@@ -71,7 +73,7 @@ def test_coverage_md_cites_no_extras_modules() -> None:
     """COVERAGE.md's Where column must cite the thematic names — the
     rename is pointless if the judge-facing inventory still points at
     deleted extrasN paths."""
-    text = open("/root/repo/COVERAGE.md").read()
+    text = open(ROOT / "COVERAGE.md").read()
     stale = sorted(set(re.findall(r"extras\d+", text)))
     assert not stale, f"COVERAGE.md cites retired modules: {stale}"
 

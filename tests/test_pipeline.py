@@ -10,9 +10,9 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.pipeline import Pipeline, run_pipeline
 from etl_framework_spark.sources import read_source, write_sink
-from tests.conftest import SF_SMALL
+from tests.conftest import ROOT, SF_SMALL
 
-SCRATCH = "/root/repo/.scratch/test_pipeline"
+SCRATCH = f"{ROOT}/.scratch/test_pipeline"
 
 
 def test_spec_validation_unknown_op():

@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import pytest
 
-SCRATCH = "/root/repo/.scratch/test_quality"
+from tests.conftest import ROOT
+
+SCRATCH = f"{ROOT}/.scratch/test_quality"
 
 DOCS = [
     # (doc_id, text, lang, source, n_chars)

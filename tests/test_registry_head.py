@@ -24,6 +24,7 @@ from etl_framework_spark.registry import (
     driver_recorded_keys,
     rotation_slots,
 )
+from tests.conftest import ROOT
 
 # The canonical pinned head: every SURVEY §2 family (S/P/J/O/U/A/W/F/
 # T/X/L) represented, every key carrying an exact DuckDB oracle.
@@ -108,7 +109,7 @@ def test_readme_counts_match_registry() -> None:
     (ADVICE r5: stale counts shipped twice). The claim line is
     '(current: N contract keys / M exact oracles)'."""
     n_keys, n_oracles = _headline_counts()
-    with open("/root/repo/README.md") as f:
+    with open(ROOT / "README.md") as f:
         readme = f.read()
     assert f"{n_keys} contract keys / {n_oracles} exact oracles" in readme, (
         f"README count line stale: registry has {n_keys} keys / "
@@ -123,7 +124,7 @@ def test_coverage_md_counts_match_registry() -> None:
     (r8 item 2) its rows-only sentence must equal n_keys − n_oracles
     and its arithmetic line must spell out the same subtraction."""
     n_keys, n_oracles = _headline_counts()
-    with open("/root/repo/COVERAGE.md") as f:
+    with open(ROOT / "COVERAGE.md") as f:
         cov = f.read()
     assert f"{n_keys} contract keys / {n_oracles} exact oracles" in cov, (
         f"COVERAGE.md count line stale: registry has {n_keys} keys / "
@@ -178,7 +179,7 @@ def _committed_record_names() -> list[str]:
     import subprocess
 
     out = subprocess.run(
-        ["git", "-C", "/root/repo", "ls-tree", "HEAD", "--name-only"],
+        ["git", "-C", str(ROOT), "ls-tree", "HEAD", "--name-only"],
         capture_output=True,
         text=True,
         timeout=10,
@@ -198,7 +199,7 @@ def test_rotation_disjoint_from_all_committed_records() -> None:
 
     recorded: set[str] = set()
     for name in sorted(_committed_record_names()):
-        with open(f"/root/repo/{name}") as fh:
+        with open(ROOT / name) as fh:
             recorded.update(json.load(fh).keys())
     fresh_pool = [
         k for k in QUERIES
@@ -224,7 +225,7 @@ def test_untracked_record_keys_equal_current_head() -> None:
 
     committed = set(_committed_record_names())
     head = set(list(QUERIES)[:50])
-    for f in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for f in sorted(glob.glob(str(ROOT / "CORRECTNESS_r*.json"))):
         name = os.path.basename(f)
         if name in committed:
             continue

@@ -12,10 +12,12 @@ import importlib.util
 import json
 import sys
 
+from tests.conftest import ROOT
+
 
 def _load():
     spec = importlib.util.spec_from_file_location(
-        "scale_probe", "/root/repo/tools/scale_probe.py"
+        "scale_probe", ROOT / "tools" / "scale_probe.py"
     )
     mod = importlib.util.module_from_spec(spec)
     sys.modules["scale_probe"] = mod

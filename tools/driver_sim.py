@@ -13,8 +13,10 @@ from __future__ import annotations
 
 import argparse
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout this tool sits in, so it checks its own package
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 # events-backed keys exercise the ns-timestamp path; the rest of the
 # defaults cover each query-family module once.
@@ -37,8 +39,9 @@ def main() -> int:
     ap.add_argument(
         "--all-counts",
         action="store_true",
-        help="also .count() every registered query (slower, catches "
-        "prep()-omission crashes everywhere)",
+        help="also .count() every registered query on the bare session "
+        "(slower; catches any key that needs more than the session prep "
+        "registry.query runs)",
     )
     args = ap.parse_args()
 

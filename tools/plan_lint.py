@@ -32,8 +32,10 @@ from __future__ import annotations
 import argparse
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout this tool sits in, so it checks its own package
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 # Keys whose semantics legitimately need the flagged construct.
 ALLOW = {
