@@ -15,6 +15,7 @@ from __future__ import annotations
 from collections.abc import Iterable
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -52,8 +53,9 @@ def local_frame(
     return spark.createDataFrame(table, struct)
 
 
-def as_matrix(col: pa.ChunkedArray) -> np.ndarray:
-    """A column of equal-length numeric lists as a float64 (rows, dims)
-    array; ragged, null or empty input raises. float32 widens to
-    float64 exactly, so values equal a per-row rebuild bit for bit."""
+def as_matrix(col: pa.ChunkedArray | pd.Series) -> np.ndarray:
+    """A column (Arrow, or the pandas Series an Arrow kernel receives)
+    of equal-length numeric lists as a float64 (rows, dims) array;
+    ragged, null or empty input raises. float32 widens to float64
+    exactly, so values equal a per-row rebuild bit for bit."""
     return np.stack(col.to_numpy()).astype(np.float64)

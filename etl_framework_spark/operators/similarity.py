@@ -1,14 +1,26 @@
 """Vector similarity primitives (SURVEY.md §2.11 L3/L7).
 
-The folds are written as strict left-to-right float64 accumulation so
-the DuckDB oracle (list_reduce over the same element order) produces
-bit-identical results: 0.0 + p1 == p1 in IEEE-754, and every
-subsequent add associates identically. Rounding at the query edge is
-belt-and-braces only.
+Every embedding key with an exact oracle gets its bits from the folds
+here. Each fold is one float64 accumulation that starts at 0.0 and adds
+one dimension at a time, written three times, once per engine:
 
-Scale path: these JVM higher-order functions vectorize per row and
-need no shuffle; for massive ANN fan-out use `lsh_buckets` to turn
-the O(n·m) scan into bucket-local joins.
+==================  ===============  ===============  ===============
+fold                Spark Column     DuckDB SQL       numpy
+==================  ===============  ===============  ===============
+dot product         ``dot_fold``     ``DUCK_DOT``     ``fold_dots``
+L2 norm             ``l2_norm``      ``DUCK_NORM``    ``fold_norms``
+squared distance    ``sqdist_fold``  ``duck_sqdist``  ``fold_sqdist``
+6-dp quantizer      —                ``duck_q6``      ``np_q6``
+==================  ===============  ===============  ===============
+
+The three twins run the same IEEE-754 adds in the same order, so they
+give the same bits: DuckDB's ``list_reduce`` starts from the first
+element, and 0.0 + p1 == p1. The quantizer has no JVM twin because the
+exact keys quantize inside their numpy kernels.
+
+Scale path: the JVM higher-order functions vectorize per row and need
+no shuffle; for massive ANN fan-out use `lsh_buckets` to turn the
+O(n·m) scan into bucket-local joins.
 """
 
 from __future__ import annotations
@@ -34,6 +46,18 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(sq, F.lit(0.0), lambda acc, x: acc + x))
 
 
+def sqdist_fold(a: Column, b: Column) -> Column:
+    """Strict sequential squared-Euclidean distance, in float64. (An
+    unrolled element_at(1..64) variant was measured 13× SLOWER at
+    sf0.1: the giant expression trees blow past codegen method limits
+    and fall back to per-pair interpretation — see SCALE.md.)"""
+    diffs = F.zip_with(
+        a, b, lambda x, y: (x.cast("double") - y.cast("double"))
+        * (x.cast("double") - y.cast("double"))
+    )
+    return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
+
+
 def cosine(a: Column, b: Column) -> Column:
     return dot_fold(a, b) / (l2_norm(a) * l2_norm(b))
 
@@ -55,6 +79,56 @@ def duck_cosine(a: str, b: str) -> str:
     na = DUCK_NORM.format(a=a)
     nb = DUCK_NORM.format(a=b)
     return f"({dot}) / (({na}) * ({nb}))"
+
+
+def duck_sqdist(a: str, b: str, dim: int) -> str:
+    return (
+        f"list_reduce(list_transform(generate_series(1, {dim}),"
+        f" i -> (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))"
+        f" * (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))), (x, y) -> x + y)"
+    )
+
+
+def duck_q6(expr: str) -> str:
+    """Sign-aware half-away-from-zero quantization to 6 dp, written as
+    pure double arithmetic (trunc/sign/×1e6) so DuckDB and numpy
+    produce identical bits — unlike round(), whose decimal-string
+    path has no cheap numpy twin."""
+    return f"trunc(({expr}) * 1e6 + sign({expr}) * 0.5) / 1e6"
+
+
+# numpy twins. A and B are float64 (rows, dims) matrices; the loops run
+# over dimensions and vectorize across rows, so each element sees the
+# same adds, in the same order, as the JVM and DuckDB folds.
+def fold_dots(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """(rows of A × rows of B) dot products, like ``dot_fold``."""
+    S = np.zeros((A.shape[0], B.shape[0]))
+    for d in range(A.shape[1]):
+        S += A[:, d, None] * B[None, :, d]
+    return S
+
+
+def fold_norms(M: np.ndarray) -> np.ndarray:
+    """Per-row L2 norms, like ``l2_norm``."""
+    acc = np.zeros(M.shape[0])
+    for d in range(M.shape[1]):
+        acc += M[:, d] * M[:, d]
+    return np.sqrt(acc)
+
+
+def fold_sqdist(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """(rows of A × rows of B) squared distances, like ``sqdist_fold``.
+    A fold that starts at the first diff² gives the same bits: squares
+    are never -0.0, so 0.0 + s == s."""
+    acc = np.zeros((A.shape[0], B.shape[0]))
+    for d in range(A.shape[1]):
+        acc += (A[:, d, None] - B[None, :, d]) ** 2
+    return acc
+
+
+def np_q6(x: np.ndarray) -> np.ndarray:
+    """``duck_q6`` in numpy."""
+    return np.trunc(x * 1e6 + np.sign(x) * 0.5) / 1e6
 
 
 def ann_params(n_vectors: int) -> tuple[int, int]:
@@ -104,39 +178,29 @@ def blocked_cosine_pairs(df, block_col: str, tau: float):
     with the trunc(x·1e6 + sign·0.5)/1e6 formula shared by every
     kernel/oracle in this repo.
 
-    Executed as applyInPandas per block: each block's pairwise cosines
-    are a strict dimension-ordered slab fold (acc += one dimension's
-    outer-product slab at a time), bit-identical to the JVM
-    dot_fold/l2_norm and the DuckDB list_reduce oracle —
-    multiplication commutes in IEEE-754, so pair orientation doesn't
-    change bits. Row-chunked to bound the n×n slab. One task per
-    block: blocking IS the distribution unit (same statement a
-    self-join makes); blocks too hot for one task belong in the
-    LSH/IVF paths.
+    Executed as applyInPandas per block with ``fold_dots`` and
+    ``fold_norms``; multiplication commutes in IEEE-754, so pair
+    orientation doesn't change bits. Row-chunked to bound the n×n
+    slab. One task per block: blocking IS the distribution unit (same
+    statement a self-join makes); blocks too hot for one task belong in
+    the LSH/IVF paths.
     """
-    import numpy as np
     import pandas as pd
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        V = np.array(list(pdf["embedding"]), dtype=np.float64)
+        V = guarded.as_matrix(pdf["embedding"])
         ids = pdf["vec_id"].to_numpy()
         blk = int(pdf[block_col].iloc[0])
         order = np.argsort(ids)
         V, ids = V[order], ids[order]
-        n, dims = V.shape
-        acc = np.zeros(n)
-        for d in range(dims):  # strict fold: ((0 + p1) + p2) + ...
-            acc = acc + V[:, d] * V[:, d]
-        nrm = np.sqrt(acc)
+        n = len(V)
+        nrm = fold_norms(V)
         out_a, out_b, out_c = [], [], []
         chunk = 512
         for lo in range(0, n, chunk):
             hi = min(lo + chunk, n)
-            S = np.zeros((hi - lo, n))
-            for d in range(dims):  # same strict fold, slab-vectorized
-                S = S + V[lo:hi, d][:, None] * V[None, :, d]
-            cos = S / (nrm[lo:hi, None] * nrm[None, :])
-            cq = np.trunc(cos * 1e6 + np.sign(cos) * 0.5) / 1e6
+            cos = fold_dots(V[lo:hi], V) / (nrm[lo:hi, None] * nrm[None, :])
+            cq = np_q6(cos)
             for i in range(lo, hi):
                 js = np.nonzero((ids > ids[i]) & (cq[i - lo] >= tau))[0]
                 out_a.extend([ids[i]] * len(js))
@@ -216,12 +280,8 @@ def anchor_knn(cand_df, anchor_df, k: int, quant: float,
     size): the anchor matrix is collected once (guarded, M·D·8 B) and
     shipped in the task closure; candidates stream through
     mapInPandas, each Arrow batch computing a (batch × M) distance
-    slab with a dimension-SEQUENTIAL numpy fold — acc starts at the
-    first diff² and adds one dimension's slab at a time, the exact
-    IEEE-754 add order of the JVM
-    ``aggregate(slice(diffs,2,..), element_at(diffs,1), +)`` fold and
-    the DuckDB list_reduce oracle, so quantized distances are
-    bit-identical while running ~50× faster than per-row interpreted
+    slab with ``fold_sqdist``, bit-identical to the JVM and DuckDB
+    folds while running ~50× faster than per-row interpreted
     lambdas. Each batch emits only its local top-k per anchor
     (i ≠ j pairs masked), so the global re-rank sees ≤ batches·M·k
     rows instead of M·N pairs. No shuffle until that tiny re-rank.
@@ -250,18 +310,15 @@ def anchor_knn(cand_df, anchor_df, k: int, quant: float,
         )
     ids = anchors.column(id_col).to_numpy().astype(np.int64)
     A = guarded.as_matrix(anchors.column(vec_col))  # (M, D)
-    m, dims = A.shape
+    m = len(A)
     sentinel = np.iinfo(np.int64).max
 
     def gen(it):
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            E = np.array(list(pdf[vec_col]), dtype=np.float64)  # (B, D)
             j = pdf[id_col].to_numpy().astype(np.int64)
-            acc = (E[:, 0, None] - A[None, :, 0]) ** 2
-            for d in range(1, dims):  # strict fold, slab-vectorized
-                acc += (E[:, d, None] - A[None, :, d]) ** 2
+            acc = fold_sqdist(guarded.as_matrix(pdf[vec_col]), A)
             # Clip before the cast: numpy float->int64 overflow yields
             # INT64_MIN (negative — would sort ahead of every real
             # distance and defeat the sentinel mask), whereas the JVM

@@ -5,9 +5,8 @@ as ONE declarative DataFrame plan — no driver-side loop, no collect.
 Exact-oracle discipline (the hard part of making an *iterative float*
 algorithm hash-match across engines):
 
-- Distances are squared-Euclidean computed as a strict left-associated
-  fold in float64 on both engines (zip_with+aggregate on Spark;
-  list_transform+list_reduce on DuckDB) — bit-identical.
+- Distances are the squared-Euclidean folds of operators.similarity
+  (``sqdist_fold`` on Spark, ``duck_sqdist`` on DuckDB) — bit-identical.
 - Assignment argmin breaks ties on the lowest centroid id.
 - Updated centroids are ROUNDED to 6 dp on both engines before the
   next assignment. Spark's avg and DuckDB's avg can differ in the last
@@ -25,37 +24,16 @@ Contract keys: ``llm_kmeans``, ``llm_semdedup``.
 """
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
+from etl_framework_spark.operators.similarity import duck_sqdist, sqdist_fold
 from etl_framework_spark.registry import query
 from etl_framework_spark.cacheutil import persist_tracked
 
 K = 8
 DIM = 64  # [OBSERVED embeddings.parquet schema]
-
-
-def sqdist_fold(a: Column, b: Column) -> Column:
-    """Strict left-associated squared-Euclidean distance in float64 —
-    same fold discipline as similarity.dot_fold, so DuckDB's
-    list_reduce reproduces the bits exactly. (An unrolled
-    element_at(1..64) variant was measured 13× SLOWER at sf0.1: the
-    giant expression trees blow past codegen method limits and fall
-    back to per-pair interpretation — see SCALE.md.)"""
-    diffs = F.zip_with(
-        a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double"))
-    )
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _duck_sqdist(a: str, b: str, dim: int = DIM) -> str:
-    return (
-        f"list_reduce(list_transform(generate_series(1, {dim}),"
-        f" i -> (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))"
-        f" * (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))), (x, y) -> x + y)"
-    )
 
 
 def _assign(emb: DataFrame, cents: DataFrame) -> DataFrame:
@@ -98,7 +76,7 @@ KMEANS_A2_CTE = f"""
       FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT {K})),
     d1 AS (
       SELECT e.vec_id, e.embedding, i.cid,
-             {_duck_sqdist('e.embedding', 'i.c')} AS dist
+             {duck_sqdist('e.embedding', 'i.c', DIM)} AS dist
       FROM embeddings e CROSS JOIN init i),
     a1 AS (
       SELECT vec_id, embedding, cid FROM (
@@ -114,7 +92,7 @@ KMEANS_A2_CTE = f"""
       GROUP BY cid),
     d2 AS (
       SELECT e.vec_id, c.cid,
-             {_duck_sqdist('e.embedding', 'c.c')} AS dist
+             {duck_sqdist('e.embedding', 'c.c', DIM)} AS dist
       FROM embeddings e CROSS JOIN cent c),
     a2 AS (
       SELECT vec_id, cid FROM (
@@ -124,12 +102,10 @@ KMEANS_A2_CTE = f"""
 """
 
 
-def kmeans_a2(spark, sf_dir):
-    """The final (iteration-2) assignment DataFrame — shared between
-    llm_kmeans and the purity/NMI evaluation."""
-    from etl_framework_spark.catalog import table as _t
-
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+def kmeans_a2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The final (iteration-2) assignment (vec_id, embedding, cid) —
+    shared by llm_kmeans, llm_semdedup and the purity/NMI evaluation."""
+    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     init = (
         emb.orderBy("vec_id")
         .limit(K)
@@ -165,21 +141,6 @@ def llm_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a2.groupBy("cid").agg(F.count("*").alias("n_members"))
 
 
-def _kmeans_a2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared 2-iteration assignment (vec_id, embedding, cid)."""
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    init = (
-        emb.orderBy("vec_id")
-        .limit(K)
-        .withColumn("rn", F.row_number().over(W.orderBy("vec_id")))
-        .select(
-            (F.col("rn") - 1).cast("int").alias("cid"),
-            F.col("embedding").alias("c"),
-        )
-    )
-    return _assign(emb, _update(_assign(emb, init)))
-
-
 SEMDEDUP_TAU = 0.3  # same cosine threshold as llm_dedup_embedding
 
 
@@ -192,7 +153,7 @@ SEMDEDUP_TAU = 0.3  # same cosine threshold as llm_dedup_embedding
       FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT {K})),
     d1 AS (
       SELECT e.vec_id, e.embedding, i.cid,
-             {_duck_sqdist('e.embedding', 'i.c')} AS dist
+             {duck_sqdist('e.embedding', 'i.c', DIM)} AS dist
       FROM embeddings e CROSS JOIN init i),
     a1 AS (
       SELECT vec_id, embedding, cid FROM (
@@ -208,7 +169,7 @@ SEMDEDUP_TAU = 0.3  # same cosine threshold as llm_dedup_embedding
       GROUP BY cid),
     d2 AS (
       SELECT e.vec_id, e.embedding, c.cid,
-             {_duck_sqdist('e.embedding', 'c.c')} AS dist
+             {duck_sqdist('e.embedding', 'c.c', DIM)} AS dist
       FROM embeddings e CROSS JOIN cent c),
     a2 AS (
       SELECT vec_id, embedding, cid FROM (
@@ -250,7 +211,7 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: the within-cluster pair pruning and the final keep-join
     # both consume the assignment — unpersisted, the 2-iteration
     # k-means replayed twice (r10). One row per vector.
-    a2 = _kmeans_a2(spark, sf_dir).select(
+    a2 = kmeans_a2(spark, sf_dir).select(
         "vec_id", "cid", "embedding"
     ).transform(persist_tracked)
     # within-cluster pair pruning via the shared slab-fold kernel (one

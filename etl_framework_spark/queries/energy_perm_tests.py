@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
+from etl_framework_spark.operators.similarity import sqdist_fold
 from etl_framework_spark.registry import query
 
 _ED_MOD = 5  # energy-distance sample: vec_id % 5 == 0
@@ -106,13 +107,7 @@ def vec_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = sub.select(
         F.col("id").alias("ib"), F.col("label").alias("lb"), F.col("e").alias("eb"), "one"
     )
-    diffs = F.zip_with(
-        F.col("ea"),
-        F.col("eb"),
-        lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double")),
-    )
-    dist = F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x))
+    dist = F.sqrt(sqdist_fold(F.col("ea"), F.col("eb")))
     pr = a.join(F.broadcast(b), "one")
     xy = pr.filter((F.col("la") == 0) & (F.col("lb") == 1)).agg(
         F.avg(dist).alias("d_xy")

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import scratch_path, table
 from etl_framework_spark.operators import guarded
+from etl_framework_spark.operators.similarity import fold_sqdist
 from etl_framework_spark.registry import query
 
 
@@ -233,23 +234,12 @@ def vec_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     carr = cent.groupBy("clabel").agg(
         F.array_sort(F.collect_list(F.struct("dim", "c"))).alias("sv")
     ).select("clabel", F.col("sv.c").alias("cv"))
-    # r11 optimization (guide §4.2, heavy lifting in native code —
-    # same recipe as operators/similarity.anchor_knn): the broadcast
-    # crossJoin fanned every vector out ×|centroids| and evaluated the
-    # per-pair distance with INTERPRETED higher-order lambdas (HOFs
-    # never reach codegen) — ~10M lambda invocations at sf0.1 — then
-    # shuffled the fan-out back through a groupBy(vec_id) min. The
-    # centroid matrix is ≤100 rows by construction (the key%100 label
-    # encoding bounds it), so it is collected under a loud guard and
-    # shipped in the task closure; each Arrow batch computes the
-    # (batch × centroids) distance slab with the dimension-SEQUENTIAL
-    # numpy fold — acc starts at dimension 1's diff² and adds one
-    # dimension's slab at a time, the exact IEEE-754 add order of the
-    # old aggregate(slice(diffs,2,..), element_at(diffs,1), +) fold
-    # and the DuckDB list_reduce oracle — and takes the keyed argmin
-    # locally. No crossJoin, no fan-out shuffle; measured
-    # 1.99 s -> 0.80 s at sf0.1 (the residual is the centroid rollup
-    # + its guarded 10-row collect), oracle-exact at both SFs.
+    # The centroid matrix is ≤100 rows by construction (the key%100
+    # label encoding bounds it), so it is collected under a loud guard
+    # and shipped in the task closure; each Arrow batch computes its
+    # (batch × centroids) distance slab with ``fold_sqdist`` and takes
+    # the keyed argmin locally — no crossJoin fan-out of interpreted
+    # per-pair lambdas, no fan-out shuffle (1.99 s -> 0.80 s at sf0.1).
     import numpy as np
     import pandas as pd
 
@@ -273,10 +263,7 @@ def vec_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            E = np.array(list(pdf["v"]), dtype=np.float64)  # (B, D)
-            acc = (E[:, 0, None] - C[None, :, 0]) ** 2
-            for d in range(1, C.shape[1]):  # strict fold, slab-vectorized
-                acc += (E[:, d, None] - C[None, :, d]) ** 2
+            acc = fold_sqdist(guarded.as_matrix(pdf["v"]), C)
             key = (
                 np.floor(acc * 1000000.0 + 0.5).astype(np.int64) * 100
                 + labels_arr[None, :]

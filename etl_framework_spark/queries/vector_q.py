@@ -13,6 +13,8 @@ Contract keys: ``llm_sim_topk``, ``llm_sim_ann``, ``llm_sim_topk_gemm``,
 """
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -20,10 +22,12 @@ from etl_framework_spark.catalog import table
 from etl_framework_spark.operators import guarded
 from etl_framework_spark.operators.similarity import (
     cosine,
-    dot_fold,
     duck_cosine,
-    l2_norm,
+    duck_q6,
+    fold_dots,
+    fold_norms,
     lsh_buckets,
+    np_q6,
     random_hyperplanes,
 )
 from etl_framework_spark.registry import query
@@ -49,8 +53,6 @@ def _collect_queries(emb: DataFrame, query_pred, key: str) -> tuple:
     vec_ids and the float64 (n, dim) embedding matrix, collected under
     _MAX_Q_COLLECT. Past the cap it raises: the exact paths broadcast
     the whole query set, so a larger one must be sharded."""
-    import numpy as np
-
     q = guarded.collect_capped(
         emb.filter(query_pred).select("vec_id", "embedding"), _MAX_Q_COLLECT
     )
@@ -67,7 +69,7 @@ def _collect_queries(emb: DataFrame, query_pred, key: str) -> tuple:
 # --------------------------------------------------------------------------
 # L3 — brute-force top-k cosine similarity search
 # --------------------------------------------------------------------------
-def _local_topk_frame(pd, np, bqids, vids, cq, k):
+def _local_topk_frame(bqids, vids, cq, k):
     """Vectorized local top-k for the Arrow kernels: emit, per query
     column, every batch row whose (already quantized) similarity is >=
     the column's k-th largest — a provable superset of this batch's
@@ -89,12 +91,55 @@ def _local_topk_frame(pd, np, bqids, vids, cq, k):
     )
 
 
-def _duck_q6(expr: str) -> str:
-    """Sign-aware half-away-from-zero quantization to 6 dp, written as
-    pure double arithmetic (trunc/sign/×1e6) so DuckDB and numpy
-    produce identical bits — unlike round(), whose decimal-string
-    path has no cheap numpy twin."""
-    return f"trunc(({expr}) * 1e6 + sign({expr}) * 0.5) / 1e6"
+def _keep_topk(cand: DataFrame, k: int) -> DataFrame:
+    """The global merge: the k best (cos_sim desc, vid) rows per qid."""
+    w = W.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("vid"))
+    return cand.withColumn("rnk", F.row_number().over(w)).filter(
+        F.col("rnk") <= k
+    )
+
+
+def _scan_topk(emb: DataFrame, qids, payload, score, k: int) -> DataFrame:
+    """Top-k per query in one corpus scan. ``qids`` and ``payload`` are
+    broadcast; each Arrow batch is scored in row chunks by
+    ``score(V, payload)`` into a quantized (rows × queries) slab, each
+    chunk emits its local top-k per query, and ``_keep_topk`` merges
+    the k·chunks survivors.
+
+    Row chunks keep the slab cache-resident: un-chunked, the 64
+    per-dimension passes each stream a slab of batch_rows·|Q| doubles
+    through DRAM and the measured per-query cost went super-linear
+    right where the slab outgrew cache (r8 fixed-Q probe). Chunking
+    rows changes no per-element accumulation order — bits are
+    identical."""
+    b = emb.sparkSession.sparkContext.broadcast((qids, payload))
+
+    def local_topk(batches):
+        bqids, bpayload = b.value
+        chunk = max(1, (4 << 20) // max(len(bqids), 1) // 8)
+        for pdf in batches:
+            V = guarded.as_matrix(pdf["embedding"])
+            vids = pdf["vec_id"].to_numpy()
+            for lo in range(0, len(V), chunk):
+                cq = score(V[lo : lo + chunk], bpayload)
+                yield _local_topk_frame(bqids, vids[lo : lo + chunk], cq, k)
+
+    cand = emb.select("vec_id", "embedding").mapInPandas(
+        local_topk, schema="qid long, vid long, cos_sim double"
+    )
+    return _keep_topk(cand, k)
+
+
+def _fold_cosines(V, payload):
+    """6-dp strict-fold cosines of ``V``'s rows against the queries."""
+    Q, qn = payload
+    return np_q6(fold_dots(V, Q) / (qn[None, :] * fold_norms(V)[:, None]))
+
+
+def _gemm_cosines(V, Q):
+    """6-dp BLAS cosines of ``V``'s rows against the unit-norm queries."""
+    V = V / np.linalg.norm(V, axis=1, keepdims=True)
+    return np.round(V @ Q.T, 6)
 
 
 @query(
@@ -103,7 +148,7 @@ def _duck_q6(expr: str) -> str:
     WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
                WHERE vec_id % {QUERY_MOD} = 0),
     pairs AS (SELECT q.qid, e.vec_id AS vid,
-                     {_duck_q6(_COS_QE)} AS cos_sim
+                     {duck_q6(_COS_QE)} AS cos_sim
               FROM q, embeddings e WHERE e.vec_id <> q.qid)
     SELECT qid, vid, cos_sim, rnk FROM (
       SELECT *, row_number() OVER (PARTITION BY qid
@@ -120,15 +165,10 @@ def exact_topk(
     spark: SparkSession, sf_dir: str, query_pred=None
 ) -> DataFrame:
     """Exact top-k cosine search (L3 baseline): broadcast the query
-    set, stream the corpus ONCE through an Arrow kernel whose
-    accumulation preserves the strict left fold order — acc starts at
-    0.0 and adds one dimension's product at a time, vectorized across
-    rows — so every dot/norm/cosine is bit-identical to the DuckDB
-    list_reduce fold (IEEE-754 ops in the same sequence; numpy just
-    runs 64 of them per batch instead of 64 per pair). Each batch
-    emits only its local top-k per query; a global window merges the
-    k·partitions survivors. Replaced the per-pair JVM fold (3.4s →
-    ~0.6s at sf0.1, same bits).
+    set and stream the corpus ONCE through ``_scan_topk``, scoring each
+    batch with the numpy folds of operators.similarity, so every
+    cosine is bit-identical to the DuckDB oracle. Replaced the
+    per-pair JVM fold (3.4s → ~0.6s at sf0.1, same bits).
 
     Driver-memory bound: the query SET (not the corpus) is collect()ed
     to the driver and broadcast, so this exact path holds only while
@@ -143,55 +183,11 @@ def exact_topk(
     QUERY_MOD == 0); the fixed-Q scale probe passes a pinned predicate
     so per-query marginal cost can be measured across corpus scales."""
     prep(spark)
-    import numpy as np
-    import pandas as pd
-
     emb = table(spark, sf_dir, "embeddings")
     if query_pred is None:
         query_pred = F.col("vec_id") % QUERY_MOD == 0
     qids, Q = _collect_queries(emb, query_pred, "llm_sim_topk exact path")
-    nq, dim = Q.shape
-    qn_acc = np.zeros(nq)
-    for d in range(dim):  # strict fold: ((0 + p1) + p2) + ... per query
-        qn_acc = qn_acc + Q[:, d] * Q[:, d]
-    qn = np.sqrt(qn_acc)
-    b = spark.sparkContext.broadcast((qids, Q, qn))
-    k = TOPK
-
-    def local_topk(batches):
-        bqids, bQ, bqn = b.value
-        # row-chunk the fold so the (rows x queries) accumulator slab
-        # stays cache-resident: un-chunked, the 64 per-dimension passes
-        # each stream a slab of batch_rows*|Q| doubles through DRAM and
-        # the measured per-query cost went super-linear right where the
-        # slab outgrew cache (r8 fixed-Q probe). Chunking rows changes
-        # no per-element accumulation order — bits are identical.
-        chunk = max(1, (4 << 20) // max(len(bqids), 1) // 8)
-        for pdf in batches:
-            V_all = np.array(list(pdf["embedding"]), dtype=np.float64)
-            vids_all = pdf["vec_id"].to_numpy()
-            for lo in range(0, len(V_all), chunk):
-                V = V_all[lo : lo + chunk]
-                vids = vids_all[lo : lo + chunk]
-                vn_acc = np.zeros(len(V))
-                S = np.zeros((len(V), len(bqids)))
-                for d in range(bQ.shape[1]):  # strict fold, row-vectorized
-                    V_d = V[:, d]
-                    vn_acc = vn_acc + V_d * V_d
-                    S = S + V_d[:, None] * bQ[None, :, d]
-                vn = np.sqrt(vn_acc)
-                cos = S / (bqn[None, :] * vn[:, None])
-                cq = np.trunc(cos * 1e6 + np.sign(cos) * 0.5) / 1e6
-                yield _local_topk_frame(pd, np, bqids, vids, cq, k)
-
-    cand = emb.select("vec_id", "embedding").mapInPandas(
-        local_topk, schema="qid long, vid long, cos_sim double"
-    )
-    w = W.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("vid"))
-    return (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOPK)
-    )
+    return _scan_topk(emb, qids, (Q, fold_norms(Q)), _fold_cosines, TOPK)
 
 
 # --------------------------------------------------------------------------
@@ -247,11 +243,9 @@ def ann_topk(
         (F.col("bkt") == F.col("pbkt")) & (F.col("vec_id") != F.col("qid")),
     )
     cos = F.round(cosine(F.col("qe"), F.col("embedding")), 6)
-    w = W.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("vid"))
-    return (
-        cand.select("qid", F.col("vec_id").alias("vid"), cos.alias("cos_sim"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOPK)
+    return _keep_topk(
+        cand.select("qid", F.col("vec_id").alias("vid"), cos.alias("cos_sim")),
+        TOPK,
     )
 
 
@@ -274,36 +268,12 @@ def gemm_topk(
     from the strict fold, so this key is rows-only while the fold
     version carries the exact oracle."""
     prep(spark)
-    import numpy as np
-    import pandas as pd
-
     emb = table(spark, sf_dir, "embeddings")
     if query_pred is None:
         query_pred = F.col("vec_id") % QUERY_MOD == 0
     qids, Q = _collect_queries(emb, query_pred, "llm_sim_topk_gemm")
     Q /= np.linalg.norm(Q, axis=1, keepdims=True)
-    b = spark.sparkContext.broadcast((qids, Q))
-    k = TOPK
-
-    def local_topk(batches):
-        bqids, bQ = b.value
-        # same cache-resident row-chunking as the exact kernel
-        chunk = max(1, (4 << 20) // max(len(bqids), 1) // 8)
-        for pdf in batches:
-            V_all = np.array(list(pdf["embedding"]), dtype=np.float64)
-            V_all /= np.linalg.norm(V_all, axis=1, keepdims=True)
-            vids_all = pdf["vec_id"].to_numpy()
-            for lo in range(0, len(V_all), chunk):
-                V = V_all[lo : lo + chunk]
-                vids = vids_all[lo : lo + chunk]
-                S = V @ bQ.T  # (chunk, nq)
-                yield _local_topk_frame(pd, np, bqids, vids, np.round(S, 6), k)
-
-    cand = emb.select("vec_id", "embedding").mapInPandas(
-        local_topk, schema="qid long, vid long, cos_sim double"
-    )
-    w = W.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("vid"))
-    return cand.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+    return _scan_topk(emb, qids, Q, _gemm_cosines, TOPK)
 
 
 # --------------------------------------------------------------------------
@@ -313,20 +283,18 @@ def gemm_topk(
     "llm_dedup_embedding",
     oracle=f"""
     SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.label,
-           {_duck_q6(_COS_AB)} AS cos_sim
+           {duck_q6(_COS_AB)} AS cos_sim
     FROM embeddings a JOIN embeddings b
       ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE {_duck_q6(_COS_AB)} >= {NEARDUP_TAU}
+    WHERE {duck_q6(_COS_AB)} >= {NEARDUP_TAU}
     """,
 )
 def llm_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup (L2): cosine ≥ τ within label blocks —
     blocking bounds the candidate pairs exactly like LSH bands.
-    Executed via operators.similarity.blocked_cosine_pairs: one
-    applyInPandas task per label block computing the pairwise cosines
-    as a strict dimension-ordered slab fold, bit-identical to the
-    JVM fold and the DuckDB list_reduce oracle (3.6 s → 0.6 s at
-    sf0.1 vs the per-pair JVM fold self-join, same rows). Labels too
+    Executed via operators.similarity.blocked_cosine_pairs, one
+    applyInPandas task per label block (3.6 s → 0.6 s at sf0.1 vs the
+    per-pair JVM fold self-join, same rows). Labels too
     hot for one task belong in the LSH/IVF paths (llm_sim_ann /
     llm_sim_ivf) — blocking is the distribution unit either way."""
     from etl_framework_spark.operators.similarity import blocked_cosine_pairs
@@ -431,9 +399,6 @@ def sq8_topk(
     collect) like the other trained paths. ``query_pred`` as in
     exact_topk."""
     prep(spark)
-    import numpy as np
-    import pandas as pd
-
     emb = table(spark, sf_dir, "embeddings")
     if query_pred is None:
         query_pred = F.col("vec_id") % QUERY_MOD == 0
@@ -465,22 +430,16 @@ def sq8_topk(
 
     qids, Q = _collect_queries(emb, query_pred, "llm_sim_sq8")
     Qc = _codes(Q)
-    b = spark.sparkContext.broadcast((qids, Qc, lo, scale))
+    b = spark.sparkContext.broadcast((qids, Qc))
     cand_k = 3 * TOPK
 
     def local_approx(batches):
-        bqids, bQc, blo, bscale = b.value
+        bqids, bQc = b.value
         for pdf in batches:
-            V = np.array(list(pdf["embedding"]), dtype=np.float64)
-            vids = pdf["vec_id"].to_numpy()
-            Vc = np.clip(
-                np.floor((V - blo[None, :]) / bscale[None, :] * 255.0) - 128,
-                -128,
-                127,
-            )
+            Vc = _codes(guarded.as_matrix(pdf["embedding"]))
             # integer-valued dot products, exact in float64 (|S| < 2^21)
             S = Vc @ bQc.T
-            yield _local_topk_frame(pd, np, bqids, vids, S, cand_k)
+            yield _local_topk_frame(bqids, pdf["vec_id"].to_numpy(), S, cand_k)
 
     cand = emb.select("vec_id", "embedding").mapInPandas(
         local_approx, schema="qid long, vid long, cos_sim double"
@@ -490,16 +449,10 @@ def sq8_topk(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
     )
     ve = emb.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("ve"))
-    cos = F.round(
-        dot_fold(F.col("qe"), F.col("ve"))
-        / (l2_norm(F.col("qe")) * l2_norm(F.col("ve"))),
-        6,
-    )
-    w = W.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("vid"))
-    return (
+    cos = F.round(cosine(F.col("qe"), F.col("ve")), 6)
+    return _keep_topk(
         cand.join(F.broadcast(qe), "qid")
         .join(ve, "vid")
-        .select("qid", "vid", cos.alias("cos_sim"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOPK)
+        .select("qid", "vid", cos.alias("cos_sim")),
+        TOPK,
     )

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.plans import explain_str
-from tests.conftest import ROOT, SF_SMALL
+from tests.conftest import SF_SMALL
 
 
 @pytest.fixture(scope="module")
@@ -50,11 +50,8 @@ def test_bucketed_join_has_no_shuffle(spark, bucketed_tables):
     # proves nothing about bucketing) — force the bucketed-scan path
     # the way a big-big join at scale would take it
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = li.join(o, li.l_orderkey == o.o_orderkey).groupBy("o_orderstatus").count()
-        plan = explain_str(j)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    j = li.join(o, li.l_orderkey == o.o_orderkey).groupBy("o_orderstatus").count()
+    plan = explain_str(j)
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
     assert "Bucketed: true" in plan
     assert "Exchange hashpartitioning(l_orderkey" not in plan
@@ -75,22 +72,20 @@ def test_bucketed_join_has_no_shuffle(spark, bucketed_tables):
     assert got == want
 
 
-def test_foreach_batch_sink(spark):
+def test_foreach_batch_sink(spark, tmp_path):
     """S9/T8: foreachBatch drives an arbitrary batch sink with epoch
     ids — counts must cover the whole replayed input exactly once."""
     from etl_framework_spark.streaming import replay_events  # noqa: F401
     from etl_framework_spark.streaming.harness import events_stream
-
-    import uuid
 
     seen: dict[int, int] = {}
 
     def sink(df, epoch_id: int):
         seen[epoch_id] = df.count()
 
-    # unique checkpoint per run: a reused checkpoint makes AvailableNow
+    # fresh checkpoint per run: a reused checkpoint makes AvailableNow
     # see zero new files and deliver zero batches
-    ckpt = f"{ROOT}/.scratch/fb_ckpt_{uuid.uuid4().hex[:8]}"
+    ckpt = str(tmp_path / "fb_ckpt")
     q = (
         events_stream(spark, SF_SMALL)
         .writeStream.foreachBatch(sink)

@@ -10,10 +10,8 @@ import glob
 import pyarrow.parquet as pq
 
 from etl_framework_spark.sources.readers import read_source, write_sink
-from tests.conftest import ROOT
 
 SF = "/root/testdata/sf0.001"
-SCRATCH = f"{ROOT}/.scratch/test_clustered"
 
 
 def _file_ranges(path_glob: str, column: str) -> list[tuple]:
@@ -28,9 +26,9 @@ def _file_ranges(path_glob: str, column: str) -> list[tuple]:
     return ranges
 
 
-def test_cluster_by_disjoint_file_ranges(spark):
+def test_cluster_by_disjoint_file_ranges(spark, tmp_path):
     df = read_source(spark, {"format": "parquet", "path": f"{SF}/lineitem.parquet"})
-    out = f"{SCRATCH}/lineitem_clustered"
+    out = f"{tmp_path}/lineitem_clustered"
     write_sink(
         df,
         {
@@ -51,12 +49,12 @@ def test_cluster_by_disjoint_file_ranges(spark):
     assert back.count() == df.count()
 
 
-def test_sort_by_tightens_rowgroups_locally(spark):
+def test_sort_by_tightens_rowgroups_locally(spark, tmp_path):
     df = read_source(
         spark, {"format": "parquet", "path": f"{SF}/lineitem.parquet"}
     ).repartition(4)
-    out_sorted = f"{SCRATCH}/lineitem_sorted"
-    out_plain = f"{SCRATCH}/lineitem_plain"
+    out_sorted = f"{tmp_path}/lineitem_sorted"
+    out_plain = f"{tmp_path}/lineitem_plain"
     write_sink(df, {"format": "parquet", "path": out_sorted, "sort_by": ["l_shipdate"]})
     write_sink(df, {"format": "parquet", "path": out_plain})
 

@@ -150,18 +150,13 @@ def test_local_frame_above_local_relation_threshold(spark) -> None:
     """Past the threshold the JVM decodes the Arrow batches itself: an
     ``arrow`` RDD scan, still no pickled Python rows."""
     rows = [(i, [float(i)]) for i in range(10)] + [(None, None)]
-    key = "spark.sql.execution.arrow.localRelationThreshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "0")
-    try:
-        got = guarded.local_frame(spark, rows, "i int, a array<double>")
-        assert_in_plan(
-            got, "Scan ExistingRDD arrow", absent=("applySchemaToPythonRDD",)
-        )
-        want = spark.createDataFrame(rows, "i int, a array<double>")
-        assert got.collect() == want.collect()
-    finally:
-        spark.conf.set(key, old)
+    spark.conf.set("spark.sql.execution.arrow.localRelationThreshold", "0")
+    got = guarded.local_frame(spark, rows, "i int, a array<double>")
+    assert_in_plan(
+        got, "Scan ExistingRDD arrow", absent=("applySchemaToPythonRDD",)
+    )
+    want = spark.createDataFrame(rows, "i int, a array<double>")
+    assert got.collect() == want.collect()
 
 
 def test_local_frame_rejects_ragged_rows(spark) -> None:

@@ -10,9 +10,7 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.pipeline import Pipeline, run_pipeline
 from etl_framework_spark.sources import read_source, write_sink
-from tests.conftest import ROOT, SF_SMALL
-
-SCRATCH = f"{ROOT}/.scratch/test_pipeline"
+from tests.conftest import SF_SMALL
 
 
 def test_spec_validation_unknown_op():
@@ -73,20 +71,20 @@ def test_pipeline_join_and_sql_steps(spark):
     assert spark.table("seg_counts").count() == rel["by_segment"].count()
 
 
-def test_csv_json_roundtrip(spark):
+def test_csv_json_roundtrip(spark, tmp_path):
     """S2/S3/S6: csv + json sinks and schema-on-read sources."""
     df = table(spark, SF_SMALL, "nation")
-    write_sink(df, {"format": "csv", "path": f"{SCRATCH}/nation_csv"})
-    write_sink(df, {"format": "json", "path": f"{SCRATCH}/nation_json"})
+    write_sink(df, {"format": "csv", "path": f"{tmp_path}/nation_csv"})
+    write_sink(df, {"format": "json", "path": f"{tmp_path}/nation_json"})
     back_csv = read_source(
         spark,
         {
             "format": "csv",
-            "path": f"{SCRATCH}/nation_csv",
+            "path": f"{tmp_path}/nation_csv",
             "schema": "n_nationkey int, n_name string, n_regionkey int",
         },
     )
-    back_json = read_source(spark, {"format": "json", "path": f"{SCRATCH}/nation_json"})
+    back_json = read_source(spark, {"format": "json", "path": f"{tmp_path}/nation_json"})
     base = sorted(map(str, df.collect()))
     assert sorted(map(str, back_csv.collect())) == base
     assert (
@@ -196,11 +194,11 @@ def test_pipeline_composes_llm_dedup(spark):
     )
 
 
-def test_orc_roundtrip(spark):
+def test_orc_roundtrip(spark, tmp_path):
     """S-family: ORC source/sink round-trip."""
     df = table(spark, SF_SMALL, "region")
-    write_sink(df, {"format": "orc", "path": f"{SCRATCH}/region_orc"})
-    back = read_source(spark, {"format": "orc", "path": f"{SCRATCH}/region_orc"})
+    write_sink(df, {"format": "orc", "path": f"{tmp_path}/region_orc"})
+    back = read_source(spark, {"format": "orc", "path": f"{tmp_path}/region_orc"})
     assert sorted(map(str, back.collect())) == sorted(map(str, df.collect()))
 
 
@@ -531,13 +529,13 @@ def test_asof_join_op_registered(spark):
     assert "right_vval" in out.columns  # payload cols come back prefixed
 
 
-def test_parquet_zstd_roundtrip(spark):
+def test_parquet_zstd_roundtrip(spark, tmp_path):
     """Codec control on the parquet sink: zstd-compressed files round-trip
     exactly and carry the codec in the filename."""
     import os
 
     df = table(spark, SF_SMALL, "nation")
-    path = f"{SCRATCH}/nation_zstd"
+    path = f"{tmp_path}/nation_zstd"
     df.write.mode("overwrite").option("compression", "zstd").parquet(path)
     files = [f for f in os.listdir(path) if f.endswith(".parquet")]
     assert files and all("zstd" in f for f in files)
@@ -545,12 +543,12 @@ def test_parquet_zstd_roundtrip(spark):
     assert sorted(map(str, back.collect())) == sorted(map(str, df.collect()))
 
 
-def test_step_materialize_checkpoints_to_parquet(spark):
+def test_step_materialize_checkpoints_to_parquet(spark, tmp_path):
     """A step with materialize: path writes parquet and downstream
     reads the files (lineage cut for resume/reuse)."""
     import os
 
-    path = f"{SCRATCH}/mat_step"
+    path = f"{tmp_path}/mat_step"
     spec = {
         "sources": {
             "orders": {"format": "parquet", "path": f"{SF_SMALL}/orders.parquet"}
@@ -573,7 +571,10 @@ def test_step_materialize_checkpoints_to_parquet(spark):
     }
     rel = run_pipeline(spark, spec)
     assert os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path))
-    # downstream step scans the materialized files, not the original
+    # downstream step scans the materialized files, not the original;
+    # the plan abbreviates a location past 100 characters, and a temp
+    # path can be that long
+    spark.conf.set("spark.sql.maxMetadataStringLength", "1000")
     plan = rel["by_status"]._jdf.queryExecution().executedPlan().toString()
     assert "mat_step" in plan
     n = rel["big"].count()

@@ -45,11 +45,8 @@ def test_lint_fires_on_cartesian(spark):
     a = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
     b = spark.read.parquet(f"{SF_SMALL}/customer.parquet")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        df = a.crossJoin(b).select("o_orderkey", "c_custkey")
-        finds = lint_plan("not_allowlisted", explain_str(df))
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    df = a.crossJoin(b).select("o_orderkey", "c_custkey")
+    finds = lint_plan("not_allowlisted", explain_str(df))
     assert any("R1" in f for f in finds)
 
 

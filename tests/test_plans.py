@@ -166,28 +166,20 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark):
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",  # force shuffle join
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        li = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet")
-        o = spark.read.parquet(f"{SF_SMALL}/orders.parquet").filter(
-            F.col("o_orderpriority") == "1-URGENT"
-        )
-        j = (
-            li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-            .groupBy("o_orderpriority")
-            .count()
-        )
-        plan = explain_str(j)
-        assert "might_contain" in plan
-        assert "bloom_filter_agg" in plan
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    li = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet")
+    o = spark.read.parquet(f"{SF_SMALL}/orders.parquet").filter(
+        F.col("o_orderpriority") == "1-URGENT"
+    )
+    j = (
+        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
+        .groupBy("o_orderpriority")
+        .count()
+    )
+    plan = explain_str(j)
+    assert "might_contain" in plan
+    assert "bloom_filter_agg" in plan
 
 
 def test_aqe_splits_skewed_join(spark):
@@ -205,26 +197,18 @@ def test_aqe_splits_skewed_join(spark):
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64KB",
         "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        hot = spark.range(200_000).select(F.lit(0).alias("k"), F.col("id").alias("v"))
-        cold = spark.range(10_000).select(
-            (F.col("id") % 100 + 1).alias("k"), F.col("id").alias("v")
-        )
-        right = spark.range(101).select(F.col("id").alias("k"), (F.col("id") * 10).alias("w"))
-        j = hot.union(cold).join(right, "k")
-        assert len(j.collect()) == 210_000  # same result, split execution
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "skew=true" in plan
-        assert "skewed" in plan  # AQEShuffleRead ... skewed
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    hot = spark.range(200_000).select(F.lit(0).alias("k"), F.col("id").alias("v"))
+    cold = spark.range(10_000).select(
+        (F.col("id") % 100 + 1).alias("k"), F.col("id").alias("v")
+    )
+    right = spark.range(101).select(F.col("id").alias("k"), (F.col("id") * 10).alias("w"))
+    j = hot.union(cold).join(right, "k")
+    assert len(j.collect()) == 210_000  # same result, split execution
+    plan = j._jdf.queryExecution().executedPlan().toString()
+    assert "skew=true" in plan
+    assert "skewed" in plan  # AQEShuffleRead ... skewed
 
 
 def test_shuffle_hash_hint_honored(spark):

@@ -5,9 +5,6 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import ROOT
-
-SCRATCH = f"{ROOT}/.scratch/test_quality"
 
 DOCS = [
     # (doc_id, text, lang, source, n_chars)
@@ -18,12 +15,13 @@ DOCS = [
 
 
 @pytest.fixture(scope="module")
-def doc_dir(spark):
+def doc_dir(spark, tmp_path_factory):
+    out = tmp_path_factory.mktemp("test_quality")
     df = spark.createDataFrame(
         DOCS, "doc_id bigint, text string, lang string, source string, n_chars bigint"
     )
-    df.coalesce(1).write.mode("overwrite").parquet(f"{SCRATCH}/documents.parquet")
-    return SCRATCH
+    df.coalesce(1).write.mode("overwrite").parquet(f"{out}/documents.parquet")
+    return str(out)
 
 
 def test_repetition_metrics(spark, doc_dir):

@@ -18,7 +18,6 @@ def test_registered_key_runs_prep_first(spark) -> None:
         seen["tz"] = spark.conf.get(TZ)
         return sf_dir
 
-    tz = spark.conf.get(TZ)
     try:
         registered = query(key, oracle="SELECT 1")(probe)
         assert QUERIES[key] is registered
@@ -31,7 +30,6 @@ def test_registered_key_runs_prep_first(spark) -> None:
     finally:
         QUERIES.pop(key, None)
         ORACLES.pop(key, None)
-        spark.conf.set(TZ, tz)
 
     assert registered.__name__ == "probe"
     assert registered.__doc__ == probe.__doc__

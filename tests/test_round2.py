@@ -27,7 +27,8 @@ def test_kmeans_improves_on_init(spark):
     to iteration-1 centroids chosen at init: total within-cluster
     distance must not increase across the Lloyd step (standard
     monotonicity of k-means)."""
-    from etl_framework_spark.queries.cluster_q import K, _assign, _update, sqdist_fold
+    from etl_framework_spark.operators.similarity import sqdist_fold
+    from etl_framework_spark.queries.cluster_q import K, _assign, _update
 
     emb = table(spark, SF_SMALL, "embeddings").select("vec_id", "embedding")
     from pyspark.sql import Window as W

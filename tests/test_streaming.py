@@ -130,7 +130,6 @@ def test_stateful_transform_with_state_in_pandas(spark):
             timeMode="none",
         )
 
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state."
@@ -143,13 +142,6 @@ def test_stateful_transform_with_state_in_pandas(spark):
         if "RocksDB" in str(e) or "UnsatisfiedLink" in str(e):
             pytest.skip(f"RocksDB state store unavailable: {e}")
         raise
-    finally:
-        if old is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", old
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     batch = {
         r.user_id: r.n
         for r in table(spark, SF_SMALL, "events")
@@ -276,35 +268,29 @@ def test_stateful_transform_with_state(spark):
         def close(self) -> None:
             pass
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    try:
-        def transform(ev):
-            return ev.groupBy("user_id").transformWithStateInPandas(
-                CountProcessor(),
-                outputStructType="user_id bigint, n_events bigint",
-                outputMode="Update",
-                timeMode="None",
-            )
 
-        stream = replay_events(spark, SF_SMALL, transform, "update")
-        final = {r.user_id: r.n_events for r in stream.collect()}
-        batch = {
-            r.user_id: r.n
-            for r in table(spark, SF_SMALL, "events")
-            .groupBy("user_id")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        assert final == batch
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    def transform(ev):
+        return ev.groupBy("user_id").transformWithStateInPandas(
+            CountProcessor(),
+            outputStructType="user_id bigint, n_events bigint",
+            outputMode="Update",
+            timeMode="None",
+        )
+
+    stream = replay_events(spark, SF_SMALL, transform, "update")
+    final = {r.user_id: r.n_events for r in stream.collect()}
+    batch = {
+        r.user_id: r.n
+        for r in table(spark, SF_SMALL, "events")
+        .groupBy("user_id")
+        .agg(F.count("*").alias("n"))
+        .collect()
+    }
+    assert final == batch
 
 
 def test_watermark_drops_late_data(spark, tmp_path):
