@@ -30,11 +30,6 @@ TABLES = [
     "embeddings",
 ]
 
-# Small dimensions worth broadcasting in any join (SURVEY.md §4: join
-# strategy selection; these stay tiny at every scale factor).
-BROADCAST_DIMS = {"region", "nation"}
-
-
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
@@ -51,10 +46,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
         return df
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

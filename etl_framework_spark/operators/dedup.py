@@ -133,43 +133,6 @@ def duck_minhash(tok_expr: str, k: int = 16) -> list[str]:
     return out
 
 
-def lsh_band_pairs(sigs: DataFrame, id_col: str, k: int = 8, rows_per_band: int = 2) -> DataFrame:
-    """Candidate pairs: docs sharing at least one LSH band key.
-
-    sigs must have columns id_col, s0..s{k-1}. Bands of `rows_per_band`
-    signature values are concatenated into a band key; a self-equi-join
-    on (band, key) finds collisions — bucket-local, never O(n²).
-    """
-    n_bands = k // rows_per_band
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                "|", *[F.col(f"s{b * rows_per_band + r}") for r in range(rows_per_band)]
-            ).alias("bkey"),
-        )
-        for b in range(n_bands)
-    ]
-    bands = sigs.select(id_col, F.explode(F.array(*band_structs)).alias("bs")).select(
-        id_col, F.col("bs.band").alias("band"), F.col("bs.bkey").alias("bkey")
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
-
-
 def jaccard(set_a: Column, set_b: Column) -> Column:
     """Exact Jaccard over two *distinct-element* arrays."""
     inter = F.size(F.array_intersect(set_a, set_b)).cast("double")

@@ -1,4 +1,9 @@
-"""Iterative graph operators (SURVEY.md §2.11 L2 fixpoint stage).
+"""Graph operators (SURVEY.md §2.11 L2 fixpoint stage).
+
+``token_adjacency`` builds the token co-occurrence graph of a
+documents frame, the edge list every ``graph_*`` token key runs over.
+``co_occurrence_pairs`` projects a group/item table onto weighted item
+pairs. ``pagerank`` runs fixed-length power iterations.
 
 Connected components via label propagation — the classic pre-
 GraphFrames formulation: each node repeatedly takes the minimum label
@@ -57,6 +62,31 @@ def _uf_components(s, d) -> list[tuple]:
         if n < comp_min.get(r, n + 1):
             comp_min[r] = n
     return [(n, comp_min[roots[n]]) for n in nodes]
+
+
+def token_adjacency(docs: DataFrame) -> DataFrame:
+    """Distinct undirected edges (a, b), a < b, between different
+    adjacent tokens of ``split(docs.text, ' ')``. The positions are an
+    exploded ``sequence`` read back with ``element_at``, which
+    whole-stage codegen compiles; a ``zip_with`` lambda over two
+    slices runs interpreted."""
+    t = docs.select(F.split(F.col("text"), " ").alias("l")).filter(
+        F.size("l") >= 2
+    )
+    idx = t.select(
+        "l", F.explode(F.sequence(F.lit(1), F.size("l") - 1)).alias("i")
+    )
+    adj = idx.filter(
+        F.element_at("l", F.col("i")) != F.element_at("l", F.col("i") + 1)
+    ).select(
+        F.least(
+            F.element_at("l", F.col("i")), F.element_at("l", F.col("i") + 1)
+        ).alias("a"),
+        F.greatest(
+            F.element_at("l", F.col("i")), F.element_at("l", F.col("i") + 1)
+        ).alias("b"),
+    )
+    return adj.distinct()
 
 
 def connected_components(

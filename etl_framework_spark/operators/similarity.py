@@ -25,7 +25,6 @@ O(n·m) scan into bucket-local joins.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 import numpy as np
@@ -162,12 +161,6 @@ def lsh_buckets(vec: Column, planes: np.ndarray) -> Column:
         bit = (dot_fold(vec, plane) > 0).cast("int")
         bucket = bucket + bit * (1 << p)
     return bucket
-
-
-def stable_seed(tag: str) -> int:
-    """md5-derived integer seed — stable across processes/partitions
-    (never Python's salted hash(); SURVEY.md §7 'MinHash determinism')."""
-    return int(hashlib.md5(tag.encode()).hexdigest()[:8], 16)
 
 
 def blocked_cosine_pairs(df, block_col: str, tau: float):

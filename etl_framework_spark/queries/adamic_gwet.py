@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
+from etl_framework_spark.operators.graph import token_adjacency
 from etl_framework_spark.cacheutil import persist_tracked
 
 _AA_MAX_DEG = 64
@@ -91,27 +92,11 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical graph — the two rankings disagree exactly where hub
     neighbors dominate)."""
     docs = table(spark, sf_dir, "documents")
-    t = docs.select(F.split(F.col("text"), " ").alias("l")).filter(
-        F.size("l") >= 2
-    )
-    idx = t.select(
-        "l", F.explode(F.sequence(F.lit(1), F.size("l") - 1)).alias("i")
-    )
-    adj = idx.filter(
-        F.element_at("l", F.col("i")) != F.element_at("l", F.col("i") + 1)
-    ).select(
-        F.least(
-            F.element_at("l", F.col("i")), F.element_at("l", F.col("i") + 1)
-        ).alias("a"),
-        F.greatest(
-            F.element_at("l", F.col("i")), F.element_at("l", F.col("i") + 1)
-        ).alias("b"),
-    )
     # persist: the edge set feeds both union branches of the adjacency
     # view plus the final non-adjacency anti-join, and the degree-capped
     # adjacency feeds both wedge sides — unpersisted, the bigram
     # explode+distinct replayed 11× (counted in the golden plan, r10)
-    edges = adj.distinct().transform(persist_tracked)
+    edges = token_adjacency(docs).transform(persist_tracked)
     nbr = edges.select(F.col("a").alias("node"), F.col("b").alias("nb")).unionAll(
         edges.select(F.col("b").alias("node"), F.col("a").alias("nb"))
     )

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
+from etl_framework_spark.operators.graph import token_adjacency
 from etl_framework_spark.operators.rounding import q6
 
 _Z = 1.959963984540054  # 97.5% normal quantile
@@ -170,23 +171,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests (cf. graph_clustering_coeff, llm_cluster_purity for the
     supervised analogue)."""
     docs = table(spark, sf_dir, "documents")
-    t = docs.select(F.split(F.col("text"), " ").alias("l")).filter(
-        F.size("l") >= 2
-    )
-    idx = t.select(
-        "l", F.explode(F.sequence(F.lit(1), F.size("l") - 1)).alias("i")
-    )
-    adj = idx.filter(
-        F.element_at("l", F.col("i")) != F.element_at("l", F.col("i") + 1)
-    ).select(
-        F.least(
-            F.element_at("l", F.col("i")), F.element_at("l", F.col("i") + 1)
-        ).alias("a"),
-        F.greatest(
-            F.element_at("l", F.col("i")), F.element_at("l", F.col("i") + 1)
-        ).alias("b"),
-    )
-    edges = adj.distinct()
+    edges = token_adjacency(docs)
     m = edges.agg(F.count(F.lit(1)).cast("double").alias("m"))
     within = (
         edges.filter(

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
+from etl_framework_spark.operators.graph import token_adjacency
 
 
 # --------------------------------------------------------------------------
@@ -167,23 +168,7 @@ def graph_degree_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree-summary tests (cf. events_gini for the same math on
     revenue, graph_attack_robustness for the consequence)."""
     docs = table(spark, sf_dir, "documents")
-    t = docs.select(F.split(F.col("text"), " ").alias("l")).filter(
-        F.size("l") >= 2
-    )
-    idx = t.select(
-        "l", F.explode(F.sequence(F.lit(1), F.size("l") - 1)).alias("i")
-    )
-    adj = idx.filter(
-        F.element_at("l", F.col("i")) != F.element_at("l", F.col("i") + 1)
-    ).select(
-        F.least(
-            F.element_at("l", F.col("i")), F.element_at("l", F.col("i") + 1)
-        ).alias("a"),
-        F.greatest(
-            F.element_at("l", F.col("i")), F.element_at("l", F.col("i") + 1)
-        ).alias("b"),
-    )
-    edges = adj.distinct()
+    edges = token_adjacency(docs)
     deg = (
         edges.select(F.col("a").alias("node"))
         .unionAll(edges.select(F.col("b").alias("node")))

@@ -23,6 +23,7 @@ from pyspark.sql.window import Window as W
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
+from etl_framework_spark.operators.graph import token_adjacency
 
 _KANON_K = 5  # release threshold: groups smaller than k are risky
 # Hub cap: drop nodes with more neighbors before the wedge join (the
@@ -165,23 +166,7 @@ def graph_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     handful of non-adjacent pairs). Scores are exact integer ratios;
     top-k under a total order."""
     d = table(spark, sf_dir, "documents")
-    t = d.select(F.split("text", " ").alias("l")).filter(F.size("l") >= 2)
-    prs = (
-        t.select(
-            F.explode(
-                F.zip_with(
-                    F.slice(F.col("l"), 1, F.size("l") - 1),
-                    F.slice(F.col("l"), 2, F.size("l") - 1),
-                    lambda x, y: F.struct(
-                        F.least(x, y).alias("a"), F.greatest(x, y).alias("b")
-                    ),
-                )
-            ).alias("p")
-        )
-        .select("p.a", "p.b")
-        .filter(F.col("a") != F.col("b"))
-    )
-    edges = prs.distinct()
+    edges = token_adjacency(d)
     nbr = edges.select(F.col("a").alias("node"), F.col("b").alias("nb")).unionAll(
         edges.select(F.col("b").alias("node"), F.col("a").alias("nb"))
     )

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
+from etl_framework_spark.operators.graph import token_adjacency
 from etl_framework_spark.cacheutil import persist_tracked
 
 _DAMP = 0.85
@@ -95,23 +96,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     no teleport-mass correction is needed; rank mass stays ≈1 (tested
     in tests/test_extras34.py)."""
     d = table(spark, sf_dir, "documents")
-    t = d.select(F.split("text", " ").alias("l")).filter(F.size("l") >= 2)
-    prs = (
-        t.select(
-            F.explode(
-                F.zip_with(
-                    F.slice(F.col("l"), 1, F.size("l") - 1),
-                    F.slice(F.col("l"), 2, F.size("l") - 1),
-                    lambda x, y: F.struct(
-                        F.least(x, y).alias("a"), F.greatest(x, y).alias("b")
-                    ),
-                )
-            ).alias("p")
-        )
-        .select("p.a", "p.b")
-        .filter(F.col("a") != F.col("b"))
-    )
-    edges = prs.distinct()
+    edges = token_adjacency(d)
     sym = edges.select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).unionAll(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))

@@ -28,6 +28,7 @@ from pyspark.sql.window import Window as W
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
+from etl_framework_spark.operators.graph import token_adjacency
 
 
 # --------------------------------------------------------------------------
@@ -167,28 +168,17 @@ def fn_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def graph_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree distribution of the token co-occurrence graph (adjacent
-    tokens within a document, canonical a<b orientation, self-loops
-    dropped): tokens per degree bucket — the structural companion to
+    """Degree distribution of the token co-occurrence graph
+    (``operators.graph.token_adjacency``: adjacent tokens within a
+    document, canonical a<b orientation, self-loops dropped): tokens
+    per degree bucket — the structural companion to
     graph_triangles and the first thing to read before running any
     graph algorithm at scale (a power-law tail means the hub nodes
     need special handling). Edges dedup once on (a, b); degrees are
     one count per node over the symmetrized edge list; the histogram
     output is bounded by max degree regardless of corpus size."""
     d = table(spark, sf_dir, "documents")
-    t = d.select(F.split("text", " ").alias("l")).filter(F.size("l") >= 2)
-    prs = t.select(
-        F.explode(
-            F.zip_with(
-                F.slice(F.col("l"), 1, F.size("l") - 1),
-                F.slice(F.col("l"), 2, F.size("l") - 1),
-                lambda x, y: F.struct(
-                    F.least(x, y).alias("a"), F.greatest(x, y).alias("b")
-                ),
-            )
-        ).alias("p")
-    ).select("p.a", "p.b").filter(F.col("a") != F.col("b"))
-    edges = prs.distinct()
+    edges = token_adjacency(d)
     nodes = edges.select(F.col("a").alias("node")).unionAll(
         edges.select(F.col("b").alias("node"))
     )

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
+from etl_framework_spark.operators.graph import token_adjacency
 from etl_framework_spark.cacheutil import persist_tracked
 
 _COS_MIN = 0.8
@@ -194,23 +195,7 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     coefficient is an exact integer ratio, so bucket edges are
     deterministic on both engines."""
     d = table(spark, sf_dir, "documents")
-    t = d.select(F.split("text", " ").alias("l")).filter(F.size("l") >= 2)
-    prs = (
-        t.select(
-            F.explode(
-                F.zip_with(
-                    F.slice(F.col("l"), 1, F.size("l") - 1),
-                    F.slice(F.col("l"), 2, F.size("l") - 1),
-                    lambda x, y: F.struct(
-                        F.least(x, y).alias("a"), F.greatest(x, y).alias("b")
-                    ),
-                )
-            ).alias("p")
-        )
-        .select("p.a", "p.b")
-        .filter(F.col("a") != F.col("b"))
-    )
-    edges = prs.distinct().transform(persist_tracked)
+    edges = token_adjacency(d).transform(persist_tracked)
     sym = edges.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         edges.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )

@@ -38,7 +38,7 @@ from etl_framework_spark.registry import query
 def udf_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-at-a-time UDF (X1): chars-per-token density. Same formula
     as the oracle; row UDFs serialize per value — parity surface only."""
-    @F.udf(DoubleType())
+    @F.udf(DoubleType(), useArrow=False)
     def density(n_chars: int, text: str) -> float:
         return round(n_chars / (1 + len(text.split(" "))), 6)
 

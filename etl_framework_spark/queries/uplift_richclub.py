@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
+from etl_framework_spark.operators.graph import token_adjacency
 
 # rich set = nodes with degree above the mean (data-adaptive threshold)
 
@@ -225,22 +226,6 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     tail-focused sibling, positive ratio can coexist with negative
     global assortativity)."""
     docs = table(spark, sf_dir, "documents")
-    t = docs.select(F.split(F.col("text"), " ").alias("l")).filter(
-        F.size("l") >= 2
-    )
-    idx = t.select(
-        "l", F.explode(F.sequence(F.lit(1), F.size("l") - 1)).alias("i")
-    )
-    adj = idx.filter(
-        F.element_at("l", F.col("i")) != F.element_at("l", F.col("i") + 1)
-    ).select(
-        F.least(
-            F.element_at("l", F.col("i")), F.element_at("l", F.col("i") + 1)
-        ).alias("a"),
-        F.greatest(
-            F.element_at("l", F.col("i")), F.element_at("l", F.col("i") + 1)
-        ).alias("b"),
-    )
     # lazy localCheckpoint of the distinct edge list and the degree
     # rollup: edges is referenced by both degree union branches AND the
     # edge-classification join, deg by its aggregate and both broadcast
@@ -249,7 +234,7 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     # golden plan). Both frames are vocabulary-sized; a plain persist LOST
     # the alternating A/B here (cache build serializes the critical
     # path), the checkpoint won it.
-    edges = adj.distinct().localCheckpoint(eager=False)
+    edges = token_adjacency(docs).localCheckpoint(eager=False)
     deg = (
         edges.select(F.col("a").alias("node"))
         .unionAll(edges.select(F.col("b").alias("node")))

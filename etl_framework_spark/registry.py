@@ -101,19 +101,6 @@ def _record_files(repo_root: str = _REPO_ROOT) -> list[str]:
     return _glob.glob(_os.path.join(repo_root, "CORRECTNESS_r*.json"))
 
 
-def current_round(repo_root: str = _REPO_ROOT) -> int:
-    """The round now in progress, inferred from the committed driver
-    artifacts: highest tracked CORRECTNESS_r{N}.json + 1 (1 on a bare
-    tree). Deterministic for everyone importing the same commit.
-    Informational only — the rotation no longer consumes it."""
-    rounds = [0]
-    for f in _record_files(repo_root):
-        m = _re.search(r"CORRECTNESS_r(\d+)\.json$", f)
-        if m:
-            rounds.append(int(m.group(1)))
-    return max(rounds) + 1
-
-
 def _record_json(path: str, repo_root: str) -> dict:
     """Content of one driver record AS COMMITTED (``git show
     HEAD:<name>``), falling back to the disk file when git is

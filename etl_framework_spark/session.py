@@ -56,7 +56,7 @@ class CdsLaunch:
 
 def get_spark(app_name: str = "etl-framework-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    mem = os.environ.get("SPARK_DRIVER_MEM", "24g")
+    mem = os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -102,6 +102,15 @@ def get_spark(app_name: str = "etl-framework-spark") -> SparkSession:
                 stacklevel=2,
             )
     return spark
+
+
+def default_driver_mem() -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEM`` is unset: 60 % of
+    physical RAM, at most 24g, in MiB. A heap larger than the machine
+    lets the local driver JVM grow until the OOM killer ends it, before
+    its own heap limit fires."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24 << 30, ram * 6 // 10) >> 20}m"
 
 
 def cds_launch(

@@ -161,6 +161,18 @@ def test_heap_bytes():
     assert session._heap_bytes("64kb") == 64 << 10
 
 
+@pytest.mark.parametrize(
+    ("pages", "mem"),
+    [(4 << 20, "9830m"), (16 << 20, "24576m"), (1 << 18, "614m")],
+)
+def test_driver_mem_is_a_share_of_physical_ram(monkeypatch, pages, mem):
+    # 4 KiB pages: 16 GiB, 64 GiB and 1 GiB of RAM
+    sizes = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": pages}
+    monkeypatch.setattr(session.os, "sysconf", sizes.__getitem__)
+    assert session.default_driver_mem() == mem
+    assert session._heap_bytes(mem) < session._NOCOOPS_HEAP
+
+
 # A fresh driver against a private cache: one query, its rows, the archive
 # state and every warning get_spark raised, as one JSON line.
 _DRIVER = """
