@@ -15,7 +15,7 @@ from etl_framework_spark.operators.textops import (
     shingles,
 )
 from etl_framework_spark.operators.similarity import dot_fold, l2_norm, cosine
-from etl_framework_spark.operators.dedup import md5_per_token, minhash_signature
+from etl_framework_spark.operators.dedup import md5_per_token
 from etl_framework_spark.operators.asof import asof_join
 
 __all__ = [
@@ -26,7 +26,6 @@ __all__ = [
     "dot_fold",
     "l2_norm",
     "cosine",
-    "minhash_signature",
     "md5_per_token",
     "asof_join",
 ]

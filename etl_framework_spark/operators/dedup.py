@@ -19,41 +19,19 @@ def _salt(d: int) -> str:
     return "" if d == 0 else "#" * d
 
 
-def _field(d: int, pos: int):
-    # Single-argument lambda via closure factory: a two-parameter lambda
-    # would be bound by Spark as an (element, index) lambda, silently
-    # replacing the captured values with the array index.
-    salt = _salt(d)
-    if salt:
-        return lambda t: F.substring(F.md5(F.concat(t, F.lit(salt))), pos, 4)
-    return lambda t: F.substring(F.md5(t), pos, 4)
-
-
-def minhash_signature(tok_set: Column, k: int = 16) -> list[Column]:
-    """K MinHash values: the md5 digest of (token + salt) is carved
-    into 8 non-overlapping 16-bit hex fields, so K permutations cost
-    only ceil(K/8) md5 evaluations per token (md5 is the portable
-    hash both engines print identically; 16 separate md5 passes
-    measured 8× slower at sf0.1 with identical dedup quality)."""
-    return [
-        F.array_min(F.transform(tok_set, _field(i // 8, 1 + 4 * (i % 8))))
-        for i in range(k)
-    ]
-
-
 def attach_minhash(df: DataFrame, tok_col: str, k: int = 16) -> DataFrame:
     """df + columns s0..s{k-1}: MinHash signature of the token-set
     column, as an Arrow ``mapInPandas`` kernel.
 
-    Byte-identical to the declarative form
-    ``array_min(transform(toks, t -> substring(md5(t || salt), pos, 4)))``
-    (and to the DuckDB oracle mirror): md5 hex is lowercase in both
-    engines, and the lexicographic min of a fixed-width 4-hex-char
-    slice equals the numeric min of the same 16 bits, so the kernel
-    takes ``np.min`` over big-endian uint16 views of the raw digests
-    and re-formats the winner as ``%04x``. NULL/empty token arrays
-    yield NULL signatures exactly like ``array_min`` on an empty or
-    NULL ``transform`` result.
+    Byte-identical to its DuckDB oracle mirror :func:`duck_minhash`
+    (value i is the min over tokens t of ``substr(md5(t || salt), pos,
+    4)``, salt ``'#' * (i // 8)``, pos ``1 + 4 * (i % 8)``): md5 hex is
+    lowercase in both engines, and the lexicographic min of a
+    fixed-width 4-hex-char slice equals the numeric min of the same 16
+    bits, so the kernel takes ``np.min`` over big-endian uint16 views
+    of the raw digests and re-formats the winner as ``%04x``.
+    NULL/empty token arrays yield NULL signatures, as the mirror's
+    ``list_min`` does.
 
     The kernel exists because Catalyst evaluates higher-order lambdas
     interpreted (one MessageDigest round-trip per token per digest,
@@ -97,9 +75,9 @@ def attach_minhash(df: DataFrame, tok_col: str, k: int = 16) -> DataFrame:
                 if toks is None or len(toks) == 0:
                     mins.append(None)
                     continue
-                # ADVICE r11: skip NULL elements — the Column form this
-                # kernel is byte-identical to maps them to md5(NULL) =
-                # NULL, which array_min then ignores. Current callers
+                # ADVICE r11: skip NULL elements — the DuckDB mirror
+                # maps them to md5(NULL) = NULL, which list_min then
+                # ignores. Current callers
                 # never emit them (array_distinct(split(...))), but the
                 # operator is library surface.
                 vals = [t for t in toks if t is not None]
@@ -121,7 +99,8 @@ def attach_minhash(df: DataFrame, tok_col: str, k: int = 16) -> DataFrame:
 
 
 def duck_minhash(tok_expr: str, k: int = 16) -> list[str]:
-    """DuckDB mirror of `minhash_signature` ({tok_expr} = list expr)."""
+    """DuckDB mirror of :func:`attach_minhash`'s ``s0..s{k-1}``
+    ({tok_expr} = list expr)."""
     out = []
     for i in range(k):
         salt = _salt(i // 8)

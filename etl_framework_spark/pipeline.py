@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_framework_spark.sources import read_source, write_sink
@@ -221,92 +221,76 @@ class ValidationError(RuntimeError):
     failing check (not just the first)."""
 
 
-def _check_aggs(checks: list[dict[str, Any]], allow_distinct: bool = True) -> list:
-    aggs: list = [F.count(F.lit(1)).alias("__n")]
-    for i, c in enumerate(checks):
-        t = c.get("type")
-        if t == "row_count":
-            pass  # uses __n
-        elif t == "not_null":
-            for col in c["columns"]:
-                aggs.append(
-                    F.sum(F.when(F.col(col).isNull(), 1).otherwise(0)).alias(
-                        f"__{i}_null_{col}"
-                    )
-                )
-        elif t == "unique":
-            if not allow_distinct:
-                raise ValueError(
-                    "'unique' checks need a distinct aggregate, which "
-                    "observe() metrics forbid — use an eager validate step"
-                )
-            aggs.append(
-                (
-                    F.count(F.lit(1))
-                    - F.countDistinct(F.struct(*[F.col(x) for x in c["columns"]]))
-                ).alias(f"__{i}_dupes")
-            )
-        elif t == "accepted_values":
-            col = F.col(c["column"])
-            aggs.append(
-                F.sum(
-                    F.when(col.isNotNull() & ~col.isin(*c["values"]), 1).otherwise(0)
-                ).alias(f"__{i}_rejected")
-            )
-        elif t == "expression":
-            aggs.append(
-                F.sum(F.when(~F.expr(c["expr"]), 1).otherwise(0)).alias(
-                    f"__{i}_violations"
-                )
-            )
-        else:
-            raise ValueError(f"unknown validation check type {t!r}")
-    return aggs
+def _count_if(cond: Column) -> Column:
+    return F.sum(F.when(cond, 1).otherwise(0))
 
 
-def _check_failures(row: dict[str, Any], checks: list[dict[str, Any]]) -> list[str]:
-    failures: list[str] = []
-    n = row["__n"]
-    for i, c in enumerate(checks):
-        t = c["type"]
-        if t == "row_count":
-            lo, hi = c.get("min"), c.get("max")
+def _nonzero(label: str, what: str) -> Callable[[int], list[str]]:
+    return lambda bad: [f"{label}: {bad} {what}"] if bad else []
+
+
+def _check_terms(
+    i: int, c: dict[str, Any]
+) -> list[tuple[str, Column | None, Callable[[int], list[str]]]]:
+    """Check ``i`` as ``(alias, aggregate, failures)`` terms: the
+    aggregate is computed under the alias, and ``failures`` maps its
+    value to the check's failure messages. ``row_count`` reads the
+    shared row count ``__n`` and adds no aggregate."""
+    t = c.get("type")
+    if t == "row_count":
+        lo, hi = c.get("min"), c.get("max")
+
+        def bounds(n: int) -> list[str]:
+            out = []
             if lo is not None and n < lo:
-                failures.append(f"row_count: {n} < min {lo}")
+                out.append(f"row_count: {n} < min {lo}")
             if hi is not None and n > hi:
-                failures.append(f"row_count: {n} > max {hi}")
-        elif t == "not_null":
-            for col in c["columns"]:
-                bad = row[f"__{i}_null_{col}"] or 0
-                if bad:
-                    failures.append(f"not_null({col}): {bad} null rows")
-        elif t == "unique":
-            bad = row[f"__{i}_dupes"] or 0
-            if bad:
-                failures.append(f"unique({','.join(c['columns'])}): {bad} duplicate rows")
-        elif t == "accepted_values":
-            bad = row[f"__{i}_rejected"] or 0
-            if bad:
-                failures.append(
-                    f"accepted_values({c['column']}): {bad} rows outside {c['values']}"
-                )
-        elif t == "expression":
-            bad = row[f"__{i}_violations"] or 0
-            if bad:
-                failures.append(f"expression({c['expr']}): {bad} violating rows")
-    return failures
+                out.append(f"row_count: {n} > max {hi}")
+            return out
+
+        return [("__n", None, bounds)]
+    if t == "not_null":
+        return [
+            (f"__{i}_null_{col}", _count_if(F.col(col).isNull()),
+             _nonzero(f"not_null({col})", "null rows"))
+            for col in c["columns"]
+        ]
+    if t == "unique":
+        dupes = F.count(F.lit(1)) - F.countDistinct(F.struct(*[F.col(x) for x in c["columns"]]))
+        return [(f"__{i}_dupes", dupes,
+                 _nonzero(f"unique({','.join(c['columns'])})", "duplicate rows"))]
+    if t == "accepted_values":
+        col = F.col(c["column"])
+        return [(f"__{i}_rejected", _count_if(col.isNotNull() & ~col.isin(*c["values"])),
+                 _nonzero(f"accepted_values({c['column']})", f"rows outside {c['values']}"))]
+    if t == "expression":
+        return [(f"__{i}_violations", _count_if(~F.expr(c["expr"])),
+                 _nonzero(f"expression({c['expr']})", "violating rows"))]
+    raise ValueError(f"unknown validation check type {t!r}")
 
 
-def _gate(checks: list[dict[str, Any]], prefix: str = "") -> Gate:
-    """The checks as a sink-write gate: observe()-able aggregates and a
-    verdict raising the same ValidationError text as an eager pass."""
+def _gate(checks: list[dict[str, Any]], prefix: str = "", allow_distinct: bool = False) -> Gate:
+    """The checks as one global aggregate and a verdict over its row that
+    raises ValidationError listing every failed check. A sink-write gate
+    rides observe(), which forbids distinct aggregates, so only an eager
+    pass may carry 'unique'."""
+    terms = []
+    for i, c in enumerate(checks):
+        if c.get("type") == "unique" and not allow_distinct:
+            raise ValueError(
+                "'unique' checks need a distinct aggregate, which "
+                "observe() metrics forbid — use an eager validate step"
+            )
+        terms += _check_terms(i, c)
+    aggs = [F.count(F.lit(1)).alias("__n")]
+    aggs += [agg.alias(alias) for alias, agg, _ in terms if agg is not None]
 
     def verdict(row: dict[str, Any]) -> None:
-        failures = _check_failures(row, checks)
+        failures = [msg for alias, _, fail in terms for msg in fail(row[alias] or 0)]
         if failures:
             raise ValidationError(prefix + "; ".join(failures))
 
-    return _check_aggs(checks, allow_distinct=False), verdict
+    return aggs, verdict
 
 
 @op("validate")
@@ -344,11 +328,9 @@ def _validate_step(df: DataFrame, checks: list[dict[str, Any]]) -> DataFrame:
     The same checks (except 'unique') can also sit on the *sink* spec
     as ``"validate": [...]``; they ride that sink's write the same way.
     """
+    aggs, verdict = _gate(checks, allow_distinct=True)
     # bounded: global agg, exactly one row crosses to the driver
-    row = df.agg(*_check_aggs(checks)).collect()[0].asDict()
-    failures = _check_failures(row, checks)
-    if failures:
-        raise ValidationError("; ".join(failures))
+    verdict(df.agg(*aggs).collect()[0].asDict())
     return df
 
 

@@ -171,20 +171,24 @@ def encode_kafka_value(df: DataFrame, key: str | None = None) -> DataFrame:
     return out
 
 
+def _require_jdbc(spec: dict[str, Any], role: str) -> None:
+    missing = {"url", "dbtable"} - set(spec)
+    if missing:
+        raise ValueError(f"jdbc {role} missing {sorted(missing)}")
+
+
 def read_source(spark: SparkSession, spec: dict[str, Any]) -> DataFrame:
     fmt = spec.get("format", "parquet")
     options = dict(spec.get("options", {}))
     if fmt == "jdbc":
-        required = {"url", "dbtable"}
-        missing = required - set(spec)
-        if missing:
-            raise ValueError(f"jdbc source missing {sorted(missing)}")
-        reader = spark.read.format("jdbc").option("url", spec["url"]).option(
-            "dbtable", spec["dbtable"]
+        _require_jdbc(spec, "source")
+        return (
+            spark.read.format("jdbc")
+            .option("url", spec["url"])
+            .option("dbtable", spec["dbtable"])
+            .options(**options)
+            .load()
         )
-        for k, v in options.items():
-            reader = reader.option(k, v)
-        return reader.load()
     if fmt == "table":  # catalog/metastore-backed (Hive-style) source
         # The reference family reads Hive tables by name from job
         # configs; here the session catalog (in-memory or Hive
@@ -241,9 +245,7 @@ def read_source(spark: SparkSession, spec: dict[str, Any]) -> DataFrame:
         options.setdefault("inferSchema", True)
     if fmt == "csv":
         options.setdefault("header", True)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return getattr(reader, fmt)(spec["path"])
+    return getattr(reader.options(**options), fmt)(spec["path"])
 
 
 # A data-quality gate on a sink write: aggregate Columns that ride the
@@ -271,23 +273,17 @@ def write_sink(
         writer = df.write.mode(spec.get("mode", "overwrite"))
         if spec.get("partition_by"):
             writer = writer.partitionBy(*spec["partition_by"])
-        for k, v in dict(spec.get("options", {})).items():
-            writer = writer.option(k, v)
-        writer.saveAsTable(spec["name"])
+        writer.options(**spec.get("options", {})).saveAsTable(spec["name"])
     elif fmt == "jdbc":
-        required = {"url", "dbtable"}
-        missing = required - set(spec)
-        if missing:
-            raise ValueError(f"jdbc sink missing {sorted(missing)}")
-        writer = (
+        _require_jdbc(spec, "sink")
+        (
             df.write.format("jdbc")
             .mode(spec.get("mode", "overwrite"))
             .option("url", spec["url"])
             .option("dbtable", spec["dbtable"])
+            .options(**spec.get("options", {}))
+            .save()
         )
-        for k, v in dict(spec.get("options", {})).items():
-            writer = writer.option(k, v)
-        writer.save()
     elif fmt == "kafka":
         opts = kafka_sink_options(spec)
         out = encode_kafka_value(df, key=spec.get("key"))
@@ -375,9 +371,7 @@ def _file_writer(
     options = dict(spec.get("options", {}))
     if fmt == "csv":
         options.setdefault("header", True)  # symmetric with the reader default
-    for k, v in options.items():
-        writer = writer.option(k, v)
-    return getattr(writer, fmt)
+    return getattr(writer.options(**options), fmt)
 
 
 def _staged_write(

@@ -1,10 +1,11 @@
-"""The A/B tool's pair arithmetic (``tools/ab.py``), on made-up runs."""
+"""The A/B tool's run order and pair arithmetic (``tools/ab.py``), on
+made-up runs."""
 
 from __future__ import annotations
 
 import pytest
 
-from tools.ab import summarize
+from tools.ab import interleave, summarize
 
 
 def _runs(metric: str, base: list[float], head: list[float]) -> list[dict]:
@@ -42,3 +43,31 @@ def test_runs_without_result_drop_their_pair():
     runs = _runs("x", [2.0, 2.0], [1.0, 1.0])
     runs[3] = {"pair": 1, "arm": "head", "error": "exit 1"}
     assert summarize(runs, {"x": "lower"})["x"]["pairs"] == 1
+
+
+def test_warm_up_per_arm_is_left_out_of_the_pairs(tmp_path):
+    """Each arm runs once before pair 0; those runs are logged but not
+    returned, so neither the pair count nor the summary sees them. The
+    archives are read after the warm-ups, which are what record them."""
+    arms = {"base": tmp_path / "base", "head": tmp_path / "head"}
+    calls = []
+
+    def run(checkout, workload, seed, trace, seconds):
+        calls.append((checkout.name, seed))
+        (checkout / ".cache").mkdir(parents=True, exist_ok=True)
+        (checkout / ".cache" / "spark-0.jsa").write_bytes(b"x" * (len(calls) << 20))
+        # the warm-ups are the slow runs: 100 s against 1 s
+        return {"failed": 0, "attempted": 1, "metrics": {"x": 100.0 if len(calls) <= 2 else 1.0}}
+
+    log = []
+    runs, archives = interleave(arms, "w", 2, 7, 0, 1.0, {"x": "lower"}, run=run,
+                                log=log.append)
+    assert calls == [("base", 7), ("head", 7),
+                     ("base", 7), ("head", 7), ("head", 8), ("base", 8)]
+    assert [(r["pair"], r["arm"], r["seed"], r["run"]) for r in runs] == [
+        (0, "base", 7, 0), (0, "head", 7, 1), (1, "head", 8, 2), (1, "base", 8, 3)]
+    assert archives == {"base": [("spark-0.jsa", 1 << 20)], "head": [("spark-0.jsa", 2 << 20)]}
+    assert log[:2] == ["warm-up     seed 7 base failed=0 x=100", "warm-up     seed 7 head failed=0 x=100"]
+    assert log[2:4] == ["CDS archive base: spark-0.jsa 1 MiB", "CDS archive head: spark-0.jsa 2 MiB"]
+    s = summarize(runs, {"x": "lower"})["x"]
+    assert s["pairs"] == 2 and s["base"] == (1.0, 1.0, 1.0)

@@ -224,3 +224,43 @@ def test_unfusable_validate_steps_stay_eager(spark, tmp_path, kind):
     with pytest.raises(ValidationError, match=r"row_count: \d+ > max 5"):
         run_pipeline(spark, spec)
     assert os.listdir(tmp_path) == []  # raised before any write
+
+
+_CHECK_CASES = {
+    "row_count": ({"type": "row_count", "min": 20}, "row_count: 10 < min 20"),
+    "not_null": ({"type": "not_null", "columns": ["v"]}, "not_null(v): 3 null rows"),
+    "unique": ({"type": "unique", "columns": ["k"]}, "unique(k): 6 duplicate rows"),
+    "accepted_values": (
+        {"type": "accepted_values", "column": "k", "values": [0, 1]},
+        "accepted_values(k): 4 rows outside [0, 1]",
+    ),
+    "expression": ({"type": "expression", "expr": "id < 8"}, "expression(id < 8): 2 violating rows"),
+}
+
+
+@pytest.mark.parametrize(
+    "kind,where",
+    [(k, w) for k in _CHECK_CASES for w in ("eager_step", "fused_step", "sink_validate")
+     if k != "unique" or w == "eager_step"],
+)
+def test_each_check_type_fails_with_its_message(spark, tmp_path, kind, where):
+    """Every check type gives the same ValidationError text whether it
+    runs as an eager step, fused into its sink's write, or on the sink;
+    only the sink form prefixes the sink's input."""
+    check, message = _CHECK_CASES[kind]
+    sql = "SELECT id, IF(id < 3, NULL, id) AS v, id % 4 AS k FROM range(10)"
+    validate = {"name": "checked", "input": "rows", "op": "validate", "args": {"checks": [check]}}
+    sink = {"input": "rows", "format": "parquet", "path": str(tmp_path / "out")}
+    spec = {"sources": {}, "steps": [{"name": "rows", "sql": sql}], "sinks": []}
+    if where == "eager_step":
+        spec["steps"].append(validate)
+    elif where == "fused_step":
+        spec["steps"].append(validate)
+        spec["sinks"].append({**sink, "input": "checked"})
+        assert Pipeline(spec)._fused_validations() == {"checked": [check]}
+    else:
+        spec["sinks"].append({**sink, "validate": [check]})
+        message = "sink 'rows': " + message
+    with pytest.raises(ValidationError) as exc:
+        run_pipeline(spark, spec)
+    assert str(exc.value) == message

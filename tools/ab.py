@@ -4,8 +4,13 @@ this checkout.
     python tools/ab.py --base REV --workload etl_jobs --pairs 10 [--seed0 S] [--trace 1]
 
 The base arm runs ``perfbench/run.py`` in a temporary ``git worktree`` of
-REV, the change arm in this checkout, uncommitted edits included. Pair i
-runs seed ``S + i`` on both arms; the arms alternate which goes first.
+REV, the change arm in this checkout, uncommitted edits included. Each
+arm first does one warm-up run (seed ``S``), which is printed but left
+out of the pairs and the summary: a checkout's first Spark session
+records its class-data-sharing archive (``.cache/*.jsa``), and that run
+is slower. The name and size of each arm's archive are printed after
+the warm-ups. Pair i runs seed ``S + i`` on both arms; the arms
+alternate which goes first.
 Every raw run is printed as it finishes, then per metric each arm's
 median and quartiles, the pairs the change won (ties count for neither),
 the base's IQR, and whether the claim rule holds: at least nine tenths of
@@ -48,6 +53,43 @@ def run_once(checkout: Path, workload: str, seed: int, trace: int, seconds: floa
         "attempted": result["attempted"],
         "metrics": {k: v["value"] for k, v in result["metrics"].items()},
     }
+
+
+def cds_archives(checkout: Path) -> list[tuple[str, int]]:
+    """Name and size in bytes of each class-data-sharing archive in
+    ``checkout``'s ``.cache``."""
+    return [(p.name, p.stat().st_size) for p in sorted((checkout / ".cache").glob("*.jsa"))]
+
+
+def interleave(arms: dict[str, Path], workload: str, pairs: int, seed0: int, trace: int,
+               seconds: float, better: dict[str, str], run=run_once,
+               log=lambda line: print(line, flush=True)) -> tuple[list[dict], dict[str, list[tuple[str, int]]]]:
+    """One discarded warm-up run per arm, then ``pairs`` pairs of runs,
+    the arms alternating which goes first. Logs every run as it finishes
+    and each arm's archives after the warm-ups; returns the paired runs
+    and those archives."""
+
+    def one(label: str, arm: str, seed: int) -> dict:
+        r = run(arms[arm], workload, seed, trace, seconds)
+        shown = r.get("error") or " ".join(
+            f"{k}={v:.4g}" for k, v in r["metrics"].items() if k in better)
+        log(f"{label} seed {seed} {arm:4s} failed={r.get('failed', '-')} {shown}")
+        return r
+
+    for arm in arms:
+        one("warm-up    ", arm, seed0)
+    archives = {arm: cds_archives(path) for arm, path in arms.items()}
+    for arm, found in archives.items():
+        log(f"CDS archive {arm:4s}: "
+            + (", ".join(f"{n} {size / 2**20:.0f} MiB" for n, size in found) or "none"))
+    runs: list[dict] = []
+    for i in range(pairs):
+        seed = seed0 + i
+        for arm in list(arms) if i % 2 == 0 else list(arms)[::-1]:
+            r = one(f"run {len(runs):2d} pair {i}", arm, seed)
+            r.update(run=len(runs), pair=i, seed=seed, arm=arm)
+            runs.append(r)
+    return runs, archives
 
 
 def quartiles(xs: list[float]) -> tuple[float, float, float]:
@@ -102,18 +144,9 @@ def main(argv: list[str] | None = None) -> int:
     subprocess.run(["git", "worktree", "add", "--detach", str(base_dir), rev], cwd=ROOT,
                    capture_output=True, check=True)
     arms = {"base": base_dir, "head": ROOT}
-    runs: list[dict] = []
     try:
-        for i in range(args.pairs):
-            seed = args.seed0 + i
-            for arm in ("base", "head") if i % 2 == 0 else ("head", "base"):
-                r = run_once(arms[arm], args.workload, seed, args.trace, bench["run_seconds"])
-                r.update(run=len(runs), pair=i, seed=seed, arm=arm)
-                runs.append(r)
-                shown = r.get("error") or " ".join(
-                    f"{k}={v:.4g}" for k, v in r["metrics"].items() if k in better)
-                print(f"run {r['run']:2d} pair {i} seed {seed} {arm:4s} "
-                      f"failed={r.get('failed', '-')} {shown}", flush=True)
+        runs, archives = interleave(arms, args.workload, args.pairs, args.seed0, args.trace,
+                                    bench["run_seconds"], better)
     finally:
         subprocess.run(["git", "worktree", "remove", "--force", str(base_dir)], cwd=ROOT,
                        capture_output=True)
@@ -136,7 +169,8 @@ def main(argv: list[str] | None = None) -> int:
     print(f"failed items: base {failed['base']}, change {failed['head']}; "
           f"runs without a result: {errors}")
     print(json.dumps({"base": rev, "workload": args.workload, "seed0": args.seed0,
-                      "trace": args.trace, "runs": runs, "summary": summary}))
+                      "trace": args.trace, "archives": archives, "runs": runs,
+                      "summary": summary}))
     return 1 if errors else 0
 
 
